@@ -161,9 +161,8 @@ def bench_cdc_replay(
     BENCH.md methodology).  Compaction runs AFTER the timed tail and is
     timed separately — in production MOR systems (Iceberg/Paimon/Hudi)
     compaction is background maintenance off the ingest critical path, so
-    tail throughput is the replay alone.  ``n_buckets``/``salt_buckets``
-    scale with cores so MERGE parallelism isn't artificially capped at low
-    core counts.
+    tail throughput is the replay alone.  ``n_buckets`` scales with cores
+    so MERGE parallelism isn't artificially capped at low core counts.
     """
     work = tempfile.mkdtemp(prefix="bench_cdc_", dir=_fast_tmp())
     try:
@@ -187,7 +186,6 @@ def bench_cdc_replay(
             spark,
             os.path.join(work, "warm_table"),
             n_buckets=max(2 * cpus, 16),
-            salt_buckets=max(2 * cpus, 16),
             audit="counts",
             merge_mode=merge_mode,
         )
@@ -202,7 +200,6 @@ def bench_cdc_replay(
                 spark,
                 os.path.join(work, f"table{rep}"),
                 n_buckets=max(2 * cpus, 16),
-                salt_buckets=max(2 * cpus, 16),
                 audit="counts",
                 merge_mode=merge_mode,  # delta = the designed tail at scale
             )

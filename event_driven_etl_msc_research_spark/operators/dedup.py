@@ -48,7 +48,6 @@ def dedup_latest(
     df: DataFrame,
     key_cols: list[str],
     version_cols: list[str],
-    salt_buckets: int = 0,
     impl: str = "maxby",
 ) -> DataFrame:
     """Keep, per key, the row with the maximum ``version_cols`` tuple.
@@ -60,8 +59,8 @@ def dedup_latest(
     payload struct (which is what made the maxstruct form anti-scale).
     MEASURED (4.25M-event stream, this host, warm): maxby 1.2-3.0 s at
     local[32] vs 4.7-14.3 s for argmax (agg + winners join) and 71-90 s for
-    struct-max.  No salting needed — ``salt_buckets`` is accepted for API
-    compatibility and ignored (partial combine collapses hot keys map-side).
+    struct-max.  No salting needed: partial combine collapses hot keys
+    map-side (the salted two-level form is ``dedup_latest_maxstruct``).
 
     ``impl="argmax"`` (agg + winners join) and ``impl="maxstruct"`` are kept
     for cross-checking.
@@ -72,7 +71,7 @@ def dedup_latest(
         return dedup_latest_argmax(
             df, key_cols, version_cols, broadcast_winners=False
         )
-    return dedup_latest_maxstruct(df, key_cols, version_cols, salt_buckets)
+    return dedup_latest_maxstruct(df, key_cols, version_cols)
 
 
 def _packed_version(df: DataFrame, version_cols: list[str]):

@@ -296,7 +296,7 @@ def cdc_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
-    out = dedup_latest(ev, ["user_id"], ["ts", "event_id"], salt_buckets=8)
+    out = dedup_latest(ev, ["user_id"], ["ts", "event_id"])
     return out.select(
         "user_id",
         F.date_format("ts", _TS_FMT_SPARK).alias("ts"),

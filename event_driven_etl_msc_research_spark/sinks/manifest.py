@@ -216,6 +216,24 @@ def _stat_from_json(v):
     return v
 
 
+# Manifest keys ManifestTable._commit treats specially.  Table config a
+# rollback or branch publish never reverts (the head's wins):
+_CONFIG_KEYS = ("properties", "cloned_from")
+# monotone event-time watermarks (table config, never moved backward):
+# ``retention_ts`` is retention_delete's cutoff — also its drop floor —
+# and ``lateness_ts`` the tombstone-purge bound of compact
+_WATERMARK_KEYS = ("retention_ts", "lateness_ts")
+# fields describing ONE commit, never inherited by the next
+_PER_COMMIT_KEYS = ("added_cols", "retdel_dropped", "retdel_rows")
+
+
+def _watermark(m: dict[str, Any]):
+    """The bound merge drops older upserts below: the later of the two
+    watermarks, or None when neither is set."""
+    marks = [_stat_from_json(m[k]) for k in _WATERMARK_KEYS if m.get(k)]
+    return max(marks) if marks else None
+
+
 def _norm_bound(v, dtype: T.DataType | None = None):
     """Normalize a query bound for comparison against decoded stats.
 
@@ -388,8 +406,6 @@ class ManifestTable:
         # default is the POSIX backend, and the object-store fake is proven
         # equivalent by the parameterized concurrency/chaos/vacuum suites
         self.storage = storage or LocalFSStorage(root)
-        self._manifest: dict[str, Any] | None = None
-        self._last_read: dict[str, Any] | None = None  # newest manifest GET
         from collections import OrderedDict
 
         # content-hash-keyed manifest-segment LRU (see _get_segments)
@@ -959,19 +975,13 @@ class ManifestTable:
                 # partial restore): recompute from the full listing once
                 versions = self._list_versions()
                 if versions and versions[-1] != v:
-                    m = self._get_manifest(self._manifest_key(versions[-1]))
-                    self._last_read = m
-                    return m
+                    return self._get_manifest(self._manifest_key(versions[-1]))
             if self.branch is None:
                 raise
             # pre-fork snapshots live on the main chain: a branch is seeded
             # with a copy of its fork-base manifest only, so time travel /
             # chain walks below the fork fall through to the main namespace
             return self._get_manifest(f"{_MANIFEST_DIR}/v{v:012d}.json")
-        if head:
-            # remember the newest head read: _carry_sticky_meta's zero-GET
-            # fast path (every verb reads the head right before assembling)
-            self._last_read = m
         return m
 
     def _publish(self, manifest: dict[str, Any]) -> None:
@@ -980,8 +990,8 @@ class ManifestTable:
         EEXIST = lost race; object store: ``If-None-Match: *`` PUT).
         Readers can never observe a partial manifest; the PUT IS the commit
         point (SURVEY.md §7 hard parts).  Raises ``ManifestConflict`` on a
-        lost race — ``merge`` rebases and retries."""
-        self._carry_sticky_meta(manifest)
+        lost race.  Only ``create``/``clone`` publish their v0 directly;
+        every later commit goes through :meth:`_commit`."""
         key = self._manifest_key(manifest["version"])
         stored = self._externalize(manifest)
         if not self.storage.put_if_absent(key, self._encode_manifest(stored)):
@@ -989,63 +999,129 @@ class ManifestTable:
                 f"manifest v{manifest['version']} was committed by a "
                 f"concurrent writer"
             )
-        self._manifest = manifest
         self._write_head_hint(manifest["version"])
 
-    def _carry_sticky_meta(self, manifest: dict[str, Any]) -> None:
-        """Carry commit-invariant bookkeeping through every publish, so
-        the manifest-assembly sites need no awareness of it: shallow-clone
-        provenance (``cloned_from`` + ``external_sizes`` of
-        still-referenced source files, set at a clone's v0) and TABLE
-        PROPERTIES (``properties``, settable mid-chain, survive rollback
-        like Iceberg's — properties are table config, not snapshot
-        state).  Zero extra metadata reads in the non-race path: every
-        verb reads the head manifest right before assembling, and that
-        read is remembered in ``_last_read``; only a publish whose parent
-        is neither the last head read nor this handle's own last publish
-        (i.e. a lost-and-rebased race) pays one GET."""
-        if manifest.get("parent") is None:
-            return
-        need_clone = "cloned_from" not in manifest
-        need_props = "properties" not in manifest
-        # the retention watermark (retention_delete) is table config like
-        # properties: carried through every commit, surviving rollback —
-        # the "never holds pre-cutoff rows again" contract is not snapshot
-        # state.  (Monotonicity across a rollback to a version carrying an
-        # OLDER watermark is enforced in rollback_to itself.)
-        need_ret = "retention_ts" not in manifest
-        if not (need_clone or need_props or need_ret):
-            return
-        parent = None
-        for c in (self._last_read, self._manifest):
-            if c is not None and c.get("version") == manifest["parent"]:
-                parent = c
-                break
-        if parent is None:
-            try:
-                parent = self.manifest(manifest["parent"])
-            except FileNotFoundError:
-                return
-        if need_props and parent.get("properties"):
-            manifest["properties"] = parent["properties"]
-        if need_ret and parent.get("retention_ts") is not None:
-            manifest["retention_ts"] = parent["retention_ts"]
-        if need_clone and parent.get("cloned_from"):
-            manifest["cloned_from"] = parent["cloned_from"]
-            ext = parent.get("external_sizes") or {}
-            if ext:
-                live = {
-                    p
-                    for d in (
-                        manifest["files"],
-                        manifest.get("delta_files") or {},
-                    )
-                    for ps in d.values()
-                    for p in ps
+    def _commit(
+        self,
+        base: dict[str, Any],
+        change,
+        report=None,
+        *,
+        source: dict[str, Any] | None = None,
+        epoch_key: str | None = None,
+        on_conflict="skip",
+        retries: int = 1,
+        before_publish=None,
+    ) -> dict[str, Any]:
+        """The one commit path of every manifest after v0 (the reference's
+        single tracking ``put_item``, ``Phase3-Data-Extraction.py:123-136``).
+
+        The next manifest is ``{**(source or base), **change}`` published
+        as the child of ``base`` — the head the verb already read, so the
+        commit adds no metadata GET.  ``change`` holds only the fields the
+        verb changes, or is a function of the base (re-evaluated against
+        the winner on a rebase; returning None means nothing to commit →
+        ``NoChange``).  ``source`` republishes another snapshot's content
+        (rollback_to's target, fast_forward's branch head).
+
+        Owned here so that no verb repeats it:
+
+        * table config carries from ``base`` unless ``change`` sets it:
+          ``properties`` and ``cloned_from`` are the head's (config, not
+          snapshot state — Iceberg semantics); the watermarks never move
+          backward (max of base and new); ``external_sizes`` keeps the
+          clone-time sizes of the external files still referenced;
+        * per-commit fields (``added_cols``, ``retdel_*``) reset unless set;
+        * with ``epoch_key``: the exactly-once check against every base
+          and the applied-ledger fold (``_fold_applied``);
+        * the ``before_publish`` test/chaos hook, the put-if-absent
+          publish, and the lost-race outcome ``on_conflict``: ``"skip"`` →
+          ``Skipped`` (maintenance and DDL never block ingest; they re-run
+          later), ``"raise"`` → ``ManifestConflict``, ``"retry"`` → re-read
+          the head and rebuild against it, at most ``retries`` attempts; a
+          callable ``rebase(winner, retries_left)`` retries the same way
+          unless it first returns a final outcome (or raises).
+
+        Returns ``{"status": "Success", "version": v, **report}``
+        (``report`` may be a function of the published manifest), or the
+        ``Skipped``/``NoChange`` outcome."""
+        for attempt in range(max(1, retries)):
+            if attempt:
+                base = self.manifest()  # the winner's head
+            if epoch_key is not None and _epoch_applied(base, epoch_key):
+                return {
+                    "status": "Skipped",
+                    "version": base["version"],
+                    "reason": (
+                        "epoch committed by concurrent writer"
+                        if attempt
+                        else "epoch already committed"
+                    ),
                 }
-                kept = {p: sz for p, sz in ext.items() if p in live}
+            if attempt and callable(on_conflict):
+                out = on_conflict(base, retries - attempt)
+                if out is not None:
+                    return out
+            fields = change(base) if callable(change) else change
+            if fields is None:
+                return {"status": "NoChange", "version": base["version"]}
+            new = {**(source or base), **fields}
+            for k in _CONFIG_KEYS:
+                if k not in fields:
+                    new.pop(k, None)
+                    if base.get(k):
+                        new[k] = base[k]
+            for k in _WATERMARK_KEYS:
+                marks = [x[k] for x in (base, new) if x.get(k) is not None]
+                if marks:
+                    new[k] = max(marks, key=_stat_from_json)
+            ext = {
+                **(base.get("external_sizes") or {}),
+                **(new.pop("external_sizes", None) or {}),
+            }
+            if ext:
+                live = set(self._all_files_rel(new))
+                kept = {p: n for p, n in ext.items() if p in live}
                 if kept:
-                    manifest["external_sizes"] = kept
+                    new["external_sizes"] = kept
+            for k in _PER_COMMIT_KEYS:
+                if k not in fields:
+                    new.pop(k, None)
+            new.setdefault("added_cols", [])
+            if epoch_key is not None:
+                new["applied_epochs"], new["applied_ranges"] = _fold_applied(
+                    base["applied_epochs"] + [epoch_key],
+                    base.get("applied_ranges") or {},
+                    self.max_epoch_entries,
+                )
+            new.update(
+                version=base["version"] + 1,
+                parent=base["version"],
+                committed_at=time.time(),
+            )
+            if before_publish is not None:
+                # test/chaos hook: fail after staging, before the commit
+                # point — the staged files stay unreferenced; a replay
+                # re-runs the verb
+                before_publish(new)
+            try:
+                self._publish(new)
+            except ManifestConflict:
+                if on_conflict == "raise":
+                    raise
+                if on_conflict == "skip":
+                    return {
+                        "status": "Skipped",
+                        "reason": "lost manifest race to a concurrent writer",
+                        "version": self.current_version(),
+                    }
+                continue
+            extra = report(new) if callable(report) else (report or {})
+            return {"status": "Success", "version": new["version"], **extra}
+        raise ManifestConflict(
+            f"{epoch_key}: lost the manifest race {retries} times — giving "
+            f"up (staged files remain unreferenced; safe to retry)"
+        )
 
     # ---------- schema ----------
 
@@ -1783,7 +1859,6 @@ class ManifestTable:
         self,
         changes: DataFrame,
         epoch_id: int,
-        salt_buckets: int = 16,
         files_per_bucket: int = 1,
         audit: str = "counts",
         strategy: str = "auto",
@@ -1826,7 +1901,7 @@ class ManifestTable:
         (exactly-once under streaming re-delivery / restart).
 
         Concurrency (``retries``): the manifest commit is an optimistic
-        put-if-absent (``_publish``).  On a lost race the merge re-reads the
+        put-if-absent (``_commit``).  On a lost race the merge re-reads the
         winner's manifest and rebases: a duplicate epoch is skipped
         (exactly-once across writers); a delta commit rebases by re-appending
         its staged files; a CoW commit rebases only if the winner's commit
@@ -1855,24 +1930,25 @@ class ManifestTable:
         key_cols = m["key_cols"]
         cur_schema = self.schema()
 
-        # retention watermark (see retention_delete): an upsert older than
-        # the table's retention point is data the table contracted never to
-        # hold again — drop it before the fold.  Deletes pass (they can only
-        # remove), and null-ts events keep their existing semantics.  This
-        # filter is also what keeps replicas exactly convergent after a
-        # retention delete: the upstream never commits a pre-watermark
+        # watermark (retention_delete's cutoff or compact's purge bound,
+        # whichever is later — see _watermark): an upsert older than it is
+        # data the table contracted never to hold again (or whose tombstone
+        # may be purged) — drop it before the fold.  Deletes pass (they can
+        # only remove), and null-ts events keep their existing semantics.
+        # This filter is also what keeps replicas exactly convergent after
+        # a retention delete: the upstream never commits a pre-watermark
         # upsert, and the replica's synthesized tombstones block the same
         # versions a second time.  ``_bypass_watermark`` is for INTERNAL
         # verbs only (update_where): a rewrite of current LIVE state stamps
         # the row's own ts, which may legitimately precede the watermark —
         # it is not late external data, and it can never resurrect a purged
         # key because it was derived from the live snapshot.
-        ret = m.get("retention_ts")
-        if ret is not None and not _bypass_watermark and "ts" in changes.columns:
+        wm = None if _bypass_watermark else _watermark(m)
+        if wm is not None and "ts" in changes.columns:
             changes = changes.filter(
                 (F.col("op") == F.lit("D"))
                 | F.col("ts").isNull()
-                | (F.col("ts") >= F.lit(_stat_from_json(ret)))
+                | (F.col("ts") >= F.lit(wm))
             )
 
         # 1. schema evolution (additive) BEFORE touching data
@@ -1885,10 +1961,9 @@ class ManifestTable:
             tombstoned=self._tombstoned_names(m),
         )
 
-        # 2. within-batch dedup: salted two-level max-version aggregate
-        deduped = dedup_latest(
-            changes, key_cols, ["ts", "lsn"], salt_buckets=salt_buckets
-        )
+        # 2. within-batch dedup: per-key max-version aggregate (max_by with
+        # map-side partial combine — hot keys collapse before the shuffle)
+        deduped = dedup_latest(changes, key_cols, ["ts", "lsn"])
 
         # 3. normalize to internal row shape (evaluated once: both the delta
         # path and the stage-first CoW path write this plan straight to
@@ -2102,15 +2177,17 @@ class ManifestTable:
         # ---- publish (optimistic concurrency: assemble against a base
         # manifest; on a lost race, rebase onto the winner and retry)
         def _assemble(mc: dict[str, Any]) -> dict[str, Any]:
-            """Build the commit manifest on top of base manifest ``mc``
+            """The fields this commit changes on top of base manifest ``mc``
             (first attempt: the manifest the merge read; rebase attempts:
             the concurrent winner's).  Schema evolution is re-derived
             against ``mc`` — a concurrent writer may have added columns;
             additive union + read-through-nulls make both sides' files
-            readable under the merged schema."""
-            base_schema = T.StructType.fromJson(mc["schema"])
+            readable under the merged schema.  Layout (key_cols,
+            n_buckets) carries from ``mc``: the rebase check guarantees it
+            equals the merge-start layout (a layout change redoes the
+            merge)."""
             schema_c, added_c = self._evolve_schema(
-                base_schema,
+                T.StructType.fromJson(mc["schema"]),
                 T.StructType(payload_fields),
                 tombstoned=self._tombstoned_names(mc),
             )
@@ -2118,177 +2195,131 @@ class ManifestTable:
             oldd = {
                 int(b): ps for b, ps in (mc.get("delta_files") or {}).items()
             }
+            old_dr = {
+                int(k): int(v) for k, v in (mc.get("delta_rows") or {}).items()
+            }
             if mode == "delta":
                 files = oldf
                 delta_files = {
                     b: oldd.get(b, []) + staged_files.get(b, [])
                     for b in set(oldd) | set(staged_files)
                 }
-                bucket_rows = mc.get("bucket_rows") or {}
-                total_rows = mc["total_rows"]
-                old_dr = {
-                    k: int(v) for k, v in (mc.get("delta_rows") or {}).items()
-                }
                 delta_rows = {
-                    str(b): old_dr.get(str(b), 0) + rows_by_bucket.get(str(b), 0)
-                    for b in set(int(k) for k in old_dr) | set(touched)
+                    str(b): old_dr.get(b, 0) + rows_by_bucket.get(str(b), 0)
+                    for b in set(old_dr) | set(touched)
                 }
+                out = {}
             else:
                 # untouched buckets keep the base manifest's files; touched
-                # swap to staged and their deltas (now folded in) are dropped
-                files = dict(oldf)
-                for b in touched:
-                    files[b] = staged_files.get(b, [])
+                # swap to staged and their deltas (now folded in) are
+                # dropped.  Clustering markers are dropped too: the touched
+                # buckets are rewritten UNSORTED (re-establish with compact/
+                # rebucket — the decay-then-reoptimize lifecycle of Delta
+                # OPTIMIZE / Iceberg sort orders); a delta commit leaves
+                # every base file untouched, so there the claim carries
+                files = {
+                    **oldf, **{b: staged_files.get(b, []) for b in touched}
+                }
                 delta_files = {
                     b: ps for b, ps in oldd.items() if b not in touched
                 }
-                bucket_rows = {
-                    **{
-                        str(b): r
-                        for b, r in (mc.get("bucket_rows") or {}).items()
-                        if int(b) not in touched
-                    },
-                    **rows_by_bucket,
-                }
-                total_rows = (
-                    mc["total_rows"] - self._rows_in(mc, touched) + staged_rows
-                )
                 delta_rows = {
-                    k: int(v)
-                    for k, v in (mc.get("delta_rows") or {}).items()
-                    if int(k) not in touched
+                    str(b): n for b, n in old_dr.items() if b not in touched
                 }
-            applied_c, ranges_c = _fold_applied(
-                mc["applied_epochs"] + [epoch_key],
-                mc.get("applied_ranges") or {},
-                self.max_epoch_entries,
-            )
+                out = {
+                    "bucket_rows": {
+                        **{
+                            str(b): r
+                            for b, r in (mc.get("bucket_rows") or {}).items()
+                            if int(b) not in touched
+                        },
+                        **rows_by_bucket,
+                    },
+                    "total_rows": (
+                        mc["total_rows"] - self._rows_in(mc, touched)
+                        + staged_rows
+                    ),
+                    "sorted_by": [],
+                    "zordered_by": [],
+                }
             return {
-                "version": mc["version"] + 1,
-                "parent": mc["version"],
+                **out,
                 "epoch_id": epoch_key,
                 "schema": schema_c.jsonValue(),
-                # layout comes from the BASE manifest, not merge-start locals:
-                # the retry loop guarantees they agree (a layout change redoes
-                # the merge), and taking them from mc makes that invariant
-                # structural rather than assumed
-                "key_cols": mc["key_cols"],
-                "n_buckets": mc["n_buckets"],
-                "tenant_id": mc.get("tenant_id"),
                 "files": {str(b): p for b, p in files.items()},
                 "delta_files": {str(b): p for b, p in delta_files.items() if p},
                 "file_stats": self._fold_stats(
                     mc, files, delta_files, staged_stats
                 ),
-                "stats_cols": mc.get("stats_cols") or [],
-                "bloom_filter_cols": mc.get("bloom_filter_cols") or [],
-                "constraints": mc.get("constraints") or {},
-                # clustering markers: a delta commit appends side files and
-                # leaves every base file untouched, so the base clustering
-                # survives and the claim carries forward; a CoW commit
-                # rewrites its touched buckets UNSORTED, so the claim is
-                # dropped (re-establish with compact/rebucket — same decay-
-                # then-reoptimize lifecycle as Delta OPTIMIZE / Iceberg
-                # sort orders under ongoing writes)
-                "sorted_by": (
-                    list(mc.get("sorted_by") or []) if mode == "delta" else []
-                ),
-                "zordered_by": (
-                    list(mc.get("zordered_by") or []) if mode == "delta" else []
-                ),
-                # metadata-only schema history: untouched buckets keep files
-                # written under historical names, so both carry forward on
-                # every ingest commit (only a provably-full rewrite clears
-                # them — see compact/rebucket)
-                "renamed_cols": mc.get("renamed_cols") or {},
-                "dropped_cols": mc.get("dropped_cols") or [],
-                "bucket_rows": bucket_rows,
-                "applied_epochs": applied_c,
-                "applied_ranges": ranges_c,
                 "added_cols": added_c,
-                "total_rows": total_rows,  # base rows; MOR live count needs read()
                 "delta_rows": delta_rows,
                 "delta_rows_total": sum(delta_rows.values()),
-                "committed_at": time.time(),
             }
 
-        mc = m
-        for attempt in range(max(1, retries)):
-            if attempt:
-                mc = self.manifest()  # re-read the winner's manifest
-                if _epoch_applied(mc, epoch_key):
-                    # another writer (a racing retry of the same stream)
-                    # already committed THIS epoch — exactly-once holds
-                    return {
-                        "status": "Skipped",
-                        "epoch_id": epoch_id,
-                        "version": mc["version"],
-                        "reason": "epoch committed by concurrent writer",
-                        "duration_s": time.monotonic() - t0,
-                    }
-                stale = (
-                    mc["n_buckets"] != n_buckets
-                    or mc["key_cols"] != key_cols
-                    # a constraint-set change (the winner was
-                    # add_constraint/drop_constraint) invalidates the staged
-                    # ENFORCEMENT, not the bytes: this batch was validated
-                    # against the constraints as of m, and publishing it
-                    # under the winner's stricter set would commit unchecked
-                    # rows — redo the merge so the staging observation
-                    # re-validates against the fresh manifest
-                    or (mc.get("constraints") or {}) != (m.get("constraints") or {})
-                )
-                # a layout change (the winner was rebucket()) invalidates the
-                # staged files in EVERY mode: they are hashed under the OLD
-                # bucket count, and appending them (delta) or republishing
-                # the old layout (CoW _assemble) would silently revert the
-                # rebucket and mis-bucket data — point-lookup pruning would
-                # then skip buckets that hold the key.  Redo the whole merge
-                # against the fresh manifest (staged dirs orphan → vacuumed).
-                if not stale and mode != "delta":
-                    # our merged rewrite folded the touched buckets' state
-                    # AS OF m; if the winner changed any of them the staged
-                    # output is stale — same recovery
-                    od = m.get("delta_files") or {}
-                    nd = mc.get("delta_files") or {}
-                    stale = any(
-                        mc["files"].get(str(b)) != m["files"].get(str(b))
-                        or nd.get(str(b)) != od.get(str(b))
-                        for b in touched
-                    )
-                if stale:
-                    return self.merge(
-                        changes,
-                        epoch_id,
-                        salt_buckets=salt_buckets,
-                        files_per_bucket=files_per_bucket,
-                        audit=audit,
-                        strategy=strategy,
-                        broadcast_threshold=broadcast_threshold,
-                        epoch_scope=epoch_scope,
-                        before_publish=before_publish,
-                        mode=mode,
-                        retries=retries - attempt,
-                    )
-                # same-layout delta rebase is safe: delta commits only append
-                # per-bucket file lists, they never read target state
-            new_manifest = _assemble(mc)
-            if before_publish is not None:
-                # test/chaos hook: crash after staging, before the commit
-                # point — the staged dir stays unreferenced; replay re-runs
-                before_publish(new_manifest)
-            try:
-                self._publish(new_manifest)
-                break
-            except ManifestConflict:
-                continue
-        else:
-            raise ManifestConflict(
-                f"epoch {epoch_id}: lost the manifest race {retries} times — "
-                f"giving up (staged files remain unreferenced; safe to retry)"
+        def _rebase(mc: dict[str, Any], retries_left: int):
+            stale = (
+                mc["n_buckets"] != n_buckets
+                or mc["key_cols"] != key_cols
+                # a constraint-set change (the winner was add_constraint/
+                # drop_constraint) invalidates the staged ENFORCEMENT, not
+                # the bytes: this batch was validated against the
+                # constraints as of m, and publishing it under the winner's
+                # stricter set would commit unchecked rows
+                or (mc.get("constraints") or {})
+                != (m.get("constraints") or {})
             )
-        version = new_manifest["version"]
-        added_cols = new_manifest["added_cols"]
+            # a layout change (the winner was rebucket()) invalidates the
+            # staged files in EVERY mode: they are hashed under the OLD
+            # bucket count, and appending them (delta) or republishing the
+            # old layout (CoW) would silently revert the rebucket and
+            # mis-bucket data.  A CoW rewrite folded the touched buckets'
+            # state AS OF m, so a winner that changed any of them makes it
+            # stale too.  A same-layout delta rebase is safe: delta commits
+            # only append per-bucket file lists, they never read target
+            # state.
+            if not stale and mode != "delta":
+                od = m.get("delta_files") or {}
+                nd = mc.get("delta_files") or {}
+                stale = any(
+                    mc["files"].get(str(b)) != m["files"].get(str(b))
+                    or nd.get(str(b)) != od.get(str(b))
+                    for b in touched
+                )
+            if stale:
+                # redo the whole merge against the fresh manifest (the
+                # staged dirs orphan → vacuumed)
+                return self.merge(
+                    changes,
+                    epoch_id,
+                    files_per_bucket=files_per_bucket,
+                    audit=audit,
+                    strategy=strategy,
+                    broadcast_threshold=broadcast_threshold,
+                    epoch_scope=epoch_scope,
+                    before_publish=before_publish,
+                    mode=mode,
+                    retries=retries_left,
+                )
+            return None
+
+        res = self._commit(
+            m,
+            _assemble,
+            lambda new: {
+                "merge_path": merge_path,
+                "touched_buckets": touched,
+                "staged_rows": staged_rows,
+                "n_change_keys": n_change_keys,
+                "rows_by_bucket": {
+                    int(b): n for b, n in rows_by_bucket.items()
+                },
+                "added_cols": new["added_cols"],
+            },
+            epoch_key=epoch_key,
+            on_conflict=_rebase,
+            retries=retries,
+            before_publish=before_publish,
+        )
         if mode != "delta" and merge_path != "initial":
             # the intermediate change-stage files were folded into merged/
             # and are never referenced by any manifest; drop them now rather
@@ -2296,16 +2327,7 @@ class ManifestTable:
             # which vacuum only collects at top-dir granularity
             self.storage.delete_prefix(os.path.join(stage_rel, "changes"))
         return {
-            "status": "Success",
-            "epoch_id": epoch_id,
-            "version": version,
-            "merge_path": merge_path,
-            "touched_buckets": touched,
-            "staged_rows": staged_rows,
-            "n_change_keys": n_change_keys,
-            "rows_by_bucket": {int(b): n for b, n in rows_by_bucket.items()},
-            "added_cols": added_cols,
-            "duration_s": time.monotonic() - t0,
+            "epoch_id": epoch_id, **res, "duration_s": time.monotonic() - t0,
         }
 
     def commit_delta_files(
@@ -2418,7 +2440,6 @@ class ManifestTable:
                 T.StructType(payload_fields),
                 tombstoned=self._tombstoned_names(mc),
             )
-            oldf = {int(b): ps for b, ps in mc["files"].items()}
             oldd = {
                 int(b): ps for b, ps in (mc.get("delta_files") or {}).items()
             }
@@ -2427,97 +2448,57 @@ class ManifestTable:
                 for b in set(oldd) | set(staged_sorted)
             }
             old_dr = {
-                k: int(v) for k, v in (mc.get("delta_rows") or {}).items()
+                int(k): int(v) for k, v in (mc.get("delta_rows") or {}).items()
             }
             delta_rows = {
-                str(b): old_dr.get(str(b), 0)
-                + int(rows_by_bucket.get(str(b), 0))
-                for b in set(int(k) for k in old_dr) | set(staged_sorted)
+                str(b): old_dr.get(b, 0) + int(rows_by_bucket.get(str(b), 0))
+                for b in set(old_dr) | set(staged_sorted)
             }
-            applied_c, ranges_c = _fold_applied(
-                mc["applied_epochs"] + [epoch_key],
-                mc.get("applied_ranges") or {},
-                self.max_epoch_entries,
-            )
+            # a delta append leaves every base file untouched: files,
+            # bucket_rows and the clustering claim carry from mc
             return {
-                "version": mc["version"] + 1,
-                "parent": mc["version"],
                 "epoch_id": epoch_key,
                 "schema": schema_c.jsonValue(),
-                "key_cols": mc["key_cols"],
-                "n_buckets": mc["n_buckets"],
-                "tenant_id": mc.get("tenant_id"),
-                "files": {str(b): p for b, p in oldf.items()},
                 "delta_files": {
                     str(b): p for b, p in delta_files.items() if p
                 },
                 "file_stats": self._fold_stats(
-                    mc, oldf, delta_files, staged_stats
+                    mc, mc["files"], delta_files, staged_stats
                 ),
-                "stats_cols": mc.get("stats_cols") or [],
-                "bloom_filter_cols": mc.get("bloom_filter_cols") or [],
-                "constraints": mc.get("constraints") or {},
-                # a delta append leaves every base file untouched, so the
-                # base clustering claim carries forward (same rule as
-                # merge's delta branch)
-                "sorted_by": list(mc.get("sorted_by") or []),
-                "zordered_by": list(mc.get("zordered_by") or []),
-                "renamed_cols": mc.get("renamed_cols") or {},
-                "dropped_cols": mc.get("dropped_cols") or [],
-                "bucket_rows": mc.get("bucket_rows") or {},
-                "applied_epochs": applied_c,
-                "applied_ranges": ranges_c,
                 "added_cols": added_c,
-                "total_rows": mc["total_rows"],
                 "delta_rows": delta_rows,
                 "delta_rows_total": sum(delta_rows.values()),
-                "committed_at": time.time(),
             }
 
-        mc = m
-        for attempt in range(max(1, retries)):
-            if attempt:
-                mc = self.manifest()
-                if _epoch_applied(mc, epoch_key):
-                    return {
-                        "status": "Skipped",
-                        "epoch_id": epoch_id,
-                        "version": mc["version"],
-                        "reason": "epoch committed by concurrent writer",
-                        "duration_s": time.monotonic() - t0,
-                    }
-                if (
-                    mc["n_buckets"] != n_buckets
-                    or list(mc["key_cols"]) != key_cols
-                    or (mc.get("constraints") or {})
-                ):
-                    raise RuntimeError(
-                        f"epoch {epoch_id}: lost the manifest race to a "
-                        f"bucket-layout / key / constraint change — the "
-                        f"staged files are not committable under the new "
-                        f"table shape and this Spark-free verb cannot "
-                        f"restage them; restage against the current table "
-                        f"(orphans are vacuumed)"
-                    )
-            new_manifest = _assemble(mc)
-            try:
-                self._publish(new_manifest)
-                break
-            except ManifestConflict:
-                continue
-        else:
-            raise ManifestConflict(
-                f"epoch {epoch_id}: lost the manifest race {retries} times — "
-                f"giving up (staged files remain unreferenced; safe to retry)"
-            )
+        def _rebase(mc: dict[str, Any], _retries_left: int):
+            if (
+                mc["n_buckets"] != n_buckets
+                or list(mc["key_cols"]) != key_cols
+                or (mc.get("constraints") or {})
+            ):
+                raise RuntimeError(
+                    f"epoch {epoch_id}: lost the manifest race to a "
+                    f"bucket-layout / key / constraint change — the "
+                    f"staged files are not committable under the new "
+                    f"table shape and this Spark-free verb cannot "
+                    f"restage them; restage against the current table "
+                    f"(orphans are vacuumed)"
+                )
+
+        res = self._commit(
+            m,
+            _assemble,
+            lambda new: {
+                "staged_rows": staged_rows_total,
+                "touched_buckets": sorted(staged_sorted),
+                "added_cols": new["added_cols"],
+            },
+            epoch_key=epoch_key,
+            on_conflict=_rebase,
+            retries=retries,
+        )
         return {
-            "status": "Success",
-            "epoch_id": epoch_id,
-            "version": new_manifest["version"],
-            "staged_rows": staged_rows_total,
-            "touched_buckets": sorted(staged_sorted),
-            "added_cols": new_manifest["added_cols"],
-            "duration_s": time.monotonic() - t0,
+            "epoch_id": epoch_id, **res, "duration_s": time.monotonic() - t0,
         }
 
     def _scan_staging(
@@ -2695,12 +2676,14 @@ class ManifestTable:
         through it; it also restores the ``::dead``-provable all-live file
         shape that keeps :meth:`count` at tier 1.  The contract is
         ENFORCED, not assumed: the purge commit advances the table's
-        retention watermark (``retention_ts``, monotone max with any
-        retention already set), so merge's existing pre-watermark filter
-        drops a violating late upsert — a purged tombstone's key can
-        never be resurrected; the engine simply stops needing the
-        tombstone to guarantee it.  (Deletes pass the watermark as
-        always; they can only remove.)"""
+        lateness watermark (``lateness_ts``, monotone), so merge's
+        pre-watermark filter drops a violating late upsert — a purged
+        tombstone's key can never be resurrected; the engine simply stops
+        needing the tombstone to guarantee it.  (Deletes pass the
+        watermark as always; they can only remove.)  The bound is NOT a
+        retention cutoff: a later ``retention_delete`` with an older
+        cutoff still drops only rows older than its own cutoff.
+        Tombstones with a NULL ``ts`` are never purged."""
         if sort_by and zorder_by:
             raise ValueError("sort_by and zorder_by are mutually exclusive")
         if max_file_bytes and max_rows_per_file:
@@ -2774,17 +2757,20 @@ class ManifestTable:
             # that are tombstones older than the caller's lateness bound W —
             # nothing they still need to block can ever arrive.  Applied
             # AFTER the fold so a tombstone first beats every older update
-            # in the same fold, exactly as it would have at read time.
-            w = F.lit(
-                _norm_bound(
-                    self._as_of_datetime(purge_tombstones_before),
-                    T.TimestampType(),
-                )
+            # in the same fold, exactly as it would have at read time.  A
+            # NULL-ts tombstone has no provable age and is always kept
+            # (merge passes NULL-ts upserts through the watermark, so only
+            # the tombstone can keep blocking them) — the same rule as
+            # retention_delete, which never drops NULL-ts rows.
+            purge_w = _norm_bound(
+                self._as_of_datetime(purge_tombstones_before),
+                T.TimestampType(),
             )
             merged = merged.filter(
                 ~(
                     F.coalesce(F.col("_deleted"), F.lit(False))
-                    & (F.col("ts") < w)
+                    & F.col("ts").isNotNull()
+                    & (F.col("ts") < F.lit(purge_w))
                 )
             )
         version = m["version"] + 1
@@ -2855,26 +2841,15 @@ class ManifestTable:
         full_rewrite = not delta_files and all(
             int(b) in cset for b, ps in old_files.items() if ps
         )
-        new_manifest = {
-            "version": version,
-            "parent": m["version"],
+        change = {
             "epoch_id": f"compact:{version}",
-            "schema": m["schema"],
-            "key_cols": key_cols,
-            "n_buckets": m["n_buckets"],
-            "tenant_id": m.get("tenant_id"),
             "files": {str(b): p for b, p in files.items()},
             "delta_files": {str(b): p for b, p in delta_files.items()},
             "file_stats": self._fold_stats(m, files, delta_files, staged_stats),
-            "stats_cols": m.get("stats_cols") or [],
-            "bloom_filter_cols": m.get("bloom_filter_cols") or [],
-            "constraints": m.get("constraints") or {},
             # informational: the clustering applied by THIS rewrite (pruning
             # reads file_stats directly and needs no ordering guarantee)
             "sorted_by": list(sort_by or []),
             "zordered_by": list(zorder_by or []),
-            "renamed_cols": {} if full_rewrite else (m.get("renamed_cols") or {}),
-            "dropped_cols": [] if full_rewrite else (m.get("dropped_cols") or []),
             "bucket_rows": {
                 **{
                     str(b): r
@@ -2883,50 +2858,31 @@ class ManifestTable:
                 },
                 **rows_by_bucket,
             },
-            "applied_epochs": m["applied_epochs"],
-            "applied_ranges": m.get("applied_ranges") or {},
-            "added_cols": [],
             "total_rows": m["total_rows"] - self._rows_in(m, cand) + staged_rows,
             "delta_rows": delta_rows,
             "delta_rows_total": sum(delta_rows.values()),
-            "committed_at": time.time(),
         }
+        if full_rewrite:
+            change.update(renamed_cols={}, dropped_cols=[])
         if purge_tombstones_before is not None:
-            # the purge ENFORCES its own contract: advance the table's
-            # watermark (monotone max with any retention watermark already
-            # set) so merge's existing pre-watermark-upsert filter drops
-            # the late older events a purged tombstone can no longer block
-            # — resurrection becomes impossible, not just contracted away
-            w = _norm_bound(
-                self._as_of_datetime(purge_tombstones_before),
-                T.TimestampType(),
-            )
-            old = m.get("retention_ts")
-            if old is None or _stat_from_json(old) < w:
-                new_manifest["retention_ts"] = _stat_to_json(w)
-            else:
-                new_manifest["retention_ts"] = old
-        if before_publish is not None:
-            before_publish(new_manifest)
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            # compaction is pure maintenance: losing the race to an ingest
-            # commit just means the fold re-runs at the next cadence — never
-            # block or retry against the ingest path
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-                "duration_s": time.monotonic() - t0,
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "compacted_buckets": cand,
-            "staged_rows": staged_rows,
-            "duration_s": time.monotonic() - t0,
-        }
+            # the purge ENFORCES its own contract: it advances the table's
+            # lateness watermark (monotone — _commit keeps the max), so
+            # merge's pre-watermark-upsert filter drops the late older
+            # events a purged tombstone can no longer block — resurrection
+            # becomes impossible, not just contracted away.  Its own key,
+            # not retention_ts: a purge bound is no retention cutoff, and
+            # retention_delete's drop floor must never inherit it
+            change["lateness_ts"] = _stat_to_json(purge_w)
+        # compaction is pure maintenance: losing the race to an ingest
+        # commit just means the fold re-runs at the next cadence — never
+        # block or retry against the ingest path (on_conflict="skip")
+        res = self._commit(
+            m,
+            change,
+            {"compacted_buckets": cand, "staged_rows": staged_rows},
+            before_publish=before_publish,
+        )
+        return {**res, "duration_s": time.monotonic() - t0}
 
     def _merge_broadcast(
         self,
@@ -3187,53 +3143,32 @@ class ManifestTable:
                 f"rebucket audit failed: observed {int(obs.get['rows'])} vs "
                 f"staged {staged_rows}"
             )
-        new_manifest = {
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"rebucket:{version}",
-            "schema": m["schema"],
-            "key_cols": key_cols,
-            "n_buckets": n_buckets,
-            "tenant_id": m.get("tenant_id"),
-            "files": {str(b): p for b, p in staged_files.items()},
-            "delta_files": {},
-            "file_stats": self._fold_stats(m, staged_files, {}, staged_stats),
-            "stats_cols": m.get("stats_cols") or [],
-            "bloom_filter_cols": m.get("bloom_filter_cols") or [],
-            "constraints": m.get("constraints") or {},
-            "sorted_by": list(sort_by or []),
-            "zordered_by": list(zorder_by or []),
-            # a rebucket rewrites EVERY live file under the current names,
-            # so rename shadows / drop tombstones physicalize and clear
-            "renamed_cols": {},
-            "dropped_cols": [],
-            "bucket_rows": rows_by_bucket,
-            "applied_epochs": m["applied_epochs"],
-            "applied_ranges": m.get("applied_ranges") or {},
-            "added_cols": [],
-            "total_rows": staged_rows,
-            "delta_rows": {},
-            "delta_rows_total": 0,
-            "committed_at": time.time(),
-        }
-        if before_publish is not None:
-            before_publish(new_manifest)
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-                "duration_s": time.monotonic() - t0,
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "n_buckets": n_buckets,
-            "staged_rows": staged_rows,
-            "duration_s": time.monotonic() - t0,
-        }
+        res = self._commit(
+            m,
+            {
+                "epoch_id": f"rebucket:{version}",
+                "n_buckets": n_buckets,
+                "files": {str(b): p for b, p in staged_files.items()},
+                "delta_files": {},
+                "file_stats": self._fold_stats(
+                    m, staged_files, {}, staged_stats
+                ),
+                "sorted_by": list(sort_by or []),
+                "zordered_by": list(zorder_by or []),
+                # a rebucket rewrites EVERY live file under the current
+                # names, so rename shadows / drop tombstones physicalize
+                # and clear
+                "renamed_cols": {},
+                "dropped_cols": [],
+                "bucket_rows": rows_by_bucket,
+                "total_rows": staged_rows,
+                "delta_rows": {},
+                "delta_rows_total": 0,
+            },
+            {"n_buckets": n_buckets, "staged_rows": staged_rows},
+            before_publish=before_publish,
+        )
+        return {**res, "duration_s": time.monotonic() - t0}
 
     # ---------- maintenance ----------
 
@@ -3659,21 +3594,19 @@ class ManifestTable:
             )
 
         drop_key = f"retdel:{epoch_id}"
-        result: dict[str, Any] = {
-            "status": "Success",
-            "epoch_id": epoch_id,
-            "dropped_files": 0,
-            "dropped_rows": 0,
-        }
-        for attempt in range(5):
-            m = self.manifest()
-            if _epoch_applied(m, drop_key):
-                result["drop_status"] = "Skipped"
-                break
+
+        def _drop(m: dict[str, Any]) -> dict[str, Any] | None:
+            # the drop floor comes from retention cutoffs only: a purge's
+            # lateness_ts bounds late upserts, it never licenses dropping
+            # the live rows below it
             old_ret = m.get("retention_ts")
             old_cut = _stat_from_json(old_ret) if old_ret is not None else None
             eff = cutoff if old_cut is None else max(old_cut, cutoff)
             dropped = self._droppable_before(m, eff)
+            if not dropped and old_cut is not None and eff <= old_cut:
+                # nothing to drop and the watermark already covers the
+                # cutoff: no commit needed, go straight to the residual
+                return None
             stats = dict(m.get("file_stats") or {})
             bucket_rows = {
                 str(b): int(n)
@@ -3686,46 +3619,39 @@ class ManifestTable:
                 stats.pop(p, None)
                 bucket_rows[b] = max(0, bucket_rows.get(b, 0) - rows)
                 n_dropped_rows += rows
-            if not dropped and old_cut is not None and eff <= old_cut:
-                # nothing to drop and the watermark already covers the
-                # cutoff: no commit needed, go straight to the residual
-                result["drop_status"] = "NoChange"
-                break
-            applied_c, ranges_c = _fold_applied(
-                m["applied_epochs"] + [drop_key],
-                m.get("applied_ranges") or {},
-                self.max_epoch_entries,
-            )
-            new_manifest = {
-                **m,
-                "version": m["version"] + 1,
-                "parent": m["version"],
+            return {
                 "epoch_id": drop_key,
                 "files": files,
                 "file_stats": stats,
                 "bucket_rows": bucket_rows,
                 "total_rows": max(0, int(m["total_rows"]) - n_dropped_rows),
-                "applied_epochs": applied_c,
-                "applied_ranges": ranges_c,
-                "added_cols": [],
                 "retention_ts": _stat_to_json(eff),
                 "retdel_dropped": sorted(p for _, p, _ in dropped),
                 "retdel_rows": n_dropped_rows,
-                "committed_at": time.time(),
             }
-            try:
-                self._publish(new_manifest)
-            except ManifestConflict:
-                continue  # re-read and recompute against the winner
-            result["dropped_files"] = len(dropped)
-            result["dropped_rows"] = n_dropped_rows
-            result["version"] = new_manifest["version"]
-            break
+
+        # a lost race re-reads the head and recomputes the drop set
+        drop = self._commit(
+            m,
+            _drop,
+            lambda new: {
+                "dropped_files": len(new["retdel_dropped"]),
+                "dropped_rows": new["retdel_rows"],
+            },
+            epoch_key=drop_key,
+            on_conflict="retry",
+            retries=5,
+        )
+        result: dict[str, Any] = {
+            "status": "Success",
+            "epoch_id": epoch_id,
+            "dropped_files": drop.get("dropped_files", 0),
+            "dropped_rows": drop.get("dropped_rows", 0),
+        }
+        if drop["status"] == "Success":
+            result["version"] = drop["version"]
         else:
-            raise ManifestConflict(
-                f"retention_delete epoch {epoch_id}: lost the manifest "
-                f"race 5 times — safe to retry"
-            )
+            result["drop_status"] = drop["status"]  # Skipped / NoChange
 
         # residual tombstone pass over whatever live pre-cutoff rows remain
         # (boundary files, buckets that had deltas) — its own exactly-once
@@ -4399,29 +4325,14 @@ class ManifestTable:
                 "reason": "stats_cols unchanged",
                 "version": m["version"],
             }
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"set-stats:{version}",
-            "stats_cols": list(stats_cols),
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "stats_cols": list(stats_cols),
-        }
+        return self._commit(
+            m,
+            {
+                "epoch_id": f"set-stats:{m['version'] + 1}",
+                "stats_cols": list(stats_cols),
+            },
+            {"stats_cols": list(stats_cols)},
+        )
 
     # known maintenance-policy property keys (the `maintain.py auto`
     # autopilot reads exactly these; see set_properties)
@@ -4506,8 +4417,8 @@ class ManifestTable:
         """Merge-update table properties — a METADATA-ONLY commit (Iceberg
         ``ALTER TABLE ... SET TBLPROPERTIES`` / ``UNSET`` analogue).
         ``None`` deletes a key; values are stored as strings.  Properties
-        are CONFIG, carried forward through every subsequent commit at the
-        ``_publish`` chokepoint and deliberately NOT reverted by
+        are CONFIG, carried forward through every subsequent commit by
+        ``_commit`` and deliberately NOT reverted by
         ``rollback_to`` (rolling back data must not silently roll back
         retention policy).
 
@@ -4534,25 +4445,14 @@ class ManifestTable:
                 "reason": "properties unchanged",
                 "version": m["version"],
             }
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"set-properties:{version}",
-            "properties": cur,
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "properties": cur}
+        return self._commit(
+            m,
+            {
+                "epoch_id": f"set-properties:{m['version'] + 1}",
+                "properties": cur,
+            },
+            {"properties": cur},
+        )
 
     def auto_maintain(self, dry_run: bool = False) -> dict[str, Any]:
         """One-call maintenance autopilot driven by the table's OWN
@@ -4656,29 +4556,14 @@ class ManifestTable:
                 "reason": "bloom_filter_cols unchanged",
                 "version": m["version"],
             }
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"set-bloom:{version}",
-            "bloom_filter_cols": list(cols),
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "bloom_filter_cols": list(cols),
-        }
+        return self._commit(
+            m,
+            {
+                "epoch_id": f"set-bloom:{m['version'] + 1}",
+                "bloom_filter_cols": list(cols),
+            },
+            {"bloom_filter_cols": list(cols)},
+        )
 
     # ---------- CHECK constraints (write-time data quality contracts) ----------
 
@@ -4817,25 +4702,14 @@ class ManifestTable:
                     f"CHECK ({expr}) — clean the data first "
                     f"(e.g. delete_where/update_where), then re-add"
                 )
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"add-constraint:{version}",
-            "constraints": {**cons, name: expr},
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "name": name}
+        return self._commit(
+            m,
+            {
+                "epoch_id": f"add-constraint:{m['version'] + 1}",
+                "constraints": {**cons, name: expr},
+            },
+            {"name": name},
+        )
 
     def drop_constraint(self, name: str) -> dict[str, Any]:
         """``ALTER TABLE DROP CONSTRAINT`` — metadata-only commit."""
@@ -4849,25 +4723,14 @@ class ManifestTable:
                 "version": m["version"],
             }
         cons.pop(name)
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"drop-constraint:{version}",
-            "constraints": cons,
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "name": name}
+        return self._commit(
+            m,
+            {
+                "epoch_id": f"drop-constraint:{m['version'] + 1}",
+                "constraints": cons,
+            },
+            {"name": name},
+        )
 
     def add_column(
         self, name: str, dtype: T.DataType | str
@@ -4905,32 +4768,17 @@ class ManifestTable:
             )
         if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             raise ValueError(f"invalid column name {name!r}")
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"add-column:{name}",
-            "schema": T.StructType(
-                list(schema.fields) + [T.StructField(name, dtype, True)]
-            ).jsonValue(),
-            "added_cols": [name],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "name": name,
-            "dtype": dtype.simpleString(),
-        }
+        return self._commit(
+            m,
+            {
+                "epoch_id": f"add-column:{name}",
+                "schema": T.StructType(
+                    list(schema.fields) + [T.StructField(name, dtype, True)]
+                ).jsonValue(),
+                "added_cols": [name],
+            },
+            {"name": name, "dtype": dtype.simpleString()},
+        )
 
     def widen_column(
         self, name: str, dtype: T.DataType | str
@@ -4970,37 +4818,21 @@ class ManifestTable:
                 f" only safe promotions within a numeric family are allowed"
                 f" (tinyint→smallint→int→bigint, float→double)"
             )
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"widen-column:{name}",
-            "schema": T.StructType(
-                [
-                    T.StructField(name, dtype, f.nullable)
-                    if f.name == name
-                    else f
-                    for f in schema.fields
-                ]
-            ).jsonValue(),
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {
-            "status": "Success",
-            "version": version,
-            "name": name,
-            "dtype": dtype.simpleString(),
-        }
+        return self._commit(
+            m,
+            {
+                "epoch_id": f"widen-column:{name}",
+                "schema": T.StructType(
+                    [
+                        T.StructField(name, dtype, f.nullable)
+                        if f.name == name
+                        else f
+                        for f in schema.fields
+                    ]
+                ).jsonValue(),
+            },
+            {"name": name, "dtype": dtype.simpleString()},
+        )
 
     def _constraints_referencing(self, col: str) -> list[str]:
         """Names of constraints whose expression references ``col`` —
@@ -5094,33 +4926,22 @@ class ManifestTable:
         def sub(c: str) -> str:
             return new if c == old else c
 
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"rename:{old}>{new}",
-            "schema": T.StructType(fields).jsonValue(),
-            "key_cols": [sub(c) for c in m["key_cols"]],
-            "stats_cols": [sub(c) for c in (m.get("stats_cols") or [])],
-            "bloom_filter_cols": [
-                sub(c) for c in (m.get("bloom_filter_cols") or [])
-            ],
-            "sorted_by": [sub(c) for c in (m.get("sorted_by") or [])],
-            "zordered_by": [sub(c) for c in (m.get("zordered_by") or [])],
-            "renamed_cols": ren,
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "renamed": {old: new}}
+        return self._commit(
+            m,
+            {
+                "epoch_id": f"rename:{old}>{new}",
+                "schema": T.StructType(fields).jsonValue(),
+                "key_cols": [sub(c) for c in m["key_cols"]],
+                "stats_cols": [sub(c) for c in (m.get("stats_cols") or [])],
+                "bloom_filter_cols": [
+                    sub(c) for c in (m.get("bloom_filter_cols") or [])
+                ],
+                "sorted_by": [sub(c) for c in (m.get("sorted_by") or [])],
+                "zordered_by": [sub(c) for c in (m.get("zordered_by") or [])],
+                "renamed_cols": ren,
+            },
+            {"renamed": {old: new}},
+        )
 
     def drop_column(self, name: str) -> dict[str, Any]:
         """``ALTER TABLE DROP COLUMN`` — a METADATA-ONLY commit: the column
@@ -5164,41 +4985,30 @@ class ManifestTable:
         ren = {k: list(v) for k, v in (m.get("renamed_cols") or {}).items()}
         chain = [name] + ren.pop(name, [])
         dropped = list(m.get("dropped_cols") or []) + chain
-        version = m["version"] + 1
-        new_manifest = {
-            **m,
-            "version": version,
-            "parent": m["version"],
-            "epoch_id": f"drop-column:{name}",
-            "schema": T.StructType(
-                [f for f in schema.fields if f.name != name]
-            ).jsonValue(),
-            "stats_cols": [
-                c for c in (m.get("stats_cols") or []) if c != name
-            ],
-            "bloom_filter_cols": [
-                c for c in (m.get("bloom_filter_cols") or []) if c != name
-            ],
-            "sorted_by": [
-                c for c in (m.get("sorted_by") or []) if c != name
-            ],
-            "zordered_by": [
-                c for c in (m.get("zordered_by") or []) if c != name
-            ],
-            "renamed_cols": ren,
-            "dropped_cols": dropped,
-            "added_cols": [],
-            "committed_at": time.time(),
-        }
-        try:
-            self._publish(new_manifest)
-        except ManifestConflict:
-            return {
-                "status": "Skipped",
-                "reason": "lost manifest race to a concurrent writer",
-                "version": self.current_version(),
-            }
-        return {"status": "Success", "version": version, "dropped": name}
+        return self._commit(
+            m,
+            {
+                "epoch_id": f"drop-column:{name}",
+                "schema": T.StructType(
+                    [f for f in schema.fields if f.name != name]
+                ).jsonValue(),
+                "stats_cols": [
+                    c for c in (m.get("stats_cols") or []) if c != name
+                ],
+                "bloom_filter_cols": [
+                    c for c in (m.get("bloom_filter_cols") or []) if c != name
+                ],
+                "sorted_by": [
+                    c for c in (m.get("sorted_by") or []) if c != name
+                ],
+                "zordered_by": [
+                    c for c in (m.get("zordered_by") or []) if c != name
+                ],
+                "renamed_cols": ren,
+                "dropped_cols": dropped,
+            },
+            {"dropped": name},
+        )
 
     # ---------- named refs (Iceberg tags analogue) ----------
 
@@ -5348,45 +5158,20 @@ class ManifestTable:
             raise ValueError("rollback_to needs exactly one of version/tag")
         if tag is not None:
             version = self._resolve_tag(tag)
-        cur = self.current_version()
-        if version == cur:
-            return {"status": "NoChange", "version": cur}
-        target = self.manifest(version)  # raises if expired
-        pub = dict(
-            target,
-            version=cur + 1,
-            parent=cur,
-            epoch_id=f"rollback:{version}",
-            committed_at=time.time(),
-        )
-        # table PROPERTIES are config, not snapshot state (Iceberg
-        # semantics): a rollback keeps the current set, it does not revive
-        # the target's
-        pub.pop("properties", None)
         head = self.manifest()
-        head_props = head.get("properties")
-        if head_props:
-            pub["properties"] = head_props
-        # the retention watermark is MONOTONE config: a rollback to a
-        # version carrying an older (or no) watermark must not regress it —
-        # replica convergence and tombstone GC both argue from "the
-        # upstream never commits a pre-watermark upsert", which only holds
-        # if the watermark never moves backward.  (A target with NO
-        # watermark already inherits the parent's via _commit_manifest;
-        # this handles a target with an older one.)
-        head_ret = head.get("retention_ts")
-        if head_ret is not None:
-            tgt_ret = pub.get("retention_ts")
-            if tgt_ret is None or _stat_from_json(tgt_ret) < _stat_from_json(
-                head_ret
-            ):
-                pub["retention_ts"] = head_ret
-        self._publish(pub)
-        return {
-            "status": "Success",
-            "version": cur + 1,
-            "rolled_back_to": version,
-        }
+        if version == head["version"]:
+            return {"status": "NoChange", "version": version}
+        # the target's content under a new version; table config (properties,
+        # the monotone watermarks, clone provenance) stays the head's —
+        # rolling back data must not roll back retention policy or let a
+        # pre-watermark upsert in again (see _commit)
+        return self._commit(
+            head,
+            {"epoch_id": f"rollback:{version}"},
+            {"rolled_back_to": version},
+            source=self.manifest(version),  # raises if expired
+            on_conflict="raise",
+        )
 
     # ---------- branches (write-audit-publish) ----------
 
@@ -5512,7 +5297,8 @@ class ManifestTable:
             self.spark, self.root, storage=self.storage, branch=name
         )
         bh = b.manifest(head)
-        main_head = self.current_version()
+        main = self.manifest()
+        main_head = main["version"]
         if main_head != base:
             raise ManifestConflict(
                 f"cannot fast-forward {name!r}: main is at v{main_head} but "
@@ -5521,20 +5307,14 @@ class ManifestTable:
             )
         if head == base:
             return {"status": "NoChange", "version": main_head}
-        pub = dict(
-            bh,
-            version=main_head + 1,
-            parent=main_head,
-            epoch_id=f"publish:{name}",
-            committed_at=time.time(),
+        # lost race → ManifestConflict, nothing published
+        return self._commit(
+            main,
+            {"epoch_id": f"publish:{name}"},
+            {"branch_head": head, "branch_commits": head - base},
+            source=bh,
+            on_conflict="raise",
         )
-        self._publish(pub)  # lost race → ManifestConflict, nothing published
-        return {
-            "status": "Success",
-            "version": main_head + 1,
-            "branch_head": head,
-            "branch_commits": head - base,
-        }
 
     def drop_branch(self, name: str) -> bool:
         """Delete a branch ref and its manifest chain (published or

@@ -22,6 +22,7 @@ all pending segments and stops (full replay mode).
 
 from __future__ import annotations
 
+import json
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -111,6 +112,15 @@ def _progress_listener(lineage: LineageLog, query_name: str):
     return _Listener()
 
 
+def _verb_detail(report: dict) -> str:
+    """A verb report as a lineage ``detail``: JSON (parseable with
+    ``json.loads``), minus the bulky per-bucket row map."""
+    return json.dumps(
+        {k: v for k, v in report.items() if k != "rows_by_bucket"},
+        default=str,
+    )
+
+
 def _payload_schema(change_schema: T.StructType) -> T.StructType:
     return T.StructType(
         [f for f in change_schema.fields if f.name not in ("op", "lsn")]
@@ -126,7 +136,6 @@ class CDCEngine:
         key_cols: list[str] | None = None,
         n_buckets: int = 16,
         tenant_id: str | None = None,
-        salt_buckets: int = 16,
         files_per_bucket: int = 1,
         audit: str = "counts",
         merge_mode: str = "cow",  # "cow" | "delta" (merge-on-read tail path)
@@ -212,7 +221,6 @@ class CDCEngine:
     ):
         self.spark = spark
         self.change_schema = change_schema
-        self.salt_buckets = salt_buckets
         self.files_per_bucket = files_per_bucket
         self.merge_mode = merge_mode
         self.compact_every = compact_every
@@ -298,7 +306,6 @@ class CDCEngine:
             stats = self.table.merge(
                 batch_df,
                 epoch_id,
-                salt_buckets=self.salt_buckets,
                 files_per_bucket=self.files_per_bucket,
                 audit=self.audit,
                 epoch_scope=self._epoch_scope,
@@ -309,7 +316,7 @@ class CDCEngine:
                 epoch_id,
                 "merge",
                 stats["status"],
-                detail=str({k: v for k, v in stats.items() if k != "rows_by_bucket"}),
+                detail=_verb_detail(stats),
                 duration_s=stats["duration_s"],
             )
             if stats["status"] == "Success":
@@ -346,9 +353,7 @@ class CDCEngine:
                         epoch_id,
                         "compact",
                         cst["status"],
-                        detail=str(
-                            {k: v for k, v in cst.items() if k != "rows_by_bucket"}
-                        ),
+                        detail=_verb_detail(cst),
                         duration_s=cst["duration_s"],
                     )
                     self._epochs_since_compact = 0
@@ -373,9 +378,7 @@ class CDCEngine:
                     epoch_id,
                     "history",
                     hst.get("status", "Success"),
-                    detail=str(
-                        {k: v for k, v in hst.items() if k != "rows_by_bucket"}
-                    ),
+                    detail=_verb_detail(hst),
                     duration_s=hst.get("duration_s"),
                 )
                 if (
@@ -393,13 +396,7 @@ class CDCEngine:
                             epoch_id,
                             "history_compact",
                             cst["status"],
-                            detail=str(
-                                {
-                                    k: v
-                                    for k, v in cst.items()
-                                    if k != "rows_by_bucket"
-                                }
-                            ),
+                            detail=_verb_detail(cst),
                             duration_s=cst.get("duration_s"),
                         )
             if stats["status"] == "Success":

@@ -79,7 +79,7 @@ def test_dedup_equals_pandas_fold_random(spark):
     )
     df = spark.createDataFrame(pdf)
     got = (
-        dedup_latest(df, ["conv_id", "turn_idx"], ["ts", "lsn"], salt_buckets=8)
+        dedup_latest(df, ["conv_id", "turn_idx"], ["ts", "lsn"])
         .orderBy("conv_id", "turn_idx")
         .toPandas()
     )

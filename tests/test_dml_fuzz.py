@@ -474,6 +474,73 @@ def test_random_dml_sequence_matches_oracle(spark, tmp_root, seed, mode):
         assert got == exp, f"time travel to v{v} diverged (seed {seed}, {mode})"
 
 
+@pytest.mark.parametrize("mode", ["delta", "cow"])
+def test_purge_then_older_retention_matches_oracle(spark, tmp_root, mode):
+    """Deterministic interleaving of the two watermark verbs: a tombstone
+    purge at W, then retention passes with cutoffs OLDER than W, then
+    late upserts on every side of both bounds — state checked against the
+    oracle after each step.  The purge bound must never become
+    retention's drop floor (live rows between a cutoff and W stay), and
+    merge keeps refusing upserts older than W across a rollback."""
+    import datetime as _dt
+
+    t = ManifestTable.create(
+        spark, os.path.join(tmp_root, f"wm_{mode}"), TRANSCRIPT_SCHEMA,
+        n_buckets=4,
+    )
+    oracle = Oracle()
+    lsn = iter(range(1, 10_000))
+    epoch = iter(range(1, 10_000))
+
+    def merge(rows):
+        t.merge(_df(spark, rows), next(epoch), mode=mode)
+        oracle.merge(rows)
+
+    def retention(cut):
+        v_before = t.current_version()
+        t.retention_delete(
+            _dt.datetime.fromtimestamp(cut, tz=_dt.timezone.utc),
+            epoch_id=next(epoch),
+        )
+        oracle.retention(cut, t.current_version() - v_before)
+
+    def upsert(key, ts):
+        n = next(lsn)
+        return ("U", n, ts, key[0], key[1], "user", f"t{n}", None)
+
+    def check(step):
+        assert _table_live(t) == oracle.live(), f"after {step} ({mode})"
+        assert t.current_version() == len(oracle.history) - 1
+
+    # 18 live keys spread over ts 1000..2700, then four tombstones
+    merge([upsert(k, 1000 + 100 * i) for i, k in enumerate(KEYS)])
+    merge([("D", next(lsn), 1500 + 1000 * i, *KEYS[i], None, None, None)
+           for i in range(4)])
+    t.compact(
+        min_delta_files=0,
+        purge_tombstones_before=_dt.datetime.fromtimestamp(
+            5000, tz=_dt.timezone.utc
+        ),
+    )
+    oracle.purge(5000)
+    check("purge")
+    retention(1200)
+    check("older retention")
+    # below both bounds, between the cutoff and W (refused: W binds), and
+    # past W (lands) — including a key whose tombstone was purged
+    merge([upsert(KEYS[0], 1100), upsert(KEYS[1], 3000),
+           upsert(KEYS[2], 6000), upsert(KEYS[9], 5200)])
+    check("late upserts")
+    v = t.current_version()
+    retention(1700)
+    check("second retention")
+    t.rollback_to(version=v)
+    oracle.rollback_to(v)
+    check("rollback")
+    merge([upsert(KEYS[3], 4000), upsert(KEYS[4], 7000)])
+    check("upserts after rollback")
+
+
 class _Boom(Exception):
     pass
 
@@ -632,7 +699,6 @@ def test_physical_config_invariance(spark, tmp_root, seed):
         cfg = {
             "n_buckets": rng.choice([2, 8, 16]),
             "merge_mode": mode,
-            "salt_buckets": rng.choice([4, 16]),
             "files_per_bucket": rng.choice([1, 2]),
             "bloom_filter_cols": rng.choice([None, ["conv_id"]]),
             "event_dedup": rng.choice([None, "1 hour"]),

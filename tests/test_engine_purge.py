@@ -65,7 +65,7 @@ def test_max_event_ts_reads_manifest_only(spark, tmp_root):
 
 def test_auto_purge_on_compaction_cadence(spark, tmp_root):
     """A delete-heavy tail with compact_every + compact_purge_tombstone_lag:
-    converges to the oracle, the retention watermark self-advances, and
+    converges to the oracle, the lateness watermark self-advances, and
     every physically retained tombstone is newer than (max ts − lag) as of
     the last auto-compaction — dead rows stop accumulating."""
     spec = ChangeStreamSpec(
@@ -100,7 +100,7 @@ def test_auto_purge_on_compaction_cadence(spark, tmp_root):
     )
 
     m = eng.table.manifest()
-    wm = m.get("retention_ts")
+    wm = m.get("lateness_ts")
     assert wm is not None
     wm = _stat_from_json(wm)
     hi = eng.table.max_event_ts()

@@ -80,7 +80,7 @@ def test_tail_event_dedup_drops_cross_epoch_redelivery(spark, tmp_root):
     the oracle AND the total merged change-keys never exceeds the unique
     event count (without the pass, duplicates re-merge as no-op updates and
     the count roughly doubles)."""
-    import ast
+    import json
 
     spec = ChangeStreamSpec(
         n_events=3_000, n_convs=40, segment_size=500, seed=33
@@ -129,10 +129,10 @@ def test_tail_event_dedup_drops_cross_epoch_redelivery(spark, tmp_root):
     lin = eng.lineage.lineage().toPandas()
     ok = lin[(lin["stage"] == "merge") & (lin["status"] == "Success")]
     for d in ok["detail"].dropna():
-        # Failed rows carry exception reprs, not dict literals — a transient
+        # Failed rows carry exception reprs, not JSON objects — a transient
         # epoch failure is the engine's normal checkpoint-retry path and is
         # excluded here (final-state equality above already proves recovery)
-        stats = ast.literal_eval(d)
+        stats = json.loads(d)
         if stats.get("status") == "Success":
             merged_keys += int(stats.get("n_change_keys") or 0)
     # unique (conv_id, turn_idx, lsn) events <= n_events; redelivered copies

@@ -459,3 +459,75 @@ def test_watermark_is_monotone_across_rollback(spark, tmp_root):
         mode="delta",
     )
     assert t.read().filter(F.col("text") == "zombie").count() == 0
+
+
+def test_purge_bound_is_not_a_retention_floor(spark, tmp_root):
+    """A tombstone purge's lateness bound W is not a retention cutoff:
+    after a purge at W=5000, ``retention_delete(ts_before=1002)`` drops
+    the ONE live row older than 1002, not every live row below W.  The
+    two bounds live under their own keys (``lateness_ts`` /
+    ``retention_ts``) and merge still refuses upserts older than the
+    later of them."""
+    from event_driven_etl_msc_research_spark.sinks.manifest import (
+        _stat_from_json,
+    )
+
+    t = ManifestTable.create(
+        spark, tmp_root + "/pr", TRANSCRIPT_SCHEMA, n_buckets=2
+    )
+    rows = [_ev("U", i, 1000 + i, f"c{i}", 0, text=f"t{i}")
+            for i in range(1, 10)]  # nine live rows, ts 1001..1009
+    t.merge(spark.createDataFrame(rows, CHANGE_DDL), epoch_id=0, mode="delta")
+    assert t.compact(purge_tombstones_before=_cut(5000))["status"] == "Success"
+    t.retention_delete(_cut(1002), epoch_id=1)
+    assert _live(t) == [(f"c{i}", 0, f"t{i}") for i in range(2, 10)]
+    m = t.manifest()
+    assert _stat_from_json(m["retention_ts"]) == _cut(1002)
+    assert _stat_from_json(m["lateness_ts"]) == _cut(5000)
+    # merge binds to the later bound: ts 3000 < W is refused, 6000 lands
+    t.merge(
+        spark.createDataFrame(
+            [_ev("U", 20, 3000, "late", 0, "zombie"),
+             _ev("U", 21, 6000, "new", 0, "fresh")],
+            CHANGE_DDL,
+        ),
+        epoch_id=2,
+        mode="delta",
+    )
+    texts = {r[2] for r in _live(t)}
+    assert "fresh" in texts and "zombie" not in texts
+
+
+def test_null_ts_tombstone_survives_purge(spark, tmp_root):
+    """A tombstone whose ``ts`` is NULL has no provable age, so a purge
+    keeps it (as retention never drops NULL-ts rows).  It is the only
+    thing blocking a re-delivered NULL-ts upsert with an older lsn —
+    merge's watermark passes NULL-ts events — so after the purge that
+    upsert must still lose and the key stays deleted."""
+    t = ManifestTable.create(
+        spark, tmp_root + "/nt", TRANSCRIPT_SCHEMA, n_buckets=2
+    )
+    nul = [("U", 1, None, "n", 0, "user", "v1", None),
+           ("D", 2, None, "n", 0, None, None, None)]
+    t.merge(
+        spark.createDataFrame(nul + [_ev("U", 3, 100, "c", 0, "live")],
+                              CHANGE_DDL),
+        epoch_id=0,
+        mode="delta",
+    )
+    assert t.compact(purge_tombstones_before=_cut(5000))["status"] == "Success"
+    base = [t._spath(p) for ps in t.manifest()["files"].values() for p in ps]
+    kept = (
+        spark.read.parquet(*base)
+        .filter(F.col("_deleted") & F.col("ts").isNull())
+        .count()
+    )
+    assert kept == 1
+    t.merge(
+        spark.createDataFrame(
+            [("U", 1, None, "n", 0, "user", "zombie", None)], CHANGE_DDL
+        ),
+        epoch_id=1,
+        mode="delta",
+    )
+    assert _live(t) == [("c", 0, "live")]

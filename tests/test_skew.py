@@ -31,7 +31,6 @@ def test_hot_conversation_replay_correct_and_registered(spark, tmp_root):
         os.path.join(tmp_root, "table"),
         change_schema=CHANGE_EVENT_SCHEMA_EVOLVED,
         n_buckets=8,
-        salt_buckets=16,
     )
     eng.replay(log, os.path.join(tmp_root, "cp"), max_files_per_trigger=2)
     got = eng.read_table().orderBy("conv_id", "turn_idx").toPandas()
