@@ -7,7 +7,7 @@ engine:
 
 * binlog/WAL-style change events over multi-turn conversation transcripts
   ``(conv_id, turn_idx, role, text, tool, ts)``;
-* salted-hash repartitioned, per-key ``(ts, lsn)`` max-version dedup;
+* per-key ``(ts, lsn)`` max-version dedup (one ``max_by`` aggregate);
 * exactly-once, idempotent MERGE into a manifest-tracked Parquet table
   (Iceberg-style snapshots, additive schema evolution, time travel);
 * resumable from checkpoint; per-epoch/partition lineage + metrics.
@@ -24,7 +24,7 @@ from .schemas import (
     TRANSCRIPT_SCHEMA,
 )
 from .session import get_spark
-from .operators.dedup import dedup_latest, salted_repartition
+from .operators.dedup import dedup_latest
 from .sinks.derived import DerivedTable
 from .sinks.manifest import (
     ConstraintViolationError,
@@ -49,7 +49,6 @@ __all__ = [
     "TRANSCRIPT_SCHEMA",
     "get_spark",
     "dedup_latest",
-    "salted_repartition",
     "DerivedTable",
     "ReplicaTable",
     "ReplicaDiverged",

@@ -289,7 +289,7 @@ def _footer_minmax(md, stats_cols: list[str]) -> dict[str, list]:
     live and tombstone rows without separating them in stats (min=False,
     max=True); ``count()`` then falls back to a footer probe / pruned
     scan of just those files."""
-    idx = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    idx = _footer_cols(md)
     out: dict[str, list] = {}
     for col in stats_cols or ():
         i = idx.get(col)
@@ -331,13 +331,13 @@ def _footer_minmax(md, stats_cols: list[str]) -> dict[str, list]:
     # a column name) — with the null counts above, this is what lets
     # retention_delete's drop phase and count() run from the manifest alone
     out["::rows"] = [md.num_rows]
-    dead = _footer_dead_count(md, idx)
+    dead = _footer_dead_count(md)
     if dead is not None:
         out["::dead"] = [dead]
     return out
 
 
-def _footer_dead_count(md, idx: dict[str, int]) -> int | None:
+def _footer_dead_count(md) -> int | None:
     """Exact tombstone (``_deleted`` = true) count of one parquet file,
     from its footer statistics alone — or ``None`` when not provable.
 
@@ -350,7 +350,7 @@ def _footer_dead_count(md, idx: dict[str, int]) -> int | None:
     but a table that never deletes proves ``dead = 0`` everywhere, and a
     tombstone-purged compaction (``purge_tombstones_before``) restores
     all-live files."""
-    i = idx.get("_deleted")
+    i = _footer_cols(md).get("_deleted")
     if i is None:
         return 0  # column absent: written before deletes existed → all live
     dead = 0
@@ -373,6 +373,34 @@ def _footer_dead_count(md, idx: dict[str, int]) -> int | None:
     return dead
 
 
+def _footer_cols(md) -> dict[str, int]:
+    """Column path → index of one parquet footer."""
+    return {md.schema.column(i).path: i for i in range(md.num_columns)}
+
+
+def _footers(storage: TableStorage, relpaths: list[str]) -> list:
+    """Parquet footer metadata of each file, in ``relpaths`` order — the
+    one driver-side footer read (staging audit, the count/min_max probes,
+    ``check(verify_rows=True)``, the ``edem_cdc`` sink's commit audit).
+    One small ranged read per file on a thread pool (pure I/O), no Spark
+    job — and no Spark at all: the sink commits from a Python data-source
+    worker without a JVM.  Shallow-clone ``ext://`` references are read
+    from their absolute path (their bytes live outside ``storage``)."""
+    import pyarrow.parquet as pq
+    from concurrent.futures import ThreadPoolExecutor
+
+    def _read(p: str):
+        if p.startswith(_EXT_PREFIX):
+            return pq.ParquetFile(p[len(_EXT_PREFIX):]).metadata
+        with storage.open_input(p) as fh:
+            return pq.ParquetFile(fh).metadata
+
+    if not relpaths:
+        return []
+    with ThreadPoolExecutor(max_workers=min(16, len(relpaths))) as pool:
+        return list(pool.map(_read, relpaths))
+
+
 # column names the engine claims for itself: 'op'/'lsn' are the change-batch
 # verb/version columns (a payload column by either name could never ride in
 # a change batch alongside them), and the underscore names are internal —
@@ -381,6 +409,12 @@ def _footer_dead_count(md, idx: dict[str, int]) -> int | None:
 # which would SILENTLY CLOBBER a same-named user column.  Rejected at
 # create() so the failure is a loud DDL error, not data corruption later.
 _RESERVED_COLS = {"op", "lsn", "_lsn", "_deleted", "_bucket", "_pb", "_z"}
+# the row metadata every data file carries after the payload columns
+_INTERNAL_FIELDS = [
+    T.StructField("_lsn", T.LongType(), True),
+    T.StructField("_deleted", T.BooleanType(), True),
+    T.StructField("_bucket", T.IntegerType(), True),
+]
 
 
 class ManifestTable:
@@ -1134,14 +1168,8 @@ class ManifestTable:
 
     @staticmethod
     def _internal_schema_of(m: dict[str, Any]) -> T.StructType:
-        s = T.StructType.fromJson(m["schema"])
         return T.StructType(
-            s.fields
-            + [
-                T.StructField("_lsn", T.LongType(), True),
-                T.StructField("_deleted", T.BooleanType(), True),
-                T.StructField("_bucket", T.IntegerType(), True),
-            ]
+            T.StructType.fromJson(m["schema"]).fields + _INTERNAL_FIELDS
         )
 
     # Iceberg-compatible safe type promotions (integer and float families
@@ -1320,6 +1348,21 @@ class ManifestTable:
             )
         return df.select(*[f.name for f in schema.fields])
 
+    def _snapshot_version(
+        self, verb: str, version: int | None, tag: str | None, as_of
+    ) -> int | None:
+        """The snapshot a ``version=``/``tag=``/``as_of=`` selector names
+        (None = the head); the three are mutually exclusive."""
+        if sum(x is not None for x in (version, tag, as_of)) > 1:
+            raise ValueError(
+                f"{verb}(version=, tag=, as_of=) are mutually exclusive"
+            )
+        if tag is not None:
+            return self._resolve_tag(tag)
+        if as_of is not None:
+            return self._resolve_as_of(as_of)
+        return version
+
     def read(
         self,
         version: int | None = None,
@@ -1367,14 +1410,7 @@ class ManifestTable:
         additionally pins the single hash bucket that can hold the key
         (Iceberg bucket-transform analogue) — the O(one-bucket) point
         lookup regardless of stats."""
-        if sum(x is not None for x in (version, tag, as_of)) > 1:
-            raise ValueError(
-                "read(version=, tag=, as_of=) are mutually exclusive"
-            )
-        if tag is not None:
-            version = self._resolve_tag(tag)
-        if as_of is not None:
-            version = self._resolve_as_of(as_of)
+        version = self._snapshot_version("read", version, tag, as_of)
         m = None
         if where:
             for c, v in where.items():
@@ -1445,7 +1481,7 @@ class ManifestTable:
            I/O (job-count asserted in ``test_count.py``).
         2. Files missing the harvested counts (pre-upgrade manifests,
            shallow-clone externals) — driver-side parallel footer probe
-           (the same thread-pool shape as the staging audit; still no
+           (the same :func:`_footers` read as the staging audit; still no
            Spark job).
         3. Files whose footers can't prove their tombstone count (a mixed
            row group) — ONE column-pruned Spark job over just those files
@@ -1456,14 +1492,7 @@ class ManifestTable:
 
         Selectors mirror :meth:`read` (``version``/``tag``/``as_of``,
         mutually exclusive)."""
-        if sum(x is not None for x in (version, tag, as_of)) > 1:
-            raise ValueError(
-                "count(version=, tag=, as_of=) are mutually exclusive"
-            )
-        if tag is not None:
-            version = self._resolve_tag(tag)
-        if as_of is not None:
-            version = self._resolve_as_of(as_of)
+        version = self._snapshot_version("count", version, tag, as_of)
         m = self.manifest(version)
         if any(ps for ps in (m.get("delta_files") or {}).values()):
             return self.read(version=m["version"]).count()
@@ -1484,26 +1513,12 @@ class ManifestTable:
                     scan.append(p)
                 else:
                     probe.append(p)
-        if probe:
-            import pyarrow.parquet as pq
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _probe(relpath: str):
-                with self.storage.open_input(relpath) as fh:
-                    md = pq.ParquetFile(fh).metadata
-                idx = {
-                    md.schema.column(i).path: i
-                    for i in range(md.num_columns)
-                }
-                dead = _footer_dead_count(md, idx)
-                return relpath, md.num_rows, dead
-
-            with ThreadPoolExecutor(max_workers=min(16, len(probe))) as pl:
-                for relpath, n, dead in pl.map(_probe, probe):
-                    if dead is None:
-                        scan.append(relpath)
-                    else:
-                        total += n - dead
+        for relpath, md in zip(probe, _footers(self.storage, probe)):
+            dead = _footer_dead_count(md)
+            if dead is None:
+                scan.append(relpath)
+            else:
+                total += md.num_rows - dead
         if scan:
             ischema = self._internal_schema_of(m)
             df = self._read_files(
@@ -1549,16 +1564,11 @@ class ManifestTable:
         String/binary columns go straight to the scan tiers: parquet
         writers may TRUNCATE binary statistics (a truncated max is a valid
         pruning BOUND but not an actual row value), so footer stats are
-        range-safe yet not exactness-safe there.  Rename shadows resolve
+        range-safe yet not exactness-safe there.  Float/double columns go
+        there too: parquet min/max skip NaN, while Spark orders NaN above
+        every number, so a NaN row IS the max.  Rename shadows resolve
         through the same chain the pruner uses."""
-        if sum(x is not None for x in (version, tag, as_of)) > 1:
-            raise ValueError(
-                "min_max(version=, tag=, as_of=) are mutually exclusive"
-            )
-        if tag is not None:
-            version = self._resolve_tag(tag)
-        if as_of is not None:
-            version = self._resolve_as_of(as_of)
+        version = self._snapshot_version("min_max", version, tag, as_of)
         m = self.manifest(version)
         field = next(
             (
@@ -1586,7 +1596,10 @@ class ManifestTable:
                 _norm_bound(d_hi, field.dataType),
             )
 
-        stringy = isinstance(field.dataType, (T.StringType, T.BinaryType))
+        scan_only = isinstance(
+            field.dataType,
+            (T.StringType, T.BinaryType, T.FloatType, T.DoubleType),
+        )
         names = (col, *(m.get("renamed_cols") or {}).get(col, ()))
         stats = m.get("file_stats") or {}
         lo = hi = None
@@ -1608,42 +1621,25 @@ class ManifestTable:
                 )
                 if entry is not None and entry[0] is None:
                     continue  # provably all-null file: contributes nothing
-                if stringy or p.startswith(_EXT_PREFIX):
+                if scan_only or p.startswith(_EXT_PREFIX):
                     scan.append(p)
                 elif entry is not None and fs.get("::dead") == [0]:
                     _fold(_stat_from_json(entry[0]), _stat_from_json(entry[1]))
                 else:
                     probe.append(p)
-        if probe:
-            import pyarrow.parquet as pq
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _probe(relpath: str):
-                with self.storage.open_input(relpath) as fh:
-                    md = pq.ParquetFile(fh).metadata
-                idx = {
-                    md.schema.column(i).path: i
-                    for i in range(md.num_columns)
-                }
-                phys = next((nm for nm in names if nm in idx), None)
-                if phys is None:
-                    return None  # pre-add_column file: reads as null
-                out = _footer_minmax(md, [phys])
-                ent = out.get(phys)
-                if ent is not None and ent[0] is None:
-                    return None  # all-null file
-                if ent is None or out.get("::dead") != [0]:
-                    return relpath  # not provable: scan it
-                return _stat_from_json(ent[0]), _stat_from_json(ent[1])
-
-            with ThreadPoolExecutor(max_workers=min(16, len(probe))) as pl:
-                for r in pl.map(_probe, probe):
-                    if r is None:
-                        continue
-                    if isinstance(r, str):
-                        scan.append(r)
-                    else:
-                        _fold(*r)
+        for relpath, md in zip(probe, _footers(self.storage, probe)):
+            cols = _footer_cols(md)
+            phys = next((nm for nm in names if nm in cols), None)
+            if phys is None:
+                continue  # pre-add_column file: reads as null
+            out = _footer_minmax(md, [phys])
+            ent = out.get(phys)
+            if ent is not None and ent[0] is None:
+                continue  # all-null file
+            if ent is None or out.get("::dead") != [0]:
+                scan.append(relpath)  # not provable: scan it
+            else:
+                _fold(_stat_from_json(ent[0]), _stat_from_json(ent[1]))
         if scan:
             ischema = self._internal_schema_of(m)
             df = self._read_files(
@@ -1928,7 +1924,7 @@ class ManifestTable:
             }
         n_buckets = m["n_buckets"]
         key_cols = m["key_cols"]
-        cur_schema = self.schema()
+        cur_schema = T.StructType.fromJson(m["schema"])
 
         # watermark (retention_delete's cutoff or compact's purge bound,
         # whichever is later — see _watermark): an upsert older than it is
@@ -1986,174 +1982,96 @@ class ManifestTable:
             (F.col("op") == F.lit("D")).alias("_deleted"),
         ).withColumn("_bucket", _bucket_expr(n_buckets, key_cols[0]))
 
-        ischema = T.StructType(
-            new_schema.fields
-            + [
-                T.StructField("_lsn", T.LongType(), True),
-                T.StructField("_deleted", T.BooleanType(), True),
-                T.StructField("_bucket", T.IntegerType(), True),
-            ]
-        )
+        ischema = T.StructType(new_schema.fields + _INTERNAL_FIELDS)
         old_files = {int(b): paths for b, paths in m["files"].items()}
         old_delta = {
             int(b): paths for b, paths in (m.get("delta_files") or {}).items()
         }
-        version = m["version"] + 1
-        stage_rel = self._staging_relpath(version, epoch_id)
-        stage_dir = self.storage.spark_path(stage_rel)
-        obs = Observation()
+        stage_rel = self._staging_relpath(m["version"] + 1, epoch_id)
 
-        if mode == "delta":
-            # ---- delta path: ONE Spark job (dedup → bucket-partitioned write)
-            n_change_keys = None  # known after the job via the observation
-            writer = (
-                change_rows.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    *self._constraint_obs_aggs(m),
-                )
-                .withColumn("_pb", F.col("_bucket"))
-                .repartition(max(n_buckets, 1), F.col("_bucket"))
-            )
-            self._write_options(writer.write.mode("overwrite"), m).partitionBy(
-                "_pb"
-            ).parquet(stage_dir)
-            staged_files, rows_by_bucket, staged_rows, staged_stats = (
-                self._scan_staging(stage_rel)
-            )
-            # CHECK constraints gate publish: the violation counts rode the
-            # staging write's observation — zero extra jobs.  An EMPTY batch
-            # skips the read: a zero-row write can run zero tasks, leaving
-            # the Observation with a schemaless row that the py4j conversion
-            # asserts on — and zero staged rows (footer ground truth) can
-            # neither violate constraints nor fail the count audit.
-            if staged_rows:
-                self._check_constraint_obs(m, obs.get, epoch_id)
-            touched = sorted(staged_files)
-            n_change_keys = staged_rows
-            merge_path = "delta"
-        else:
-            # ---- copy-on-write path: stage-first (no collect, no persist).
-            # Job 1 = the SAME dedup→bucket-partitioned write as the delta
-            # path, landed under changes/; the touched-bucket set and batch
-            # size then come from the staged parquet footers driver-side —
-            # no counting job, no executor memory pinned by a persist.  For
-            # an empty target (initial load) the staged batch IS the merged
-            # result — published directly, so the initial epoch is one job.
-            # A non-initial CoW epoch is job 1 + the merge/rewrite job —
-            # the CoW floor (find-touched + rewrite, the same two-phase
-            # shape as Delta Lake's MERGE), vs delta mode's single job.
-            ch_rel = os.path.join(stage_rel, "changes")
-            ch_dir = self.storage.spark_path(ch_rel)
-            ch_obs = Observation()
-            self._write_options(
-                change_rows.observe(
-                    ch_obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    *self._constraint_obs_aggs(m),
-                )
-                .withColumn("_pb", F.col("_bucket"))
-                .repartition(max(n_buckets, 1), F.col("_bucket"))
-                .write.mode("overwrite"),
+        # job 1, both modes: the deduped batch staged bucket-partitioned.
+        # delta mode publishes these files as the epoch's delta files (ONE
+        # Spark job per epoch).  Copy-on-write stages them under changes/:
+        # the touched-bucket set and batch size come from their footers
+        # driver-side (no counting job, no persist), and for an empty
+        # target (initial load) they ARE the merged result, published
+        # directly — one job.  A non-initial CoW epoch adds the
+        # merge/rewrite job: the CoW floor (find-touched + rewrite, the
+        # same two-phase shape as Delta Lake's MERGE).
+        staged_files, rows_by_bucket, staged_rows, staged_stats, observed = (
+            self._stage(
+                change_rows,
                 m,
-            ).partitionBy("_pb").parquet(ch_dir)
-            ch_files, ch_rows_by_bucket, n_change_keys, ch_stats = (
-                self._scan_staging(ch_rel)
+                stage_rel if mode == "delta" else os.path.join(stage_rel, "changes"),
+                n_buckets,
+                obs_aggs=self._constraint_obs_aggs(m),
+                audit_empty=False,
             )
-            # n_change_keys == 0 skips both observation reads: a zero-row
-            # write can run zero tasks (schemaless Observation row → py4j
-            # conversion assert), and zero staged rows — footer ground
-            # truth — can neither fail the count audit nor violate a
-            # constraint
-            if n_change_keys and n_change_keys != int(ch_obs.get["rows"]):
-                raise RuntimeError(
-                    f"audit failed for epoch {epoch_id}: observed "
-                    f"{int(ch_obs.get['rows'])} change rows in stage job but "
-                    f"footers total {n_change_keys}"
-                )
-            # CHECK constraints gate publish BEFORE the CoW rewrite job is
-            # even planned — the counts rode the staging observation, so a
-            # rejected batch costs only its own staging (zero extra jobs)
-            if n_change_keys:
-                self._check_constraint_obs(m, ch_obs.get, epoch_id)
-            touched = sorted(ch_files)
-            touched_files = [
-                self._spath(p)
-                for b in touched
-                for p in old_files.get(b, []) + old_delta.get(b, [])
-            ]
+        )
+        # CHECK constraints gate publish BEFORE the CoW rewrite job is even
+        # planned: the violation counts rode the staging observation, so a
+        # rejected batch costs only its own staging (zero extra jobs)
+        if observed is not None:
+            self._check_constraint_obs(m, observed, epoch_id)
+        n_change_keys = staged_rows
+        touched = sorted(staged_files)
+        touched_files = [
+            self._spath(p)
+            for b in touched
+            for p in old_files.get(b, []) + old_delta.get(b, [])
+        ]
+        if mode == "delta":
+            merge_path = "delta"
+        elif not touched_files:
+            merge_path = "initial"  # the staged batch IS the merged result
+        else:
             staged_changes = self._read_files(
-                [self.storage.spark_path(p) for ps in ch_files.values() for p in ps],
+                [
+                    self.storage.spark_path(p)
+                    for ps in staged_files.values()
+                    for p in ps
+                ],
                 ischema,
             )
             target = self._read_files(
                 touched_files, ischema, renames=m.get("renamed_cols")
             )
-
             # Fast path (the common micro-batch case): the deduped batch is
             # small → broadcast it; target data flows scan→write with ZERO
             # shuffle.  General path: union + per-key max-version aggregate
-            # (single shuffle with map-side partial combine).
+            # (single shuffle with map-side partial combine).  A CoW merge
+            # over a delta-carrying bucket must also fold the deltas, so it
+            # takes the aggregate path.
             use_broadcast = strategy == "broadcast" or (
                 strategy == "auto" and n_change_keys <= broadcast_threshold
             )
-            has_delta = any(old_delta.get(b) for b in touched)
-            if not touched_files:
-                # empty target: the staged batch (one row per key) IS the
-                # merged result — publish its files, no second job
-                staged_files, rows_by_bucket, staged_rows, staged_stats = (
-                    ch_files, ch_rows_by_bucket, n_change_keys, ch_stats,
+            if use_broadcast and not any(old_delta.get(b) for b in touched):
+                merged = self._merge_broadcast(
+                    target, staged_changes, key_cols, ischema
                 )
-                merge_path = "initial"
+                merge_path = "broadcast"
             else:
-                if use_broadcast and not has_delta:
-                    merged = self._merge_broadcast(
-                        target, staged_changes, key_cols, ischema
-                    )
-                    merge_path = "broadcast"
-                else:
-                    # (a CoW merge over a delta-carrying bucket must also fold
-                    # the deltas, so it takes the aggregate path)
-                    unified = target.unionByName(
-                        staged_changes, allowMissingColumns=True
-                    )
-                    merged = dedup_latest(unified, key_cols, ["ts", "_lsn"])
-                    merge_path = "shuffle"
-
-                # stage: write under an unreferenced dir; publish via manifest
-                merged_rel = os.path.join(stage_rel, "merged")
-                merged_dir = self.storage.spark_path(merged_rel)
-                writer = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
-                writer = writer.withColumn("_pb", F.col("_bucket"))
-                if files_per_bucket > 1:
-                    writer = writer.repartition(
-                        len(touched) * files_per_bucket,
-                        F.col("_bucket"),
-                        F.pmod(F.xxhash64(*key_cols), F.lit(files_per_bucket)),
-                    )
-                else:
-                    writer = writer.repartition(
-                        max(len(touched), 1), F.col("_bucket")
-                    )
-                self._write_options(writer.write.mode("overwrite"), m).partitionBy(
-                    "_pb"
-                ).parquet(merged_dir)
-                staged_files, rows_by_bucket, staged_rows, staged_stats = (
-                    self._scan_staging(merged_rel, buckets=touched)
+                merged = dedup_latest(
+                    target.unionByName(staged_changes, allowMissingColumns=True),
+                    key_cols,
+                    ["ts", "_lsn"],
                 )
-
-        # ---- audit (write-audit-publish; cf. the per-chunk record counts the
-        # reference logs, DataSplit.py:133): rows observed flowing through the
-        # write job must equal rows readable from the staged parquet footers.
-        # (The CoW "initial" path publishes the change-stage files directly —
-        # its observation/footer audit already ran against ch_obs above.)
-        if (mode == "delta" or merge_path != "initial") and staged_rows:
-            observed = int(obs.get["rows"])
-            if staged_rows != observed:
-                raise RuntimeError(
-                    f"audit failed for epoch {epoch_id}: observed {observed} "
-                    f"rows in write job but staged footers total {staged_rows}"
+                merge_path = "shuffle"
+            staged_files, rows_by_bucket, staged_rows, staged_stats, _ = (
+                self._stage(
+                    merged,
+                    m,
+                    os.path.join(stage_rel, "merged"),
+                    len(touched) * files_per_bucket,
+                    spread=(
+                        [F.pmod(F.xxhash64(*key_cols), F.lit(files_per_bucket))]
+                        if files_per_bucket > 1
+                        else ()
+                    ),
+                    buckets=touched,
+                    audit_empty=False,
                 )
+            )
         if audit == "keys" and staged_rows:
             staged_paths = [
                 self.storage.spark_path(p)
@@ -2501,45 +2419,93 @@ class ManifestTable:
             "epoch_id": epoch_id, **res, "duration_s": time.monotonic() - t0,
         }
 
-    def _scan_staging(
-        self, stage_rel: str, buckets: list[int] | None = None
-    ) -> tuple[dict[int, list[str]], dict[str, int], int, dict[str, dict]]:
-        """Driver-side footer audit of a staged write: list ``_pb=*`` dirs,
-        read each parquet footer (pyarrow — no Spark job), return
-        (files_by_bucket, rows_by_bucket, total_rows, file_stats).  A
-        truncated or unreadable file fails here, before publish.
+    def _stage(
+        self,
+        df: DataFrame,
+        m: dict[str, Any],
+        rel: str,
+        n_parts: int,
+        *,
+        spread: list = (),
+        buckets: list[int] | None = None,
+        obs_aggs: list = (),
+        audit_empty: bool = True,
+        sort_by: list[str] | None = None,
+        zorder_by: list[str] | None = None,
+        zorder_sample: DataFrame | None = None,
+        max_rows_per_file: int | None = None,
+    ) -> tuple[
+        dict[int, list[str]], dict[str, int], int, dict[str, dict], Any
+    ]:
+        """Stage → audit, the one data-write path of every Spark verb
+        (merge's change stage and CoW rewrite, compact, rebucket; the
+        reference counts each chunk's records where it writes it,
+        ``DataSplit.py:133``).
 
-        Footer reads are parallelized on a thread pool (pure I/O — one small
-        ranged read each); results are merged deterministically by sorted
-        path, so the manifest is byte-identical to a sequential scan.  At
-        hundreds of staged files per epoch this keeps driver commit latency
-        flat instead of serializing on footer round-trips.
+        Writes ``df`` (internal row shape, ``_bucket`` set) under the
+        unreferenced staging prefix ``rel``, hash-partitioned into
+        ``n_parts`` tasks on ``_bucket`` plus the ``spread`` expressions
+        (which split a bucket over several files), laid out as
+        ``_pb=<bucket>/`` dirs, with the table's writer options
+        (``_write_options``).  Clustering:
+        ``sort_by`` sorts each task's rows, ``zorder_by`` sorts them on a
+        z-value sketched from ``zorder_sample`` (the rewrite's own input
+        files); both sorts lead with ``_pb``, the writer's dynamic-partition
+        column — FileFormatWriter requires task rows ordered by it and
+        inserts its own sort (scrambling the clustering) when the incoming
+        ordering is on a different attribute.  ``max_rows_per_file`` rolls
+        files.
 
-        ``file_stats``: per-file min/max ranges of the manifest's
-        ``stats_cols``, harvested from the SAME footers (zero extra I/O) and
-        returned EXPLICITLY — callers pass them to ``_fold_stats`` for the
-        published manifest.  No instance state is threaded, so interleaved
-        scans on one ManifestTable (threaded merge + compact/rebucket) can
-        never clobber each other's harvested stats."""
-        import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
+        Audit: the rows the write job observed (an ``Observation`` riding
+        the same job, with the caller's ``obs_aggs`` — merge's CHECK
+        violation counts) must equal the rows in the staged parquet
+        footers, read driver-side by :func:`_footers` (no Spark job).  A
+        truncated or unreadable file fails here, before publish.  With
+        ``audit_empty=False`` a write that staged zero rows skips the
+        observation read: a zero-row write can run zero tasks, leaving a
+        schemaless Observation row the py4j conversion asserts on — and
+        zero footer rows can neither fail the count nor violate a
+        constraint.
 
-        stats_cols = list(self.manifest().get("stats_cols") or [])
-        file_stats: dict[str, dict] = {}
-        files_by_bucket: dict[int, list[str]] = {}
-        rows_by_bucket: dict[str, int] = {}
-        total = 0
-        if buckets is not None:
-            files_by_bucket = {b: [] for b in buckets}
-            rows_by_bucket = {str(b): 0 for b in buckets}
-        # one LIST over the staging prefix (keys are already sorted) — no
-        # directory walks, no per-file stats: the same call an object store
-        # serves as ListObjectsV2
-        work: list[tuple[int, str]] = []  # (bucket, relpath)
-        plen = len(stage_rel.rstrip("/")) + 1
-        for o in self.storage.list(stage_rel):
-            rest = o.key[plen:]
-            parts = rest.split("/")
+        Returns ``(files_by_bucket, rows_by_bucket, total_rows,
+        file_stats, observed)``: files sorted by path (one LIST over the
+        prefix); ``buckets`` pre-seeds empty entries for buckets the write
+        may leave empty and restricts the result to them; ``file_stats``
+        holds each new file's footer stats over ``m``'s ``stats_cols``
+        (for ``_fold_stats``); ``observed`` is the observation row (None
+        when skipped)."""
+        obs = Observation()
+        out = (
+            df.observe(obs, F.count(F.lit(1)).alias("rows"), *obs_aggs)
+            .withColumn("_pb", F.col("_bucket"))
+            .repartition(max(n_parts, 1), F.col("_bucket"), *spread)
+        )
+        if sort_by:
+            out = out.sortWithinPartitions("_pb", *sort_by)
+        elif zorder_by:
+            # boundary sketch: one column-pruned pass over the sample
+            # (approxQuantile — no shuffle, O(2^bits) floats to the driver);
+            # `_z` is projected away after the sort (the ordering's `_pb`
+            # prefix still satisfies the writer, so no re-sort is inserted —
+            # the 40k-row disjoint-stats test pins this)
+            from ..functions.zorder import zorder_column
+
+            out = (
+                out.withColumn("_z", zorder_column(zorder_sample, zorder_by))
+                .sortWithinPartitions("_pb", "_z")
+                .drop("_z")
+            )
+        writer = self._write_options(out.write.mode("overwrite"), m)
+        if max_rows_per_file:
+            writer = writer.option("maxRecordsPerFile", int(max_rows_per_file))
+        writer.partitionBy("_pb").parquet(self.storage.spark_path(rel))
+
+        files_by_bucket: dict[int, list[str]] = {b: [] for b in buckets or ()}
+        rows_by_bucket = {str(b): 0 for b in files_by_bucket}
+        work: list[tuple[int, str]] = []  # (bucket, relpath), sorted
+        plen = len(rel.rstrip("/")) + 1
+        for o in self.storage.list(rel):
+            parts = o.key[plen:].split("/")
             # exactly _pb=<b>/<file>.parquet directly under the prefix —
             # skips _SUCCESS markers, task temp dirs, and nested stages
             if (
@@ -2551,35 +2517,39 @@ class ManifestTable:
             b = int(parts[0].split("=", 1)[1])
             if buckets is not None and b not in files_by_bucket:
                 continue
-            files_by_bucket.setdefault(b, [])
-            rows_by_bucket.setdefault(str(b), 0)
             work.append((b, o.key))
+        file_stats: dict[str, dict] = {}
+        total = 0
+        for (b, p), md in zip(work, _footers(self.storage, [p for _, p in work])):
+            files_by_bucket.setdefault(b, []).append(p)
+            rows_by_bucket[str(b)] = rows_by_bucket.get(str(b), 0) + md.num_rows
+            total += md.num_rows
+            file_stats[p] = _footer_minmax(md, m.get("stats_cols") or [])
 
-        def _footer(item):
-            b, relpath = item
-            with self.storage.open_input(relpath) as fh:
-                md = pq.ParquetFile(fh).metadata
-            return b, relpath, md.num_rows, _footer_minmax(md, stats_cols)
-
-        if work:
-            with ThreadPoolExecutor(max_workers=min(16, len(work))) as pool:
-                results = list(pool.map(_footer, work))
-            for b, relpath, rows, st in results:  # work order = sorted order
-                files_by_bucket[b].append(relpath)
-                rows_by_bucket[str(b)] += rows
-                total += rows
-                if st:
-                    file_stats[relpath] = st
-        return files_by_bucket, rows_by_bucket, total, file_stats
+        observed = None
+        if total or audit_empty:
+            observed = obs.get
+            if int(observed["rows"]) != total:
+                raise RuntimeError(
+                    f"staging audit failed for {rel}: the write job observed "
+                    f"{int(observed['rows'])} rows but the staged footers "
+                    f"total {total}"
+                )
+        return files_by_bucket, rows_by_bucket, total, file_stats, observed
 
     def _rows_for_bytes(
-        self, max_file_bytes: int, relpaths: list[str], total_rows: int
+        self,
+        m: dict[str, Any],
+        max_file_bytes: int,
+        relpaths: list[str],
+        total_rows: int,
     ) -> int | None:
         """Rows-per-file target for a BYTES target: average on-disk row
-        width from the given files' object sizes (one storage LIST per
-        distinct parent dir — driver-side metadata, no file reads) divided
-        into ``max_file_bytes``.  ``None`` (no per-file cap) when the
-        metadata can't support an estimate (no rows/bytes recorded)."""
+        width from the given files of snapshot ``m`` (object sizes, one
+        storage LIST per distinct parent dir — driver-side metadata, no
+        file reads) divided into ``max_file_bytes``.  ``None`` (no
+        per-file cap) when the metadata can't support an estimate (no
+        rows/bytes recorded)."""
         want = {p for p in relpaths if not p.startswith(_EXT_PREFIX)}
         dirs = {p.rsplit("/", 1)[0] for p in want if "/" in p}
         total_bytes = 0
@@ -2588,7 +2558,7 @@ class ManifestTable:
                 if o.key in want:
                     total_bytes += o.size
         # shallow-clone external references: sizes captured at clone time
-        ext_sizes = self.manifest().get("external_sizes") or {}
+        ext_sizes = m.get("external_sizes") or {}
         total_bytes += sum(
             int(ext_sizes.get(p, 0))
             for p in relpaths
@@ -2598,6 +2568,31 @@ class ManifestTable:
             return None
         avg = max(1.0, total_bytes / total_rows)
         return max(1, int(max_file_bytes // avg))
+
+    @staticmethod
+    def _check_clustering(
+        m: dict[str, Any],
+        sort_by: list[str] | None,
+        zorder_by: list[str] | None,
+        max_rows_per_file: int | None,
+        max_file_bytes: int | None,
+    ) -> None:
+        """Reject misused clustering/sizing arguments of a rewrite
+        (compact, rebucket) before any job."""
+        if sort_by and zorder_by:
+            raise ValueError("sort_by and zorder_by are mutually exclusive")
+        if max_file_bytes and max_rows_per_file:
+            raise ValueError(
+                "max_rows_per_file and max_file_bytes are mutually exclusive"
+            )
+        schema = T.StructType.fromJson(m["schema"])
+        bad = [c for c in sort_by or () if c not in schema.fieldNames()]
+        if bad:
+            raise ValueError(f"sort_by columns not in schema: {bad}")
+        if zorder_by:
+            from ..functions.zorder import zorder_validate
+
+            zorder_validate(schema, zorder_by)
 
     # ---------- compaction (MOR maintenance) ----------
 
@@ -2684,26 +2679,11 @@ class ManifestTable:
         retention cutoff: a later ``retention_delete`` with an older
         cutoff still drops only rows older than its own cutoff.
         Tombstones with a NULL ``ts`` are never purged."""
-        if sort_by and zorder_by:
-            raise ValueError("sort_by and zorder_by are mutually exclusive")
-        if max_file_bytes and max_rows_per_file:
-            raise ValueError(
-                "max_rows_per_file and max_file_bytes are mutually exclusive"
-            )
-        if sort_by:
-            m0 = self.manifest()
-            schema_cols = {
-                f.name for f in T.StructType.fromJson(m0["schema"]).fields
-            }
-            bad = [c for c in sort_by if c not in schema_cols]
-            if bad:
-                raise ValueError(f"sort_by columns not in schema: {bad}")
-        if zorder_by:
-            from ..functions.zorder import zorder_validate
-
-            zorder_validate(self.schema(), zorder_by)
         t0 = time.monotonic()
         m = self.manifest()
+        self._check_clustering(
+            m, sort_by, zorder_by, max_rows_per_file, max_file_bytes
+        )
         old_delta = {
             int(b): ps for b, ps in (m.get("delta_files") or {}).items() if ps
         }
@@ -2732,7 +2712,6 @@ class ManifestTable:
                 "duration_s": time.monotonic() - t0,
             }
         key_cols = m["key_cols"]
-        ischema = self._internal_schema()
         old_files = {int(b): ps for b, ps in m["files"].items()}
         cand_rel = [
             p for b in cand for p in old_files.get(b, []) + old_delta.get(b, [])
@@ -2744,14 +2723,14 @@ class ManifestTable:
                 int(dr.get(str(b), 0)) for b in cand
             )
             max_rows_per_file = self._rows_for_bytes(
-                max_file_bytes, cand_rel, cand_rows
+                m, max_file_bytes, cand_rel, cand_rows
             )
-        inputs = [self._spath(p) for p in cand_rel]
-        merged = dedup_latest(
-            self._read_files(inputs, ischema, renames=m.get("renamed_cols")),
-            key_cols,
-            ["ts", "_lsn"],
+        inputs = self._read_files(
+            [self._spath(p) for p in cand_rel],
+            self._internal_schema_of(m),
+            renames=m.get("renamed_cols"),
         )
+        merged = dedup_latest(inputs, key_cols, ["ts", "_lsn"])
         if purge_tombstones_before is not None:
             # watermark-bounded tombstone GC (see docstring): drop winners
             # that are tombstones older than the caller's lateness bound W —
@@ -2774,56 +2753,17 @@ class ManifestTable:
                 )
             )
         version = m["version"] + 1
-        stage_rel = self._staging_relpath(version, f"compact{version}")
-        stage_dir = self.storage.spark_path(stage_rel)
-        obs = Observation()
-        out = (
-            merged.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .withColumn("_pb", F.col("_bucket"))
-            .repartition(max(len(cand), 1), F.col("_bucket"))
+        staged_files, rows_by_bucket, staged_rows, staged_stats, _ = self._stage(
+            merged,
+            m,
+            self._staging_relpath(version, f"compact{version}"),
+            len(cand),
+            buckets=cand,
+            sort_by=sort_by,
+            zorder_by=zorder_by,
+            zorder_sample=inputs,
+            max_rows_per_file=max_rows_per_file,
         )
-        if sort_by:
-            # sort by the WRITER'S dynamic-partition column (`_pb`) first:
-            # FileFormatWriter requires task rows ordered by the partition
-            # columns and inserts its own sort when the incoming ordering is
-            # on a different attribute — which would scramble the `sort_by`
-            # order and leave every rolled file spanning the full range.
-            # With `_pb` leading, the writer's requirement is a satisfied
-            # prefix and the clustering survives to the files.
-            out = out.sortWithinPartitions("_pb", *sort_by)
-        elif zorder_by:
-            # boundary sketch: one column-pruned pass over the fold's own
-            # input files (approxQuantile — no shuffle, O(2^bits) floats to
-            # the driver), then sort each bucket by the interleaved z-value.
-            # `_pb` leads for the same writer-resort reason as above; `_z`
-            # is projected away after the sort (the ordering's `_pb` prefix
-            # still satisfies the writer, so no re-sort is inserted — the
-            # 40k-row disjoint-stats test pins this).
-            from ..functions.zorder import zorder_column
-
-            zc = zorder_column(
-                self._read_files(
-                    inputs, ischema, renames=m.get("renamed_cols")
-                ),
-                zorder_by,
-            )
-            out = (
-                out.withColumn("_z", zc)
-                .sortWithinPartitions("_pb", "_z")
-                .drop("_z")
-            )
-        writer = self._write_options(out.write.mode("overwrite"), m)
-        if max_rows_per_file:
-            writer = writer.option("maxRecordsPerFile", int(max_rows_per_file))
-        writer.partitionBy("_pb").parquet(stage_dir)
-        staged_files, rows_by_bucket, staged_rows, staged_stats = (
-            self._scan_staging(stage_rel, buckets=cand)
-        )
-        if staged_rows != int(obs.get["rows"]):
-            raise RuntimeError(
-                f"compact audit failed: observed {int(obs.get['rows'])} vs "
-                f"staged {staged_rows}"
-            )
         files = dict(old_files)
         for b in cand:
             files[b] = staged_files.get(b, [])
@@ -2963,7 +2903,7 @@ class ManifestTable:
         pending: dict[str, dict] | None = None,
     ) -> dict[str, dict[str, list]]:
         """file_stats for the new manifest: freshly harvested footer stats
-        (``pending``, returned by the ``_scan_staging`` call that staged the
+        (``pending``, returned by the ``_stage`` call that staged the
         files) for newly staged files, carried-over entries for kept files,
         dropped entries for removed files."""
         pending = pending or {}
@@ -3063,29 +3003,9 @@ class ManifestTable:
         compaction built)."""
         t0 = time.monotonic()
         m = self.manifest()
-        if sort_by and zorder_by:
-            raise ValueError("sort_by and zorder_by are mutually exclusive")
-        if max_file_bytes and max_rows_per_file:
-            raise ValueError(
-                "max_rows_per_file and max_file_bytes are mutually exclusive"
-            )
-        if sort_by:
-            schema_cols = {
-                f.name for f in T.StructType.fromJson(m["schema"]).fields
-            }
-            bad = [c for c in sort_by if c not in schema_cols]
-            if bad:
-                raise ValueError(f"sort_by columns not in schema: {bad}")
-        if zorder_by:
-            from ..functions.zorder import zorder_validate
-
-            zorder_validate(T.StructType.fromJson(m["schema"]), zorder_by)
-        if max_file_bytes:
-            max_rows_per_file = self._rows_for_bytes(
-                max_file_bytes,
-                self._all_files_rel(m),
-                int(m["total_rows"]) + int(m.get("delta_rows_total") or 0),
-            )
+        self._check_clustering(
+            m, sort_by, zorder_by, max_rows_per_file, max_file_bytes
+        )
         if n_buckets == m["n_buckets"]:
             return {
                 "status": "Skipped",
@@ -3093,56 +3013,35 @@ class ManifestTable:
                 "version": m["version"],
                 "duration_s": time.monotonic() - t0,
             }
+        if max_file_bytes:
+            max_rows_per_file = self._rows_for_bytes(
+                m,
+                max_file_bytes,
+                self._all_files_rel(m),
+                int(m["total_rows"]) + int(m.get("delta_rows_total") or 0),
+            )
         key_cols = m["key_cols"]
-        ischema = self._internal_schema()
-        df = self._read_files(
-            self._all_files(m), ischema, renames=m.get("renamed_cols")
+        inputs = self._read_files(
+            self._all_files(m),
+            self._internal_schema_of(m),
+            renames=m.get("renamed_cols"),
         )
-        if self._all_delta_files(m):
-            df = dedup_latest(df, key_cols, ["ts", "_lsn"])
-        rebucketed = df.withColumn(
-            "_bucket", _bucket_expr(n_buckets, key_cols[0])
+        df = (
+            dedup_latest(inputs, key_cols, ["ts", "_lsn"])
+            if self._all_delta_files(m)
+            else inputs
         )
         version = m["version"] + 1
-        stage_rel = self._staging_relpath(version, f"rebucket{n_buckets}")
-        stage_dir = self.storage.spark_path(stage_rel)
-        obs = Observation()
-        out = (
-            rebucketed.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .withColumn("_pb", F.col("_bucket"))
-            .repartition(max(n_buckets, 1), F.col("_bucket"))
+        staged_files, rows_by_bucket, staged_rows, staged_stats, _ = self._stage(
+            df.withColumn("_bucket", _bucket_expr(n_buckets, key_cols[0])),
+            m,
+            self._staging_relpath(version, f"rebucket{n_buckets}"),
+            n_buckets,
+            sort_by=sort_by,
+            zorder_by=zorder_by,
+            zorder_sample=inputs,
+            max_rows_per_file=max_rows_per_file,
         )
-        if sort_by:
-            # `_pb` must lead the sort — see the identical note in compact()
-            out = out.sortWithinPartitions("_pb", *sort_by)
-        elif zorder_by:
-            from ..functions.zorder import zorder_column
-
-            zc = zorder_column(
-                self._read_files(
-                    self._all_files(m),
-                    ischema,
-                    renames=m.get("renamed_cols"),
-                ),
-                zorder_by,
-            )
-            out = (
-                out.withColumn("_z", zc)
-                .sortWithinPartitions("_pb", "_z")
-                .drop("_z")
-            )
-        writer = self._write_options(out.write.mode("overwrite"), m)
-        if max_rows_per_file:
-            writer = writer.option("maxRecordsPerFile", int(max_rows_per_file))
-        writer.partitionBy("_pb").parquet(stage_dir)
-        staged_files, rows_by_bucket, staged_rows, staged_stats = (
-            self._scan_staging(stage_rel)
-        )
-        if staged_rows != int(obs.get["rows"]):
-            raise RuntimeError(
-                f"rebucket audit failed: observed {int(obs.get['rows'])} vs "
-                f"staged {staged_rows}"
-            )
         res = self._commit(
             m,
             {
@@ -3489,7 +3388,7 @@ class ManifestTable:
         ``predicate`` is a SQL string or a ``Column`` expression."""
         m = self.manifest()
         key_cols = set(m["key_cols"])
-        fields = list(self.schema().fields)
+        fields = list(T.StructType.fromJson(m["schema"]).fields)
         pred = (
             predicate if not isinstance(predicate, str) else F.expr(predicate)
         )
@@ -3536,8 +3435,8 @@ class ManifestTable:
            its manifest ``ts`` stats prove ``max(ts) < ts_before``, its
            bucket has NO delta files (a remaining delta row could carry an
            out-of-order OLDER version that would win the fold once the
-           base row is gone — resurrecting stale content), and a driver-
-           side footer check proves the file has no null-``ts`` rows
+           base row is gone — resurrecting stale content), and its
+           harvested null count proves the file has no null-``ts`` rows
            (nulls are invisible to min/max stats and do not match the
            predicate).  Droppable files are removed from the manifest in
            one commit tagged ``retdel:`` that also records them as
@@ -3671,25 +3570,18 @@ class ManifestTable:
     def _droppable_before(
         self, m: dict[str, Any], cutoff
     ) -> list[tuple[str, str, int]]:
-        """Files provably ALL-OLDER than ``cutoff``: manifest ``ts`` stats
-        give ``max(ts) < cutoff``; the bucket has no delta files; zero
-        null-``ts`` rows (nulls are invisible to min/max stats and never
-        match the predicate).  For files whose manifest stats carry the
-        harvested null and row counts (every file written since the
-        three-element ``_footer_minmax`` format) the whole proof is
-        MANIFEST-ONLY — no I/O at all; legacy two-element entries fall
-        back to a driver-side footer check (threaded, one ranged read per
-        candidate — still no Spark job).  Returns ``(bucket, relpath,
-        rows)`` sorted by path.  Shallow-clone ``ext://`` references are
-        never dropped here (their bytes belong to the source table;
-        localize with ``compact(min_delta_files=0)`` first)."""
-        import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
-
+        """Files provably ALL-OLDER than ``cutoff``, from the manifest
+        alone (no I/O): harvested ``ts`` stats give ``max(ts) < cutoff``
+        and a zero null count (nulls are invisible to min/max stats and
+        never match the predicate), ``::rows`` the row count, and the
+        bucket has no delta files.  A file without that proof is left to
+        the residual pass.  Returns ``(bucket, relpath, rows)`` sorted by
+        path.  Shallow-clone ``ext://`` references are never dropped here
+        (their bytes belong to the source table; localize with
+        ``compact(min_delta_files=0)`` first)."""
         stats = m.get("file_stats") or {}
         deltas = m.get("delta_files") or {}
-        proven: list[tuple[str, str, int]] = []
-        cand: list[tuple[str, str]] = []  # footer-check fallback set
+        out: list[tuple[str, str, int]] = []
         for b, ps in m["files"].items():
             if deltas.get(str(b)):
                 continue
@@ -3697,42 +3589,14 @@ class ManifestTable:
                 if p.startswith(_EXT_PREFIX):
                     continue
                 fs = stats.get(p) or {}
-                st = fs.get("ts")
-                if st is None:
-                    continue
+                st, rows = fs.get("ts"), fs.get("::rows")
+                if st is None or len(st) < 3 or st[2] or not rows:
+                    continue  # unproven, or has null-ts rows
                 try:
-                    if not _stat_from_json(st[1]) < cutoff:
-                        continue
+                    if _stat_from_json(st[1]) < cutoff:
+                        out.append((str(b), p, int(rows[0])))
                 except TypeError:
                     continue
-                rows = fs.get("::rows")
-                if len(st) >= 3 and st[2] > 0:
-                    continue  # has null-ts rows: never droppable
-                if len(st) >= 3 and rows:
-                    proven.append((str(b), p, int(rows[0])))
-                else:
-                    cand.append((str(b), p))
-
-        def _verify(item):
-            b, p = item
-            with self.storage.open_input(p) as fh:
-                md = pq.ParquetFile(fh).metadata
-            idx = {
-                md.schema.column(i).path: i for i in range(md.num_columns)
-            }
-            i = idx.get("ts")
-            if i is None:
-                return None
-            for g in range(md.num_row_groups):
-                cs = md.row_group(g).column(i).statistics
-                if cs is None or not cs.has_null_count or cs.null_count:
-                    return None  # can't prove null-free: not droppable
-            return (b, p, md.num_rows)
-
-        out = list(proven)
-        if cand:
-            with ThreadPoolExecutor(max_workers=min(16, len(cand))) as pool:
-                out += [r for r in pool.map(_verify, cand) if r is not None]
         return sorted(out, key=lambda r: r[1])
 
     def update_where(
@@ -3758,7 +3622,7 @@ class ManifestTable:
         in delta mode; the change feed reports updates with both images."""
         m = self.manifest()
         key_cols = list(m["key_cols"])
-        fields = list(self.schema().fields)
+        fields = list(T.StructType.fromJson(m["schema"]).fields)
         names = {f.name for f in fields}
         set_ = dict(set)  # `set` shadows the builtin inside this scope
         bad = [c for c in set_ if c not in names]
@@ -3799,7 +3663,7 @@ class ManifestTable:
         needs the tombstones: an insert over a tombstoned key must stamp a
         version that outranks the tombstone, which requires seeing it."""
         m = self.manifest()
-        ischema = self._internal_schema()
+        ischema = self._internal_schema_of(m)
         base = [
             self._spath(p)
             for paths in m["files"].values()
@@ -3905,7 +3769,7 @@ class ManifestTable:
             )
         m = self.manifest()
         key_cols = list(m["key_cols"])
-        fields = list(self.schema().fields)
+        fields = list(T.StructType.fromJson(m["schema"]).fields)
         names = {f.name for f in fields}
         payload_nonkey = [
             f.name for f in fields if f.name not in key_cols and f.name != "ts"
@@ -4179,20 +4043,10 @@ class ManifestTable:
 
         mismatches: list[dict[str, Any]] = []
         if verify_rows and not missing:
-            import pyarrow.parquet as pq
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _rows(item):
-                p, key = item
-                if p.startswith(_EXT_PREFIX):
-                    return key, pq.ParquetFile(self._spath(p)).metadata.num_rows
-                with self.storage.open_input(p) as fh:
-                    return key, pq.ParquetFile(fh).metadata.num_rows
-
             got: dict[str, int] = {}
-            with ThreadPoolExecutor(max_workers=min(16, max(len(refs), 1))) as ex:
-                for key, n in ex.map(_rows, refs):
-                    got[key] = got.get(key, 0) + n
+            mds = _footers(self.storage, [p for p, _ in refs])
+            for (_, key), md in zip(refs, mds):
+                got[key] = got.get(key, 0) + md.num_rows
             want: dict[str, int] = {}
             for b, r in (m.get("bucket_rows") or {}).items():
                 want[f"base:{int(b)}"] = int(r)
@@ -4672,7 +4526,9 @@ class ManifestTable:
         self._require_main("add_constraint")
         m = self.manifest()
         cons = dict(m.get("constraints") or {})
-        self._validate_constraint(self.schema(), name, expr)
+        self._validate_constraint(
+            T.StructType.fromJson(m["schema"]), name, expr
+        )
         if name in cons:
             if cons[name] == expr:
                 return {

@@ -96,13 +96,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..sinks.manifest import _DATA_DIR, ManifestTable, _footer_minmax
-
-_INTERNAL_FIELDS = [
-    T.StructField("_lsn", T.LongType(), True),
-    T.StructField("_deleted", T.BooleanType(), True),
-    T.StructField("_bucket", T.IntegerType(), True),
-]
+from ..sinks.manifest import (
+    _DATA_DIR,
+    _INTERNAL_FIELDS,
+    ManifestTable,
+    _footer_minmax,
+    _footers,
+)
 
 
 @dataclass
@@ -291,9 +291,6 @@ class _SinkWriterCore:
     # -- driver side ------------------------------------------------------
 
     def _commit_epoch(self, messages, epoch_id) -> dict:
-        import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
-
         table = self._table()
         m = table.manifest()
         stats_cols = list(m.get("stats_cols") or [])
@@ -301,33 +298,20 @@ class _SinkWriterCore:
             (e for msg in messages if msg is not None for e in msg.files),
             key=lambda e: e[1],
         )
-
-        def _footer(entry):
-            b, rel, rows = entry
-            with table.storage.open_input(rel) as fh:
-                md = pq.ParquetFile(fh).metadata
+        staged: dict[int, list[str]] = {}
+        rows_by_bucket: dict[str, int] = {}
+        stats: dict[str, dict] = {}
+        mds = _footers(table.storage, [rel for _, rel, _ in entries])
+        for (b, rel, rows), md in zip(entries, mds):
             if md.num_rows != rows:
                 raise RuntimeError(
                     f"sink audit failed for epoch {epoch_id}: task reported "
                     f"{rows} rows in {rel} but the parquet footer has "
                     f"{md.num_rows}"
                 )
-            return b, rel, rows, _footer_minmax(md, stats_cols)
-
-        staged: dict[int, list[str]] = {}
-        rows_by_bucket: dict[str, int] = {}
-        stats: dict[str, dict] = {}
-        if entries:
-            with ThreadPoolExecutor(
-                max_workers=min(16, len(entries))
-            ) as pool:
-                for b, rel, rows, st in pool.map(_footer, entries):
-                    staged.setdefault(b, []).append(rel)
-                    rows_by_bucket[str(b)] = (
-                        rows_by_bucket.get(str(b), 0) + rows
-                    )
-                    if st:
-                        stats[rel] = st
+            staged.setdefault(b, []).append(rel)
+            rows_by_bucket[str(b)] = rows_by_bucket.get(str(b), 0) + rows
+            stats[rel] = _footer_minmax(md, stats_cols)
         fschema = T.StructType.fromJson(json.loads(self._file_schema_json))
         payload_schema = T.StructType(
             fschema.fields[: -len(_INTERNAL_FIELDS)]

@@ -47,6 +47,20 @@ def assert_pdf_equal(got, exp, cols=None):
     pd.testing.assert_frame_equal(g, e)
 
 
+def dedup_latest_window(df, key_cols, version_cols):
+    """The slow, plain oracle for ``operators.dedup.dedup_latest``: rank
+    each key's rows by version, keep the first."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    w = Window.partitionBy(*key_cols).orderBy(*[F.desc(c) for c in version_cols])
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 @pytest.fixture(params=["local", "object"])
 def storage_factory(request):
     """Parameterizes table suites over BOTH storage backends: the POSIX

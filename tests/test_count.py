@@ -291,6 +291,31 @@ def test_min_max_string_and_null_columns(spark, table):
         table.min_max("ts", version=0, tag="x")
 
 
+def test_min_max_double_with_nan_matches_spark(spark, table):
+    """Parquet min/max skip NaN, but Spark orders NaN above every number:
+    on a delta-free table holding a NaN, min_max() must still equal the
+    read-side aggregate (max = NaN), not the footer's NaN-blind range."""
+    import math
+
+    table.add_column("score", "double")
+    ts = lambda s: _dt.datetime.fromtimestamp(s, _dt.timezone.utc)
+    rows = [
+        ("U", 99, ts(3000), "c9", 0, 2.5),
+        ("U", 100, ts(3001), "c8", 0, float("nan")),
+        ("U", 101, ts(3002), "c7", 0, -1.0),
+    ]
+    table.merge(
+        spark.createDataFrame(rows, _batch_with_score(spark, []).schema),
+        epoch_id=7,
+        mode="delta",
+    )
+    table.compact(min_delta_files=0)
+    lo, hi = table.min_max("score")
+    exp_lo, exp_hi = _agg_mm(table.read(), "score")
+    assert lo == exp_lo == -1.0
+    assert math.isnan(exp_hi) and math.isnan(hi)
+
+
 def _batch_with_score(spark, rows):
     pdf = pd.DataFrame(
         rows, columns=["op", "lsn", "ts", "conv_id", "turn_idx", "score"]

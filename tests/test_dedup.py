@@ -4,14 +4,9 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from conftest import dedup_latest_window
 
-from event_driven_etl_msc_research_spark.operators.dedup import (
-    dedup_latest,
-    dedup_latest_maxstruct,
-    dedup_latest_window,
-    salted_repartition,
-)
+from event_driven_etl_msc_research_spark.operators.dedup import dedup_latest
 
 
 @pytest.fixture()
@@ -43,23 +38,40 @@ def test_dedup_hash_agg(spark, changes):
 
 
 def test_dedup_maxstruct_agrees(spark, changes):
-    _check(dedup_latest_maxstruct(changes, ["conv_id", "turn_idx"], ["ts", "lsn"]))
+    """The output keeps the input's column order."""
+    out = dedup_latest(changes, ["conv_id", "turn_idx"], ["ts", "lsn"])
+    assert out.columns == changes.columns
+    _check(out)
 
 
-def test_dedup_salted_two_level(spark, changes):
-    _check(
-        dedup_latest_maxstruct(
-            changes, ["conv_id", "turn_idx"], ["ts", "lsn"], salt_buckets=4
-        )
+def test_dedup_salted_two_level(spark):
+    """One key holding most of the rows (the hot-conversation shape)
+    still resolves to its max version, with no salt."""
+    n = 2000
+    pdf = pd.DataFrame(
+        {
+            "conv_id": ["hot"] * (n - 3) + ["a", "b", "c"],
+            "turn_idx": [0] * n,
+            "ts": [i % 50 for i in range(n)],
+            "lsn": range(n),
+            "text": [f"t{i}" for i in range(n)],
+        }
     )
+    got = {
+        r["conv_id"]: r["text"]
+        for r in dedup_latest(
+            spark.createDataFrame(pdf), ["conv_id", "turn_idx"], ["ts", "lsn"]
+        ).collect()
+    }
+    hot = pdf[pdf["conv_id"] == "hot"].sort_values(["ts", "lsn"]).iloc[-1]
+    assert got == {"hot": hot["text"], "a": "t1997", "b": "t1998", "c": "t1999"}
 
 
 def test_dedup_window_formulation_agrees(spark, changes):
+    """Whole winning rows equal the window oracle's."""
     a = dedup_latest(changes, ["conv_id", "turn_idx"], ["ts", "lsn"])
     b = dedup_latest_window(changes, ["conv_id", "turn_idx"], ["ts", "lsn"])
-    assert sorted(map(tuple, a.select("conv_id", "turn_idx", "text").collect())) == sorted(
-        map(tuple, b.select("conv_id", "turn_idx", "text").collect())
-    )
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_dedup_equals_pandas_fold_random(spark):
@@ -95,25 +107,13 @@ def test_dedup_equals_pandas_fold_random(spark):
 
 def test_dedup_plan_has_partial_agg_no_window(spark, changes):
     """The production path must be an aggregate WITH a partial (map-side
-    combine) step and no window sort-the-world — SURVEY.md §2.6 scale note.
-    (argmax's decimal version buffer is fixed-width → true HashAggregate;
-    the partial_max step is what defuses hot keys before the shuffle)."""
+    combine) step and no window sort-the-world — SURVEY.md §2.6 scale note
+    (the partial_max_by step is what defuses hot keys before the shuffle)."""
     plan = dedup_latest(
         changes, ["conv_id", "turn_idx"], ["ts", "lsn"]
     )._jdf.queryExecution().executedPlan().toString()
     assert "partial_max" in plan
     assert "Window" not in plan
-
-
-def test_dedup_argmax_agrees_and_is_hash_agg(spark, changes):
-    from event_driven_etl_msc_research_spark.operators.dedup import (
-        dedup_latest_argmax,
-    )
-
-    out = dedup_latest_argmax(changes, ["conv_id", "turn_idx"], ["ts", "lsn"])
-    _check(out.select("conv_id", "turn_idx", "text"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "HashAggregate" in plan  # decimal-encoded version → true hash agg
 
 
 def test_dedup_null_versions_not_dropped(spark):
@@ -137,26 +137,3 @@ def test_dedup_null_versions_not_dropped(spark):
     assert got[("a", 0)] == "good"          # real version beats null version
     assert ("corrupt", 0) in got            # all-null key kept, not dropped
     assert got[("corrupt", 0)] in ("c1", "c2")
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["hot"] * 1000,
-            "turn_idx": [0] * 1000,
-            "ts": range(1000),
-            "lsn": range(1000),
-            "text": [f"t{i}" for i in range(1000)],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    out = salted_repartition(df, 8, ["conv_id", "turn_idx"], salt_buckets=8)
-    sizes = (
-        out.withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .count()
-        .collect()
-    )
-    # a plain repartition on the key would put all 1000 rows in ONE partition
-    assert len(sizes) > 1
-    assert max(r["count"] for r in sizes) < 1000

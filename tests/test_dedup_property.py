@@ -1,18 +1,16 @@
 """Property-based check (hypothesis): for ANY change sequence, the engine's
-dedup (argmax production path AND maxstruct cross-check) equals the trivial
+dedup (``dedup_latest``) and the window-form oracle both equal the trivial
 fold-in-(ts,lsn)-order oracle — including adversarial shapes hypothesis
 finds (all-one-key, ties on ts, singleton frames)."""
 
 from __future__ import annotations
 
 import pandas as pd
+from conftest import dedup_latest_window
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from event_driven_etl_msc_research_spark.operators.dedup import (
-    dedup_latest,
-    dedup_latest_maxstruct,
-)
+from event_driven_etl_msc_research_spark.operators.dedup import dedup_latest
 
 # shared session fixture comes from conftest via the `spark` arg
 
@@ -54,7 +52,7 @@ def _oracle(pdf: pd.DataFrame) -> dict:
 def test_dedup_matches_fold_oracle(spark, pdf):
     df = spark.createDataFrame(pdf)
     exp = _oracle(pdf)
-    for impl in (dedup_latest, dedup_latest_maxstruct):
+    for impl in (dedup_latest, dedup_latest_window):
         got = {
             (r["conv_id"], r["turn_idx"]): r["text"]
             for r in impl(df, ["conv_id", "turn_idx"], ["ts", "lsn"]).collect()

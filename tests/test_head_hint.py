@@ -101,6 +101,28 @@ def test_resolution_never_lists_manifest_dir(spark, tmp_root):
     assert gets == [f"_manifest/v{head + 1:012d}.json"]
 
 
+@pytest.mark.parametrize("verb", ["delta_merge", "cow_merge", "compact"])
+def test_write_verbs_read_the_head_once(spark, tmp_root, verb):
+    """A write verb resolves the head once and stages, audits and commits
+    against that snapshot — no hidden re-read of the head manifest."""
+    root = os.path.join(tmp_root, "once_tbl")
+    st = CountingStorage(root)
+    t = ManifestTable.create(spark, root, TRANSCRIPT_SCHEMA, n_buckets=2, storage=st)
+    mode = "cow" if verb == "cow_merge" else "delta"
+    t.merge(_batch(spark, 100), epoch_id=1, mode=mode)
+    head = t._manifest_key(t.current_version())
+    st.calls.clear()
+    if verb == "compact":
+        res = t.compact()
+    else:
+        # the same keys again: a CoW merge rewrites the touched buckets
+        res = t.merge(_batch(spark, 200), epoch_id=2, mode=mode)
+    assert res["status"] == "Success"
+    if verb == "cow_merge":
+        assert res["merge_path"] != "initial"
+    assert st.calls.count(("get", head)) == 1
+
+
 def test_probe_covers_hint_lag(spark, tmp_root, storage_factory):
     """A writer that crashes between publish and hint leaves max-hint <
     head; probe-forward must still find the true head."""

@@ -87,8 +87,7 @@ def test_metadata_drop_and_residual(spark, tmp_root):
 def test_drop_phase_launches_no_spark_jobs(spark, tmp_root):
     """The metadata drop is MANIFEST-ONLY: harvested stats carry min/max
     ts, the null count, and the row count per file, so candidate proof
-    costs zero Spark jobs AND zero storage reads (legacy two-element
-    stats fall back to a driver-side footer read — also tested)."""
+    costs zero Spark jobs AND zero storage reads."""
     t = _mk(spark, tmp_root + "/t")
     sc = spark.sparkContext
     group = "retdel-jobcount"
@@ -109,17 +108,6 @@ def test_drop_phase_launches_no_spark_jobs(spark, tmp_root):
     assert len(dropped) > 0
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert opened == []  # proof came from the manifest alone
-
-    # legacy manifests (pre-null-count stats): footer fallback still
-    # proves, and agrees with the manifest-only result
-    m = t.manifest()
-    legacy = {
-        p: {c: (v[:2] if c != "::rows" else v) for c, v in st.items()
-            if c != "::rows"}
-        for p, st in m["file_stats"].items()
-    }
-    dropped2 = t._droppable_before({**m, "file_stats": legacy}, _cut(1000))
-    assert dropped2 == dropped
 
 
 def test_watermark_filters_late_old_upserts(spark, tmp_root):

@@ -1,7 +1,8 @@
 """Skew handling (SURVEY.md §5.5): one conversation holds ~50% of events.
 The reference has no skew handling (a hot chunk just runs long,
-prototype-etl.json:28-39); the engine's salted two-level aggregate must both
-stay correct and bound per-reducer load."""
+prototype-etl.json:28-39); the engine's max_by dedup, whose map-side
+partial combine collapses the hot key before the shuffle, must both stay
+correct and bound per-bucket load."""
 
 from __future__ import annotations
 
@@ -43,34 +44,3 @@ def test_hot_conversation_replay_correct_and_registered(spark, tmp_root):
     last_epoch = reg["epoch_id"].max()
     sizes = reg[reg["epoch_id"] == last_epoch].set_index("partition_id")["n_records"]
     assert sizes.max() <= 5 * max(sizes.mean(), 1)
-
-
-def test_salted_dedup_two_level_plan(spark):
-    """The maxstruct salted path must show TWO aggregate exchanges: one
-    keyed on (key, salt), one on key — the explicit salted-hash
-    repartition.  (The production argmax path defuses hot keys with
-    map-side hash combine instead; its plan is checked in test_dedup.)"""
-    import pandas as pd
-
-    from event_driven_etl_msc_research_spark.operators.dedup import (
-        dedup_latest_maxstruct as dedup_latest,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["hot"] * 100,
-            "turn_idx": [0] * 100,
-            "ts": range(100),
-            "lsn": range(100),
-            "text": [str(i) for i in range(100)],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    plan = (
-        dedup_latest(df, ["conv_id", "turn_idx"], ["ts", "lsn"], salt_buckets=8)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Aggregate") >= 4  # partial+final × two levels
-    assert "_salt" in plan

@@ -4,11 +4,14 @@ prototype-etl.json:15-24,61-69)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 import time
 
 import pytest
 from conftest import assert_pdf_equal
+from pyspark.errors import StreamingQueryException
 
 from event_driven_etl_msc_research_spark import CDCEngine
 from event_driven_etl_msc_research_spark.datagen import (
@@ -38,15 +41,31 @@ def test_stop_and_resume_from_checkpoint(spark, tmp_root):
     generate_change_stream(log, SPEC)
     eng = CDCEngine(spark, tbl, change_schema=CHANGE_EVENT_SCHEMA_EVOLVED, n_buckets=8)
 
-    # phase 1: start draining one segment per micro-batch, kill after ≥2 commits
-    q = eng.replay(log, cp, max_files_per_trigger=1, timeout_s=0.001)  # returns at once
-    deadline = time.monotonic() + 120
-    while time.monotonic() < deadline:
-        if eng.table.current_version() and eng.table.current_version() >= 2:
-            break
-        time.sleep(0.2)
+    # phase 1: drain one segment per micro-batch and stop at a fixed point:
+    # epochs 0-1 commit, epoch 2 is held until q.stop() has marked the
+    # query inactive and then fails, so Spark never commits its offsets
+    # (stop() waits for the running batch, so the hold must end by itself)
+    apply_batch = eng.apply_batch
+    holding = threading.Event()
+    query = {}
+
+    def apply_until_stopped(batch_df, epoch_id):
+        if epoch_id < 2:
+            return apply_batch(batch_df, epoch_id)
+        holding.set()
+        deadline = time.monotonic() + 120
+        while time.monotonic() < deadline and (
+            "q" not in query or query["q"].isActive
+        ):
+            time.sleep(0.05)
+        raise RuntimeError(f"query stopped before epoch {epoch_id}")
+
+    eng.apply_batch = apply_until_stopped  # shadows the method foreachBatch binds
+    q = query["q"] = eng.replay(log, cp, max_files_per_trigger=1, timeout_s=0.001)
+    assert holding.wait(120)
     q.stop()
-    q.awaitTermination(30)
+    with contextlib.suppress(StreamingQueryException):
+        q.awaitTermination(30)
     v_mid = eng.table.current_version()
     assert 2 <= v_mid < 13  # stopped mid-replay, some epochs committed
 
