@@ -71,14 +71,10 @@ _SEG_DIR = "_manifest_seg"
 
 
 def _segment_refs(m: dict[str, Any]) -> list[str]:
-    """Segment object keys a raw manifest references.  The current format
-    is an index-addressed dict ``{str(bucket % segment_mod): key}`` (which
-    lets a pinned-bucket read splice ONE segment); early segmented
-    manifests stored a plain list."""
-    s = m.get("segments")
-    if not s:
-        return []
-    return list(s.values()) if isinstance(s, dict) else list(s)
+    """Segment object keys a raw manifest references: an index-addressed
+    dict ``{str(bucket % segment_mod): key}`` (which lets a pinned-bucket
+    read splice ONE segment)."""
+    return list((m.get("segments") or {}).values())
 
 
 class SchemaEvolutionError(ValueError):
@@ -103,6 +99,11 @@ def _bucket_expr(n_buckets: int, bucket_col: str = "conv_id"):
     # deterministic hash bucket of the first key column — the physical
     # partition and the MERGE rewrite unit (co-locates a conversation).
     return F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_buckets)).cast("int")
+
+
+def _fold_rows(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    # the merge-on-read rule: per key, the row with the max (ts, _lsn) wins
+    return dedup_latest(df, key_cols, ["ts", "_lsn"])
 
 
 def _split_epoch_key(key: str) -> tuple[str, int] | None:
@@ -434,6 +435,14 @@ class ManifestTable:
         branch: str | None = None,
     ):
         self.spark = spark
+        if spark is not None:
+            # file stats must not depend on the caller's session: legacy
+            # INT96 timestamps carry NO parquet min/max statistics, which
+            # would blind ts pruning, retention's metadata drop and the
+            # count/min_max tiers on every file the session writes
+            spark.conf.set(
+                "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+            )
         self.root = root
         # every metadata operation goes through the TableStorage verbs
         # (put-if-absent / get / list / delete) — see sinks/storage.py; the
@@ -757,25 +766,39 @@ class ManifestTable:
 
     def _get_manifest(self, key: str, splice: bool = True) -> dict[str, Any]:
         m = self._decode_blob(self.storage.get(key))
-        segs = _segment_refs(m)
-        if not (splice and segs):
-            return m
-        # splice externalized segments back in: callers always see the
-        # fully-inline manifest shape (and never the "segments" key, so a
-        # spliced dict re-published verbatim can never double-count)
+        return self._splice(m) if splice else m
+
+    def _splice(
+        self, raw: dict[str, Any], where: dict[str, tuple] | None = None
+    ) -> dict[str, Any]:
+        """``raw`` with its externalized segments spliced back in: callers
+        always see the fully-inline manifest shape (and never the
+        "segments" key, so a spliced dict re-published verbatim can never
+        double-count).  A ``where`` that pins the bucket column job-free
+        (equality / ``is_null`` — see ``_pinned_bucket``) splices only the
+        ONE segment covering that bucket, so a point lookup's metadata cost
+        is two small GETs regardless of table file count.  That PARTIAL
+        view is safe because ``_pruned_files`` skips every bucket but the
+        pinned one anyway; it is never cached or published."""
+        segs = raw.get("segments")
+        if not segs:
+            return raw
+        m = dict(raw)
         del m["segments"]
-        m.pop("segment_mod", None)
-        segs = list(dict.fromkeys(segs))  # defensive: splice each key once
+        mod = m.pop("segment_mod", None)
+        b = self._pinned_bucket(m, where) if where and mod else None
+        if b is None:
+            keys = list(dict.fromkeys(segs.values()))  # splice each once
+        else:
+            # absent = the pinned bucket's segment holds nothing
+            keys = [k for k in (segs.get(str(int(b) % int(mod))),) if k]
         files = dict(m.get("files") or {})
         delta = dict(m.get("delta_files") or {})
         stats = dict(m.get("file_stats") or {})
-        for part in self._get_segments(segs):
-            for dst, src_key in (
-                (files, "files"),
-                (delta, "delta_files"),
-            ):
-                for b, ps in (part.get(src_key) or {}).items():
-                    dst[b] = dst.get(b, []) + list(ps)
+        for part in self._get_segments(keys):
+            for dst, src_key in ((files, "files"), (delta, "delta_files")):
+                for bb, ps in (part.get(src_key) or {}).items():
+                    dst[bb] = dst.get(bb, []) + list(ps)
             stats.update(part.get("file_stats") or {})
         m["files"] = files
         m["delta_files"] = delta
@@ -819,50 +842,6 @@ class ManifestTable:
                 cache.popitem(last=False)
         return [out[k] for k in keys]
 
-    def _manifest_point_view(
-        self, version: int | None, where: dict[str, tuple]
-    ) -> dict[str, Any] | None:
-        """PARTIAL spliced manifest for a read whose ``where`` pins the
-        bucket column job-free (equality / ``is_null`` — see
-        ``_pinned_bucket``): the raw manifest plus exactly the segment
-        covering that bucket, so a point lookup's metadata cost is two
-        small GETs regardless of table file count.  Returns None when the
-        shortcut does not apply (inline manifest, no job-free pin, legacy
-        list-format segments, or a branch fall-through key) — the caller
-        then takes the ordinary full splice.  Safe because
-        ``_pruned_files`` skips every bucket but the pinned one anyway;
-        the partial view is never cached or published."""
-        v = self.current_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no manifest at {self.root}")
-        try:
-            raw = self._get_manifest(self._manifest_key(v), splice=False)
-        except FileNotFoundError:
-            return None  # pre-fork snapshot on a branch: full path handles it
-        segs, mod = raw.get("segments"), raw.get("segment_mod")
-        if not segs or not isinstance(segs, dict) or not mod:
-            return None
-        b = self._pinned_bucket(raw, where)
-        if b is None:
-            return None
-        m = dict(raw)
-        del m["segments"]
-        m.pop("segment_mod", None)
-        files = dict(m.get("files") or {})
-        delta = dict(m.get("delta_files") or {})
-        stats = dict(m.get("file_stats") or {})
-        key = segs.get(str(int(b) % int(mod)))
-        if key:  # absent = the pinned bucket's segment holds nothing
-            (part,) = self._get_segments([key])
-            for dst, src_key in ((files, "files"), (delta, "delta_files")):
-                for bb, ps in (part.get(src_key) or {}).items():
-                    dst[bb] = dst.get(bb, []) + list(ps)
-            stats.update(part.get("file_stats") or {})
-        m["files"] = files
-        m["delta_files"] = delta
-        m["file_stats"] = stats
-        return m
-
     # Inline manifests are rewritten WHOLE per commit — O(live files) bytes
     # uploaded at publish and downloaded by every head read, the last
     # recurring O(table) cost in the metadata plane (gzip cuts the constant,
@@ -876,7 +855,7 @@ class ManifestTable:
     # put_if_absent of an unchanged segment's key finds it already present
     # and uploads nothing — so publish I/O is O(touched buckets), and
     # successive snapshots SHARE their unchanged segments on disk.
-    # Readers re-assemble via S parallel GETs (see _get_manifest); segment
+    # Readers re-assemble via S parallel GETs (see _splice); segment
     # objects die in expire_snapshots' ref-counted GC once no surviving
     # snapshot on any ref chain points at them.  Both knobs are overridable
     # per table via write.manifest.* properties; the inline format remains
@@ -997,12 +976,20 @@ class ManifestTable:
             v += 1
 
     def manifest(self, version: int | None = None) -> dict[str, Any]:
+        return self._snapshot(version)
+
+    def _snapshot(
+        self, version: int | None, where: dict[str, tuple] | None = None
+    ) -> dict[str, Any]:
+        """:meth:`manifest`, with the head resolved once; a ``where``
+        pinning one bucket splices only that bucket's segment (see
+        ``_splice``)."""
         head = version is None
         v = self.current_version() if head else version
         if v is None:
             raise FileNotFoundError(f"no manifest at {self.root}")
         try:
-            m = self._get_manifest(self._manifest_key(v))
+            raw = self._get_manifest(self._manifest_key(v), splice=False)
         except FileNotFoundError:
             if head and self.branch is None:
                 # a hinted head whose manifest is gone (tampered hints /
@@ -1016,7 +1003,7 @@ class ManifestTable:
             # with a copy of its fork-base manifest only, so time travel /
             # chain walks below the fork fall through to the main namespace
             return self._get_manifest(f"{_MANIFEST_DIR}/v{v:012d}.json")
-        return m
+        return self._splice(raw, where)
 
     def _publish(self, manifest: dict[str, Any]) -> None:
         """Atomic publish: a conditional PUT of the version key — the
@@ -1163,9 +1150,6 @@ class ManifestTable:
         """User-facing schema (no internal columns)."""
         return T.StructType.fromJson(self.manifest(version)["schema"])
 
-    def _internal_schema(self, version: int | None = None) -> T.StructType:
-        return self._internal_schema_of(self.manifest(version))
-
     @staticmethod
     def _internal_schema_of(m: dict[str, Any]) -> T.StructType:
         return T.StructType(
@@ -1282,20 +1266,6 @@ class ManifestTable:
             return p[len(_EXT_PREFIX):]
         return self.storage.spark_path(p)
 
-    def _all_files(self, manifest: dict[str, Any]) -> list[str]:
-        return [
-            self._spath(p)
-            for paths in manifest["files"].values()
-            for p in paths
-        ] + self._all_delta_files(manifest)
-
-    def _all_delta_files(self, manifest: dict[str, Any]) -> list[str]:
-        return [
-            self._spath(p)
-            for paths in (manifest.get("delta_files") or {}).values()
-            for p in paths
-        ]
-
     def _all_files_rel(self, manifest: dict[str, Any]) -> list[str]:
         """Every live file as a storage-relative path (base + delta)."""
         return [
@@ -1347,6 +1317,60 @@ class ManifestTable:
                 cur, F.coalesce(F.col(cur), *[F.col(o) for o in olds])
             )
         return df.select(*[f.name for f in schema.fields])
+
+    def _scan(
+        self,
+        m: dict[str, Any],
+        files: list[str] | None = None,
+        *,
+        where: dict[str, tuple] | None = None,
+        live: bool = True,
+        schema: T.StructType | None = None,
+    ) -> DataFrame:
+        """The one read path from a snapshot to rows — prune → scan →
+        fold — over ``m``, the manifest the verb already holds (a scan
+        never re-resolves a snapshot).
+
+        ``files=None`` scans the snapshot itself: every file of ``m``, or
+        the ones ``where`` keeps (``_pruned_files``), folded base+delta by
+        the per-key max-``(ts, _lsn)`` rule when delta files are among
+        them, with ``where``'s bounds applied as exact filters.  Caller-
+        given relpaths (staged, candidate, added or dropped files) are
+        scanned raw, unfolded.  ``live`` drops delete tombstones.  Rows
+        come in the internal shape of ``schema`` (default: ``m``'s) with
+        rename shadows coalesced (``_read_files``); this is the only place
+        a manifest relpath becomes a Spark path (``_spath``)."""
+        ischema = schema or self._internal_schema_of(m)
+        delta: list[str] = []
+        if files is None and where:
+            files, delta = self._pruned_files(m, where)
+        elif files is None:
+            files = [p for ps in m["files"].values() for p in ps]
+            delta = [
+                p for ps in (m.get("delta_files") or {}).values() for p in ps
+            ]
+        df = self._read_files(
+            [self._spath(p) for p in files + delta],
+            ischema,
+            renames=m.get("renamed_cols"),
+        )
+        if delta:
+            df = _fold_rows(df, m["key_cols"])
+        if live:
+            df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+        dtypes = {f.name: f.dataType for f in ischema.fields}
+        for c, v in (where or {}).items():
+            if v == "is_null":
+                df = df.filter(F.col(c).isNull())
+            elif v == "not_null":
+                df = df.filter(F.col(c).isNotNull())
+            else:
+                lo, hi = v
+                if lo is not None:
+                    df = df.filter(F.col(c) >= F.lit(_norm_bound(lo, dtypes.get(c))))
+                if hi is not None:
+                    df = df.filter(F.col(c) <= F.lit(_norm_bound(hi, dtypes.get(c))))
+        return df
 
     def _snapshot_version(
         self, verb: str, version: int | None, tag: str | None, as_of
@@ -1411,53 +1435,15 @@ class ManifestTable:
         (Iceberg bucket-transform analogue) — the O(one-bucket) point
         lookup regardless of stats."""
         version = self._snapshot_version("read", version, tag, as_of)
-        m = None
-        if where:
-            for c, v in where.items():
-                if isinstance(v, str) and v not in ("is_null", "not_null"):
-                    raise ValueError(
-                        f"where[{c!r}]: expected a (lo, hi) tuple, "
-                        f"'is_null', or 'not_null' — got {v!r}"
-                    )
-            # a point lookup on a segmented table splices only the ONE
-            # segment covering its pinned bucket — the whole metadata read
-            # is the manifest object + one segment GET, not the full
-            # O(files) listing (None = not applicable, take the full path)
-            m = self._manifest_point_view(version, where)
-        if m is None:
-            m = self.manifest(version)
-        ischema = self._internal_schema_of(m)
-        if where:
-            base_files, delta_files = self._pruned_files(m, where)
-        else:
-            base_files = [
-                self._spath(p)
-                for paths in m["files"].values()
-                for p in paths
-            ]
-            delta_files = self._all_delta_files(m)
-        df = self._read_files(
-            base_files + delta_files, ischema, renames=m.get("renamed_cols")
-        )
-        if delta_files:
-            df = dedup_latest(df, m["key_cols"], ["ts", "_lsn"])
-        df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-        if where:
-            dtypes = {f.name: f.dataType for f in ischema.fields}
-            for c, v in where.items():
-                if v == "is_null":
-                    df = df.filter(F.col(c).isNull())
-                elif v == "not_null":
-                    df = df.filter(F.col(c).isNotNull())
-                else:
-                    lo, hi = v
-                    if lo is not None:
-                        df = df.filter(F.col(c) >= F.lit(_norm_bound(lo, dtypes.get(c))))
-                    if hi is not None:
-                        df = df.filter(F.col(c) <= F.lit(_norm_bound(hi, dtypes.get(c))))
+        for c, v in (where or {}).items():
+            if isinstance(v, str) and v not in ("is_null", "not_null"):
+                raise ValueError(
+                    f"where[{c!r}]: expected a (lo, hi) tuple, "
+                    f"'is_null', or 'not_null' — got {v!r}"
+                )
+        m = self._snapshot(version, where)
+        df = self._scan(m, where=where)
         if not include_internal:
-            # project off m (already loaded) — a second manifest(version)
-            # here would defeat the partial point-view's one-segment read
             df = df.select(
                 *[f.name for f in T.StructType.fromJson(m["schema"]).fields]
             )
@@ -1487,15 +1473,15 @@ class ManifestTable:
            row group) — ONE column-pruned Spark job over just those files
            (reads only ``_deleted``; every provable file stays pruned).
         4. Any delta files present — the MOR fold decides winners, so the
-           full ``read(version=).count()`` runs (correctness beats the
-           shortcut; ``compact()`` restores tier 1).
+           folded snapshot scan counts (correctness beats the shortcut;
+           ``compact()`` restores tier 1).
 
         Selectors mirror :meth:`read` (``version``/``tag``/``as_of``,
         mutually exclusive)."""
         version = self._snapshot_version("count", version, tag, as_of)
         m = self.manifest(version)
         if any(ps for ps in (m.get("delta_files") or {}).values()):
-            return self.read(version=m["version"]).count()
+            return self._scan(m).count()
         stats = m.get("file_stats") or {}
         total = 0
         probe: list[str] = []  # tier 2: driver footer probe
@@ -1509,7 +1495,7 @@ class ManifestTable:
                 elif p.startswith(_EXT_PREFIX):
                     # clone-external file with incomplete stats: its bytes
                     # live outside this table's storage root, so the safe
-                    # route is the scan tier (reads via _spath like any read)
+                    # route is the scan tier (_scan resolves ext:// refs)
                     scan.append(p)
                 else:
                     probe.append(p)
@@ -1520,15 +1506,7 @@ class ManifestTable:
             else:
                 total += md.num_rows - dead
         if scan:
-            ischema = self._internal_schema_of(m)
-            df = self._read_files(
-                [self._spath(p) for p in scan],
-                ischema,
-                renames=m.get("renamed_cols"),
-            )
-            total += int(
-                df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).count()
-            )
+            total += int(self._scan(m, scan).count())
         return total
 
     def min_max(
@@ -1558,8 +1536,8 @@ class ManifestTable:
         3. **One column-pruned Spark scan** of only the still-unprovable
            files (mixed row groups, clone externals), reading just the
            column + ``_deleted``.
-        4. Delta files present → the MOR fold decides winners: full
-           ``read(version=)`` aggregate.
+        4. Delta files present → the MOR fold decides winners: an
+           aggregate over the folded snapshot scan.
 
         String/binary columns go straight to the scan tiers: parquet
         writers may TRUNCATE binary statistics (a truncated max is a valid
@@ -1586,7 +1564,7 @@ class ManifestTable:
             return r["lo"], r["hi"]
 
         if any(ps for ps in (m.get("delta_files") or {}).values()):
-            d_lo, d_hi = _agg(self.read(version=m["version"]))
+            d_lo, d_hi = _agg(self._scan(m))
             if d_lo is None:
                 return None, None
             # normalize to the same tz-aware shape the metadata tiers
@@ -1641,15 +1619,7 @@ class ManifestTable:
             else:
                 _fold(_stat_from_json(ent[0]), _stat_from_json(ent[1]))
         if scan:
-            ischema = self._internal_schema_of(m)
-            df = self._read_files(
-                [self._spath(p) for p in scan],
-                ischema,
-                renames=m.get("renamed_cols"),
-            )
-            s_lo, s_hi = _agg(
-                df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
-            )
+            s_lo, s_hi = _agg(self._scan(m, scan))
             if s_lo is not None:
                 _fold(s_lo, s_hi)
         return lo, hi
@@ -1690,8 +1660,8 @@ class ManifestTable:
     def _pruned_files(
         self, m: dict[str, Any], where: dict[str, tuple]
     ) -> tuple[list[str], list[str]]:
-        """Split the snapshot's files into (kept base, kept delta) full
-        paths under the bounds — see ``read`` for the MOR pruning rule.
+        """Split the snapshot's files into (kept base, kept delta) relpaths
+        under the bounds — see ``read`` for the MOR pruning rule.
         Files with no recorded stats for a bound column are always kept.
 
         Null predicates (``"is_null"`` / ``"not_null"`` values) ride the
@@ -1737,8 +1707,8 @@ class ManifestTable:
                 return False
             if c in null_preds:
                 if null_preds[c] == "is_null":
-                    # legacy two-element entries carry no null count:
-                    # not provable, keep
+                    # two-element entries (a row group without a null
+                    # count, see _footer_minmax) are not provable: keep
                     return len(entry) >= 3 and entry[2] == 0
                 return entry[0] is None  # not_null: all-null file form
             lo, hi = nb[c]
@@ -1828,16 +1798,12 @@ class ManifestTable:
                     for c in nonkey_bounds
                     if all(disjoint(p, c) for p in delta_by_bucket[str(b)])
                 ]
-            base += [
-                self._spath(p) for p in ps if keep(p, usable)
-            ]
+            base += [p for p in ps if keep(p, usable)]
         deltas: list[str] = []
         for b, ps in delta_by_bucket.items():
             if only_bucket is not None and int(b) != only_bucket:
                 continue
-            deltas += [
-                self._spath(p) for p in ps if keep(p, key_bounds)
-            ]
+            deltas += [p for p in ps if keep(p, key_bounds)]
         return base, deltas
 
     def applied_epochs(self) -> set:
@@ -1852,20 +1818,10 @@ class ManifestTable:
     # ---------- MERGE (the one join-shaped op; SURVEY.md §2.4) ----------
 
     def merge(
-        self,
-        changes: DataFrame,
-        epoch_id: int,
-        files_per_bucket: int = 1,
-        audit: str = "counts",
-        strategy: str = "auto",
-        broadcast_threshold: int = 1_000_000,
-        epoch_scope: str = "batch",
-        before_publish=None,
-        mode: str = "cow",
-        retries: int = 5,
-        _bypass_watermark: bool = False,
+        self, changes: DataFrame, epoch_id: int, **kw: Any
     ) -> dict[str, Any]:
-        """Exactly-once upsert of a change batch.
+        """Exactly-once upsert of a change batch; the keyword options and
+        their defaults are :meth:`_merge`'s.
 
         Equivalent of ``MERGE INTO t USING c ON t.key = c.key WHEN MATCHED
         [AND c.version > t.version] UPDATE ... WHEN NOT MATCHED INSERT``
@@ -1907,8 +1863,28 @@ class ManifestTable:
         out-of-order older change loses the max-version comparison, and a
         delete tombstone persists so an older update cannot resurrect a key.
         """
+        return self._merge(self.manifest(), changes, epoch_id, **kw)
+
+    def _merge(
+        self,
+        m: dict[str, Any],
+        changes: DataFrame,
+        epoch_id: int,
+        *,
+        files_per_bucket: int = 1,
+        audit: str = "counts",
+        strategy: str = "auto",
+        broadcast_threshold: int = 1_000_000,
+        epoch_scope: str = "batch",
+        before_publish=None,
+        mode: str = "cow",
+        retries: int = 5,
+        _bypass_watermark: bool = False,
+    ) -> dict[str, Any]:
+        """:meth:`merge` against ``m``, the head the caller already read —
+        the DML verbs pass the snapshot they derived their batch from, so
+        the head is resolved once per verb."""
         t0 = time.monotonic()
-        m = self.manifest()
         # idempotence scope: Structured Streaming epoch ids restart at 0 for
         # every NEW checkpoint, so re-delivery detection is keyed by
         # (checkpoint lineage, epoch) — the exactly-once contract is
@@ -2016,26 +1992,20 @@ class ManifestTable:
         n_change_keys = staged_rows
         touched = sorted(staged_files)
         touched_files = [
-            self._spath(p)
-            for b in touched
-            for p in old_files.get(b, []) + old_delta.get(b, [])
+            p for b in touched for p in old_files.get(b, []) + old_delta.get(b, [])
         ]
         if mode == "delta":
             merge_path = "delta"
         elif not touched_files:
             merge_path = "initial"  # the staged batch IS the merged result
         else:
-            staged_changes = self._read_files(
-                [
-                    self.storage.spark_path(p)
-                    for ps in staged_files.values()
-                    for p in ps
-                ],
-                ischema,
+            staged_changes = self._scan(
+                m,
+                [p for ps in staged_files.values() for p in ps],
+                live=False,
+                schema=ischema,
             )
-            target = self._read_files(
-                touched_files, ischema, renames=m.get("renamed_cols")
-            )
+            target = self._scan(m, touched_files, live=False, schema=ischema)
             # Fast path (the common micro-batch case): the deduped batch is
             # small → broadcast it; target data flows scan→write with ZERO
             # shuffle.  General path: union + per-key max-version aggregate
@@ -2051,10 +2021,9 @@ class ManifestTable:
                 )
                 merge_path = "broadcast"
             else:
-                merged = dedup_latest(
+                merged = _fold_rows(
                     target.unionByName(staged_changes, allowMissingColumns=True),
                     key_cols,
-                    ["ts", "_lsn"],
                 )
                 merge_path = "shuffle"
             staged_files, rows_by_bucket, staged_rows, staged_stats, _ = (
@@ -2073,14 +2042,13 @@ class ManifestTable:
                 )
             )
         if audit == "keys" and staged_rows:
-            staged_paths = [
-                self.storage.spark_path(p)
-                for ps in staged_files.values()
-                for p in ps
-            ]
             dups = (
-                self.spark.read.schema(ischema)
-                .parquet(*staged_paths)
+                self._scan(
+                    m,
+                    [p for ps in staged_files.values() for p in ps],
+                    live=False,
+                    schema=ischema,
+                )
                 .groupBy(*key_cols)
                 .count()
                 .filter(F.col("count") > 1)
@@ -2495,6 +2463,12 @@ class ManifestTable:
                 .sortWithinPartitions("_pb", "_z")
                 .drop("_z")
             )
+        # the write runs under the FRAME's session, which may not be the
+        # handle's (a change batch built on another session): pin it too
+        # (see __init__)
+        df.sparkSession.conf.set(
+            "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+        )
         writer = self._write_options(out.write.mode("overwrite"), m)
         if max_rows_per_file:
             writer = writer.option("maxRecordsPerFile", int(max_rows_per_file))
@@ -2725,12 +2699,9 @@ class ManifestTable:
             max_rows_per_file = self._rows_for_bytes(
                 m, max_file_bytes, cand_rel, cand_rows
             )
-        inputs = self._read_files(
-            [self._spath(p) for p in cand_rel],
-            self._internal_schema_of(m),
-            renames=m.get("renamed_cols"),
-        )
-        merged = dedup_latest(inputs, key_cols, ["ts", "_lsn"])
+        # scanned unfolded: the z-order sketch samples the raw inputs
+        inputs = self._scan(m, cand_rel, live=False)
+        merged = _fold_rows(inputs, key_cols)
         if purge_tombstones_before is not None:
             # watermark-bounded tombstone GC (see docstring): drop winners
             # that are tombstones older than the caller's lateness bound W —
@@ -3021,14 +2992,11 @@ class ManifestTable:
                 int(m["total_rows"]) + int(m.get("delta_rows_total") or 0),
             )
         key_cols = m["key_cols"]
-        inputs = self._read_files(
-            self._all_files(m),
-            self._internal_schema_of(m),
-            renames=m.get("renamed_cols"),
-        )
+        # scanned unfolded: the z-order sketch samples the raw inputs
+        inputs = self._scan(m, self._all_files_rel(m), live=False)
         df = (
-            dedup_latest(inputs, key_cols, ["ts", "_lsn"])
-            if self._all_delta_files(m)
+            _fold_rows(inputs, key_cols)
+            if any((m.get("delta_files") or {}).values())
             else inputs
         )
         version = m["version"] + 1
@@ -3392,7 +3360,7 @@ class ManifestTable:
         pred = (
             predicate if not isinstance(predicate, str) else F.expr(predicate)
         )
-        live = self.read(include_internal=True).filter(pred)
+        live = self._scan(m).filter(pred)
         # the tombstone carries ONLY what versioning and routing need: the
         # key columns and the row's ts — every other payload column is
         # nulled so the deleted content never rides in the delta files
@@ -3406,9 +3374,10 @@ class ManifestTable:
                 for f in fields
             ],
         )
-        return self.merge(
+        return self._merge(
+            m,
             batch,
-            epoch_id=epoch_id,
+            epoch_id,
             epoch_scope=epoch_scope,
             mode=mode,
             **merge_kwargs,
@@ -3634,7 +3603,7 @@ class ManifestTable:
                 f"cannot set {immutable}: key columns identify the row "
                 f"(delete + insert instead) and ts is the version column"
             )
-        live = self.read(include_internal=True).filter(F.expr(predicate))
+        live = self._scan(m).filter(F.expr(predicate))
         batch = live.select(
             F.lit("U").alias("op"),
             (F.coalesce(F.col("_lsn"), F.lit(0)) + 1).alias("lsn"),
@@ -3645,9 +3614,10 @@ class ManifestTable:
                 for f in fields
             ],
         )
-        return self.merge(
+        return self._merge(
+            m,
             batch,
-            epoch_id=epoch_id,
+            epoch_id,
             epoch_scope=epoch_scope,
             mode=mode,
             # the rewrite stamps each row's OWN ts, which may precede a
@@ -3656,26 +3626,6 @@ class ManifestTable:
             _bypass_watermark=True,
             **merge_kwargs,
         )
-
-    def _folded_state(self) -> DataFrame:
-        """Current per-key folded state INCLUDING delete tombstones (what
-        :meth:`read` computes before its ``_deleted`` filter).  merge_into
-        needs the tombstones: an insert over a tombstoned key must stamp a
-        version that outranks the tombstone, which requires seeing it."""
-        m = self.manifest()
-        ischema = self._internal_schema_of(m)
-        base = [
-            self._spath(p)
-            for paths in m["files"].values()
-            for p in paths
-        ]
-        deltas = self._all_delta_files(m)
-        df = self._read_files(
-            base + deltas, ischema, renames=m.get("renamed_cols")
-        )
-        if deltas:
-            df = dedup_latest(df, m["key_cols"], ["ts", "_lsn"])
-        return df
 
     def merge_into(
         self,
@@ -3879,7 +3829,9 @@ class ManifestTable:
                 )
 
         s = source.withColumn("_s_exists", F.lit(True)).alias("s")
-        t = self._folded_state().withColumn("_t_exists", F.lit(True)).alias("t")
+        # the folded state KEEPS tombstones: an insert over a tombstoned
+        # key must stamp a version that outranks the tombstone
+        t = self._scan(m, live=False).withColumn("_t_exists", F.lit(True)).alias("t")
         on = functools.reduce(
             lambda x, y: x & y,
             [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in key_cols],
@@ -3996,9 +3948,10 @@ class ManifestTable:
                 *[_out_new(c) for c in new_cols],
             )
         )
-        return self.merge(
+        return self._merge(
+            m,
             batch,
-            epoch_id=epoch_id,
+            epoch_id,
             epoch_scope=epoch_scope,
             mode=mode,
             **merge_kwargs,
@@ -5226,17 +5179,42 @@ class ManifestTable:
                 "(compact/rebucket/CoW in the range) — added files are not "
                 "a change feed there; use changes()"
             )
-        added = sorted(fb - fa)
-        return self._read_files(
-            [self._spath(p) for p in added],
-            self._internal_schema(tv),
-            renames=mb.get("renamed_cols"),
-        )
+        return self._scan(mb, sorted(fb - fa), live=False)
 
     # candidate-key sets larger than this skip the broadcast semi-join and
     # fall back to a shuffled semi-join (same result, no 8 GB broadcast cap
     # risk); ~rows, conservative for two short key columns
     changes_broadcast_keys: int = 2_000_000
+
+    def _chain(
+        self,
+        from_version: int,
+        mb: dict[str, Any],
+        ma: dict[str, Any] | None = None,
+    ) -> tuple[list[tuple[dict[str, Any], dict[str, Any]]], bool]:
+        """The manifest chain over ``(from_version, mb]``: its ``(parent,
+        child)`` steps head-first (``ma``, when given, stands in for the
+        ``from_version`` manifest) and whether the walk reached
+        ``from_version``.  An expired mid-range snapshot or a lineage
+        jumping past ``from_version`` ends the walk early; the steps read
+        so far are still returned."""
+        steps: list[tuple[dict[str, Any], dict[str, Any]]] = []
+        child = mb
+        try:
+            while child["version"] > from_version:
+                parent_v = child.get("parent")
+                if parent_v is None or parent_v < from_version:
+                    return steps, False
+                parent = (
+                    ma
+                    if ma is not None and parent_v == from_version
+                    else self.manifest(parent_v)
+                )
+                steps.append((parent, child))
+                child = parent
+        except FileNotFoundError:
+            return steps, False
+        return steps, True
 
     def _append_candidates(
         self,
@@ -5245,8 +5223,16 @@ class ManifestTable:
         ma: dict[str, Any],
         mb: dict[str, Any],
     ) -> tuple[list[str], list[str], int] | None:
-        """Candidate files for the ``changes()`` fast path, by walking the
-        manifest chain over ``(from, to]``.
+        """Candidate files for the ``changes()`` fast path over ``(from,
+        to]``: :meth:`_candidates` of the manifest chain's steps, or None
+        when a mid-range manifest has been expired (no chain to walk)."""
+        steps, complete = self._chain(from_version, mb, ma)
+        return self._candidates(steps) if complete else None
+
+    def _candidates(
+        self, steps: list[tuple[dict[str, Any], dict[str, Any]]]
+    ) -> tuple[list[str], list[str], int] | None:
+        """Candidate files of a complete :meth:`_chain` walk.
 
         Compaction and rebucket are STATE-PRESERVING rewrites (they fold
         the same live rows into new files and are tagged ``compact:`` /
@@ -5264,24 +5250,9 @@ class ManifestTable:
         keys — the broadcast decision needs no count job).  Returns
         ``None`` — caller falls back to the general snapshot diff — when a
         CoW/initial rewrite sits in the range (its added files carry
-        rewritten old rows, not changes), when a mid-range manifest has
-        been expired (no chain to walk), or when a needed file has since
-        been vacuumed (one LIST per staging dir verifies — O(changed
-        dirs) metadata calls)."""
-        steps: list[tuple[dict[str, Any], dict[str, Any]]] = []
-        child = mb
-        try:
-            while child["version"] > from_version:
-                parent_v = child.get("parent")
-                if parent_v is None or parent_v < from_version:
-                    return None
-                parent = (
-                    ma if parent_v == from_version else self.manifest(parent_v)
-                )
-                steps.append((parent, child))
-                child = parent
-        except FileNotFoundError:
-            return None  # mid-range snapshot expired: no chain to walk
+        rewritten old rows, not changes), when a rollback does, or when a
+        needed file has since been vacuumed (one LIST per staging dir verifies —
+        O(changed dirs) metadata calls)."""
         added_files: list[str] = []
         dropped_files: list[str] = []
         added_rows = 0
@@ -5412,7 +5383,7 @@ class ManifestTable:
         if from_version == tv:
             return self.spark.createDataFrame([], out_schema)
 
-        a = self.read(version=from_version)
+        a = self._scan(ma)
         for f in to_schema.fields:  # schema evolution: align FROM to TO
             if f.name not in a.columns:
                 old = next(
@@ -5423,7 +5394,7 @@ class ManifestTable:
                 else:  # added inside the range: backfill reads as null
                     a = a.withColumn(f.name, F.lit(None).cast(f.dataType))
         a = a.select(*[f.name for f in to_schema.fields])
-        b = self.read(version=tv)
+        b = self._scan(mb)
 
         cand_info = self._append_candidates(from_version, tv, ma, mb)
         if cand_info is not None:
@@ -5435,11 +5406,7 @@ class ManifestTable:
             # were live when dropped, so the diff classifies them as
             # deletes (or updates/nothing if later appends re-upserted)
             cand = (
-                self._read_files(
-                    [self._spath(p) for p in added + dropped],
-                    self._internal_schema(tv),
-                    renames=mb.get("renamed_cols"),
-                )
+                self._scan(mb, added + dropped, live=False)
                 .select(*key_cols)
                 .distinct()
             )

@@ -205,25 +205,6 @@ class ReplicaTable:
 
     # ---------- sync ----------
 
-    def _rollback_in_range(self, sv: int, t: int) -> int | None:
-        """Upstream version of the first rollback commit in ``(sv, t]``,
-        walking the manifest chain head-first; None when the range is
-        rollback-free or the chain is expired (then the snapshot-resync
-        monotonicity argument is the only guarantee left — documented)."""
-        try:
-            v = t
-            while v > sv:
-                m = self.upstream.manifest(v)
-                if str(m.get("epoch_id") or "").startswith("rollback:"):
-                    return v
-                parent = m.get("parent")
-                if parent is None:
-                    break
-                v = parent
-        except FileNotFoundError:
-            return None
-        return None
-
     def _projected(self, df: DataFrame, schema_names: list[str]) -> DataFrame:
         mine = {f.name for f in self.table.schema().fields}
         if self.columns is None:
@@ -246,9 +227,22 @@ class ReplicaTable:
         if self.table.epoch_applied(t, epoch_scope="replica"):
             return {"status": "Skipped", "version": t}
 
+        up = self.upstream
+        mb = up.manifest(t)
         cand = None
         if sv is not None:
-            rb = self._rollback_in_range(sv, t)
+            # one walk of the upstream chain over (sv, t] serves both the
+            # rollback fence and the log-ship candidates
+            steps, complete = up._chain(sv, mb)
+            rb = next(
+                (
+                    x["version"]
+                    for x in [mb, *(p for p, _ in steps)]
+                    if x["version"] > sv
+                    and str(x.get("epoch_id") or "").startswith("rollback:")
+                ),
+                None,
+            )
             if rb is not None:
                 raise ReplicaDiverged(
                     f"upstream rolled back at v{rb} (> replicated v{sv}) — "
@@ -256,37 +250,28 @@ class ReplicaTable:
                     f"version stamps; rollback_to the replica snapshot "
                     f"that mirrored v{sv} or recreate the replica"
                 )
-            ma, mb = self.upstream.manifest(sv), self.upstream.manifest(t)
-            cand = self.upstream._append_candidates(sv, t, ma, mb)
+            if complete:
+                cand = up._candidates(steps)
+            else:
+                # the walk stopped short of sv: a resume snapshot expired
+                # upstream fails loudly (FileNotFoundError) — the snapshot
+                # resync cannot see what retention or a tombstone purge
+                # removed in the gap; only a mid-range expiry resyncs
+                up.manifest(sv)
 
-        ischema = self.upstream._internal_schema(t)
-        names = [f.name for f in ischema.fields]
         payload_names = [
-            n for n in names if n not in ("_lsn", "_deleted", "_bucket")
+            f.name for f in T.StructType.fromJson(mb["schema"]).fields
         ]
         if cand is not None:
             files, ret_dropped, _est = cand
-            raw = self.upstream._read_files(
-                [self.upstream.storage.spark_path(p) for p in files],
-                ischema,
-                renames=self.upstream.manifest(t).get("renamed_cols"),
-            )
+            raw = up._scan(mb, files, live=False)
             path = "log"
         else:
-            # snapshot resync: folded state at t INCLUDING tombstones
-            m = self.upstream.manifest(t)
-            all_files = [
-                self.upstream.storage.spark_path(p)
-                for d in (m["files"], m.get("delta_files") or {})
-                for ps in d.values()
-                for p in ps
-            ]
-            # no pre-fold here: the replica's merge dedups the batch by
-            # per-key max-(ts, lsn) anyway — the same fold — so folding
-            # twice would just pay a second shuffle
-            raw = self.upstream._read_files(
-                all_files, ischema, renames=m.get("renamed_cols")
-            )
+            # snapshot resync: every file at t, tombstones INCLUDED, and no
+            # pre-fold — the replica's merge dedups the batch by per-key
+            # max-(ts, lsn) anyway (the same fold), so folding twice would
+            # just pay a second shuffle
+            raw = up._scan(mb, up._all_files_rel(mb), live=False)
             ret_dropped = []
             path = "snapshot"
 
@@ -311,12 +296,8 @@ class ReplicaTable:
             # upstream's retention watermark: any pre-cutoff upsert these
             # tombstones could block is already filtered out of upstream
             # commits and therefore never shipped here.
-            ek = set(self.upstream.manifest(t)["key_cols"])
-            dr = self.upstream._read_files(
-                [self.upstream.storage.spark_path(p) for p in ret_dropped],
-                ischema,
-                renames=self.upstream.manifest(t).get("renamed_cols"),
-            )
+            ek = set(mb["key_cols"])
+            dr = up._scan(mb, ret_dropped, live=False)
             dels = self._projected(
                 dr.select(
                     F.lit("D").alias("op"),

@@ -282,7 +282,7 @@ class SCD2Table:
                 ).collect()[0]
                 nk, small = int(stats["n"]), int(stats["n"]) <= broadcast_keys
                 m = self.table.manifest()
-                empty = not self.table._all_files(m) and not self.table._all_delta_files(m)
+                empty = not self.table._all_files_rel(m)
                 if nk == 0 or empty:
                     rows = self._chain(b)
                 elif mode == "inorder":

@@ -111,9 +111,7 @@ def test_delete_where_feeds_changes_and_erasure(spark, table):
     # tombstone-filtered read
     table.compact(min_delta_files=0)
     m = table.manifest()
-    raw = table._read_files(
-        table._all_files(m), table._internal_schema()
-    )
+    raw = table._scan(m, table._all_files_rel(m), live=False)
     deleted_texts = {f"text-{i}" for i in (4, 5, 6, 7)}  # turn_idx == 1 rows
     assert (
         raw.filter(F.col("text").isin(*deleted_texts)).count() == 0

@@ -18,6 +18,7 @@ import pytest
 
 from event_driven_etl_msc_research_spark.schemas import TRANSCRIPT_SCHEMA
 from event_driven_etl_msc_research_spark.sinks.manifest import ManifestTable
+from event_driven_etl_msc_research_spark.sinks.replica import ReplicaTable
 from event_driven_etl_msc_research_spark.sinks.storage import LocalFSStorage
 
 
@@ -101,10 +102,17 @@ def test_resolution_never_lists_manifest_dir(spark, tmp_root):
     assert gets == [f"_manifest/v{head + 1:012d}.json"]
 
 
-@pytest.mark.parametrize("verb", ["delta_merge", "cow_merge", "compact"])
+@pytest.mark.parametrize(
+    "verb",
+    [
+        "delta_merge", "cow_merge", "compact",
+        "delete_where", "update_where", "merge_into",
+    ],
+)
 def test_write_verbs_read_the_head_once(spark, tmp_root, verb):
     """A write verb resolves the head once and stages, audits and commits
-    against that snapshot — no hidden re-read of the head manifest."""
+    against that snapshot — no hidden re-read of the head manifest (the
+    DML verbs scan and merge the snapshot they read)."""
     root = os.path.join(tmp_root, "once_tbl")
     st = CountingStorage(root)
     t = ManifestTable.create(spark, root, TRANSCRIPT_SCHEMA, n_buckets=2, storage=st)
@@ -114,6 +122,17 @@ def test_write_verbs_read_the_head_once(spark, tmp_root, verb):
     st.calls.clear()
     if verb == "compact":
         res = t.compact()
+    elif verb == "delete_where":
+        res = t.delete_where("turn_idx = 0", epoch_id=2)
+    elif verb == "update_where":
+        res = t.update_where("turn_idx = 0", {"text": "'x'"}, epoch_id=2)
+    elif verb == "merge_into":
+        res = t.merge_into(
+            _batch(spark, 200).drop("op", "lsn"),
+            epoch_id=2,
+            when_matched_update={"text": "s.text"},
+            when_not_matched_insert="all",
+        )
     else:
         # the same keys again: a CoW merge rewrites the touched buckets
         res = t.merge(_batch(spark, 200), epoch_id=2, mode=mode)
@@ -121,6 +140,68 @@ def test_write_verbs_read_the_head_once(spark, tmp_root, verb):
     if verb == "cow_merge":
         assert res["merge_path"] != "initial"
     assert st.calls.count(("get", head)) == 1
+
+
+# id -> (head LISTs, _manifest/ GETs).  A head resolution is one LIST of
+# the hint dir plus the probe's miss GET; delete/update_where add the
+# publish's hint-GC LIST.
+_SCAN_ONCE = {
+    "read_where": (1, 2),
+    "count": (1, 2),
+    "min_max": (1, 2),
+    "changes": (1, 4),
+    "incremental_rows": (1, 3),
+    "delete_where": (2, 2),
+    "update_where": (2, 2),
+    "replica_sync_log": (1, 3),
+    "replica_sync_snapshot": (1, 2),
+}
+
+
+def _verb_call(case, spark, t, tmp_root):
+    """The call to measure; set-up it needs runs here, uncounted."""
+    head = t.current_version()
+    if case == "read_where":
+        return lambda: t.read(where={"conv_id": ("c1", "c1")})
+    if case == "count":
+        return t.count
+    if case == "min_max":
+        return lambda: t.min_max("ts")
+    if case == "changes":
+        return lambda: t.changes(head - 2)
+    if case == "incremental_rows":
+        return lambda: t.incremental_rows(head - 2)
+    if case == "delete_where":
+        return lambda: t.delete_where("turn_idx = 0", epoch_id=50)
+    if case == "update_where":
+        return lambda: t.update_where("turn_idx = 0", {"text": "'x'"}, epoch_id=50)
+    rep = ReplicaTable.create(spark, os.path.join(tmp_root, "rep"), t)
+    if case == "replica_sync_log":
+        # the first sync takes the snapshot path; the next ships the log
+        rep.sync()
+        t.merge(_batch(spark, 900), epoch_id=90, mode="delta")
+    return rep.sync
+
+
+@pytest.mark.parametrize("case", list(_SCAN_ONCE))
+def test_each_manifest_read_once_per_verb(spark, tmp_root, case):
+    """Every read verb scans the manifests it already holds: the head is
+    resolved once, and no snapshot manifest is fetched twice in one call
+    (2-bucket table, 4 delta merges pending)."""
+    want_lists, want_gets = _SCAN_ONCE[case]
+    root = os.path.join(tmp_root, "scan_tbl")
+    st = CountingStorage(root)
+    t = ManifestTable.create(spark, root, TRANSCRIPT_SCHEMA, n_buckets=2, storage=st)
+    for i in range(4):
+        t.merge(_batch(spark, 100 * (i + 1)), epoch_id=i + 1, mode="delta")
+    call = _verb_call(case, spark, t, tmp_root)
+    st.calls.clear()
+    call()
+    lists = [p for verb, p in st.calls if verb == "list" and p == "_manifest/head"]
+    gets = [k for verb, k in st.calls if verb == "get" and k.startswith("_manifest/")]
+    assert (len(lists), len(gets)) == (want_lists, want_gets), st.calls
+    snaps = [k for k in gets if k.startswith("_manifest/v")]
+    assert len(snaps) == len(set(snaps)), snaps
 
 
 def test_probe_covers_hint_lag(spark, tmp_root, storage_factory):

@@ -224,6 +224,50 @@ def test_rollback_fences_the_replica(spark, tmp_root, upstream):
     assert rep.last_synced_version() == v_good
 
 
+def test_expired_resume_snapshot_fails_loudly(spark, tmp_root, upstream):
+    """A replica whose resume snapshot was expired upstream must not fall
+    back to a snapshot resync: that cannot see rows retention dropped or
+    tombstones a purge removed in the gap.  It raises, as it always did."""
+    rep = ReplicaTable.create(
+        spark, os.path.join(tmp_root, "rep"), upstream, n_buckets=4
+    )
+    rep.sync()
+    sv = rep.last_synced_version()
+    for e in (5, 6):
+        upstream.merge(
+            _batch(spark, _rows(3, start_key=40 + e, lsn0=100 * e, ts0=100 * e)),
+            e,
+            mode="delta",
+        )
+    assert sv in upstream.expire_snapshots(keep_last=1)
+    v_rep = rep.table.current_version()
+    with pytest.raises(FileNotFoundError):
+        rep.sync()
+    assert rep.table.current_version() == v_rep
+    assert rep.last_synced_version() == sv
+
+
+def test_replica_of_a_shallow_clone(spark, tmp_root, upstream):
+    """A shallow clone references the source's files as ext:// paths: the
+    replica's snapshot resync must read them where they live, and the log
+    path then ships the clone's own appends."""
+    clone = upstream.clone(os.path.join(tmp_root, "clone"))
+    rep = ReplicaTable.create(
+        spark, os.path.join(tmp_root, "rep"), clone, n_buckets=4
+    )
+    r1 = rep.sync()
+    assert r1["status"] == "Success" and r1["path"] == "snapshot"
+    assert _state(rep.table) == _state(clone)
+    clone.merge(
+        _batch(spark, _rows(6, start_key=50, lsn0=900, ts0=9000, text="f")),
+        3,
+        mode="delta",
+    )
+    r2 = rep.sync()
+    assert r2["status"] == "Success" and r2["path"] == "log"
+    assert _state(rep.table) == _state(clone)
+
+
 def test_upstream_schema_evolution_flows_through(spark, tmp_root, upstream):
     rep = ReplicaTable.create(
         spark, os.path.join(tmp_root, "rep"), upstream, n_buckets=4

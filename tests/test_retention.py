@@ -519,3 +519,42 @@ def test_null_ts_tombstone_survives_purge(spark, tmp_root):
         mode="delta",
     )
     assert _live(t) == [("c", 0, "live")]
+
+
+def test_timestamp_stats_do_not_depend_on_the_session(spark, tmp_root):
+    """A session left at legacy INT96 timestamps (no parquet min/max) must
+    not blind the ts stats: the table handle pins TIMESTAMP_MICROS, so a
+    CoW rewrite still harvests them and retention drops by metadata."""
+    s2 = spark.newSession()
+    s2.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    t = ManifestTable.create(
+        s2, tmp_root + "/t", TRANSCRIPT_SCHEMA, n_buckets=2,
+        stats_cols=["ts", "conv_id"],
+    )
+    rows = [_ev("U", i, i, f"c{i % 7}", i) for i in range(1, 41)]
+    t.merge(s2.createDataFrame(rows, CHANGE_DDL), epoch_id=0)
+    upd = [_ev("U", 100 + i, 100 + i, f"c{i % 7}", i, "u") for i in range(1, 41)]
+    res = t.merge(s2.createDataFrame(upd, CHANGE_DDL), epoch_id=1)
+    assert res["merge_path"] != "initial"  # a CoW rewrite
+    m = t.manifest()
+    files = [p for ps in m["files"].values() for p in ps]
+    assert len(files) == 2
+    assert all("ts" in m["file_stats"][p] for p in files)
+    res = t.retention_delete("2100-01-01", epoch_id=9)
+    assert res["dropped_files"] == 2
+
+    # a change batch built on ANOTHER INT96 session than the handle's: the
+    # write runs under the frame's session, so it is pinned there too
+    s3 = spark.newSession()
+    s3.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    t2 = ManifestTable.create(
+        spark, tmp_root + "/t2", TRANSCRIPT_SCHEMA, n_buckets=2,
+        stats_cols=["ts", "conv_id"],
+    )
+    res = t2.merge(s3.createDataFrame(rows, CHANGE_DDL), epoch_id=0)
+    assert res["merge_path"] == "initial"  # the staged batch IS the table
+    m = t2.manifest()
+    files = [p for ps in m["files"].values() for p in ps]
+    assert len(files) == 2
+    assert all("ts" in m["file_stats"][p] for p in files)
+    assert t2.retention_delete("2100-01-01", epoch_id=9)["dropped_files"] == 2

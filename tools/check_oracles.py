@@ -2,7 +2,12 @@
 on Spark AND its oracle_sql() on DuckDB over the same sf dir; compare
 row-count, schema (column names), and order-insensitive values.
 
-Usage: python tools/check_oracles.py [sf_dir] [query ...]
+Usage: python tools/check_oracles.py [--plain-session] [sf_dir] [query ...]
+
+``--plain-session`` builds the session as a plain
+``SparkSession.builder.master("local[8]").getOrCreate()`` — no engine
+confs — instead of ``get_spark``, to check that results do not depend on
+the confs the engine's own session sets.
 """
 
 from __future__ import annotations
@@ -34,17 +39,26 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> int:
+    plain = "--plain-session" in sys.argv
+    if plain:
+        sys.argv.remove("--plain-session")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as e
-    from event_driven_etl_msc_research_spark.session import get_spark
 
-    spark = get_spark(
-        "oracle-check",
-        master="local[8]",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    if plain:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.builder.master("local[8]").getOrCreate()
+    else:
+        from event_driven_etl_msc_research_spark.session import get_spark
+
+        spark = get_spark(
+            "oracle-check",
+            master="local[8]",
+            extra_conf={"spark.ui.showConsoleProgress": "false"},
+        )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
