@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..util import nullsafe_semi_anti
-from .manifest import ManifestTable
+from .manifest import ManifestTable, _epoch_applied, _ledger_max
 from .storage import TableStorage
 
 _MV_DIR = "_mv"
@@ -278,37 +278,21 @@ class DerivedTable:
                 best = v if best is None else max(best, v)
         return best
 
-    def _ledger_synced(self) -> int | None:
-        """Resume point of record: the max upstream version the derived
-        table's own applied-epoch ledger has committed under scope
-        ``mv`` (explicit entries + the folded range's hi bound)."""
-        def _is_mv_scope(scope: str) -> bool:
-            return scope == "mv" or (
-                scope.startswith("mv") and scope[2:].isdigit()
-            )
-
-        m = self.table.manifest()
-        best = None
-        for key in m["applied_epochs"]:
-            scope, _, eid = key.partition(":")
-            if _is_mv_scope(scope):
-                try:
-                    v = int(eid)
-                except ValueError:
-                    continue
-                best = v if best is None else max(best, v)
-        for scope, r in (m.get("applied_ranges") or {}).items():
-            if _is_mv_scope(scope) and r:
-                best = r[1] if best is None else max(best, r[1])
-        return best
+    def _synced(self, m: dict[str, Any]) -> int | None:
+        """The later of the sync hint and the resume point of record: the
+        max upstream version the derived table's own applied-epoch ledger
+        ``m`` has committed under an ``mv`` scope (one per definition
+        version)."""
+        ledger = _ledger_max(
+            m,
+            lambda scope: scope == "mv"
+            or (scope.startswith("mv") and scope[2:].isdigit()),
+        )
+        marks = [v for v in (self._hint_synced(), ledger) if v is not None]
+        return max(marks, default=None)
 
     def last_synced_version(self) -> int | None:
-        h, l = self._hint_synced(), self._ledger_synced()
-        if h is None:
-            return l
-        if l is None:
-            return h
-        return max(h, l)
+        return self._synced(self.table.manifest())
 
     # hint objects retained after each sync; only the max is ever read (and
     # the ledger is the resume point of record), so older hints are dead
@@ -422,9 +406,10 @@ class DerivedTable:
         incremental readers of any table format hit when history is GC'd.
         """
         t = self.upstream.current_version()
-        sv = self.last_synced_version()
+        mine = self.table.manifest()  # the derived table's head, resolved once
+        sv = self._synced(mine)
         scope = self._ledger_scope()
-        have = {f.name for f in self.table.schema().fields}
+        have = set(T.StructType.fromJson(mine["schema"]).fieldNames())
         # a definition evolution leaves the table schema missing its new
         # aggregate columns: answer with one full recompute (backfill)
         # even when the upstream version is already synced
@@ -432,7 +417,7 @@ class DerivedTable:
         if not needs_backfill:
             if sv is not None and t == sv:
                 return {"status": "NoChange", "version": t}
-            if self.table.epoch_applied(t, epoch_scope=scope):
+            if _epoch_applied(mine, f"{scope}:{t}"):
                 # committed but the hint write was lost — heal the hint
                 self._write_hint(t)
                 return {"status": "Skipped", "version": t}
@@ -486,7 +471,8 @@ class DerivedTable:
             # anti-join — cache the (small) recomputed aggregates so the
             # restricted snapshot scan runs once
             live = live.persist()
-            res = self.table.merge(
+            res = self.table._merge(
+                mine,
                 self._batch(live, stale, t),
                 epoch_id=t,
                 epoch_scope=scope,

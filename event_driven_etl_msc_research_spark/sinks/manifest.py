@@ -129,6 +129,24 @@ def _epoch_applied(m: dict[str, Any], epoch_key: str) -> bool:
     return bool(r) and r[0] <= eid <= r[1]
 
 
+def _ledger_max(m: dict[str, Any], in_scope) -> int | None:
+    """The highest epoch id ``m``'s applied-epoch ledger holds under the
+    scopes ``in_scope`` accepts, folded ranges included (None: none) — the
+    resume point of replicas and derived tables, whose epoch ids are
+    upstream versions."""
+    ids = [
+        parsed[1]
+        for parsed in map(_split_epoch_key, m["applied_epochs"])
+        if parsed is not None and in_scope(parsed[0])
+    ]
+    ids += [
+        r[1]
+        for scope, r in (m.get("applied_ranges") or {}).items()
+        if r and in_scope(scope)
+    ]
+    return max(ids, default=None)
+
+
 def _fold_applied(
     applied: list[str], ranges: dict[str, list[int]], max_entries: int
 ) -> tuple[list[str], dict[str, list[int]]]:
@@ -402,6 +420,44 @@ def _footers(storage: TableStorage, relpaths: list[str]) -> list:
         return list(pool.map(_read, relpaths))
 
 
+def _harvest(
+    storage: TableStorage,
+    entries: list[tuple[int, str]],
+    stats_cols: list[str],
+    buckets: list[int] | None = None,
+) -> tuple[dict[int, list[str]], dict[str, int], dict[str, dict], list[int]]:
+    """What a commit records of freshly written ``(bucket, relpath)``
+    files, from their footers — shared by ``_stage`` and the ``edem_cdc``
+    sink: ``(files_by_bucket, rows_by_bucket, file_stats over
+    stats_cols, rows_per_file)``, the last for the caller's audit.
+    ``buckets`` pre-seeds empty entries for buckets a write may leave
+    empty."""
+    files: dict[int, list[str]] = {b: [] for b in buckets or ()}
+    rows = {str(b): 0 for b in files}
+    stats: dict[str, dict] = {}
+    counts: list[int] = []
+    for (b, p), md in zip(entries, _footers(storage, [p for _, p in entries])):
+        files.setdefault(b, []).append(p)
+        rows[str(b)] = rows.get(str(b), 0) + md.num_rows
+        stats[p] = _footer_minmax(md, stats_cols)
+        counts.append(md.num_rows)
+    return files, rows, stats, counts
+
+
+def _data_files(m: dict[str, Any]) -> list[tuple[int, str, str]]:
+    """Every data file of snapshot ``m`` as ``(bucket, relpath, kind)``,
+    ``kind`` being ``"base"`` or ``"delta"``: base files first, each kind
+    in manifest order — the one walk of a snapshot's file set."""
+    return [
+        (int(b), p, kind)
+        for kind, d in (
+            ("base", m["files"]), ("delta", m.get("delta_files") or {})
+        )
+        for b, ps in d.items()
+        for p in ps
+    ]
+
+
 # column names the engine claims for itself: 'op'/'lsn' are the change-batch
 # verb/version columns (a payload column by either name could never ride in
 # a change batch alongside them), and the underscore names are internal —
@@ -613,6 +669,7 @@ class ManifestTable:
                 )
             version = known[tag]
         m = self.manifest(version)
+        head = m if version is None else self.manifest()
 
         def ext(p: str) -> str:
             # cloning a clone re-points at the ORIGINAL absolute path
@@ -626,32 +683,21 @@ class ManifestTable:
         delta = {
             b: [ext(p) for p in ps]
             for b, ps in (m.get("delta_files") or {}).items()
+            if ps
         }
         stats = {ext(p): st for p, st in (m.get("file_stats") or {}).items()}
         # capture sizes now (one LIST per referenced dir, metadata-only):
         # the clone can never LIST the source tree later, and files()/
         # byte-targeted sizing want them
-        src_ext = self.manifest().get("external_sizes") or {}
+        src_ext = head.get("external_sizes") or {}
         sizes: dict[str, int] = {}
-        rels = [
-            p
-            for d in (m["files"], m.get("delta_files") or {})
-            for ps in d.values()
-            for p in ps
-        ]
-        local_dirs = {
-            p.split("/")[1] for p in rels if not p.startswith(_EXT_PREFIX)
-        }
-        by_key = {}
-        for d in sorted(local_dirs):
-            for o in self.storage.list(f"{_DATA_DIR}/{d}"):
-                by_key[o.key] = o.size
+        rels = [p for _, p, _ in _data_files(m)]
+        listed = self._listing(rels)
         for p in rels:
-            if p.startswith(_EXT_PREFIX):
-                if p in src_ext:
-                    sizes[p] = int(src_ext[p])
-            elif p in by_key:
-                sizes[ext(p)] = int(by_key[p])
+            if p in listed:
+                sizes[ext(p)] = int(listed[p].size)
+            elif p in src_ext:
+                sizes[p] = int(src_ext[p])
 
         t = ManifestTable(self.spark, new_root, storage=storage)
         if t.exists():
@@ -666,7 +712,7 @@ class ManifestTable:
             "n_buckets": m["n_buckets"],
             "tenant_id": m.get("tenant_id"),
             "files": files,
-            "delta_files": {b: ps for b, ps in delta.items() if ps},
+            "delta_files": delta,
             "file_stats": stats,
             "stats_cols": list(m.get("stats_cols") or []),
             "bloom_filter_cols": list(m.get("bloom_filter_cols") or []),
@@ -687,7 +733,7 @@ class ManifestTable:
         }
         # table properties travel with the fork (Delta clone parity) — the
         # HEAD's, not the cloned snapshot's (config, not snapshot state)
-        props = self.manifest().get("properties")
+        props = head.get("properties")
         if props:
             manifest["properties"] = dict(props)
         t._publish(manifest)
@@ -748,8 +794,7 @@ class ManifestTable:
     # 5-10× cut on that traffic for free (JSON file lists/stats compress
     # hard), which at 10^5 files per table is the difference between a
     # ~1 MB and a ~10 MB object riding every single commit and read.
-    # Reads sniff the gzip magic, so chains with pre-compression commits
-    # (or hand-written plain-JSON manifests) stay readable.
+    # Manifests and segments are always gzip'd JSON.
     @staticmethod
     def _encode_manifest(manifest: dict[str, Any]) -> bytes:
         import gzip
@@ -760,9 +805,7 @@ class ManifestTable:
     def _decode_blob(raw: bytes) -> dict[str, Any]:
         import gzip
 
-        if raw[:2] == b"\x1f\x8b":
-            raw = gzip.decompress(raw)
-        return json.loads(raw)
+        return json.loads(gzip.decompress(raw))
 
     def _get_manifest(self, key: str, splice: bool = True) -> dict[str, Any]:
         m = self._decode_blob(self.storage.get(key))
@@ -896,11 +939,8 @@ class ManifestTable:
         files = m.get("files") or {}
         delta = m.get("delta_files") or {}
         stats = m.get("file_stats") or {}
-        total = sum(len(ps) for ps in files.values()) + sum(
-            len(ps) for ps in delta.values()
-        )
         min_files, n_seg = self._segment_params(m)
-        if total < max(1, min_files):
+        if len(_data_files(m)) < max(1, min_files):
             return m
         n_buckets = int(m.get("n_buckets") or 1)
         S = max(1, min(n_buckets, n_seg))
@@ -1101,7 +1141,7 @@ class ManifestTable:
                 **(new.pop("external_sizes", None) or {}),
             }
             if ext:
-                live = set(self._all_files_rel(new))
+                live = {p for _, p, _ in _data_files(new)}
                 kept = {p: n for p, n in ext.items() if p in live}
                 if kept:
                     new["external_sizes"] = kept
@@ -1266,15 +1306,18 @@ class ManifestTable:
             return p[len(_EXT_PREFIX):]
         return self.storage.spark_path(p)
 
-    def _all_files_rel(self, manifest: dict[str, Any]) -> list[str]:
-        """Every live file as a storage-relative path (base + delta)."""
-        return [
-            p for paths in manifest["files"].values() for p in paths
-        ] + [
-            p
-            for paths in (manifest.get("delta_files") or {}).values()
-            for p in paths
-        ]
+    def _listing(self, relpaths: list[str]) -> dict[str, Any]:
+        """Storage objects of the table's own files among ``relpaths``
+        (``ext://`` references are the clone source's), by key: one LIST
+        per distinct staging dir, metadata only."""
+        dirs = {
+            p.split("/")[1] for p in relpaths if not p.startswith(_EXT_PREFIX)
+        }
+        return {
+            o.key: o
+            for d in sorted(dirs)
+            for o in self.storage.list(f"{_DATA_DIR}/{d}")
+        }
 
     def _read_files(
         self,
@@ -1345,10 +1388,9 @@ class ManifestTable:
         if files is None and where:
             files, delta = self._pruned_files(m, where)
         elif files is None:
-            files = [p for ps in m["files"].values() for p in ps]
-            delta = [
-                p for ps in (m.get("delta_files") or {}).values() for p in ps
-            ]
+            entries = _data_files(m)
+            files = [p for _, p, kind in entries if kind == "base"]
+            delta = [p for _, p, kind in entries if kind == "delta"]
         df = self._read_files(
             [self._spath(p) for p in files + delta],
             ischema,
@@ -1486,19 +1528,18 @@ class ManifestTable:
         total = 0
         probe: list[str] = []  # tier 2: driver footer probe
         scan: list[str] = []  # tier 3: pruned Spark scan
-        for ps in m["files"].values():
-            for p in ps:
-                fs = stats.get(p) or {}
-                rows, dead = fs.get("::rows"), fs.get("::dead")
-                if rows and dead:
-                    total += int(rows[0]) - int(dead[0])
-                elif p.startswith(_EXT_PREFIX):
-                    # clone-external file with incomplete stats: its bytes
-                    # live outside this table's storage root, so the safe
-                    # route is the scan tier (_scan resolves ext:// refs)
-                    scan.append(p)
-                else:
-                    probe.append(p)
+        for _, p, _ in _data_files(m):  # all base: no deltas here
+            fs = stats.get(p) or {}
+            rows, dead = fs.get("::rows"), fs.get("::dead")
+            if rows and dead:
+                total += int(rows[0]) - int(dead[0])
+            elif p.startswith(_EXT_PREFIX):
+                # clone-external file with incomplete stats: its bytes
+                # live outside this table's storage root, so the safe
+                # route is the scan tier (_scan resolves ext:// refs)
+                scan.append(p)
+            else:
+                probe.append(p)
         for relpath, md in zip(probe, _footers(self.storage, probe)):
             dead = _footer_dead_count(md)
             if dead is None:
@@ -1591,20 +1632,17 @@ class ManifestTable:
 
         probe: list[str] = []
         scan: list[str] = []
-        for ps in m["files"].values():
-            for p in ps:
-                fs = stats.get(p) or {}
-                entry = next(
-                    (fs[nm] for nm in names if nm in fs), None
-                )
-                if entry is not None and entry[0] is None:
-                    continue  # provably all-null file: contributes nothing
-                if scan_only or p.startswith(_EXT_PREFIX):
-                    scan.append(p)
-                elif entry is not None and fs.get("::dead") == [0]:
-                    _fold(_stat_from_json(entry[0]), _stat_from_json(entry[1]))
-                else:
-                    probe.append(p)
+        for _, p, _ in _data_files(m):  # all base: no deltas here
+            fs = stats.get(p) or {}
+            entry = next((fs[nm] for nm in names if nm in fs), None)
+            if entry is not None and entry[0] is None:
+                continue  # provably all-null file: contributes nothing
+            if scan_only or p.startswith(_EXT_PREFIX):
+                scan.append(p)
+            elif entry is not None and fs.get("::dead") == [0]:
+                _fold(_stat_from_json(entry[0]), _stat_from_json(entry[1]))
+            else:
+                probe.append(p)
         for relpath, md in zip(probe, _footers(self.storage, probe)):
             cols = _footer_cols(md)
             phys = next((nm for nm in names if nm in cols), None)
@@ -1884,6 +1922,12 @@ class ManifestTable:
         """:meth:`merge` against ``m``, the head the caller already read —
         the DML verbs pass the snapshot they derived their batch from, so
         the head is resolved once per verb."""
+        # this attempt's options, verbatim, for a stale rebase's redo
+        opts = {
+            k: v
+            for k, v in locals().items()
+            if k not in ("self", "m", "changes", "epoch_id")
+        }
         t0 = time.monotonic()
         # idempotence scope: Structured Streaming epoch ids restart at 0 for
         # every NEW checkpoint, so re-delivery detection is keyed by
@@ -1916,8 +1960,9 @@ class ManifestTable:
         # it is not late external data, and it can never resurrect a purged
         # key because it was derived from the live snapshot.
         wm = None if _bypass_watermark else _watermark(m)
+        batch = changes
         if wm is not None and "ts" in changes.columns:
-            changes = changes.filter(
+            batch = changes.filter(
                 (F.col("op") == F.lit("D"))
                 | F.col("ts").isNull()
                 | (F.col("ts") >= F.lit(wm))
@@ -1925,7 +1970,7 @@ class ManifestTable:
 
         # 1. schema evolution (additive) BEFORE touching data
         payload_fields = [
-            f for f in changes.schema.fields if f.name not in ("op", "lsn")
+            f for f in batch.schema.fields if f.name not in ("op", "lsn")
         ]
         new_schema, added_cols = self._evolve_schema(
             cur_schema,
@@ -1935,7 +1980,7 @@ class ManifestTable:
 
         # 2. within-batch dedup: per-key max-version aggregate (max_by with
         # map-side partial combine — hot keys collapse before the shuffle)
-        deduped = dedup_latest(changes, key_cols, ["ts", "lsn"])
+        deduped = dedup_latest(batch, key_cols, ["ts", "lsn"])
 
         # 3. normalize to internal row shape (evaluated once: both the delta
         # path and the stage-first CoW path write this plan straight to
@@ -2077,70 +2122,29 @@ class ManifestTable:
                 T.StructType(payload_fields),
                 tombstoned=self._tombstoned_names(mc),
             )
-            oldf = {int(b): ps for b, ps in mc["files"].items()}
-            oldd = {
-                int(b): ps for b, ps in (mc.get("delta_files") or {}).items()
-            }
-            old_dr = {
-                int(k): int(v) for k, v in (mc.get("delta_rows") or {}).items()
-            }
-            if mode == "delta":
-                files = oldf
-                delta_files = {
-                    b: oldd.get(b, []) + staged_files.get(b, [])
-                    for b in set(oldd) | set(staged_files)
-                }
-                delta_rows = {
-                    str(b): old_dr.get(b, 0) + rows_by_bucket.get(str(b), 0)
-                    for b in set(old_dr) | set(touched)
-                }
-                out = {}
-            else:
-                # untouched buckets keep the base manifest's files; touched
-                # swap to staged and their deltas (now folded in) are
-                # dropped.  Clustering markers are dropped too: the touched
-                # buckets are rewritten UNSORTED (re-establish with compact/
-                # rebucket — the decay-then-reoptimize lifecycle of Delta
-                # OPTIMIZE / Iceberg sort orders); a delta commit leaves
-                # every base file untouched, so there the claim carries
-                files = {
-                    **oldf, **{b: staged_files.get(b, []) for b in touched}
-                }
-                delta_files = {
-                    b: ps for b, ps in oldd.items() if b not in touched
-                }
-                delta_rows = {
-                    str(b): n for b, n in old_dr.items() if b not in touched
-                }
-                out = {
-                    "bucket_rows": {
-                        **{
-                            str(b): r
-                            for b, r in (mc.get("bucket_rows") or {}).items()
-                            if int(b) not in touched
-                        },
-                        **rows_by_bucket,
-                    },
-                    "total_rows": (
-                        mc["total_rows"] - self._rows_in(mc, touched)
-                        + staged_rows
-                    ),
-                    "sorted_by": [],
-                    "zordered_by": [],
-                }
-            return {
-                **out,
+            appends = mode == "delta"
+            out = {
+                **self._file_set(
+                    mc,
+                    # a delta commit appends; a CoW commit rewrites the
+                    # touched buckets (their deltas are folded in)
+                    delta=staged_files if appends else None,
+                    base=None if appends else staged_files,
+                    stats=staged_stats,
+                    rows=rows_by_bucket,
+                ),
                 "epoch_id": epoch_key,
                 "schema": schema_c.jsonValue(),
-                "files": {str(b): p for b, p in files.items()},
-                "delta_files": {str(b): p for b, p in delta_files.items() if p},
-                "file_stats": self._fold_stats(
-                    mc, files, delta_files, staged_stats
-                ),
                 "added_cols": added_c,
-                "delta_rows": delta_rows,
-                "delta_rows_total": sum(delta_rows.values()),
             }
+            if not appends:
+                # clustering markers drop: the touched buckets are
+                # rewritten UNSORTED (re-establish with compact/rebucket —
+                # the decay-then-reoptimize lifecycle of Delta OPTIMIZE /
+                # Iceberg sort orders); a delta commit leaves every base
+                # file untouched, so there the claim carries
+                out.update(sorted_by=[], zordered_by=[])
+            return out
 
         def _rebase(mc: dict[str, Any], retries_left: int):
             stale = (
@@ -2172,19 +2176,10 @@ class ManifestTable:
                     for b in touched
                 )
             if stale:
-                # redo the whole merge against the fresh manifest (the
-                # staged dirs orphan → vacuumed)
-                return self.merge(
-                    changes,
-                    epoch_id,
-                    files_per_bucket=files_per_bucket,
-                    audit=audit,
-                    strategy=strategy,
-                    broadcast_threshold=broadcast_threshold,
-                    epoch_scope=epoch_scope,
-                    before_publish=before_publish,
-                    mode=mode,
-                    retries=retries_left,
+                # redo the whole merge against the winner with this
+                # attempt's options (the staged dirs orphan → vacuumed)
+                return self._merge(
+                    mc, changes, epoch_id, **{**opts, "retries": retries_left}
                 )
             return None
 
@@ -2326,34 +2321,16 @@ class ManifestTable:
                 T.StructType(payload_fields),
                 tombstoned=self._tombstoned_names(mc),
             )
-            oldd = {
-                int(b): ps for b, ps in (mc.get("delta_files") or {}).items()
-            }
-            delta_files = {
-                b: oldd.get(b, []) + staged_sorted.get(b, [])
-                for b in set(oldd) | set(staged_sorted)
-            }
-            old_dr = {
-                int(k): int(v) for k, v in (mc.get("delta_rows") or {}).items()
-            }
-            delta_rows = {
-                str(b): old_dr.get(b, 0) + int(rows_by_bucket.get(str(b), 0))
-                for b in set(old_dr) | set(staged_sorted)
-            }
             # a delta append leaves every base file untouched: files,
             # bucket_rows and the clustering claim carry from mc
             return {
+                **self._file_set(
+                    mc, delta=staged_sorted, stats=staged_stats,
+                    rows=rows_by_bucket,
+                ),
                 "epoch_id": epoch_key,
                 "schema": schema_c.jsonValue(),
-                "delta_files": {
-                    str(b): p for b, p in delta_files.items() if p
-                },
-                "file_stats": self._fold_stats(
-                    mc, mc["files"], delta_files, staged_stats
-                ),
                 "added_cols": added_c,
-                "delta_rows": delta_rows,
-                "delta_rows_total": sum(delta_rows.values()),
             }
 
         def _rebase(mc: dict[str, Any], _retries_left: int):
@@ -2427,7 +2404,7 @@ class ManifestTable:
         Audit: the rows the write job observed (an ``Observation`` riding
         the same job, with the caller's ``obs_aggs`` — merge's CHECK
         violation counts) must equal the rows in the staged parquet
-        footers, read driver-side by :func:`_footers` (no Spark job).  A
+        footers, read driver-side by :func:`_harvest` (no Spark job).  A
         truncated or unreadable file fails here, before publish.  With
         ``audit_empty=False`` a write that staged zero rows skips the
         observation read: a zero-row write can run zero tasks, leaving a
@@ -2440,7 +2417,7 @@ class ManifestTable:
         prefix); ``buckets`` pre-seeds empty entries for buckets the write
         may leave empty and restricts the result to them; ``file_stats``
         holds each new file's footer stats over ``m``'s ``stats_cols``
-        (for ``_fold_stats``); ``observed`` is the observation row (None
+        (for ``_file_set``); ``observed`` is the observation row (None
         when skipped)."""
         obs = Observation()
         out = (
@@ -2474,8 +2451,6 @@ class ManifestTable:
             writer = writer.option("maxRecordsPerFile", int(max_rows_per_file))
         writer.partitionBy("_pb").parquet(self.storage.spark_path(rel))
 
-        files_by_bucket: dict[int, list[str]] = {b: [] for b in buckets or ()}
-        rows_by_bucket = {str(b): 0 for b in files_by_bucket}
         work: list[tuple[int, str]] = []  # (bucket, relpath), sorted
         plen = len(rel.rstrip("/")) + 1
         for o in self.storage.list(rel):
@@ -2489,16 +2464,13 @@ class ManifestTable:
             ):
                 continue
             b = int(parts[0].split("=", 1)[1])
-            if buckets is not None and b not in files_by_bucket:
+            if buckets is not None and b not in buckets:
                 continue
             work.append((b, o.key))
-        file_stats: dict[str, dict] = {}
-        total = 0
-        for (b, p), md in zip(work, _footers(self.storage, [p for _, p in work])):
-            files_by_bucket.setdefault(b, []).append(p)
-            rows_by_bucket[str(b)] = rows_by_bucket.get(str(b), 0) + md.num_rows
-            total += md.num_rows
-            file_stats[p] = _footer_minmax(md, m.get("stats_cols") or [])
+        files_by_bucket, rows_by_bucket, file_stats, counts = _harvest(
+            self.storage, work, m.get("stats_cols") or [], buckets
+        )
+        total = sum(counts)
 
         observed = None
         if total or audit_empty:
@@ -2511,19 +2483,88 @@ class ManifestTable:
                 )
         return files_by_bucket, rows_by_bucket, total, file_stats, observed
 
+    @staticmethod
+    def _file_set(
+        mc: dict[str, Any],
+        *,
+        base: dict[int, list[str]] | None = None,
+        delta: dict[int, list[str]] | None = None,
+        stats: dict[str, dict] | None = None,
+        rows: dict[str, int] | None = None,
+        drop: frozenset[str] | set[str] = frozenset(),
+    ) -> dict[str, Any]:
+        """The one derivation of a data commit's ``files``, ``delta_files``,
+        ``file_stats``, ``bucket_rows``, ``delta_rows`` and both totals on
+        top of base manifest ``mc`` (the reference's per-chunk record
+        tracker, ``DataSplit.py:23-31``), from what the verb changed:
+
+        * ``base`` — each REWRITTEN bucket's new base files: its deltas
+          (folded in) drop, its ``bucket_rows`` becomes ``rows[b]``;
+        * ``delta`` — delta files APPENDED per bucket, adding ``rows[b]``
+          to its ``delta_rows``;
+        * ``stats`` — the new files' footer stats (``_harvest``, as are
+          ``rows``); kept files carry theirs, removed files lose theirs;
+        * ``drop`` — base files removed whole, with their ``::rows``.
+
+        Totals are the sums of the per-bucket counters.  A rebucket
+        replaces every file under a new layout: it passes ``mc={}``."""
+
+        def by_bucket(key: str, conv) -> dict[int, Any]:
+            return {int(b): conv(v) for b, v in (mc.get(key) or {}).items()}
+
+        files = by_bucket("files", list)
+        deltas = by_bucket("delta_files", list)
+        brows = by_bucket("bucket_rows", int)
+        drows = by_bucket("delta_rows", int)
+        rows = {int(b): int(n) for b, n in (rows or {}).items()}
+        known = {**(mc.get("file_stats") or {}), **(stats or {})}
+        for b, ps in (base or {}).items():
+            files[b] = list(ps)
+            deltas.pop(b, None)
+            drows.pop(b, None)
+            brows[b] = rows.get(b, 0)
+        for b, ps in (delta or {}).items():
+            deltas[b] = deltas.get(b, []) + list(ps)
+            drows[b] = drows.get(b, 0) + rows.get(b, 0)
+        for b, ps in files.items():
+            for p in drop.intersection(ps):
+                gone = int((known.get(p) or {}).get("::rows", [0])[0])
+                brows[b] = max(0, brows.get(b, 0) - gone)
+            files[b] = [p for p in ps if p not in drop]
+        out = {
+            "files": {str(b): ps for b, ps in files.items()},
+            "delta_files": {str(b): ps for b, ps in deltas.items() if ps},
+            "bucket_rows": {str(b): n for b, n in brows.items()},
+            "total_rows": sum(brows.values()),
+            "delta_rows": {str(b): n for b, n in drows.items()},
+            "delta_rows_total": sum(drows.values()),
+        }
+        out["file_stats"] = {
+            p: known[p] for _, p, _ in _data_files(out) if known.get(p)
+        }
+        return out
+
     def _rows_for_bytes(
         self,
         m: dict[str, Any],
         max_file_bytes: int,
-        relpaths: list[str],
-        total_rows: int,
+        buckets: set[int] | None = None,
     ) -> int | None:
         """Rows-per-file target for a BYTES target: average on-disk row
-        width from the given files of snapshot ``m`` (object sizes, one
-        storage LIST per distinct parent dir — driver-side metadata, no
-        file reads) divided into ``max_file_bytes``.  ``None`` (no
-        per-file cap) when the metadata can't support an estimate (no
-        rows/bytes recorded)."""
+        width of the files of ``buckets`` (None = all) of snapshot ``m``
+        (object sizes, one storage LIST per distinct parent dir, over the
+        manifest's base + delta row counters — no file reads) divided
+        into ``max_file_bytes``.  ``None`` (no per-file cap) when the
+        metadata can't support an estimate (no rows/bytes recorded)."""
+        relpaths = [
+            p for b, p, _ in _data_files(m) if buckets is None or b in buckets
+        ]
+        total_rows = sum(
+            int(n)
+            for counter in ("bucket_rows", "delta_rows")
+            for b, n in (m.get(counter) or {}).items()
+            if buckets is None or int(b) in buckets
+        )
         want = {p for p in relpaths if not p.startswith(_EXT_PREFIX)}
         dirs = {p.rsplit("/", 1)[0] for p in want if "/" in p}
         total_bytes = 0
@@ -2691,13 +2732,8 @@ class ManifestTable:
             p for b in cand for p in old_files.get(b, []) + old_delta.get(b, [])
         ]
         if max_file_bytes:
-            br = m.get("bucket_rows") or {}
-            dr = m.get("delta_rows") or {}
-            cand_rows = sum(int(br.get(str(b), 0)) for b in cand) + sum(
-                int(dr.get(str(b), 0)) for b in cand
-            )
             max_rows_per_file = self._rows_for_bytes(
-                m, max_file_bytes, cand_rel, cand_rows
+                m, max_file_bytes, set(cand)
             )
         # scanned unfolded: the z-order sketch samples the raw inputs
         inputs = self._scan(m, cand_rel, live=False)
@@ -2735,44 +2771,23 @@ class ManifestTable:
             zorder_sample=inputs,
             max_rows_per_file=max_rows_per_file,
         )
-        files = dict(old_files)
-        for b in cand:
-            files[b] = staged_files.get(b, [])
-        delta_files = {b: ps for b, ps in old_delta.items() if b not in cand}
-        delta_rows = {
-            k: int(v)
-            for k, v in (m.get("delta_rows") or {}).items()
-            if int(k) not in cand
+        change = {
+            **self._file_set(
+                m, base=staged_files, stats=staged_stats, rows=rows_by_bucket
+            ),
+            "epoch_id": f"compact:{version}",
+            # informational: the clustering applied by THIS rewrite (pruning
+            # reads file_stats directly and needs no ordering guarantee)
+            "sorted_by": list(sort_by or []),
+            "zordered_by": list(zorder_by or []),
         }
         # a FULL rewrite (OPTIMIZE covering every bucket, no surviving
         # deltas) physicalizes metadata-only renames/drops: every live file
         # now carries the current names, so the shadow maps and the re-add
         # tombstones can clear — retired names become reusable
-        cset = set(cand)
-        full_rewrite = not delta_files and all(
-            int(b) in cset for b, ps in old_files.items() if ps
+        full_rewrite = not change["delta_files"] and all(
+            int(b) in cand for b, ps in m["files"].items() if ps
         )
-        change = {
-            "epoch_id": f"compact:{version}",
-            "files": {str(b): p for b, p in files.items()},
-            "delta_files": {str(b): p for b, p in delta_files.items()},
-            "file_stats": self._fold_stats(m, files, delta_files, staged_stats),
-            # informational: the clustering applied by THIS rewrite (pruning
-            # reads file_stats directly and needs no ordering guarantee)
-            "sorted_by": list(sort_by or []),
-            "zordered_by": list(zorder_by or []),
-            "bucket_rows": {
-                **{
-                    str(b): r
-                    for b, r in (m.get("bucket_rows") or {}).items()
-                    if int(b) not in cand
-                },
-                **rows_by_bucket,
-            },
-            "total_rows": m["total_rows"] - self._rows_in(m, cand) + staged_rows,
-            "delta_rows": delta_rows,
-            "delta_rows_total": sum(delta_rows.values()),
-        }
         if full_rewrite:
             change.update(renamed_cols={}, dropped_cols=[])
         if purge_tombstones_before is not None:
@@ -2866,33 +2881,6 @@ class ManifestTable:
         cols = [f.name for f in ischema.fields]
         return updated.select(*cols).unionByName(inserts.select(*cols))
 
-    def _fold_stats(
-        self,
-        old_manifest: dict[str, Any],
-        files: dict[Any, list[str]],
-        delta_files: dict[Any, list[str]],
-        pending: dict[str, dict] | None = None,
-    ) -> dict[str, dict[str, list]]:
-        """file_stats for the new manifest: freshly harvested footer stats
-        (``pending``, returned by the ``_stage`` call that staged the
-        files) for newly staged files, carried-over entries for kept files,
-        dropped entries for removed files."""
-        pending = pending or {}
-        old = old_manifest.get("file_stats") or {}
-        published = [
-            p for ps in files.values() for p in ps
-        ] + [p for ps in delta_files.values() for p in ps]
-        out: dict[str, dict[str, list]] = {}
-        for p in published:
-            st = pending.get(p) or old.get(p)
-            if st:
-                out[p] = st
-        return out
-
-    def _rows_in(self, manifest: dict[str, Any], buckets: list[int]) -> int:
-        br = manifest.get("bucket_rows") or {}
-        return sum(int(br.get(str(b), 0)) for b in buckets)
-
     # size cap for each per-column-chunk parquet bloom (parquet-mr's
     # parquet.bloom.filter.max.bytes; 128 KiB ≈ NDV 100k at 1% fpp —
     # bounded per file, zero manifest growth)
@@ -2985,15 +2973,10 @@ class ManifestTable:
                 "duration_s": time.monotonic() - t0,
             }
         if max_file_bytes:
-            max_rows_per_file = self._rows_for_bytes(
-                m,
-                max_file_bytes,
-                self._all_files_rel(m),
-                int(m["total_rows"]) + int(m.get("delta_rows_total") or 0),
-            )
+            max_rows_per_file = self._rows_for_bytes(m, max_file_bytes)
         key_cols = m["key_cols"]
         # scanned unfolded: the z-order sketch samples the raw inputs
-        inputs = self._scan(m, self._all_files_rel(m), live=False)
+        inputs = self._scan(m, [p for _, p, _ in _data_files(m)], live=False)
         df = (
             _fold_rows(inputs, key_cols)
             if any((m.get("delta_files") or {}).values())
@@ -3013,13 +2996,14 @@ class ManifestTable:
         res = self._commit(
             m,
             {
+                # every file is replaced under the new layout: a file set
+                # built from nothing
+                **self._file_set(
+                    {}, base=staged_files, stats=staged_stats,
+                    rows=rows_by_bucket,
+                ),
                 "epoch_id": f"rebucket:{version}",
                 "n_buckets": n_buckets,
-                "files": {str(b): p for b, p in staged_files.items()},
-                "delta_files": {},
-                "file_stats": self._fold_stats(
-                    m, staged_files, {}, staged_stats
-                ),
                 "sorted_by": list(sort_by or []),
                 "zordered_by": list(zorder_by or []),
                 # a rebucket rewrites EVERY live file under the current
@@ -3027,10 +3011,6 @@ class ManifestTable:
                 # and clear
                 "renamed_cols": {},
                 "dropped_cols": [],
-                "bucket_rows": rows_by_bucket,
-                "total_rows": staged_rows,
-                "delta_rows": {},
-                "delta_rows_total": 0,
             },
             {"n_buckets": n_buckets, "staged_rows": staged_rows},
             before_publish=before_publish,
@@ -3085,21 +3065,22 @@ class ManifestTable:
         candidates, so steady-state vacuum work is O(garbage), not O(table)."""
         self._require_main("vacuum")
         versions = self._list_versions()
-        referenced: set[str] = set()
         referenced_files: set[str] = set()
+
+        def pin(m: dict[str, Any]) -> None:
+            referenced_files.update(
+                p
+                for _, p, _ in _data_files(m)
+                # a clone source's file — not ours to GC
+                if not p.startswith(_EXT_PREFIX)
+            )
+
         # newest K surviving manifests PLUS every tagged snapshot — a named
         # ref pins its data files for as long as the tag exists
         keep = set(versions[-max(1, keep_versions):])
         keep |= {v for v in self.tags().values() if v in set(versions)}
         for v in sorted(keep):
-            m = self.manifest(v)
-            for d in (m["files"], m.get("delta_files") or {}):
-                for ps in d.values():
-                    for p in ps:
-                        if p.startswith(_EXT_PREFIX):
-                            continue  # clone source's file — not ours to GC
-                        referenced.add(p.split("/")[1])  # data/<dir>/...
-                        referenced_files.add(p)
+            pin(self.manifest(v))
         # live branches pin every dir their surviving chain references —
         # branch writers share data/ and their staged dirs must survive the
         # audit window; drop_branch releases them (branches are short-lived
@@ -3110,16 +3091,10 @@ class ManifestTable:
             )
             for bv in b._list_versions():
                 try:
-                    m = b.manifest(bv)
+                    pin(b.manifest(bv))
                 except FileNotFoundError:
                     continue
-                for d in (m["files"], m.get("delta_files") or {}):
-                    for ps in d.values():
-                        for p in ps:
-                            if p.startswith(_EXT_PREFIX):
-                                continue
-                            referenced.add(p.split("/")[1])
-                            referenced_files.add(p)
+        referenced = {p.split("/")[1] for p in referenced_files}  # data/<d>/
         removed = []
         now = time.time()
         for d in self.storage.list_dirs(_DATA_DIR):
@@ -3175,32 +3150,23 @@ class ManifestTable:
             by_version_tags.setdefault(tv, []).append(name)
 
         def _files_of(m: dict[str, Any]) -> set[str]:
-            return {p for ps in m["files"].values() for p in ps} | {
-                p for ps in (m.get("delta_files") or {}).values() for p in ps
-            }
+            return {p for _, p, _ in _data_files(m)}
+
+        # operation → the epoch-key scope its commits are stamped with
+        ops = {
+            "compact": "compact", "rebucket": "rebucket",
+            "set-stats": "set-stats", "set-bloom": "set-bloom",
+            "publish": "publish", "rollback": "rollback",
+            "retention_delete": "retdel",
+        }
 
         rows = []
         for v in versions:
             m = manifests[v]
             ek = m.get("epoch_id")
-            op = (
-                "create"
-                if ek is None
-                else "compact"
-                if str(ek).startswith("compact:")
-                else "rebucket"
-                if str(ek).startswith("rebucket:")
-                else "set-stats"
-                if str(ek).startswith("set-stats:")
-                else "set-bloom"
-                if str(ek).startswith("set-bloom:")
-                else "publish"
-                if str(ek).startswith("publish:")
-                else "rollback"
-                if str(ek).startswith("rollback:")
-                else "retention_delete"
-                if str(ek).startswith("retdel:")
-                else "merge"
+            op = "create" if ek is None else next(
+                (op for op in ops if str(ek).startswith(f"{ops[op]}:")),
+                "merge",  # an ingest epoch key
             )
             fs = _files_of(m)
             parent = m.get("parent")
@@ -3253,22 +3219,10 @@ class ManifestTable:
 
         m = self.manifest(version)
         stats = m.get("file_stats") or {}
-        entries: list[tuple[str, int, str]] = []  # (relpath, bucket, kind)
-        for b, ps in m["files"].items():
-            entries += [(p, int(b), "base") for p in ps]
-        for b, ps in (m.get("delta_files") or {}).items():
-            entries += [(p, int(b), "delta") for p in ps]
-        sizes: dict[str, int] = {}
-        mtimes: dict[str, float] = {}
-        local_dirs = {
-            p.split("/")[1]
-            for p, _, _ in entries
-            if not p.startswith(_EXT_PREFIX)
-        }
-        for d in sorted(local_dirs):
-            for o in self.storage.list(f"{_DATA_DIR}/{d}"):
-                sizes[o.key] = o.size
-                mtimes[o.key] = o.last_modified
+        # (relpath, bucket, kind)
+        entries = [(p, b, kind) for b, p, kind in _data_files(m)]
+        listed = self._listing([p for p, _, _ in entries])
+        sizes = {k: o.size for k, o in listed.items()}
         for p, sz in (m.get("external_sizes") or {}).items():
             sizes[p] = int(sz)
         rows = [
@@ -3278,8 +3232,10 @@ class ManifestTable:
                 kind,
                 sizes.get(p),
                 json.dumps(stats[p], sort_keys=True) if p in stats else None,
-                _dt.datetime.fromtimestamp(mtimes[p], tz=_dt.timezone.utc)
-                if p in mtimes
+                _dt.datetime.fromtimestamp(
+                    listed[p].last_modified, tz=_dt.timezone.utc
+                )
+                if p in listed
                 else None,
             )
             for p, b, kind in sorted(entries)
@@ -3475,27 +3431,12 @@ class ManifestTable:
                 # nothing to drop and the watermark already covers the
                 # cutoff: no commit needed, go straight to the residual
                 return None
-            stats = dict(m.get("file_stats") or {})
-            bucket_rows = {
-                str(b): int(n)
-                for b, n in (m.get("bucket_rows") or {}).items()
-            }
-            files = {b: list(ps) for b, ps in m["files"].items()}
-            n_dropped_rows = 0
-            for b, p, rows in dropped:
-                files[b] = [q for q in files[b] if q != p]
-                stats.pop(p, None)
-                bucket_rows[b] = max(0, bucket_rows.get(b, 0) - rows)
-                n_dropped_rows += rows
             return {
+                **self._file_set(m, drop={p for _, p, _ in dropped}),
                 "epoch_id": drop_key,
-                "files": files,
-                "file_stats": stats,
-                "bucket_rows": bucket_rows,
-                "total_rows": max(0, int(m["total_rows"]) - n_dropped_rows),
                 "retention_ts": _stat_to_json(eff),
                 "retdel_dropped": sorted(p for _, p, _ in dropped),
-                "retdel_rows": n_dropped_rows,
+                "retdel_rows": sum(rows for _, _, rows in dropped),
             }
 
         # a lost race re-reads the head and recomputes the drop set
@@ -3972,17 +3913,9 @@ class ManifestTable:
         "row_mismatches"}``; never raises on corruption (the point is the
         report)."""
         m = self.manifest(version)
-        refs: list[tuple[str, str]] = []  # (relpath, bucket-kind key)
-        for b, ps in m["files"].items():
-            refs += [(p, f"base:{int(b)}") for p in ps]
-        for b, ps in (m.get("delta_files") or {}).items():
-            refs += [(p, f"delta:{int(b)}") for p in ps]
-        present: set[str] = set()
-        local_dirs = {
-            p.split("/")[1] for p, _ in refs if not p.startswith(_EXT_PREFIX)
-        }
-        for d in sorted(local_dirs):
-            present.update(o.key for o in self.storage.list(f"{_DATA_DIR}/{d}"))
+        # (relpath, bucket-kind key)
+        refs = [(p, f"{kind}:{b}") for b, p, kind in _data_files(m)]
+        present = set(self._listing([p for p, _ in refs]))
         # shallow-clone external refs: the clone does not own (or LIST) the
         # source tree, so existence is checked per file — this is exactly
         # the probe that tells an operator the SOURCE's vacuum/retention
@@ -4000,12 +3933,13 @@ class ManifestTable:
             mds = _footers(self.storage, [p for p, _ in refs])
             for (_, key), md in zip(refs, mds):
                 got[key] = got.get(key, 0) + md.num_rows
-            want: dict[str, int] = {}
-            for b, r in (m.get("bucket_rows") or {}).items():
-                want[f"base:{int(b)}"] = int(r)
-            for b, r in (m.get("delta_rows") or {}).items():
-                if int(r):
-                    want[f"delta:{int(b)}"] = int(r)
+            want = {
+                f"{kind}:{int(b)}": int(r)
+                for kind, counter in (
+                    ("base", "bucket_rows"), ("delta", "delta_rows")
+                )
+                for b, r in (m.get(counter) or {}).items()
+            }
             for key in sorted(set(want) | set(got)):
                 if want.get(key, 0) != got.get(key, 0):
                     kind, _, b = key.partition(":")
@@ -5144,15 +5078,6 @@ class ManifestTable:
 
     # ---------- change feed (downstream incremental consumers) ----------
 
-    @staticmethod
-    def _rel_files(m: dict[str, Any]) -> set[str]:
-        return {
-            p
-            for d in (m["files"], m.get("delta_files") or {})
-            for ps in d.values()
-            for p in ps
-        }
-
     def incremental_rows(
         self, from_version: int, to_version: int | None = None
     ) -> DataFrame:
@@ -5172,7 +5097,7 @@ class ManifestTable:
         ma = self.manifest(from_version)
         tv = self.current_version() if to_version is None else to_version
         mb = self.manifest(tv)
-        fa, fb = self._rel_files(ma), self._rel_files(mb)
+        fa, fb = ({p for _, p, _ in _data_files(x)} for x in (ma, mb))
         if fa - fb:
             raise ValueError(
                 f"files were rewritten between v{from_version} and v{tv} "
@@ -5276,8 +5201,9 @@ class ManifestTable:
                 or child["n_buckets"] != parent["n_buckets"]
             ):
                 return None  # CoW/initial rewrite: base files changed state
+            old = {p for _, p, _ in _data_files(parent)}
             added_files += sorted(
-                self._rel_files(child) - self._rel_files(parent)
+                p for _, p, _ in _data_files(child) if p not in old
             )
             added_rows += int(child.get("delta_rows_total") or 0) - int(
                 parent.get("delta_rows_total") or 0
@@ -5286,17 +5212,8 @@ class ManifestTable:
             # delta files folded by a LATER compaction — and retention-
             # dropped files no longer referenced by the head — may have
             # been vacuumed; verify at staging-dir granularity
-            dirs = {
-                p.split("/")[1]
-                for p in added_files + dropped_files
-                if not p.startswith(_EXT_PREFIX)
-            }
-            present: set[str] = set()
-            for d in sorted(dirs):
-                present.update(
-                    o.key for o in self.storage.list(f"{_DATA_DIR}/{d}")
-                )
-            if not set(added_files) | set(dropped_files) <= present:
+            present = self._listing(added_files + dropped_files)
+            if not set(added_files) | set(dropped_files) <= set(present):
                 return None
         return added_files, sorted(dropped_files), max(added_rows, 0)
 

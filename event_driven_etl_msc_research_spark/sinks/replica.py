@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .manifest import ManifestTable
+from .manifest import ManifestTable, _data_files, _epoch_applied, _ledger_max
 from .storage import TableStorage
 
 _REPLICA_DIR = "_replica"
@@ -188,25 +188,21 @@ class ReplicaTable:
     # ---------- resume point ----------
 
     def last_synced_version(self) -> int | None:
-        m = self.table.manifest()
-        best = None
-        for key in m["applied_epochs"]:
-            scope, _, eid = key.partition(":")
-            if scope == "replica":
-                try:
-                    v = int(eid)
-                except ValueError:
-                    continue
-                best = v if best is None else max(best, v)
-        r = (m.get("applied_ranges") or {}).get("replica")
-        if r:
-            best = r[1] if best is None else max(best, r[1])
-        return best
+        return self._synced(self.table.manifest())
+
+    @staticmethod
+    def _synced(m: dict[str, Any]) -> int | None:
+        """The upstream version the replica's own ledger ``m`` last
+        applied (scope ``replica``)."""
+        return _ledger_max(m, lambda scope: scope == "replica")
 
     # ---------- sync ----------
 
-    def _projected(self, df: DataFrame, schema_names: list[str]) -> DataFrame:
-        mine = {f.name for f in self.table.schema().fields}
+    def _projected(
+        self, df: DataFrame, schema_names: list[str], m: dict[str, Any]
+    ) -> DataFrame:
+        """``df`` narrowed to the replica's columns (``m``: its head)."""
+        mine = set(T.StructType.fromJson(m["schema"]).fieldNames())
         if self.columns is None:
             # full-copy replica: carry every upstream payload column the
             # batch has (additive upstream evolution flows through — the
@@ -221,10 +217,11 @@ class ReplicaTable:
         result dict (plus ``path``: 'log' or 'snapshot')."""
         t0 = time.monotonic()
         t = self.upstream.current_version()
-        sv = self.last_synced_version()
+        mine = self.table.manifest()  # the replica's head, resolved once
+        sv = self._synced(mine)
         if sv is not None and t == sv:
             return {"status": "NoChange", "version": t}
-        if self.table.epoch_applied(t, epoch_scope="replica"):
+        if _epoch_applied(mine, f"replica:{t}"):
             return {"status": "Skipped", "version": t}
 
         up = self.upstream
@@ -271,7 +268,7 @@ class ReplicaTable:
             # pre-fold — the replica's merge dedups the batch by per-key
             # max-(ts, lsn) anyway (the same fold), so folding twice would
             # just pay a second shuffle
-            raw = up._scan(mb, up._all_files_rel(mb), live=False)
+            raw = up._scan(mb, [p for _, p, _ in _data_files(mb)], live=False)
             ret_dropped = []
             path = "snapshot"
 
@@ -286,6 +283,7 @@ class ReplicaTable:
                 *payload_names,
             ),
             payload_names,
+            mine,
         )
         if ret_dropped:
             # a retention_delete upstream removed these files with a
@@ -312,9 +310,11 @@ class ReplicaTable:
                     ],
                 ),
                 payload_names,
+                mine,
             )
             batch = batch.unionByName(dels)
-        res = self.table.merge(
+        res = self.table._merge(
+            mine,
             batch,
             epoch_id=t,
             epoch_scope="replica",

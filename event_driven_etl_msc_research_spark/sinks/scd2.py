@@ -70,7 +70,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..schemas import KEY_COLS
-from .manifest import ManifestTable
+from .manifest import ManifestTable, _data_files
 from .storage import TableStorage
 
 # engine-managed history columns (read-side also exposes valid_from /
@@ -282,7 +282,7 @@ class SCD2Table:
                 ).collect()[0]
                 nk, small = int(stats["n"]), int(stats["n"]) <= broadcast_keys
                 m = self.table.manifest()
-                empty = not self.table._all_files_rel(m)
+                empty = not _data_files(m)
                 if nk == 0 or empty:
                     rows = self._chain(b)
                 elif mode == "inorder":

@@ -100,8 +100,7 @@ from ..sinks.manifest import (
     _DATA_DIR,
     _INTERNAL_FIELDS,
     ManifestTable,
-    _footer_minmax,
-    _footers,
+    _harvest,
 )
 
 
@@ -298,20 +297,15 @@ class _SinkWriterCore:
             (e for msg in messages if msg is not None for e in msg.files),
             key=lambda e: e[1],
         )
-        staged: dict[int, list[str]] = {}
-        rows_by_bucket: dict[str, int] = {}
-        stats: dict[str, dict] = {}
-        mds = _footers(table.storage, [rel for _, rel, _ in entries])
-        for (b, rel, rows), md in zip(entries, mds):
-            if md.num_rows != rows:
+        staged, rows_by_bucket, stats, footer_rows = _harvest(
+            table.storage, [(b, rel) for b, rel, _ in entries], stats_cols
+        )
+        for (_, rel, rows), got in zip(entries, footer_rows):
+            if got != rows:
                 raise RuntimeError(
                     f"sink audit failed for epoch {epoch_id}: task reported "
-                    f"{rows} rows in {rel} but the parquet footer has "
-                    f"{md.num_rows}"
+                    f"{rows} rows in {rel} but the parquet footer has {got}"
                 )
-            staged.setdefault(b, []).append(rel)
-            rows_by_bucket[str(b)] = rows_by_bucket.get(str(b), 0) + rows
-            stats[rel] = _footer_minmax(md, stats_cols)
         fschema = T.StructType.fromJson(json.loads(self._file_schema_json))
         payload_schema = T.StructType(
             fschema.fields[: -len(_INTERNAL_FIELDS)]

@@ -304,14 +304,11 @@ class CDCTableBatchReader(DataSourceReader):
         self._version = options.get("version")
 
     def partitions(self) -> Sequence[InputPartition]:
+        from ..sinks.manifest import _data_files
+
         v = int(self._version) if self._version is not None else None
         m = self._table.manifest(v)
-        files = [
-            p
-            for d in (m["files"], m.get("delta_files") or {})
-            for ps in d.values()
-            for p in ps
-        ]
+        files = [p for _, p, _ in _data_files(m)]
         return _partitions_for(
             self._table, sorted(files), self._schema, m.get("renamed_cols")
         )

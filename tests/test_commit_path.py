@@ -11,14 +11,20 @@ rename.  After each verb:
   drop history) is carried unless the verb changes it;
 * per-commit fields never leak: ``added_cols`` is the commit's own and
   ``retdel_dropped``/``retdel_rows`` ride only the retention drop commit;
-* ``external_sizes`` only names files the commit still references.
+* ``external_sizes`` only names files the commit still references;
+* the file set is consistent (``ManifestTable._file_set``): each total
+  is the sum of its per-bucket counters, ``file_stats`` names only live
+  files, and ``check(verify_rows=True)`` finds the footers agree.
 """
 from __future__ import annotations
 
 import datetime as dt
 
 from event_driven_etl_msc_research_spark.schemas import TRANSCRIPT_SCHEMA
-from event_driven_etl_msc_research_spark.sinks.manifest import ManifestTable
+from event_driven_etl_msc_research_spark.sinks.manifest import (
+    ManifestTable,
+    _data_files,
+)
 
 T0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
 CONFIG = ("properties", "retention_ts", "lateness_ts", "cloned_from")
@@ -73,8 +79,18 @@ def test_every_verb_carries_config_and_resets_per_commit_fields(
             retdel = ek.startswith("retdel:")
             assert ("retdel_dropped" in m) == retdel, ek
             assert ("retdel_rows" in m) == retdel, ek
-            live = set(t._all_files_rel(m))
+            live = {p for _, p, _ in _data_files(m)}
             assert set(m.get("external_sizes") or {}) <= live, ek
+            assert m["total_rows"] == sum(
+                (m.get("bucket_rows") or {}).values()
+            ), ek
+            assert m.get("delta_rows_total", 0) == sum(
+                (m.get("delta_rows") or {}).values()
+            ), ek
+            assert set(m.get("file_stats") or {}) <= live, ek
+            assert t.check(version=v, verify_rows=True)["status"] == (
+                "Success"
+            ), ek
         tracked = CONFIG if rollback else CONFIG + META
         for k in tracked:
             if k not in changes:

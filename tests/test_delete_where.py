@@ -19,7 +19,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from event_driven_etl_msc_research_spark.schemas import TRANSCRIPT_SCHEMA
-from event_driven_etl_msc_research_spark.sinks.manifest import ManifestTable
+from event_driven_etl_msc_research_spark.sinks.manifest import (
+    ManifestTable,
+    _data_files,
+)
 
 
 def _batch(spark, rows):
@@ -111,7 +114,7 @@ def test_delete_where_feeds_changes_and_erasure(spark, table):
     # tombstone-filtered read
     table.compact(min_delta_files=0)
     m = table.manifest()
-    raw = table._scan(m, table._all_files_rel(m), live=False)
+    raw = table._scan(m, [p for _, p, _ in _data_files(m)], live=False)
     deleted_texts = {f"text-{i}" for i in (4, 5, 6, 7)}  # turn_idx == 1 rows
     assert (
         raw.filter(F.col("text").isin(*deleted_texts)).count() == 0

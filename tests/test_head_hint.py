@@ -11,7 +11,6 @@ so a crashed writer (publish landed, hint lost) or a hint-less table
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -155,6 +154,7 @@ _SCAN_ONCE = {
     "update_where": (2, 2),
     "replica_sync_log": (1, 3),
     "replica_sync_snapshot": (1, 2),
+    "clone": (1, 2),
 }
 
 
@@ -175,6 +175,8 @@ def _verb_call(case, spark, t, tmp_root):
         return lambda: t.delete_where("turn_idx = 0", epoch_id=50)
     if case == "update_where":
         return lambda: t.update_where("turn_idx = 0", {"text": "'x'"}, epoch_id=50)
+    if case == "clone":
+        return lambda: t.clone(os.path.join(tmp_root, "clone"))
     rep = ReplicaTable.create(spark, os.path.join(tmp_root, "rep"), t)
     if case == "replica_sync_log":
         # the first sync takes the snapshot path; the next ships the log
@@ -213,7 +215,7 @@ def test_probe_covers_hint_lag(spark, tmp_root, storage_factory):
     m = dict(t.manifest())
     m["version"], m["parent"] = head + 1, head
     assert t.storage.put_if_absent(
-        f"_manifest/v{head + 1:012d}.json", json.dumps(m).encode()
+        f"_manifest/v{head + 1:012d}.json", ManifestTable._encode_manifest(m)
     )
     fresh = ManifestTable(spark, t.root, storage=t.storage)
     assert fresh.current_version() == head + 1

@@ -1,11 +1,9 @@
 """Gzip'd manifest objects: a manifest is rewritten WHOLE per commit
 (O(files) bytes riding every publish and every verb's head read), so
-the object is stored gzip-compressed.  Reads sniff the magic bytes —
-chains with pre-compression plain-JSON commits stay readable."""
+the object is stored gzip-compressed."""
 
 from __future__ import annotations
 
-import gzip
 import json
 import os
 
@@ -52,52 +50,3 @@ def test_published_manifests_are_gzipped_and_smaller(
     raw = t.storage.get(t._manifest_key(v))
     assert raw[:2] == b"\x1f\x8b", "manifest object must be gzip'd"
     assert len(raw) < len(json.dumps(t.manifest(v)).encode())
-
-
-def test_mixed_plain_and_gzip_chain_reads(spark, tmp_root, storage_factory):
-    """A pre-compression (plain JSON) commit in the middle of the chain:
-    head resolution, reads, history, and the change-feed chain walk all
-    decode both encodings."""
-    root = os.path.join(tmp_root, "mix_tbl")
-    t = ManifestTable.create(
-        spark, root, TRANSCRIPT_SCHEMA, n_buckets=4,
-        storage=storage_factory(root),
-    )
-    t.merge(_batch(spark, 100), epoch_id=1, mode="delta")
-    v1 = t.current_version()
-    # splice a plain-JSON commit in (exactly what a pre-gzip engine wrote):
-    # same content as a no-op metadata commit
-    m = dict(t.manifest())
-    m["version"], m["parent"], m["epoch_id"] = v1 + 1, v1, "plain:1"
-    assert t.storage.put_if_absent(
-        t._manifest_key(v1 + 1), json.dumps(m).encode()
-    )
-    fresh = ManifestTable(spark, root, storage=t.storage)
-    assert fresh.current_version() == v1 + 1
-    fresh.merge(_batch(spark, 200), epoch_id=2, mode="delta")
-    assert fresh.read().count() == 12
-    # chain walk across the plain commit (change feed fast path)
-    ch = fresh.changes(v1)
-    assert ch.count() == 6
-    assert {r["version"] for r in fresh.history().collect()} >= {
-        v1, v1 + 1, v1 + 2
-    }
-
-
-def test_expire_decodes_both_encodings(spark, tmp_root, storage_factory):
-    root = os.path.join(tmp_root, "exp_tbl")
-    t = ManifestTable.create(
-        spark, root, TRANSCRIPT_SCHEMA, n_buckets=4,
-        storage=storage_factory(root),
-    )
-    for i in range(3):
-        t.merge(_batch(spark, 100 * (i + 1)), epoch_id=i + 1, mode="delta")
-    # make the OLDEST surviving commit plain-JSON
-    v = 1
-    raw = t.storage.get(t._manifest_key(v))
-    plain = gzip.decompress(raw)
-    t.storage.delete(t._manifest_key(v))
-    assert t.storage.put_if_absent(t._manifest_key(v), plain)
-    expired = t.expire_snapshots(keep_last=1)
-    assert v in expired
-    assert t.read().count() > 0

@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 from event_driven_etl_msc_research_spark.sinks.manifest import (
     ManifestTable,
     SchemaEvolutionError,
+    _data_files,
 )
 
 PAYLOAD = T.StructType(
@@ -49,6 +50,10 @@ TS0 = datetime.datetime(2024, 1, 1)
 TS1 = datetime.datetime(2024, 1, 2)
 
 
+def _files(t):
+    return {p for _, p, _ in _data_files(t.manifest())}
+
+
 def _fresh(spark, tmp_root, **kw):
     root = os.path.join(tmp_root, "t")
     t = ManifestTable.create(
@@ -72,12 +77,12 @@ def _fresh(spark, tmp_root, **kw):
 @pytest.mark.parametrize("mode", ["cow", "delta"])
 def test_rename_metadata_only(spark, tmp_root, mode):
     t = _fresh(spark, tmp_root)
-    files_before = t._rel_files(t.manifest())
+    files_before = _files(t)
 
     res = t.rename_column("text", "content")
     assert res["status"] == "Success"
     # METADATA-ONLY: the commit references exactly the parent's files
-    assert t._rel_files(t.manifest()) == files_before
+    assert _files(t) == files_before
     assert [f.name for f in t.schema().fields] == [
         "ts", "conv_id", "turn_idx", "content", "tool",
     ]
@@ -259,10 +264,10 @@ def test_stats_pruning_follows_rename_chain(spark, tmp_root):
 
 def test_drop_column_metadata_only(spark, tmp_root):
     t = _fresh(spark, tmp_root, stats_cols=["tool"])
-    files_before = t._rel_files(t.manifest())
+    files_before = _files(t)
     res = t.drop_column("tool")
     assert res["status"] == "Success"
-    assert t._rel_files(t.manifest()) == files_before
+    assert _files(t) == files_before
     assert "tool" not in t.read().columns
     assert t.manifest()["stats_cols"] == []  # auto-removed from configs
     # re-introducing the dropped name would resurrect stale bytes → reject

@@ -558,3 +558,34 @@ def test_timestamp_stats_do_not_depend_on_the_session(spark, tmp_root):
     assert len(files) == 2
     assert all("ts" in m["file_stats"][p] for p in files)
     assert t2.retention_delete("2100-01-01", epoch_id=9)["dropped_files"] == 2
+
+
+def test_update_losing_to_a_rebucket_keeps_its_watermark_bypass(
+    spark, tmp_root
+):
+    """An ``update_where`` that loses the manifest race to a layout change
+    redoes its merge against the winner with the SAME options: the rewrite
+    of live rows older than the purge watermark (each keeps its own ts)
+    still bypasses the watermark and lands, exactly as without the race."""
+    t = ManifestTable.create(
+        spark, tmp_root + "/t", TRANSCRIPT_SCHEMA, n_buckets=2
+    )
+    rows = [_ev("U", i, 1000 + i, f"c{i}", 0, text=f"t{i}") for i in range(1, 6)]
+    t.merge(spark.createDataFrame(rows, CHANGE_DDL), epoch_id=0, mode="delta")
+    t.compact(purge_tombstones_before=_cut(5000))
+    other = ManifestTable(spark, tmp_root + "/t")
+    raced = []
+
+    def rebucket_once(_new):
+        if not raced:
+            raced.append(other.rebucket(4)["status"])
+
+    res = t.update_where(
+        "conv_id = 'c2'", {"text": "'B'"}, epoch_id=2,
+        before_publish=rebucket_once,
+    )
+    assert raced == ["Success"]
+    assert res["status"] == "Success" and res["staged_rows"] == 1
+    assert t.manifest()["n_buckets"] == 4
+    assert ("c2", 0, "B") in _live(t)
+    assert t.check(verify_rows=True)["status"] == "Success"

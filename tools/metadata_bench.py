@@ -45,12 +45,11 @@ def main() -> None:
             t = ManifestTable.create(
                 None, root, TRANSCRIPT_SCHEMA, n_buckets=4, storage=cls(root)
             )
-            base = json.dumps(t.manifest()).encode()
-            m0 = json.loads(base)
+            m0 = dict(t.manifest())
             for v in range(1, n):
                 m0["version"], m0["parent"] = v, v - 1
                 t.storage.put_if_absent(
-                    t._manifest_key(v), json.dumps(m0).encode()
+                    t._manifest_key(v), t._encode_manifest(m0)
                 )
             t._write_head_hint(n - 1)
 
