@@ -45,6 +45,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import re
 import time
 from typing import Any
 
@@ -463,8 +464,9 @@ def _data_files(m: dict[str, Any]) -> list[tuple[int, str, str]]:
 # a change batch alongside them), and the underscore names are internal —
 # row metadata persisted in every file (_lsn/_deleted/_bucket) or transient
 # writer/clustering columns (_pb/_z) that the write paths withColumn() over,
-# which would SILENTLY CLOBBER a same-named user column.  Rejected at
-# create() so the failure is a loud DDL error, not data corruption later.
+# which would SILENTLY CLOBBER a same-named user column.  Refused for every
+# column entering a schema (``ManifestTable._admit``: create, evolution and
+# the column DDL) so the failure is a loud error, not data corruption later.
 _RESERVED_COLS = {"op", "lsn", "_lsn", "_deleted", "_bucket", "_pb", "_z"}
 # the row metadata every data file carries after the payload columns
 _INTERNAL_FIELDS = [
@@ -564,14 +566,8 @@ class ManifestTable:
         :meth:`set_properties` for namespace validation; e.g.
         ``{"write.parquet.compression": "zstd"}`` makes every data write
         of this table's life use that codec)."""
-        bad = [f.name for f in schema.fields if f.name in _RESERVED_COLS]
-        if bad:
-            raise ValueError(
-                f"schema uses engine-reserved column names {bad}: 'op'/'lsn' "
-                f"are the change-batch verb/version columns and underscore "
-                f"names (_lsn/_deleted/_bucket/_pb/_z) are internal row "
-                f"metadata / writer columns — rename them"
-            )
+        for f in schema.fields:
+            cls._admit(None, f.name)
         t = cls(spark, root, storage=storage)
         if t.exists():
             return t
@@ -689,7 +685,7 @@ class ManifestTable:
         # capture sizes now (one LIST per referenced dir, metadata-only):
         # the clone can never LIST the source tree later, and files()/
         # byte-targeted sizing want them
-        src_ext = head.get("external_sizes") or {}
+        src_ext = m.get("external_sizes") or {}
         sizes: dict[str, int] = {}
         rels = [p for _, p, _ in _data_files(m)]
         listed = self._listing(rels)
@@ -1209,90 +1205,143 @@ class ManifestTable:
         b = cls._WIDEN_RANK.get(to.simpleString())
         return a is not None and b is not None and a[0] == b[0] and b[1] > a[1]
 
+    # the manifest lists that name columns: a rename rewrites them to the
+    # new name, a drop removes the column from them
+    _COL_LISTS = (
+        "key_cols", "stats_cols", "bloom_filter_cols", "sorted_by", "zordered_by",
+    )
+
     @staticmethod
-    def _tombstoned_names(m: dict[str, Any]) -> set[str]:
-        """Column names that may NOT be (re)introduced while live data
-        files still physically carry them: names removed by
-        ``drop_column`` and historical names retired by ``rename_column``.
-        Re-adding one would resurrect stale values out of old files under
-        name-based parquet resolution; a full rewrite (``rebucket`` or an
-        all-bucket ``compact(min_delta_files=0)``) physicalizes the
-        current naming and clears the set."""
-        return set(m.get("dropped_cols") or []) | {
-            o
-            for olds in (m.get("renamed_cols") or {}).values()
-            for o in olds
-        }
+    def _admit(m: dict[str, Any] | None, name: str, *, ddl: bool = False) -> None:
+        """Name admission for a column entering the schema of ``m`` (None:
+        a table being created).  Refused: an engine-reserved name — the
+        write paths would clobber it — and a TOMBSTONED one, dropped or
+        renamed away while live files still carry it: re-adding it would
+        resurrect stale values under name-based parquet resolution, until
+        a full rewrite (``rebucket`` or an all-bucket
+        ``compact(min_delta_files=0)``) physicalizes the current naming and
+        frees it.  The explicit DDL verbs (``ddl``) also refuse a name that
+        already exists or is not an identifier."""
+        if name in _RESERVED_COLS:
+            raise SchemaEvolutionError(
+                f"column {name!r} is an engine-reserved name: 'op'/'lsn' are "
+                f"the change-batch verb/version columns and _lsn/_deleted/"
+                f"_bucket/_pb/_z internal row metadata / writer columns — "
+                f"rename it"
+            )
+        if m is None:
+            return
+        if name in set(m.get("dropped_cols") or []).union(
+            *(m.get("renamed_cols") or {}).values()
+        ):
+            raise SchemaEvolutionError(
+                f"column {name!r} was previously dropped or renamed away and "
+                f"live data files still carry it under that name — use the "
+                f"current column name, or physicalize the schema first "
+                f"(rebucket / compact(min_delta_files=0)) to free the name"
+            )
+        if ddl and name in T.StructType.fromJson(m["schema"]).fieldNames():
+            raise SchemaEvolutionError(f"column {name!r} already exists")
+        if ddl and not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
+            raise SchemaEvolutionError(f"invalid column name {name!r}")
 
-    def _evolve_schema(
+    def _schema_change(
         self,
-        current: T.StructType,
-        incoming_payload: T.StructType,
-        tombstoned: set[str] | frozenset[str] = frozenset(),
-    ) -> tuple[T.StructType, list[str]]:
-        """Schema evolution (cf. Iceberg schema-update transactions; the
-        detection / diff is ours, SURVEY.md §4.3):
+        m: dict[str, Any],
+        incoming: T.StructType | None = None,
+        *,
+        add: T.StructField | None = None,
+        widen: T.StructField | None = None,
+        rename: tuple[str, str] | None = None,
+        drop: str | None = None,
+    ) -> dict[str, Any]:
+        """The one derivation of a table's columns after a column change
+        against manifest ``m`` (cf. Iceberg schema-update transactions):
+        merge-path evolution (``incoming``: a change batch's payload
+        columns) and the column DDL (``add``/``widen`` a field, ``rename``
+        ``(old, new)``, ``drop`` a name).  Returns the manifest fields the
+        change sets — ``schema`` and ``added_cols``, plus, for a rename or
+        drop, the history (``renamed_cols``, ``dropped_cols``) and every
+        list in ``_COL_LISTS`` following the new name or losing the
+        dropped one.  A refused change raises ``SchemaEvolutionError``.
 
-        * ADDITIVE: new columns are appended nullable;
-        * TYPE WIDENING: an incoming column wider within its numeric family
-          (int→long, float→double, ...) widens the TABLE column — existing
-          parquet files are read through the widened schema (Spark 4's
-          parquet reader up-casts); a NARROWER incoming column keeps the
-          table type and the change batch is up-cast at merge time;
-        * anything else (cross-family, narrowing of the table, non-numeric
-          conflicts) raises ``SchemaEvolutionError`` naming the column.
+        * Names: every column entering the schema passes ``_admit``; an
+          incoming column new to the table is appended nullable.
+        * Types: a column only widens within its numeric family
+          (``_widens``; files written narrow read back up-cast), and a
+          narrower change batch keeps the table type (the merge up-casts
+          it).  Key columns and ``ts`` never change type: they are the
+          row identity and the bucket-hash input, and ``xxhash64`` hashes
+          an ``int`` and a ``bigint`` differently — a widened key would
+          split keys across buckets.
+        * ``ts`` keeps its name; key columns and ``ts`` cannot be dropped."""
+        cur = {f.name: f for f in T.StructType.fromJson(m["schema"]).fields}
+        fixed = {"ts", *m["key_cols"]}
 
-        ``tombstoned``: dropped / rename-retired names that must not be
-        re-added while old files still carry them (see
-        ``_tombstoned_names``) — a change stream still emitting a renamed
-        column's old name fails loudly here instead of silently forking a
-        second column.
-        """
-        cur = {f.name: f for f in current.fields}
+        def identity(name: str, what: str) -> SchemaEvolutionError:
+            return SchemaEvolutionError(
+                f"{name!r} is a key/version column (a key column or ts): it "
+                f"identifies rows, routes buckets and orders versions, so it "
+                f"cannot {what} (create a new table)"
+            )
+
+        for name in (widen and widen.name, rename and rename[0], drop):
+            if name is not None and name not in cur:
+                raise SchemaEvolutionError(
+                    f"no column {name!r} in schema (have {list(cur)})"
+                )
+        out = dict(cur)
         added: list[str] = []
-        out = list(current.fields)
-        for f in incoming_payload.fields:
-            if f.name in cur:
-                have = cur[f.name].dataType
-                if f.dataType == have:
-                    continue
-                if self._widens(have, f.dataType):  # widen the table column
-                    out = [
-                        T.StructField(g.name, f.dataType, g.nullable)
-                        if g.name == f.name
-                        else g
-                        for g in out
-                    ]
-                elif self._widens(f.dataType, have):
-                    pass  # incoming is narrower: merge casts the batch up
-                else:
-                    raise SchemaEvolutionError(
-                        f"type conflict on {f.name}: table={have} "
-                        f"incoming={f.dataType} (additive columns and "
-                        f"same-family numeric widening only)"
-                    )
-            else:
-                if f.name in _RESERVED_COLS:
-                    # the same guard create() applies to the initial schema:
-                    # an added column named like an internal/verb column
-                    # would be clobbered by the write paths downstream
-                    raise SchemaEvolutionError(
-                        f"incoming column {f.name!r} is an engine-reserved "
-                        f"name (op/lsn/_lsn/_deleted/_bucket/_pb/_z) — "
-                        f"rename it in the change stream"
-                    )
-                if f.name in tombstoned:
-                    raise SchemaEvolutionError(
-                        f"incoming column {f.name!r} was dropped or renamed "
-                        f"away and live data files still carry it under "
-                        f"that name — update the change stream to the "
-                        f"current column name, or physicalize the schema "
-                        f"first (rebucket / compact(min_delta_files=0)) to "
-                        f"free the name"
-                    )
-                out.append(T.StructField(f.name, f.dataType, True))
+        for f in [*(incoming or ()), *(g for g in (add, widen) if g)]:
+            have = cur.get(f.name)
+            if have is None or f is add:
+                self._admit(m, f.name, ddl=f is add)
+                out[f.name] = T.StructField(f.name, f.dataType, True)
                 added.append(f.name)
-        return T.StructType(out), added
+                continue
+            if f.dataType == have.dataType:
+                continue
+            grows = self._widens(have.dataType, f.dataType)
+            if f.name in fixed and (grows or f is widen):
+                raise identity(f.name, "change type")
+            if grows:
+                out[f.name] = T.StructField(f.name, f.dataType, have.nullable)
+            elif f is widen or not self._widens(f.dataType, have.dataType):
+                raise SchemaEvolutionError(
+                    f"type conflict on {f.name!r}: table "
+                    f"{have.dataType.simpleString()}, wanted "
+                    f"{f.dataType.simpleString()} — only safe promotions "
+                    f"within a numeric family are allowed (tinyint→smallint"
+                    f"→int→bigint, float→double); a narrower change batch "
+                    f"keeps the table type"
+                )
+        history: dict[str, Any] = {}
+        if rename or drop:
+            ren = {k: list(v) for k, v in (m.get("renamed_cols") or {}).items()}
+            sub = dict([rename]) if rename else {}
+            if rename:
+                old, new = rename
+                if old == "ts":
+                    raise identity(old, "be renamed")
+                self._admit(m, new, ddl=True)
+                out = {(new if n == old else n): f for n, f in out.items()}
+                out[new] = T.StructField(new, cur[old].dataType, cur[old].nullable)
+                ren[new] = [old] + ren.pop(old, [])
+            else:
+                if drop in fixed:
+                    raise identity(drop, "be dropped")
+                del out[drop]
+                history["dropped_cols"] = (
+                    list(m.get("dropped_cols") or []) + [drop] + ren.pop(drop, [])
+                )
+            history["renamed_cols"] = ren
+            for k in self._COL_LISTS:
+                history[k] = [sub.get(c, c) for c in m.get(k) or [] if c != drop]
+        return {
+            "schema": T.StructType(list(out.values())).jsonValue(),
+            "added_cols": added,
+            **history,
+        }
 
     # ---------- read ----------
 
@@ -1944,7 +1993,6 @@ class ManifestTable:
             }
         n_buckets = m["n_buckets"]
         key_cols = m["key_cols"]
-        cur_schema = T.StructType.fromJson(m["schema"])
 
         # watermark (retention_delete's cutoff or compact's purge bound,
         # whichever is later — see _watermark): an upsert older than it is
@@ -1968,14 +2016,13 @@ class ManifestTable:
                 | (F.col("ts") >= F.lit(wm))
             )
 
-        # 1. schema evolution (additive) BEFORE touching data
-        payload_fields = [
-            f for f in batch.schema.fields if f.name not in ("op", "lsn")
-        ]
-        new_schema, added_cols = self._evolve_schema(
-            cur_schema,
-            T.StructType(payload_fields),
-            tombstoned=self._tombstoned_names(m),
+        # 1. schema evolution BEFORE touching data: a refused change
+        # raises here, before any staging job
+        payload = T.StructType(
+            [f for f in batch.schema.fields if f.name not in ("op", "lsn")]
+        )
+        new_schema = T.StructType.fromJson(
+            self._schema_change(m, payload)["schema"]
         )
 
         # 2. within-batch dedup: per-key max-version aggregate (max_by with
@@ -2117,11 +2164,6 @@ class ManifestTable:
             n_buckets) carries from ``mc``: the rebase check guarantees it
             equals the merge-start layout (a layout change redoes the
             merge)."""
-            schema_c, added_c = self._evolve_schema(
-                T.StructType.fromJson(mc["schema"]),
-                T.StructType(payload_fields),
-                tombstoned=self._tombstoned_names(mc),
-            )
             appends = mode == "delta"
             out = {
                 **self._file_set(
@@ -2134,8 +2176,7 @@ class ManifestTable:
                     rows=rows_by_bucket,
                 ),
                 "epoch_id": epoch_key,
-                "schema": schema_c.jsonValue(),
-                "added_cols": added_c,
+                **self._schema_change(mc, payload),
             }
             if not appends:
                 # clustering markers drop: the touched buckets are
@@ -2312,15 +2353,9 @@ class ManifestTable:
                 f"payload schema is missing required columns {missing} "
                 f"(key columns + the 'ts' version column)"
             )
-        payload_fields = list(payload_schema.fields)
         staged_rows_total = sum(int(v) for v in rows_by_bucket.values())
 
         def _assemble(mc: dict[str, Any]) -> dict[str, Any]:
-            schema_c, added_c = self._evolve_schema(
-                T.StructType.fromJson(mc["schema"]),
-                T.StructType(payload_fields),
-                tombstoned=self._tombstoned_names(mc),
-            )
             # a delta append leaves every base file untouched: files,
             # bucket_rows and the clustering claim carry from mc
             return {
@@ -2329,8 +2364,7 @@ class ManifestTable:
                     rows=rows_by_bucket,
                 ),
                 "epoch_id": epoch_key,
-                "schema": schema_c.jsonValue(),
-                "added_cols": added_c,
+                **self._schema_change(mc, payload_schema),
             }
 
         def _rebase(mc: dict[str, Any], _retries_left: int):
@@ -3215,9 +3249,12 @@ class ManifestTable:
         Driver cost: the manifest (already in hand) plus one storage LIST
         per distinct staging dir for object sizes — the same granularity
         ``vacuum`` lists at, metadata-only, no file contents read."""
+        return self._files_of(self.manifest(version))
+
+    def _files_of(self, m: dict[str, Any]) -> DataFrame:
+        """:meth:`files` of snapshot ``m``."""
         import datetime as _dt
 
-        m = self.manifest(version)
         stats = m.get("file_stats") or {}
         # (relpath, bucket, kind)
         entries = [(p, b, kind) for b, p, kind in _data_files(m)]
@@ -3252,8 +3289,8 @@ class ManifestTable:
         count — the one-look surface for compaction planning ("which
         buckets have enough deltas to fold?") and skew diagnosis.  Built
         from ``files()``, so the cost is the same metadata-only LISTs."""
-        f = self.files(version)
         m = self.manifest(version)
+        f = self._files_of(m)
         dr = {int(b): int(n) for b, n in (m.get("delta_rows") or {}).items()}
         agg = (
             f.groupBy("bucket")
@@ -3740,20 +3777,8 @@ class ManifestTable:
                     ins_map[c] = f"s.{c}"
         elif when_not_matched_insert is not None:
             raise ValueError('when_not_matched_insert must be "all" or a dict')
-        if new_cols:
-            clash = [c for c in new_cols if c in _RESERVED_COLS]
-            if clash:
-                raise ValueError(
-                    f"cannot evolve reserved column names {clash} "
-                    "(op/lsn/_lsn/_deleted/_bucket/_pb/_z)"
-                )
-            dead = [c for c in new_cols if c in self._tombstoned_names(m)]
-            if dead:
-                raise ValueError(
-                    f"cannot evolve {dead}: dropped/renamed-away names whose "
-                    "bytes live files still carry — physicalize first "
-                    "(rebucket / compact(min_delta_files=0))"
-                )
+        for c in new_cols:
+            self._admit(m, c)
 
         if validate_source_unique:
             dup = (
@@ -4055,24 +4080,29 @@ class ManifestTable:
         (OPTIMIZE).  The commit has identical files/deltas to its parent,
         so the change feed's fast-path chain walk sees zero added files
         and ``changes()`` across it stays O(changes)."""
+        return self._set_col_list("stats_cols", stats_cols, "set-stats")
+
+    def _set_col_list(
+        self, field: str, cols: list[str], verb: str
+    ) -> dict[str, Any]:
+        """Metadata-only commit of column list ``field`` (``stats_cols`` /
+        ``bloom_filter_cols``): every name must be a schema column, and an
+        unchanged list is Skipped."""
         m = self.manifest()
         have = {f.name for f in T.StructType.fromJson(m["schema"]).fields}
-        missing = [c for c in stats_cols if c not in have]
+        missing = [c for c in cols if c not in have]
         if missing:
-            raise ValueError(f"stats_cols not in schema: {missing}")
-        if list(stats_cols) == list(m.get("stats_cols") or []):
+            raise ValueError(f"{field} not in schema: {missing}")
+        if list(cols) == list(m.get(field) or []):
             return {
                 "status": "Skipped",
-                "reason": "stats_cols unchanged",
+                "reason": f"{field} unchanged",
                 "version": m["version"],
             }
         return self._commit(
             m,
-            {
-                "epoch_id": f"set-stats:{m['version'] + 1}",
-                "stats_cols": list(stats_cols),
-            },
-            {"stats_cols": list(stats_cols)},
+            {"epoch_id": f"{verb}:{m['version'] + 1}", field: list(cols)},
+            {field: list(cols)},
         )
 
     # known maintenance-policy property keys (the `maintain.py auto`
@@ -4286,25 +4316,7 @@ class ManifestTable:
         one ``compact(min_delta_files=0)`` backfills the whole table.  The
         commit has identical files to its parent, so the change-feed fast
         path walks through it."""
-        m = self.manifest()
-        have = {f.name for f in T.StructType.fromJson(m["schema"]).fields}
-        missing = [c for c in cols if c not in have]
-        if missing:
-            raise ValueError(f"bloom_filter_cols not in schema: {missing}")
-        if list(cols) == list(m.get("bloom_filter_cols") or []):
-            return {
-                "status": "Skipped",
-                "reason": "bloom_filter_cols unchanged",
-                "version": m["version"],
-            }
-        return self._commit(
-            m,
-            {
-                "epoch_id": f"set-bloom:{m['version'] + 1}",
-                "bloom_filter_cols": list(cols),
-            },
-            {"bloom_filter_cols": list(cols)},
-        )
+        return self._set_col_list("bloom_filter_cols", cols, "set-bloom")
 
     # ---------- CHECK constraints (write-time data quality contracts) ----------
 
@@ -4432,7 +4444,7 @@ class ManifestTable:
         )
         if has_data:
             violations = (
-                self.read()
+                self._scan(m)
                 .filter(
                     F.when(F.expr(expr), F.lit(False)).otherwise(F.lit(True))
                 )
@@ -4484,41 +4496,19 @@ class ManifestTable:
         files are rewritten: readers null-fill the column for every
         existing file (the same explicit-schema mechanism merge evolution
         relies on), the next merge may populate it, and ``changes()``
-        across the commit reports nothing (identical files).  Same guards
-        as merge evolution: reserved, existing, and tombstoned (dropped /
+        across the commit reports nothing (identical files).  The name
+        passes the same admission as merge evolution (``_schema_change``):
+        reserved, existing, non-identifier and tombstoned (dropped /
         rename-retired while live files still carry the bytes) names are
         rejected."""
-        import re as _re
-
         if isinstance(dtype, str):
             dtype = T._parse_datatype_string(dtype)
         m = self.manifest()
-        schema = T.StructType.fromJson(m["schema"])
-        names = [f.name for f in schema.fields]
-        if name in names:
-            raise ValueError(f"column {name!r} already exists")
-        if name in _RESERVED_COLS:
-            raise ValueError(
-                f"{name!r} is an engine-reserved name "
-                f"(op/lsn/_lsn/_deleted/_bucket/_pb/_z)"
-            )
-        if name in self._tombstoned_names(m):
-            raise SchemaEvolutionError(
-                f"{name!r} was previously dropped or renamed away and live "
-                f"files still carry it — re-adding would resurrect stale "
-                f"values under name-based parquet resolution; physicalize "
-                f"first (rebucket / compact(min_delta_files=0))"
-            )
-        if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-            raise ValueError(f"invalid column name {name!r}")
         return self._commit(
             m,
             {
                 "epoch_id": f"add-column:{name}",
-                "schema": T.StructType(
-                    list(schema.fields) + [T.StructField(name, dtype, True)]
-                ).jsonValue(),
-                "added_cols": [name],
+                **self._schema_change(m, add=T.StructField(name, dtype)),
             },
             {"name": name, "dtype": dtype.simpleString()},
         )
@@ -4528,73 +4518,58 @@ class ManifestTable:
     ) -> dict[str, Any]:
         """``ALTER TABLE ALTER COLUMN TYPE`` restricted to safe promotions
         (Iceberg type promotion: tinyint→…→bigint, float→double — never
-        across families, never narrowing) — a METADATA-ONLY commit, the
-        explicit-DDL twin of the widening the merge path performs when a
-        batch arrives wider than the table.  Files written under the
-        narrow type read back up-cast through the widened schema (pinned
-        by the evolution suite); CHECK constraints keep resolving (a
-        widened numeric satisfies the same comparisons)."""
+        across families, never narrowing, never a key column or ``ts``) —
+        a METADATA-ONLY commit under the type rule of the merge path's
+        widening (``_schema_change``).  Files written under the narrow type
+        read back up-cast through the widened schema (pinned by the
+        evolution suite); CHECK constraints keep resolving (a widened
+        numeric satisfies the same comparisons)."""
         if isinstance(dtype, str):
             dtype = T._parse_datatype_string(dtype)
         m = self.manifest()
-        schema = T.StructType.fromJson(m["schema"])
-        field = next((f for f in schema.fields if f.name == name), None)
-        if field is None:
-            names = [f.name for f in schema.fields]
-            raise ValueError(f"no column {name!r} in schema (have {names})")
-        if name == "ts" or name in m["key_cols"]:
-            raise ValueError(
-                f"{name!r} is a key/version column — its type is the "
-                f"table's row identity and hash-bucket input; widening it "
-                f"changes table identity (create a new table)"
-            )
-        if field.dataType == dtype:
+        change = self._schema_change(m, widen=T.StructField(name, dtype))
+        if change["schema"] == m["schema"]:
             return {
                 "status": "Skipped",
                 "reason": "type unchanged",
                 "version": m["version"],
             }
-        if not self._widens(field.dataType, dtype):
-            raise SchemaEvolutionError(
-                f"cannot alter {name!r} from "
-                f"{field.dataType.simpleString()} to {dtype.simpleString()}:"
-                f" only safe promotions within a numeric family are allowed"
-                f" (tinyint→smallint→int→bigint, float→double)"
-            )
         return self._commit(
             m,
-            {
-                "epoch_id": f"widen-column:{name}",
-                "schema": T.StructType(
-                    [
-                        T.StructField(name, dtype, f.nullable)
-                        if f.name == name
-                        else f
-                        for f in schema.fields
-                    ]
-                ).jsonValue(),
-            },
+            {"epoch_id": f"widen-column:{name}", **change},
             {"name": name, "dtype": dtype.simpleString()},
         )
 
-    def _constraints_referencing(self, col: str) -> list[str]:
-        """Names of constraints whose expression references ``col`` —
-        detected by re-resolving each expression against the schema WITHOUT
-        the column (analysis-only, no job).  Used to guard rename/drop."""
-        cons = self.manifest().get("constraints") or {}
+    def _check_unreferenced(self, m: dict[str, Any], col: str) -> None:
+        """Refuse a rename/drop of ``col`` while one of ``m``'s CHECK
+        constraints references it — detected by re-resolving each
+        expression against the schema WITHOUT the column (analysis-only,
+        no job)."""
+        cons = m.get("constraints") or {}
         if not cons:
-            return []
-        reduced = T.StructType(
-            [f for f in self.schema().fields if f.name != col]
+            return
+        probe = self.spark.createDataFrame(
+            [],
+            T.StructType(
+                [
+                    f
+                    for f in T.StructType.fromJson(m["schema"]).fields
+                    if f.name != col
+                ]
+            ),
         )
-        probe = self.spark.createDataFrame([], reduced)
         hits = []
         for cname, cexpr in sorted(cons.items()):
             try:
                 probe.filter(F.expr(cexpr)).schema
             except Exception:
                 hits.append(cname)
-        return hits
+        if hits:
+            raise ValueError(
+                f"column {col!r} is referenced by CHECK constraint(s) "
+                f"{hits} — drop_constraint first (re-add it against a new "
+                f"name after a rename: no silent expression rewriting)"
+            )
 
     def rename_column(self, old: str, new: str) -> dict[str, Any]:
         """``ALTER TABLE RENAME COLUMN`` — a METADATA-ONLY commit (Iceberg
@@ -4611,78 +4586,26 @@ class ManifestTable:
         columns rename freely (bucketing hashes values, not names); every
         config list referencing the column (``key_cols``, ``stats_cols``,
         ``bloom_filter_cols``, clustering markers) is updated in the same
-        commit.  The files are identical to the parent's, so the change
-        feed's fast-path chain walk crosses it untouched, and ``changes()``
-        across the rename reports zero phantom updates.
+        commit (``_schema_change``).  The files are identical to the
+        parent's, so the change feed's fast-path chain walk crosses it
+        untouched, and ``changes()`` across the rename reports zero
+        phantom updates.
 
         Constraints: the retired name cannot be re-introduced (by merge
         schema evolution or a later rename) while live files still carry
         it — a full rewrite (``rebucket`` or all-bucket
         ``compact(min_delta_files=0)``) physicalizes current names and
         frees it.  ``ts`` is the engine's version column and cannot be
-        renamed.  A change stream still emitting the old name fails the
-        next merge loudly (see ``_evolve_schema``); derived tables whose
-        definitions reference the old name must be re-created — their next
-        sync fails in analysis, never silently."""
-        import re as _re
-
+        renamed, nor can a column a CHECK constraint references.  A change
+        stream still emitting the old name fails the next merge loudly;
+        derived tables whose definitions reference the old name must be
+        re-created — their next sync fails in analysis, never silently."""
         m = self.manifest()
-        schema = T.StructType.fromJson(m["schema"])
-        names = [f.name for f in schema.fields]
-        if old not in names:
-            raise ValueError(f"no column {old!r} in schema (have {names})")
-        if old == "ts":
-            raise ValueError(
-                "ts is the engine's version-ordering column and cannot be "
-                "renamed"
-            )
-        if new in names:
-            raise ValueError(f"column {new!r} already exists")
-        if new in _RESERVED_COLS:
-            raise ValueError(
-                f"{new!r} is an engine-reserved name "
-                f"(op/lsn/_lsn/_deleted/_bucket/_pb/_z)"
-            )
-        if new in self._tombstoned_names(m):
-            raise ValueError(
-                f"{new!r} was previously dropped or renamed away and live "
-                f"files still carry it — physicalize first "
-                f"(rebucket / compact(min_delta_files=0))"
-            )
-        if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", new):
-            raise ValueError(f"invalid column name {new!r}")
-        refs = self._constraints_referencing(old)
-        if refs:
-            raise ValueError(
-                f"column {old!r} is referenced by CHECK constraint(s) "
-                f"{refs} — drop_constraint first, rename, then re-add "
-                f"against the new name (no silent expression rewriting)"
-            )
-
-        ren = {k: list(v) for k, v in (m.get("renamed_cols") or {}).items()}
-        ren[new] = [old] + ren.pop(old, [])
-        fields = [
-            T.StructField(new, f.dataType, f.nullable) if f.name == old else f
-            for f in schema.fields
-        ]
-
-        def sub(c: str) -> str:
-            return new if c == old else c
-
+        change = self._schema_change(m, rename=(old, new))
+        self._check_unreferenced(m, old)
         return self._commit(
             m,
-            {
-                "epoch_id": f"rename:{old}>{new}",
-                "schema": T.StructType(fields).jsonValue(),
-                "key_cols": [sub(c) for c in m["key_cols"]],
-                "stats_cols": [sub(c) for c in (m.get("stats_cols") or [])],
-                "bloom_filter_cols": [
-                    sub(c) for c in (m.get("bloom_filter_cols") or [])
-                ],
-                "sorted_by": [sub(c) for c in (m.get("sorted_by") or [])],
-                "zordered_by": [sub(c) for c in (m.get("zordered_by") or [])],
-                "renamed_cols": ren,
-            },
+            {"epoch_id": f"rename:{old}>{new}", **change},
             {"renamed": {old: new}},
         )
 
@@ -4699,58 +4622,15 @@ class ManifestTable:
         ``dropped_cols``: re-introducing it while live files still carry
         the bytes would RESURRECT stale values under name-based parquet
         resolution, so merges and renames reject it until a full rewrite
-        clears the tombstones.  Key columns and ``ts`` (the version
-        column) cannot be dropped; the column is auto-removed from
-        ``stats_cols`` / ``bloom_filter_cols`` / clustering markers in the
-        same commit."""
+        clears the tombstones.  Key columns, ``ts`` (the version column)
+        and columns a CHECK constraint references cannot be dropped; the
+        column is auto-removed from ``stats_cols`` / ``bloom_filter_cols``
+        / clustering markers in the same commit (``_schema_change``)."""
         m = self.manifest()
-        schema = T.StructType.fromJson(m["schema"])
-        names = [f.name for f in schema.fields]
-        if name not in names:
-            raise ValueError(f"no column {name!r} in schema (have {names})")
-        if name in m["key_cols"]:
-            raise ValueError(
-                f"{name!r} is a key column — keys identify rows and route "
-                f"buckets; dropping one changes table identity (create a "
-                f"new table)"
-            )
-        if name == "ts":
-            raise ValueError(
-                "ts is the engine's version-ordering column and cannot be "
-                "dropped"
-            )
-        refs = self._constraints_referencing(name)
-        if refs:
-            raise ValueError(
-                f"column {name!r} is referenced by CHECK constraint(s) "
-                f"{refs} — drop_constraint first"
-            )
-        ren = {k: list(v) for k, v in (m.get("renamed_cols") or {}).items()}
-        chain = [name] + ren.pop(name, [])
-        dropped = list(m.get("dropped_cols") or []) + chain
+        change = self._schema_change(m, drop=name)
+        self._check_unreferenced(m, name)
         return self._commit(
-            m,
-            {
-                "epoch_id": f"drop-column:{name}",
-                "schema": T.StructType(
-                    [f for f in schema.fields if f.name != name]
-                ).jsonValue(),
-                "stats_cols": [
-                    c for c in (m.get("stats_cols") or []) if c != name
-                ],
-                "bloom_filter_cols": [
-                    c for c in (m.get("bloom_filter_cols") or []) if c != name
-                ],
-                "sorted_by": [
-                    c for c in (m.get("sorted_by") or []) if c != name
-                ],
-                "zordered_by": [
-                    c for c in (m.get("zordered_by") or []) if c != name
-                ],
-                "renamed_cols": ren,
-                "dropped_cols": dropped,
-            },
-            {"dropped": name},
+            m, {"epoch_id": f"drop-column:{name}", **change}, {"dropped": name}
         )
 
     # ---------- named refs (Iceberg tags analogue) ----------
@@ -4766,8 +4646,6 @@ class ManifestTable:
         (atomic; a concurrent same-name tag loses loudly); ``replace=True``
         re-points an existing name (delete + re-put — an ops verb, not a
         concurrency primitive: racing replaces are last-writer-wins)."""
-        import re
-
         if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name or ""):
             raise ValueError(
                 f"invalid tag name {name!r}: use letters, digits, '.', "
@@ -4929,8 +4807,6 @@ class ManifestTable:
 
     @staticmethod
     def _check_ref_name(kind: str, name: str) -> None:
-        import re
-
         if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name or ""):
             raise ValueError(
                 f"invalid {kind} name {name!r}: use letters, digits, '.', "

@@ -169,12 +169,10 @@ class _SinkWriterCore:
                 f"{missing} (the table's key columns + the 'ts' version "
                 f"column)"
             )
-        # fail loudly NOW (not at first commit) on retired names / type
-        # conflicts; the commit re-derives evolution per attempt
-        evolved, _ = table._evolve_schema(
-            T.StructType.fromJson(m["schema"]),
-            payload,
-            tombstoned=table._tombstoned_names(m),
+        # fail loudly NOW (not at first commit) on a refused schema change;
+        # the commit re-derives evolution per attempt
+        evolved = T.StructType.fromJson(
+            table._schema_change(m, payload)["schema"]
         )
         evolved_types = {f.name: f.dataType for f in evolved.fields}
         # file payload columns: the sink batch's columns, at the EVOLVED

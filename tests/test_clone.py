@@ -261,6 +261,20 @@ def test_clone_of_clone_points_at_original_bytes(spark, source, tmp_root):
     assert c2.manifest()["cloned_from"]["root"] == c1.root
 
 
+def test_historical_clone_of_localized_clone_keeps_sizes(
+    spark, source, tmp_root
+):
+    """A historical clone takes the external sizes of the snapshot it
+    clones: the head of a localized clone no longer records them."""
+    c1 = source.clone(os.path.join(tmp_root, "f1"))
+    v0 = c1.current_version()
+    c1.compact(min_delta_files=0)  # localizes: the head has no ext refs
+    c2 = c1.clone(os.path.join(tmp_root, "f2"), version=v0)
+    refs = _ext_refs(c2)
+    assert refs and set(c2.manifest()["external_sizes"]) == set(refs)
+    assert c2.files().filter("size_bytes IS NULL").count() == 0
+
+
 def test_clone_is_spark_free_and_metadata_tables_work(spark, source,
                                                       tmp_root):
     # metadata-only verb on a handle with no SparkSession

@@ -14,11 +14,17 @@ rename.  After each verb:
 * ``external_sizes`` only names files the commit still references;
 * the file set is consistent (``ManifestTable._file_set``): each total
   is the sum of its per-bucket counters, ``file_stats`` names only live
-  files, and ``check(verify_rows=True)`` finds the footers agree.
+  files, and ``check(verify_rows=True)`` finds the footers agree;
+* the columns are consistent (``ManifestTable._schema_change``): every
+  name a column list, ``added_cols`` or a rename chain holds is a schema
+  column, and no schema column is tombstoned (dropped, or an old name of
+  a rename).
 """
 from __future__ import annotations
 
 import datetime as dt
+
+from pyspark.sql import types as T
 
 from event_driven_etl_msc_research_spark.schemas import TRANSCRIPT_SCHEMA
 from event_driven_etl_msc_research_spark.sinks.manifest import (
@@ -30,6 +36,8 @@ T0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
 CONFIG = ("properties", "retention_ts", "lateness_ts", "cloned_from")
 META = ("constraints", "bloom_filter_cols", "stats_cols", "renamed_cols",
         "dropped_cols")
+COL_LISTS = ("key_cols", "stats_cols", "bloom_filter_cols", "sorted_by",
+             "zordered_by")
 
 
 def _cut(s: int) -> dt.datetime:
@@ -88,6 +96,17 @@ def test_every_verb_carries_config_and_resets_per_commit_fields(
                 (m.get("delta_rows") or {}).values()
             ), ek
             assert set(m.get("file_stats") or {}) <= live, ek
+            cols = set(T.StructType.fromJson(m["schema"]).fieldNames())
+            named = set(m.get("added_cols") or []) | set(
+                m.get("renamed_cols") or {}
+            )
+            for k in COL_LISTS:
+                named |= set(m.get(k) or [])
+            assert named <= cols, (ek, named - cols)
+            tomb = set(m.get("dropped_cols") or []).union(
+                *(m.get("renamed_cols") or {}).values()
+            )
+            assert not cols & tomb, (ek, cols & tomb)
             assert t.check(version=v, verify_rows=True)["status"] == (
                 "Success"
             ), ek

@@ -106,6 +106,7 @@ def test_resolution_never_lists_manifest_dir(spark, tmp_root):
     [
         "delta_merge", "cow_merge", "compact",
         "delete_where", "update_where", "merge_into",
+        "rename_column", "drop_column", "add_constraint",
     ],
 )
 def test_write_verbs_read_the_head_once(spark, tmp_root, verb):
@@ -117,6 +118,9 @@ def test_write_verbs_read_the_head_once(spark, tmp_root, verb):
     t = ManifestTable.create(spark, root, TRANSCRIPT_SCHEMA, n_buckets=2, storage=st)
     mode = "cow" if verb == "cow_merge" else "delta"
     t.merge(_batch(spark, 100), epoch_id=1, mode=mode)
+    if verb == "drop_column":
+        # the constraint guard must check against the same snapshot
+        t.add_constraint("has_text", "text IS NOT NULL")
     head = t._manifest_key(t.current_version())
     st.calls.clear()
     if verb == "compact":
@@ -132,6 +136,12 @@ def test_write_verbs_read_the_head_once(spark, tmp_root, verb):
             when_matched_update={"text": "s.text"},
             when_not_matched_insert="all",
         )
+    elif verb == "rename_column":
+        res = t.rename_column("tool", "tool_name")
+    elif verb == "drop_column":
+        res = t.drop_column("tool")
+    elif verb == "add_constraint":
+        res = t.add_constraint("has_conv", "conv_id IS NOT NULL")
     else:
         # the same keys again: a CoW merge rewrites the touched buckets
         res = t.merge(_batch(spark, 200), epoch_id=2, mode=mode)
@@ -155,6 +165,7 @@ _SCAN_ONCE = {
     "replica_sync_log": (1, 3),
     "replica_sync_snapshot": (1, 2),
     "clone": (1, 2),
+    "partitions": (1, 2),
 }
 
 
@@ -177,6 +188,8 @@ def _verb_call(case, spark, t, tmp_root):
         return lambda: t.update_where("turn_idx = 0", {"text": "'x'"}, epoch_id=50)
     if case == "clone":
         return lambda: t.clone(os.path.join(tmp_root, "clone"))
+    if case == "partitions":
+        return t.partitions
     rep = ReplicaTable.create(spark, os.path.join(tmp_root, "rep"), t)
     if case == "replica_sync_log":
         # the first sync takes the snapshot path; the next ships the log

@@ -177,3 +177,58 @@ def test_added_reserved_column_rejected(spark, tmp_root):
     # table unchanged, subsequent valid merges still work
     t.merge(_changes(spark, [("U", 3, "2024-01-03", "c", 3)], "BIGINT"), 2)
     assert t.read().count() == 2
+
+
+@pytest.mark.parametrize("mode", ["cow", "delta"])
+def test_key_widening_batch_refused(spark, tmp_root, mode):
+    """A batch carrying a key column wider than the table's type is
+    refused before any staging: ``xxhash64`` hashes an ``int`` and a
+    ``bigint`` differently, so a widened key would land its new versions
+    in another bucket and split keys (21 rows for 20 keys).  The same
+    batch cast to the table type lands."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from event_driven_etl_msc_research_spark.sinks.manifest import (
+        ManifestTable,
+        SchemaEvolutionError,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.IntegerType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("v", T.StringType()),
+        ]
+    )
+    t = ManifestTable.create(
+        spark, os.path.join(tmp_root, "kw"), schema, key_cols=["k"], n_buckets=8
+    )
+    t.merge(
+        spark.range(20).selectExpr(
+            "'U' op", "id lsn", "CAST(id AS INT) k",
+            "TIMESTAMP'2024-01-01' ts", "concat('old', id) v",
+        ),
+        0,
+        mode=mode,
+    )
+    wide = spark.range(1).selectExpr(
+        "'U' op", "100L lsn", "5L k", "TIMESTAMP'2024-02-01' ts", "'new5' v"
+    )
+
+    def tree():
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(t.root) for f in fs
+        )
+
+    v, before = t.current_version(), tree()
+    with pytest.raises(SchemaEvolutionError, match="'k'"):
+        t.merge(wide, 1, mode=mode)
+    assert t.current_version() == v and tree() == before  # nothing staged
+    assert t.schema()["k"].dataType == T.IntegerType()
+
+    assert t.merge(wide.withColumn("k", F.col("k").cast("int")), 1, mode=mode)[
+        "status"
+    ] == "Success"
+    assert t.read().count() == t.count() == 20
+    assert [r.v for r in t.read().filter("k = 5").collect()] == ["new5"]
