@@ -16,48 +16,34 @@ WRITE PATH — driver-side pyarrow, never a Spark job: lineage rows are a few
 hundred bytes of metadata per epoch, but ``spark.createDataFrame(...).write``
 costs a full job submission (~100 ms of scheduler latency) PER EPOCH — at a
 100-epochs/min binlog tail that is real ingest-path overhead.  Rows are
-buffered and flushed as one small parquet file per ``flush_every`` records
-(pyarrow, microseconds); a Failed status always flushes immediately so crash
-forensics never sit in a lost buffer.  A torn lineage write still cannot
-corrupt table state, which is guarded solely by the manifest commit.
+buffered until ``flush()``, which serializes each buffer to one small parquet
+object in memory and lands it with ONE ``TableStorage.put_if_absent`` (the
+table's own storage, so lineage is as portable as the manifest); a Failed
+status always flushes immediately so crash forensics never sit in a lost
+buffer.  A torn lineage write still cannot corrupt table state, which is
+guarded solely by the manifest commit.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import itertools
-import os
 import threading
-import time
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .schemas import CHUNK_REGISTRY_SCHEMA, LINEAGE_SCHEMA
+from .sinks.storage import LocalFSStorage, TableStorage
 
-_LINEAGE_ARROW = pa.schema(
-    [
-        pa.field("epoch_id", pa.int64(), nullable=False),
-        pa.field("stage", pa.string(), nullable=False),
-        pa.field("status", pa.string(), nullable=False),
-        pa.field("detail", pa.string()),
-        pa.field("duration_s", pa.float64()),
-        pa.field("tenant_id", pa.string()),
-        pa.field("ts", pa.timestamp("us", tz="UTC"), nullable=False),
-    ]
-)
+_LINEAGE_DIR = "_lineage"
+_REGISTRY_DIR = "_chunk_registry"
 
-_REGISTRY_ARROW = pa.schema(
-    [
-        pa.field("epoch_id", pa.int64(), nullable=False),
-        pa.field("partition_id", pa.int32(), nullable=False),
-        pa.field("n_records", pa.int64(), nullable=False),
-        pa.field("tenant_id", pa.string()),
-        pa.field("stage", pa.string(), nullable=False),
-        pa.field("ts", pa.timestamp("us", tz="UTC"), nullable=False),
-    ]
-)
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
+_REGISTRY_ARROW = to_arrow_schema(CHUNK_REGISTRY_SCHEMA)
 
 
 def _now() -> dt.datetime:
@@ -70,14 +56,13 @@ class LineageLog:
         spark: SparkSession,
         root: str,
         tenant_id: str | None = None,
-        flush_every: int = 1,
+        storage: TableStorage | None = None,
     ):
         self.spark = spark
         self.root = root
         self.tenant_id = tenant_id
-        self.flush_every = max(1, flush_every)
-        self.lineage_dir = os.path.join(root, "_lineage")
-        self.registry_dir = os.path.join(root, "_chunk_registry")
+        # the table's storage (ManifestTable.create's default for a bare root)
+        self.storage = storage or LocalFSStorage(root)
         self._buf_lineage: list[dict] = []
         self._buf_registry: list[dict] = []
         self._seq = itertools.count()
@@ -89,8 +74,8 @@ class LineageLog:
         self._lock = threading.Lock()
         # unique per LOG INSTANCE, not just per process: two engines over the
         # same table root in one process (e.g. crash-recovery tests) must not
-        # overwrite each other's flushed files
-        self._tag = f"{os.getpid():x}-{time.monotonic_ns():x}"
+        # collide on each other's shard keys
+        self._tag = uuid.uuid4().hex[:16]
 
     def record_stage(
         self,
@@ -112,16 +97,13 @@ class LineageLog:
                     "ts": _now(),
                 }
             )
-            n = len(self._buf_lineage)
         # Failed rows flush NOW — the process may be about to die
-        if status == "Failed" or n >= self.flush_every:
+        if status == "Failed":
             self.flush()
 
     def record_partitions(
         self, epoch_id: int, stage: str, rows_by_partition: dict[int, int]
     ) -> None:
-        if not rows_by_partition:
-            return
         now = _now()
         with self._lock:
             self._buf_registry.extend(
@@ -135,12 +117,19 @@ class LineageLog:
                 }
                 for p, n in rows_by_partition.items()
             )
-            n_buf = len(self._buf_registry)
-        if n_buf >= self.flush_every:
-            self.flush()
+
+    def _put(self, prefix: str, table: pa.Table, seq: int, suffix: str = "") -> None:
+        """One shard object: ``<prefix>/part-<first epoch>-<tag>-<seq>``."""
+        first = int(table.column("epoch_id")[0].as_py()) if table.num_rows else 0
+        sink = pa.BufferOutputStream()
+        pq.write_table(table, sink)
+        self.storage.put_if_absent(
+            f"{prefix}/part-{first:012d}-{self._tag}-{seq:06d}{suffix}.parquet",
+            sink.getvalue().to_pybytes(),
+        )
 
     def flush(self) -> None:
-        """Drain both buffers to one small parquet file each (driver-side).
+        """Drain both buffers to one small parquet object each (driver-side).
 
         Thread-safe: the buffer lists are SWAPPED out under the lock and
         serialized outside it, so a concurrent ``record_*`` (streaming
@@ -150,78 +139,60 @@ class LineageLog:
         twice."""
         with self._lock:
             bufs = (self._buf_lineage, self._buf_registry)
-            snap_lineage, snap_registry = list(bufs[0]), list(bufs[1])
-            bufs[0].clear()
-            bufs[1].clear()
+            self._buf_lineage, self._buf_registry = [], []
             # sequence numbers minted under the lock too: two concurrent
-            # flushes must not collide on a file name
+            # flushes must not collide on a key
             seqs = [next(self._seq), next(self._seq)]
-        for buf, seq, schema, out_dir in (
-            (snap_lineage, seqs[0], _LINEAGE_ARROW, self.lineage_dir),
-            (snap_registry, seqs[1], _REGISTRY_ARROW, self.registry_dir),
+        for buf, seq, schema, prefix in zip(
+            bufs, seqs, (_LINEAGE_ARROW, _REGISTRY_ARROW), (_LINEAGE_DIR, _REGISTRY_DIR)
         ):
-            if not buf:
-                continue
-            os.makedirs(out_dir, exist_ok=True)
-            table = pa.Table.from_pylist(buf, schema=schema)
-            fname = (
-                f"part-{buf[0]['epoch_id']:012d}-{self._tag}-"
-                f"{seq:06d}.parquet"
-            )
-            pq.write_table(table, os.path.join(out_dir, fname))
+            if buf:
+                self._put(prefix, pa.Table.from_pylist(buf, schema=schema), seq)
 
     def compact(self, max_files: int = 16) -> int:
-        """Fold the per-epoch parquet shards into one file per directory
-        once a directory exceeds ``max_files`` — the lineage analogue of the
+        """Fold the per-epoch parquet shards into one object per prefix
+        once a prefix exceeds ``max_files`` — the lineage analogue of the
         data path's ``compact()``: a long-running tail flushes one small
-        file per epoch, and an unbounded tiny-file tail would eventually
-        dominate `lineage()` read planning.  Returns files removed.
+        object per epoch, and an unbounded tiny-object tail would eventually
+        dominate `lineage()` read planning.  Returns objects removed.
 
-        Multi-instance safe: only THIS instance's shards (filenames carry
+        Multi-instance safe: only THIS instance's shards (keys carry
         ``self._tag``) are folded — two engines logging to one table root
-        (a supported multi-writer config) each compact their own files and
-        can never concurrently fold, double-write, or unlink each other's.
-        Crash window: the combined file is fully written (tmp + rename)
-        before the inputs are deleted, so a crash can duplicate
-        already-compacted rows but never lose rows — lineage is
-        observability, and the table state it describes is guarded solely
-        by the manifest commit."""
+        (a supported multi-writer config) each compact their own shards and
+        can never concurrently fold, double-write, or delete each other's.
+        Crash window: the combined object is PUT before the inputs are
+        deleted, so a crash can duplicate already-compacted rows but never
+        lose rows — lineage is observability, and the table state it
+        describes is guarded solely by the manifest commit."""
         removed = 0
-        for out_dir in (self.lineage_dir, self.registry_dir):
-            if not os.path.isdir(out_dir):
-                continue
-            parts = sorted(
-                f
-                for f in os.listdir(out_dir)
-                if f.endswith(".parquet") and self._tag in f
-            )
+        for prefix in (_LINEAGE_DIR, _REGISTRY_DIR):
+            parts = [
+                o.key
+                for o in self.storage.list(prefix)
+                if o.key.endswith(".parquet") and self._tag in o.key
+            ]
             if len(parts) <= max_files:
                 continue
             table = pa.concat_tables(
-                pq.read_table(os.path.join(out_dir, f)) for f in parts
+                pq.read_table(pa.BufferReader(self.storage.get(k))) for k in parts
             )
-            # compacted shard keeps the naming scheme (epoch of its first
-            # row, this instance's tag, a fresh sequence number)
-            first_epoch = int(table.column("epoch_id")[0].as_py()) if table.num_rows else 0
-            fname = (
-                f"part-{first_epoch:012d}-{self._tag}-"
-                f"{next(self._seq):06d}-compacted.parquet"
-            )
-            tmp = os.path.join(out_dir, f".{fname}.tmp")
-            pq.write_table(table, tmp)
-            os.rename(tmp, os.path.join(out_dir, fname))
-            for f in parts:
-                os.unlink(os.path.join(out_dir, f))
+            self._put(prefix, table, next(self._seq), "-compacted")
+            for k in parts:
+                self.storage.delete(k)
                 removed += 1
         return removed
 
     def lineage(self) -> DataFrame:
         self.flush()
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.lineage_dir)
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(
+            self.storage.spark_path(_LINEAGE_DIR)
+        )
 
     def chunk_registry(self) -> DataFrame:
         self.flush()
-        return self.spark.read.schema(CHUNK_REGISTRY_SCHEMA).parquet(self.registry_dir)
+        return self.spark.read.schema(CHUNK_REGISTRY_SCHEMA).parquet(
+            self.storage.spark_path(_REGISTRY_DIR)
+        )
 
     def stage_report(self) -> DataFrame:
         """Per-stage total duration — the reference's metrics aggregation

@@ -245,6 +245,8 @@ _CONFIG_KEYS = ("properties", "cloned_from")
 _WATERMARK_KEYS = ("retention_ts", "lateness_ts")
 # fields describing ONE commit, never inherited by the next
 _PER_COMMIT_KEYS = ("added_cols", "retdel_dropped", "retdel_rows")
+# largest change batch (keys) a CoW merge broadcasts into the target scan
+_BROADCAST_MAX_KEYS = 1_000_000
 
 
 def _watermark(m: dict[str, Any]):
@@ -1960,8 +1962,6 @@ class ManifestTable:
         *,
         files_per_bucket: int = 1,
         audit: str = "counts",
-        strategy: str = "auto",
-        broadcast_threshold: int = 1_000_000,
         epoch_scope: str = "batch",
         before_publish=None,
         mode: str = "cow",
@@ -2104,10 +2104,9 @@ class ManifestTable:
             # (single shuffle with map-side partial combine).  A CoW merge
             # over a delta-carrying bucket must also fold the deltas, so it
             # takes the aggregate path.
-            use_broadcast = strategy == "broadcast" or (
-                strategy == "auto" and n_change_keys <= broadcast_threshold
-            )
-            if use_broadcast and not any(old_delta.get(b) for b in touched):
+            if n_change_keys <= _BROADCAST_MAX_KEYS and not any(
+                old_delta.get(b) for b in touched
+            ):
                 merged = self._merge_broadcast(
                     target, staged_changes, key_cols, ischema
                 )

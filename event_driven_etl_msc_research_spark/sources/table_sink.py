@@ -101,6 +101,7 @@ from ..sinks.manifest import (
     _INTERNAL_FIELDS,
     ManifestTable,
     _harvest,
+    _watermark,
 )
 
 
@@ -188,6 +189,9 @@ class _SinkWriterCore:
         )
         self._bucket_col = key_cols[0]
         self._scope = self._derive_scope(options)
+        # merge() parity: upserts older than the table's watermark are
+        # dropped (see ManifestTable._merge); deletes and null-ts rows pass
+        self._watermark = _watermark(m)
 
     # -- scope / identity -------------------------------------------------
 
@@ -210,6 +214,7 @@ class _SinkWriterCore:
     def write(self, iterator) -> _SinkCommitMessage:
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -233,6 +238,11 @@ class _SinkWriterCore:
             return writers[b]
 
         for batch in iterator:
+            if self._watermark is not None:
+                ts, wm = batch.column("ts"), pa.scalar(self._watermark)
+                late = pc.fill_null(pc.less(ts, wm.cast(ts.type)), False)
+                upsert = pc.not_equal(batch.column("op"), "D")
+                batch = batch.filter(pc.invert(pc.and_kleene(late, upsert)))
             if batch.num_rows == 0:
                 continue
             cols = {

@@ -22,6 +22,7 @@ all pending segments and stops (full replay mode).
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import time
 
@@ -44,7 +45,6 @@ def _progress_listener(lineage: LineageLog, query_name: str):
     Complements (not replaces) the ``merge`` rows written in
     ``apply_batch``: those time the engine's commit; these carry the
     source/trigger-level numbers only Spark knows."""
-    import json as _json
     import threading as _threading
 
     from pyspark.sql.streaming import StreamingQueryListener
@@ -80,7 +80,7 @@ def _progress_listener(lineage: LineageLog, query_name: str):
             if p.name != query_name:
                 return
             try:
-                detail = _json.dumps(
+                detail = json.dumps(
                     {
                         "numInputRows": p.numInputRows,
                         "inputRowsPerSecond": p.inputRowsPerSecond,
@@ -112,11 +112,16 @@ def _progress_listener(lineage: LineageLog, query_name: str):
     return _Listener()
 
 
+# report entries a lineage detail leaves out: the bulky per-bucket row map
+# and the quarantine split's frames
+_NOT_DETAIL = ("rows_by_bucket", "valid", "cache")
+
+
 def _verb_detail(report: dict) -> str:
-    """A verb report as a lineage ``detail``: JSON (parseable with
-    ``json.loads``), minus the bulky per-bucket row map."""
+    """A stage report as a lineage ``detail``: JSON (parseable with
+    ``json.loads``), minus the entries in ``_NOT_DETAIL``."""
     return json.dumps(
-        {k: v for k, v in report.items() if k != "rows_by_bucket"},
+        {k: v for k, v in report.items() if k not in _NOT_DETAIL},
         default=str,
     )
 
@@ -231,8 +236,8 @@ class CDCEngine:
         self.compact_purge_tombstone_lag = compact_purge_tombstone_lag
         self.vacuum_keep_versions = vacuum_keep_versions
         self.vacuum_grace_s = vacuum_grace_s
-        self._epochs_since_compact = 0
-        self._epochs_since_vacuum = 0
+        # epochs counted toward each maintenance stage's cadence (_due)
+        self._since: dict[str, int] = {}
         self.audit = audit
         self.event_dedup = event_dedup
         self.fail_after_stage_write = fail_after_stage_write
@@ -259,12 +264,12 @@ class CDCEngine:
                 if branch in self.table.branches()
                 else self.table.create_branch(branch)
             )
-        # high flush_every so intra-epoch record calls buffer; apply_batch
-        # flushes once per epoch (one small pyarrow file per epoch instead
-        # of one per record — and a continuous tail stopped at ANY point
-        # has every committed epoch's lineage on disk)
+        # rows buffer through the epoch; apply_batch flushes once per epoch
+        # (one small object per epoch instead of one per record — and a
+        # continuous tail stopped at ANY point has every committed epoch's
+        # lineage durable)
         self.lineage = LineageLog(
-            spark, table_root, tenant_id=tenant_id, flush_every=10_000
+            spark, table_root, tenant_id=tenant_id, storage=self.table.storage
         )
         # idempotence scope for epoch ids; replay() pins it to the checkpoint
         # dir so restarts of the SAME checkpoint dedup, while a new
@@ -274,7 +279,6 @@ class CDCEngine:
         # see register_derived()
         self._derived: list = []
         self.sync_derived_every = 1
-        self._epochs_since_mv_sync = 0
         # SCD2 history table applied on the epoch critical path —
         # see register_history()
         self._history = None
@@ -286,14 +290,19 @@ class CDCEngine:
     def apply_batch(self, batch_df: DataFrame, epoch_id: int) -> dict:
         """Dedup + MERGE + lineage for one micro-batch (one 'chunk chain'
         of the reference: Extraction→Transformation→Load→Backup collapses
-        into dedup→merge→commit; Backup is implicit in snapshot retention)."""
-        t0 = time.monotonic()
-        split_cache = None
+        into dedup→merge→commit; Backup is implicit in snapshot retention).
+        Every stage runs through ``_run``: one lineage row per stage run,
+        a failure recorded once under the stage that raised it."""
+        routed = None
         try:
             if self.bad_records != "keep":
-                batch_df, split_cache = self._route_bad_records(
-                    batch_df, epoch_id
+                routed = self._run(
+                    epoch_id,
+                    "quarantine",
+                    lambda: self._route_bad_records(batch_df, epoch_id),
+                    critical=True,
                 )
+                batch_df = routed["valid"]
             before_publish = None
             if self.fail_after_stage_write:
                 # chaos: fail between staging write and manifest publish —
@@ -303,164 +312,171 @@ class CDCEngine:
                 def before_publish(_m):
                     raise RuntimeError("Intentional exception (chaos hook)")
 
-            stats = self.table.merge(
-                batch_df,
-                epoch_id,
-                files_per_bucket=self.files_per_bucket,
-                audit=self.audit,
-                epoch_scope=self._epoch_scope,
-                before_publish=before_publish,
-                mode=self.merge_mode,
-            )
-            self.lineage.record_stage(
+            stats = self._run(
                 epoch_id,
                 "merge",
-                stats["status"],
-                detail=_verb_detail(stats),
-                duration_s=stats["duration_s"],
+                lambda: self.table.merge(
+                    batch_df,
+                    epoch_id,
+                    files_per_bucket=self.files_per_bucket,
+                    audit=self.audit,
+                    epoch_scope=self._epoch_scope,
+                    before_publish=before_publish,
+                    mode=self.merge_mode,
+                ),
+                critical=True,
             )
-            if stats["status"] == "Success":
+            ok = stats["status"] == "Success"
+            if ok:
                 self.lineage.record_partitions(
                     epoch_id, "merge", stats.get("rows_by_bucket", {})
                 )
-            if (
-                stats["status"] == "Success"
+            compacted = (
+                ok
                 and self.merge_mode == "delta"
                 and self.compact_every > 0
-            ):
-                self._epochs_since_compact += 1
-                if self._epochs_since_compact >= self.compact_every:
-                    purge_before = None
-                    if self.compact_purge_tombstone_lag is not None:
-                        # watermark = max observed event time − lag, read
-                        # back from the table's own manifest stats (driver
-                        # dict-max, no job); None = no stats yet, skip
-                        import datetime as _dt
-
-                        hi = self.table.max_event_ts()
-                        if hi is not None:
-                            purge_before = hi - _dt.timedelta(
-                                seconds=self.compact_purge_tombstone_lag
-                            )
-                    cst = self.table.compact(
-                        sort_by=self.compact_sort_by,
-                        zorder_by=self.compact_zorder_by,
-                        max_rows_per_file=self.compact_max_rows_per_file,
-                        max_file_bytes=self.compact_max_file_bytes,
-                        purge_tombstones_before=purge_before,
-                    )
-                    self.lineage.record_stage(
-                        epoch_id,
-                        "compact",
-                        cst["status"],
-                        detail=_verb_detail(cst),
-                        duration_s=cst["duration_s"],
-                    )
-                    self._epochs_since_compact = 0
-                    # compaction is the natural GC point: superseded base
-                    # files AND orphaned staging dirs from crashed attempts
-                    # are now unreferenced by every retained manifest —
-                    # without this a long-running tail grows without bound
-                    self._maybe_vacuum(epoch_id, force=True)
+                and self._due("compact", self.compact_every)
+            )
+            if compacted:
+                self._run(epoch_id, "compact", self._compact, critical=True)
             if self._history is not None:
                 # critical path, and ALSO on a skipped (redelivered) epoch:
                 # the main merge may have committed on a previous attempt
                 # that crashed before the history apply — the history's own
                 # ledger decides whether anything is left to do
-                hst = self._history.apply(
-                    batch_df,
-                    epoch_id,
-                    epoch_scope=self._epoch_scope,
-                    mode=self._history_mode,
-                    merge_mode=self._history_merge_mode,
-                )
-                self.lineage.record_stage(
+                hst = self._run(
                     epoch_id,
                     "history",
-                    hst.get("status", "Success"),
-                    detail=_verb_detail(hst),
-                    duration_s=hst.get("duration_s"),
+                    lambda: self._history.apply(
+                        batch_df,
+                        epoch_id,
+                        epoch_scope=self._epoch_scope,
+                        mode=self._history_mode,
+                        merge_mode=self._history_merge_mode,
+                    ),
+                    critical=True,
                 )
                 if (
                     hst.get("status") == "Success"
                     and self._history_compact_every > 0
+                    and self._due("history_compact", self._history_compact_every)
                 ):
-                    self._epochs_since_history_compact += 1
-                    if (
-                        self._epochs_since_history_compact
-                        >= self._history_compact_every
-                    ):
-                        self._epochs_since_history_compact = 0
-                        cst = self._history.table.compact()
-                        self.lineage.record_stage(
-                            epoch_id,
-                            "history_compact",
-                            cst["status"],
-                            detail=_verb_detail(cst),
-                            duration_s=cst.get("duration_s"),
-                        )
-            if stats["status"] == "Success":
-                self._maybe_vacuum(epoch_id)
+                    self._run(
+                        epoch_id,
+                        "history_compact",
+                        lambda: self._history.table.compact(),
+                        critical=True,
+                    )
+            if ok:
+                # compaction is the natural GC point: superseded base files
+                # AND orphaned staging dirs from crashed attempts are now
+                # unreferenced by every retained manifest — without this a
+                # long-running tail grows without bound
+                self._maybe_vacuum(epoch_id, force=compacted)
                 self._maybe_sync_derived(epoch_id)
             return stats
-        except Exception as e:  # E2: error payload → lineage, then propagate
-            self.lineage.record_stage(
-                epoch_id,
-                "merge",
-                "Failed",
-                detail=repr(e)[:2000],
-                duration_s=time.monotonic() - t0,
-            )
-            raise
         finally:
-            if split_cache is not None:
+            if routed is not None and routed["cache"] is not None:
                 # the quarantine split's cache served the dead-letter write
                 # and the merge; release it once the epoch is done
-                split_cache.unpersist()
+                routed["cache"].unpersist()
             # per-epoch flush: lineage for every COMMITTED epoch is durable
             # even if the tail is stopped or the process dies mid-stream
             self.lineage.flush()
+
+    def _run(self, epoch_id: int, stage: str, fn, *, critical: bool):
+        """Run one per-epoch stage: time ``fn``, record exactly one lineage
+        row under ``stage`` whose detail is JSON (the stage's report, or
+        ``{"error": ...}``), and apply the stage's failure contract.  A
+        critical stage (quarantine, merge, compact, history,
+        history_compact) re-raises, so the epoch aborts and the checkpoint
+        retry redelivers it.  An advisory one (vacuum, lineage_compact,
+        mv_sync) only records the failure and returns None: the merge
+        already committed durably, and the next cadence retries."""
+        t0 = time.monotonic()
+        try:
+            report = fn()
+        except Exception as e:
+            self.lineage.record_stage(
+                epoch_id,
+                stage,
+                "Failed",
+                detail=json.dumps({"error": repr(e)[:2000]}),
+                duration_s=time.monotonic() - t0,
+            )
+            if critical:
+                raise
+            return None
+        self.lineage.record_stage(
+            epoch_id,
+            stage,
+            report.get("status", "Success"),
+            detail=_verb_detail(report),
+            duration_s=time.monotonic() - t0,
+        )
+        return report
+
+    def _due(self, stage: str, every: int, force: bool = False) -> bool:
+        """Count one epoch toward ``stage``'s cadence: True on every
+        ``every``-th call (or when forced), which restarts the count."""
+        n = self._since[stage] = self._since.get(stage, 0) + 1
+        if force or n >= every:
+            self._since[stage] = 0
+            return True
+        return False
+
+    def _compact(self) -> dict:
+        purge_before = None
+        if self.compact_purge_tombstone_lag is not None:
+            # watermark = max observed event time − lag, read back from the
+            # table's own manifest stats (driver dict-max, no job); None =
+            # no stats yet, skip
+            hi = self.table.max_event_ts()
+            if hi is not None:
+                purge_before = hi - dt.timedelta(
+                    seconds=self.compact_purge_tombstone_lag
+                )
+        return self.table.compact(
+            sort_by=self.compact_sort_by,
+            zorder_by=self.compact_zorder_by,
+            max_rows_per_file=self.compact_max_rows_per_file,
+            max_file_bytes=self.compact_max_file_bytes,
+            purge_tombstones_before=purge_before,
+        )
 
     def _maybe_vacuum(self, epoch_id: int, force: bool = False) -> None:
         """Auto-GC: vacuum after every compaction (force=True) and, in
         cow mode or uncompacted delta tails, every ``vacuum_keep_versions``
         successful epochs — versions older than the retained window are
         unreferenced by then, so the removal set is non-trivial exactly at
-        this cadence.  keep_versions also bounds time-travel depth."""
-        if self.vacuum_keep_versions <= 0:
+        this cadence.  keep_versions also bounds time-travel depth.  The
+        same cadence folds the per-epoch lineage shards, so a long tail's
+        shard count stays bounded."""
+        if self.vacuum_keep_versions <= 0 or self.table.branch is not None:
+            # a branch handle never vacuums: vacuum GCs the shared data/
+            # tree, so a WAP tail defers GC to main's post-publish maintenance
             return
-        if self.table.branch is not None:
-            # vacuum is a MAIN-handle verb (it GCs the shared data/ tree);
-            # a WAP tail defers GC to main's post-publish maintenance
+        if not self._due("vacuum", self.vacuum_keep_versions, force):
             return
-        self._epochs_since_vacuum += 1
-        if not force and self._epochs_since_vacuum < self.vacuum_keep_versions:
-            return
-        # GC failure must never abort ingest: the merge already committed
-        # durably, so a transient vacuum error is logged (as a VACUUM
-        # failure, not a merge failure) and retried at the next cadence
-        try:
-            removed = self.table.vacuum(
-                keep_versions=self.vacuum_keep_versions,
-                grace_s=self.vacuum_grace_s,
-            )
-        except Exception as e:
-            self.lineage.record_stage(
-                epoch_id, "vacuum", "Failed", detail=repr(e)[:2000]
-            )
-            return
-        self._epochs_since_vacuum = 0
-        self.lineage.record_stage(
-            epoch_id, "vacuum", "Success", detail=f"removed={len(removed)}"
+        self._run(
+            epoch_id,
+            "vacuum",
+            lambda: {
+                "removed": len(
+                    self.table.vacuum(
+                        keep_versions=self.vacuum_keep_versions,
+                        grace_s=self.vacuum_grace_s,
+                    )
+                )
+            },
+            critical=False,
         )
-        # same cadence, same advisory-only contract: fold the per-epoch
-        # lineage shards so a long tail's file count stays bounded
-        try:
-            self.lineage.compact()
-        except Exception as e:
-            self.lineage.record_stage(
-                epoch_id, "lineage_compact", "Failed", detail=repr(e)[:2000]
-            )
+        self._run(
+            epoch_id,
+            "lineage_compact",
+            lambda: {"removed": self.lineage.compact()},
+            critical=False,
+        )
 
     # ---------- malformed-event routing (dead-letter table) ----------
 
@@ -470,16 +486,15 @@ class CDCEngine:
         scope_id = hashlib.md5(self._epoch_scope.encode()).hexdigest()[:12]
         return f"_quarantine/{scope_id}"
 
-    def _route_bad_records(
-        self, batch_df: DataFrame, epoch_id: int
-    ) -> tuple[DataFrame, DataFrame | None]:
+    def _route_bad_records(self, batch_df: DataFrame, epoch_id: int) -> dict:
         """Split the epoch's batch on the validity predicate (op ∈ {U, D},
         non-null lsn, non-null key columns) in ONE pass over the source:
         the batch is persisted, the bad-count job materializes the cache,
         and both the dead-letter write and the valid rows the merge
         consumes are served from it — the source is never re-evaluated.
-        Returns ``(valid_rows, cache_to_unpersist_or_None)``;
-        ``apply_batch`` releases the cache after the merge commits.
+        Returns the stage report ``{"n_bad", "valid": valid_rows,
+        "cache": cache_to_unpersist_or_None}``; ``apply_batch`` releases
+        the cache after the merge commits.
 
         ``fail`` aborts the epoch naming the count; ``quarantine`` lands
         the bad rows under ``<root>/_quarantine/<scope>/epoch=<id>/``
@@ -528,13 +543,9 @@ class CDCEngine:
             cached.unpersist()
             # hand back the ORIGINAL frame: the clean-batch epoch runs the
             # exact historical plan, no cache in the merge lineage
-            return batch_df, None
+            return {"n_bad": 0, "valid": batch_df, "cache": None}
         if self.bad_records == "fail":
             cached.unpersist()
-            self.lineage.record_stage(
-                epoch_id, "quarantine", "Failed", detail=f"n_bad={n_bad}"
-            )
-            self.lineage.flush()
             raise ValueError(
                 f"epoch {epoch_id}: {n_bad} malformed change events "
                 "(op outside {U,D}, null lsn, or null key column); "
@@ -544,10 +555,7 @@ class CDCEngine:
             f"{self._quarantine_prefix()}/epoch={epoch_id}"
         )
         bad.write.mode("overwrite").parquet(dest)
-        self.lineage.record_stage(
-            epoch_id, "quarantine", "Success", detail=f"n_bad={n_bad}"
-        )
-        return cached.filter(pred), cached
+        return {"n_bad": n_bad, "valid": cached.filter(pred), "cache": cached}
 
     def read_quarantine(self, all_scopes: bool = True) -> DataFrame:
         """The dead-letter table: malformed events routed aside, with their
@@ -640,30 +648,18 @@ class CDCEngine:
         self._history_mode = mode
         self._history_merge_mode = merge_mode
         self._history_compact_every = max(0, int(compact_every))
-        self._epochs_since_history_compact = 0
+        self._since.pop("history_compact", None)
 
     def _maybe_sync_derived(self, epoch_id: int) -> None:
-        if not self._derived:
-            return
-        self._epochs_since_mv_sync += 1
-        if self._epochs_since_mv_sync < self.sync_derived_every:
-            return
-        self._epochs_since_mv_sync = 0
-        for mv in self._derived:
-            try:
-                st = mv.sync()
-                self.lineage.record_stage(
+        # downstream freshness must never abort ingest (same advisory
+        # contract as vacuum); the next sync catches up
+        if self._derived and self._due("mv_sync", self.sync_derived_every):
+            for mv in self._derived:
+                self._run(
                     epoch_id,
                     "mv_sync",
-                    st.get("status", "Success"),
-                    detail=f"root={mv.root} version={st.get('version')}",
-                    duration_s=st.get("duration_s"),
-                )
-            except Exception as e:
-                # downstream freshness must never abort ingest (same
-                # advisory contract as vacuum); the next sync catches up
-                self.lineage.record_stage(
-                    epoch_id, "mv_sync", "Failed", detail=repr(e)[:2000]
+                    lambda: {**mv.sync(), "root": mv.root},
+                    critical=False,
                 )
 
     # ---------- replay / tail ----------

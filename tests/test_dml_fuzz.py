@@ -474,26 +474,45 @@ def test_random_dml_sequence_matches_oracle(spark, tmp_root, seed, mode):
         assert got == exp, f"time travel to v{v} diverged (seed {seed}, {mode})"
 
 
-@pytest.mark.parametrize("mode", ["delta", "cow"])
-def test_purge_then_older_retention_matches_oracle(spark, tmp_root, mode):
+@pytest.mark.parametrize(
+    "mode,writer",
+    [
+        pytest.param("delta", "merge", id="delta"),
+        pytest.param("cow", "merge", id="cow"),
+        pytest.param("delta", "sink", id="delta-sink"),
+        pytest.param("cow", "sink", id="cow-sink"),
+    ],
+)
+def test_purge_then_older_retention_matches_oracle(spark, tmp_root, mode, writer):
     """Deterministic interleaving of the two watermark verbs: a tombstone
     purge at W, then retention passes with cutoffs OLDER than W, then
     late upserts on every side of both bounds — state checked against the
     oracle after each step.  The purge bound must never become
     retention's drop floor (live rows between a cutoff and W stay), and
-    merge keeps refusing upserts older than W across a rollback."""
+    merge keeps refusing upserts older than W across a rollback.  The
+    late-upsert step lands through ``writer``: ``merge`` or the
+    ``edem_cdc`` sink, which must drop the same pre-watermark upserts."""
     import datetime as _dt
+
+    from event_driven_etl_msc_research_spark.sources.table_source import (
+        register_cdc_source,
+    )
 
     t = ManifestTable.create(
         spark, os.path.join(tmp_root, f"wm_{mode}"), TRANSCRIPT_SCHEMA,
         n_buckets=4,
     )
+    register_cdc_source(spark)
     oracle = Oracle()
     lsn = iter(range(1, 10_000))
     epoch = iter(range(1, 10_000))
 
-    def merge(rows):
-        t.merge(_df(spark, rows), next(epoch), mode=mode)
+    def merge(rows, via="merge"):
+        if via == "merge":
+            t.merge(_df(spark, rows), next(epoch), mode=mode)
+        else:
+            (_df(spark, rows).write.format("edem_cdc").option("path", t.root)
+             .option("epochId", next(epoch)).mode("append").save())
         oracle.merge(rows)
 
     def retention(cut):
@@ -529,7 +548,7 @@ def test_purge_then_older_retention_matches_oracle(spark, tmp_root, mode):
     # below both bounds, between the cutoff and W (refused: W binds), and
     # past W (lands) — including a key whose tombstone was purged
     merge([upsert(KEYS[0], 1100), upsert(KEYS[1], 3000),
-           upsert(KEYS[2], 6000), upsert(KEYS[9], 5200)])
+           upsert(KEYS[2], 6000), upsert(KEYS[9], 5200)], writer)
     check("late upserts")
     v = t.current_version()
     retention(1700)

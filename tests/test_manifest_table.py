@@ -262,12 +262,18 @@ def test_merge_job_counts(spark, tmp_root):
     assert p == "broadcast"
     assert n_bcast <= 2 * n_delta + 2  # 2 write actions + broadcast build
 
+    # a CoW merge over a delta-carrying bucket must fold the deltas too, so
+    # it takes the shuffle (aggregate) path
+    tc.merge(
+        _changes_df(spark, [("U", 150, 2500, "c1", 0, "user", "d", None)]),
+        3,
+        mode="delta",
+    )
     n_shuf, p = jobs(
         "jc-shuf",
         lambda: tc.merge(
             _changes_df(spark, [("U", 200, 3000, "c1", 0, "user", "x", None)]),
-            3,
-            strategy="shuffle",
+            4,
         ),
     )
     assert p == "shuffle"
