@@ -20,12 +20,25 @@ Skew is measured, not pre-empted ("Rock you like a hurricane", EuroSys
 ``bulk_replay`` benchmark puts half its events on one conversation and
 reports the worst stage's max/median records read per reducer as
 ``operators.dedup.reduce_skew``.  No static salt is applied.
+
+The plan is built from SQL text assembled in Python — the version
+packing, the ``max_by`` aggregate and the output projection are one
+``F.expr``/``selectExpr`` each, every identifier backtick-quoted
+(``util.sql_ident``).  The Catalyst plan is the one the column-by-column
+``F.col``/``F.struct``/``.alias`` form builds, but constructing it costs a
+few dozen py4j gateway round trips instead of several hundred: this fold
+runs in every merge, compaction and folded read, so it is a per-epoch
+fixed cost of the streaming tail.  Quoting also lets payload columns
+such as ``a.b`` or ``tool meta`` through, which ``F.col("_p.a.b")``
+would read as a nested field.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..util import sql_ident
 
 
 def dedup_latest(
@@ -36,45 +49,38 @@ def dedup_latest(
     preserves the input column order.  Ties on the packed version (exact
     duplicate re-deliveries, or all-null-version corrupt keys) resolve to
     an arbitrary-but-single row."""
+    q = sql_ident
     rest = [c for c in df.columns if c not in key_cols]
     out = (
         df.withColumn("_ver", _packed_version(df, version_cols))
-        .groupBy(*key_cols)
-        .agg(F.max_by(F.struct(*rest), F.col("_ver")).alias("_p"))
+        .groupBy(*[F.expr(q(k)) for k in key_cols])
+        .agg(F.expr(f"max_by(struct({', '.join(map(q, rest))}), `_ver`) AS `_p`"))
     )
-    return out.select(
-        *[
-            F.col(c) if c in key_cols else F.col(f"_p.{c}").alias(c)
-            for c in df.columns
-        ]
+    return out.selectExpr(
+        *[q(c) if c in key_cols else f"`_p`.{q(c)} AS {q(c)}" for c in df.columns]
     )
 
 
 def _packed_version(df: DataFrame, version_cols: list[str]):
     """(ts, lsn) packed into one decimal(38,0); nulls → -1 sentinel (below
     any real non-negative WAL position, so corrupt records lose but their
-    key is never dropped).
+    key is never dropped).  One ``F.expr`` of SQL text.
 
     Injective under the documented ``lsn < 10**18`` bound: the lsn term is
     shifted into ``[0, 10**18]`` and the ts multiplier is ``2*10**18``, so
     consecutive ts values are 2e18 apart while the lsn offset spans at most
     1e18 — a null-lsn sentinel can never collide with (ts-1, max-lsn), which
     the previous ``ts*10**18 + lsn`` packing allowed at the boundary."""
-    ts_col, lsn_col = version_cols
-    ts_dt = dict(df.dtypes).get(ts_col, "")
+    ts_col, lsn_col = map(sql_ident, version_cols)
+    ts_dt = dict(df.dtypes).get(version_cols[0], "")
     ts_num = (
-        F.unix_micros(F.col(ts_col).cast("timestamp"))  # ntz → session-TZ first
+        f"unix_micros(CAST({ts_col} AS TIMESTAMP))"  # ntz → session-TZ first
         if ts_dt.startswith("timestamp")
-        else F.col(ts_col)
+        else ts_col
     )
-    return (
-        F.coalesce(ts_num.cast("decimal(18,0)"), F.lit(-1).cast("decimal(18,0)"))
-        * F.lit(2 * 10**18).cast("decimal(19,0)")
-        + (
-            F.coalesce(
-                F.col(lsn_col).cast("decimal(18,0)"),
-                F.lit(-1).cast("decimal(18,0)"),
-            )
-            + F.lit(1).cast("decimal(1,0)")
-        )
+    return F.expr(
+        f"coalesce(CAST({ts_num} AS DECIMAL(18,0)), CAST(-1 AS DECIMAL(18,0)))"
+        f" * CAST({2 * 10**18} AS DECIMAL(19,0))"
+        f" + (coalesce(CAST({lsn_col} AS DECIMAL(18,0)), CAST(-1 AS DECIMAL(18,0)))"
+        " + CAST(1 AS DECIMAL(1,0)))"
     )

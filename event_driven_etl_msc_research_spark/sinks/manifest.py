@@ -55,6 +55,7 @@ from pyspark.sql import types as T
 
 from ..operators.dedup import dedup_latest
 from ..schemas import KEY_COLS
+from ..util import sql_ident, sql_type
 from .storage import LocalFSStorage, TableStorage
 
 _MANIFEST_DIR = "_manifest"
@@ -99,7 +100,9 @@ class ManifestConflict(RuntimeError):
 def _bucket_expr(n_buckets: int, bucket_col: str = "conv_id"):
     # deterministic hash bucket of the first key column — the physical
     # partition and the MERGE rewrite unit (co-locates a conversation).
-    return F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_buckets)).cast("int")
+    return F.expr(
+        f"CAST(pmod(xxhash64({sql_ident(bucket_col)}), {int(n_buckets)}) AS INT)"
+    )
 
 
 def _fold_rows(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -1216,14 +1219,22 @@ class ManifestTable:
     @staticmethod
     def _admit(m: dict[str, Any] | None, name: str, *, ddl: bool = False) -> None:
         """Name admission for a column entering the schema of ``m`` (None:
-        a table being created).  Refused: an engine-reserved name — the
-        write paths would clobber it — and a TOMBSTONED one, dropped or
-        renamed away while live files still carry it: re-adding it would
+        a table being created).  Refused: a name carrying a backtick, an
+        engine-reserved name — the write paths would clobber it — and a
+        TOMBSTONED one, dropped or renamed away while live files still
+        carry it: re-adding it would
         resurrect stale values under name-based parquet resolution, until
         a full rewrite (``rebucket`` or an all-bucket
         ``compact(min_delta_files=0)``) physicalizes the current naming and
         frees it.  The explicit DDL verbs (``ddl``) also refuse a name that
         already exists or is not an identifier."""
+        if "`" in name:
+            # identifiers reach Spark as backtick-quoted SQL text, and the
+            # name-based column API (F.col) rejects a backtick outright
+            raise SchemaEvolutionError(
+                f"column {name!r} contains a backtick, which column names "
+                f"cannot carry — rename it"
+            )
         if name in _RESERVED_COLS:
             raise SchemaEvolutionError(
                 f"column {name!r} is an engine-reserved name: 'op'/'lsn' are "
@@ -1407,10 +1418,9 @@ class ManifestTable:
         )
         df = self.spark.read.schema(read_schema).parquet(*files)
         for cur, olds in shadows.items():
-            df = df.withColumn(
-                cur, F.coalesce(F.col(cur), *[F.col(o) for o in olds])
-            )
-        return df.select(*[f.name for f in schema.fields])
+            names = ", ".join(map(sql_ident, [cur, *olds]))
+            df = df.withColumn(cur, F.expr(f"coalesce({names})"))
+        return df.selectExpr(*[sql_ident(f.name) for f in schema.fields])
 
     def _scan(
         self,
@@ -1450,7 +1460,7 @@ class ManifestTable:
         if delta:
             df = _fold_rows(df, m["key_cols"])
         if live:
-            df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
+            df = df.filter("NOT coalesce(`_deleted`, false)")
         dtypes = {f.name: f.dataType for f in ischema.fields}
         for c, v in (where or {}).items():
             if v == "is_null":
@@ -1537,8 +1547,11 @@ class ManifestTable:
         m = self._snapshot(version, where)
         df = self._scan(m, where=where)
         if not include_internal:
-            df = df.select(
-                *[f.name for f in T.StructType.fromJson(m["schema"]).fields]
+            df = df.selectExpr(
+                *[
+                    sql_ident(f.name)
+                    for f in T.StructType.fromJson(m["schema"]).fields
+                ]
             )
         return df
 
@@ -2031,23 +2044,27 @@ class ManifestTable:
 
         # 3. normalize to internal row shape (evaluated once: both the delta
         # path and the stage-first CoW path write this plan straight to
-        # parquet and work from the staged files after)
-        payload_names = [f.name for f in new_schema.fields]
-        new_types = {f.name: f.dataType for f in new_schema.fields}
-        change_rows = deduped.select(
-            *[
-                # cast to the evolved table type: up-casts a batch narrower
-                # than a widened table column (no-op when types match)
-                F.col(c).cast(new_types[c])
-                if c in deduped.columns
-                # alias is load-bearing: two absent same-typed columns would
-                # otherwise both be named `cast(null as T)` and the staging
-                # write dies on COLUMN_ALREADY_EXISTS (DML-fuzz find)
-                else F.lit(None).cast(new_types[c]).alias(c)
-                for c in payload_names
-            ],
-            F.col("lsn").alias("_lsn"),
-            (F.col("op") == F.lit("D")).alias("_deleted"),
+        # parquet and work from the staged files after).  One projection
+        # of SQL text; the bucket hashes the projected key, which carries
+        # the table's type
+        have = {f.name: f.dataType for f in payload.fields}
+
+        def _internal(f: T.StructField) -> str:
+            c = sql_ident(f.name)
+            if f.name not in have:
+                # the alias is load-bearing: two absent same-typed columns
+                # would otherwise share a name and the staging write dies
+                # on COLUMN_ALREADY_EXISTS (DML-fuzz find)
+                return f"CAST(NULL AS {sql_type(f.dataType)}) AS {c}"
+            if have[f.name] == f.dataType:
+                return c
+            # up-casts a batch narrower than a widened table column
+            return f"CAST({c} AS {sql_type(f.dataType)}) AS {c}"
+
+        change_rows = deduped.selectExpr(
+            *map(_internal, new_schema.fields),
+            "`lsn` AS `_lsn`",
+            "`op` = 'D' AS `_deleted`",
         ).withColumn("_bucket", _bucket_expr(n_buckets, key_cols[0]))
 
         ischema = T.StructType(new_schema.fields + _INTERNAL_FIELDS)
@@ -2124,7 +2141,10 @@ class ManifestTable:
                     os.path.join(stage_rel, "merged"),
                     len(touched) * files_per_bucket,
                     spread=(
-                        [F.pmod(F.xxhash64(*key_cols), F.lit(files_per_bucket))]
+                        [
+                            f"pmod(xxhash64({', '.join(map(sql_ident, key_cols))}),"
+                            f" {int(files_per_bucket)})"
+                        ]
                         if files_per_bucket > 1
                         else ()
                     ),
@@ -2422,7 +2442,7 @@ class ManifestTable:
 
         Writes ``df`` (internal row shape, ``_bucket`` set) under the
         unreferenced staging prefix ``rel``, hash-partitioned into
-        ``n_parts`` tasks on ``_bucket`` plus the ``spread`` expressions
+        ``n_parts`` tasks on ``_bucket`` plus the ``spread`` SQL expressions
         (which split a bucket over several files), laid out as
         ``_pb=<bucket>/`` dirs, with the table's writer options
         (``_write_options``).  Clustering:
@@ -2435,9 +2455,9 @@ class ManifestTable:
         files.
 
         Audit: the rows the write job observed (an ``Observation`` riding
-        the same job, with the caller's ``obs_aggs`` — merge's CHECK
-        violation counts) must equal the rows in the staged parquet
-        footers, read driver-side by :func:`_harvest` (no Spark job).  A
+        the same job, with the caller's ``obs_aggs`` SQL aggregates —
+        merge's CHECK violation counts) must equal the rows in the staged
+        parquet footers, read driver-side by :func:`_harvest` (no Spark job).  A
         truncated or unreadable file fails here, before publish.  With
         ``audit_empty=False`` a write that staged zero rows skips the
         observation read: a zero-row write can run zero tasks, leaving a
@@ -2454,9 +2474,9 @@ class ManifestTable:
         when skipped)."""
         obs = Observation()
         out = (
-            df.observe(obs, F.count(F.lit(1)).alias("rows"), *obs_aggs)
-            .withColumn("_pb", F.col("_bucket"))
-            .repartition(max(n_parts, 1), F.col("_bucket"), *spread)
+            df.observe(obs, *map(F.expr, ["count(1) AS `rows`", *obs_aggs]))
+            .withColumn("_pb", F.expr("`_bucket`"))
+            .repartition(max(n_parts, 1), *map(F.expr, ["`_bucket`", *spread]))
         )
         if sort_by:
             out = out.sortWithinPartitions("_pb", *sort_by)
@@ -2871,39 +2891,36 @@ class ManifestTable:
         duplicate key.  The aggregate (shuffle) path is null-safe already
         (groupBy treats NULL as a group); this keeps both paths identical.
         """
-        import functools
-
+        q = sql_ident
         non_key = [c for c in (f.name for f in ischema.fields) if c not in key_cols]
-        c_ren = change_rows.select(
-            *[F.col(k).alias(f"_ck_{k}") for k in key_cols],
-            *[F.col(c).alias(f"_c_{c}") for c in non_key],
+        c_ren = change_rows.selectExpr(
+            *[f"{q(k)} AS {q('_ck_' + k)}" for k in key_cols],
+            *[f"{q(c)} AS {q('_c_' + c)}" for c in non_key],
             # explicit match marker: null after an unmatched left join —
             # unlike `_c_ts IS NOT NULL`, it stays true for a matched change
             # row whose ts itself is null (corrupt-version rows still lose
             # the version comparison below, same as the aggregate path)
-            F.lit(True).alias("_c_matched"),
+            "true AS `_c_matched`",
         )
-        cond = functools.reduce(
-            lambda a, b: a & b,
-            [F.col(k).eqNullSafe(F.col(f"_ck_{k}")) for k in key_cols],
+        cond = " AND ".join(f"{q(k)} <=> {q('_ck_' + k)}" for k in key_cols)
+        joined = target.join(F.broadcast(c_ren), F.expr(cond), "left")
+        newer = (
+            "coalesce(`_c_matched`, false)"
+            " AND (struct(`_c_ts`, `_c__lsn`) > struct(`ts`, `_lsn`))"
         )
-        joined = target.join(F.broadcast(c_ren), cond, "left")
-        newer = F.coalesce(F.col("_c_matched"), F.lit(False)) & (
-            F.struct(F.col("_c_ts"), F.col("_c__lsn"))
-            > F.struct(F.col("ts"), F.col("_lsn"))
-        )
-        updated = joined.select(
-            *key_cols,
+        updated = joined.selectExpr(
+            *map(q, key_cols),
             *[
-                F.when(newer, F.col(f"_c_{c}")).otherwise(F.col(c)).alias(c)
+                f"CASE WHEN {newer} THEN {q('_c_' + c)} ELSE {q(c)} END AS {q(c)}"
                 for c in non_key
             ],
         )
         from ..util import nullsafe_semi_anti
 
+        keys = list(map(q, key_cols))
         matched = nullsafe_semi_anti(
-            target.select(*key_cols),
-            change_rows.select(*key_cols),
+            target.selectExpr(*keys),
+            change_rows.selectExpr(*keys),
             key_cols,
             "left_semi",
             broadcast=True,
@@ -2911,8 +2928,8 @@ class ManifestTable:
         inserts = nullsafe_semi_anti(
             change_rows, matched, key_cols, "left_anti", broadcast=True
         )
-        cols = [f.name for f in ischema.fields]
-        return updated.select(*cols).unionByName(inserts.select(*cols))
+        cols = [q(f.name) for f in ischema.fields]
+        return updated.selectExpr(*cols).unionByName(inserts.selectExpr(*cols))
 
     # size cap for each per-column-chunk parquet bloom (parquet-mr's
     # parquet.bloom.filter.max.bytes; 128 KiB ≈ NDV 100k at 1% fpp —
@@ -4370,11 +4387,8 @@ class ManifestTable:
         their payload columns are deliberately nulled (``delete_where``)
         and a delete writes no payload."""
         return [
-            F.sum(
-                F.when(F.col("_deleted"), F.lit(0)).otherwise(
-                    F.when(F.expr(cexpr), F.lit(0)).otherwise(F.lit(1))
-                )
-            ).alias(f"viol__{cname}")
+            f"sum(CASE WHEN `_deleted` THEN 0 ELSE CASE WHEN ({cexpr}) THEN 0"
+            f" ELSE 1 END END) AS {sql_ident('viol__' + cname)}"
             for cname, cexpr in sorted((m.get("constraints") or {}).items())
         ]
 

@@ -27,7 +27,7 @@ table's own MOR internals:
   to the evolved table types + ``_lsn``/``_deleted``/``_bucket``),
   assigns each row's hash bucket with the vectorized driver-side
   xxhash64 twin (``hashing.spark_bucket_array`` — property-tested
-  byte-identical to ``_bucket_expr``'s ``F.xxhash64``), and streams one
+  byte-identical to ``_bucket_expr``'s ``xxhash64``), and streams one
   parquet file per (task, bucket) into a task-private staging dir under
   ``data/``.  No shuffle, no Spark job beyond the write itself: the
   sink's per-epoch cost is O(batch), the same single-job shape as

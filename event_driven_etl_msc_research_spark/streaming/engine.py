@@ -24,92 +24,115 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQueryListener
 
 from ..lineage import LineageLog
 from ..schemas import CHANGE_EVENT_SCHEMA, KEY_COLS
 from ..sinks.manifest import ManifestTable
 from ..sources.changelog import read_changelog_batch, read_changelog_stream
+from ..util import sql_ident, sql_type
 
 
-def _progress_listener(lineage: LineageLog, query_name: str):
+class _ProgressListener(StreamingQueryListener):
     """Spark-engine-side metrics into the lineage log (the reference's
     CloudWatch ``put_log_events`` metrics, ``CloudsMatricsByQ2.py:168-210``,
     and the listener wiring SURVEY §2 S15/A4 maps them to): one ``progress``
-    row per micro-batch with input rows, rows/sec, and batch duration,
-    emitted by Spark's ``StreamingQueryListener``.  The listener bus runs on
-    its own thread — safe because LineageLog swaps buffers under a lock.
-    Complements (not replaces) the ``merge`` rows written in
-    ``apply_batch``: those time the engine's commit; these carry the
-    source/trigger-level numbers only Spark knows."""
-    import threading as _threading
+    row per micro-batch of the query named ``query_name``, with input rows,
+    rows/sec, and batch duration.  Complements (not replaces) the ``merge``
+    rows written in ``apply_batch``: those time the engine's commit; these
+    carry the source/trigger-level numbers only Spark knows.
 
-    from pyspark.sql.streaming import StreamingQueryListener
+    The listener is its own py4j bridge: ``_jlistener`` wraps it in Spark's
+    ``PythonStreamingQueryListenerWrapper`` as an implementation of
+    ``PythonStreamingQueryListener``, so each callback receives the RAW
+    Java event.  A progress event is read as one JSON document
+    (``json.loads(jevent.progress().json())``, two gateway calls) instead
+    of pyspark's field-by-field conversion, which costs ~430 round trips
+    per event.  ``spark.streams.addListener``/``removeListener`` take it
+    like any other listener.  The bus runs on its own thread — safe
+    because LineageLog swaps buffers under a lock."""
 
-    class _Listener(StreamingQueryListener):
-        def __init__(self):
-            super().__init__()
-            # set on the QueryTerminated event for the bound query id; the
-            # bus is FIFO per listener, so once this fires every progress
-            # event has been delivered — replay() waits on it before
-            # removing the listener (events are async on the bus thread)
-            self.done = _threading.Event()
-            self._query_id = None
-            # terminations seen BEFORE bind(): the id is only known after
-            # start(), so a stale query terminating in that window must not
-            # set done early (it would let replay() detach the listener
-            # before the bound query's final progress events drain).  They
-            # are buffered and re-checked at bind time.
-            self._early_terminated: set[str] = set()
-            self._lock = _threading.Lock()
+    def __init__(self, lineage: LineageLog, query_name: str):
+        super().__init__()
+        self._lineage = lineage
+        self._query_name = query_name
+        self._jwrapper = None
+        # set on the QueryTerminated event for the bound query id; the
+        # bus is FIFO per listener, so once this fires every progress
+        # event has been delivered — replay() waits on it before
+        # removing the listener (events are async on the bus thread)
+        self.done = threading.Event()
+        self._query_id = None
+        # terminations seen BEFORE bind(): the id is only known after
+        # start(), so a stale query terminating in that window must not
+        # set done early (it would let replay() detach the listener
+        # before the bound query's final progress events drain).  They
+        # are buffered and re-checked at bind time.
+        self._early_terminated: set[str] = set()
+        self._lock = threading.Lock()
 
-        def bind(self, query_id: str) -> None:
-            with self._lock:
-                self._query_id = str(query_id)
-                if self._query_id in self._early_terminated:
-                    self.done.set()
+    @property
+    def _jlistener(self):
+        # built on first use: addListener starts the callback server first
+        if self._jwrapper is None:
+            from pyspark import SparkContext
 
-        def onQueryStarted(self, event):
-            pass
+            self._jwrapper = SparkContext._jvm.PythonStreamingQueryListenerWrapper(
+                self
+            )
+        return self._jwrapper
 
-        def onQueryProgress(self, event):
-            p = event.progress
-            if p.name != query_name:
+    def bind(self, query_id: str) -> None:
+        with self._lock:
+            self._query_id = str(query_id)
+            if self._query_id in self._early_terminated:
+                self.done.set()
+
+    def onQueryStarted(self, jevent):
+        pass
+
+    def onQueryProgress(self, jevent):
+        try:
+            p = json.loads(jevent.progress().json())
+            if p.get("name") != self._query_name:
                 return
-            try:
-                detail = json.dumps(
-                    {
-                        "numInputRows": p.numInputRows,
-                        "inputRowsPerSecond": p.inputRowsPerSecond,
-                        "processedRowsPerSecond": p.processedRowsPerSecond,
-                        "durationMs": dict(p.durationMs or {}),
-                    }
-                )
-                total_ms = sum((p.durationMs or {}).values())
-                lineage.record_stage(
-                    p.batchId,
-                    "progress",
-                    "Success",
-                    detail=detail,
-                    duration_s=total_ms / 1000.0,
-                )
-            except Exception:
-                pass  # metrics must never break the stream
+            duration = p.get("durationMs") or {}
+            detail = json.dumps(
+                {
+                    "numInputRows": p.get("numInputRows"),
+                    "inputRowsPerSecond": p.get("inputRowsPerSecond"),
+                    "processedRowsPerSecond": p.get("processedRowsPerSecond"),
+                    "durationMs": duration,
+                }
+            )
+            self._lineage.record_stage(
+                p["batchId"],
+                "progress",
+                "Success",
+                detail=detail,
+                duration_s=sum(duration.values()) / 1000.0,
+            )
+        except Exception:
+            pass  # metrics must never break the stream
 
-        def onQueryIdle(self, event):
-            pass
+    def onQueryIdle(self, jevent):
+        pass
 
-        def onQueryTerminated(self, event):
-            with self._lock:
-                if self._query_id is None:
-                    self._early_terminated.add(str(event.id))
-                elif str(event.id) == self._query_id:
-                    self.done.set()
+    def onQueryTerminated(self, jevent):
+        query_id = jevent.id().toString()
+        with self._lock:
+            if self._query_id is None:
+                self._early_terminated.add(query_id)
+            elif query_id == self._query_id:
+                self.done.set()
 
-    return _Listener()
+    class Java:
+        implements = ["org.apache.spark.sql.streaming.PythonStreamingQueryListener"]
 
 
 # report entries a lineage detail leaves out: the bulky per-bucket row map
@@ -185,7 +208,7 @@ class CDCEngine:
         fail_after_stage_write: bool = False,  # chaos hook (cf. the reference's
         # live 'Intentional exception', Phase3-Data-Extraction-Async.py:44)
         bad_records: str = "keep",  # "keep" | "quarantine" | "fail" — what to
-        # do with MALFORMED change events (op outside {U,D}, null lsn, or a
+        # do with MALFORMED change events (op outside {I,U,D}, null lsn, or a
         # null key column): "keep" passes them through (a null-key upsert is
         # the engine's historical behavior and the zero-cost path),
         # "quarantine" routes them to <table_root>/_quarantine/<epoch>/ and
@@ -487,11 +510,13 @@ class CDCEngine:
         return f"_quarantine/{scope_id}"
 
     def _route_bad_records(self, batch_df: DataFrame, epoch_id: int) -> dict:
-        """Split the epoch's batch on the validity predicate (op ∈ {U, D},
-        non-null lsn, non-null key columns) in ONE pass over the source:
-        the batch is persisted, the bad-count job materializes the cache,
-        and both the dead-letter write and the valid rows the merge
-        consumes are served from it — the source is never re-evaluated.
+        """Split the epoch's batch on the validity predicate (op ∈ {I, U,
+        D}, an insert upserting like an update; non-null lsn; non-null key
+        columns; SQL text with every identifier quoted) in ONE pass over
+        the source: the batch is persisted, the bad-count job materializes
+        the cache, and both the dead-letter write and the valid rows the
+        merge consumes are served from it — the source is never
+        re-evaluated.
         Returns the stage report ``{"n_bad", "valid": valid_rows,
         "cache": cache_to_unpersist_or_None}``; ``apply_batch`` releases
         the cache after the merge commits.
@@ -513,9 +538,10 @@ class CDCEngine:
         from pyspark.sql import functions as F
 
         key_cols = self.table.manifest()["key_cols"]
-        pred = F.col("op").isin("U", "D") & F.col("lsn").isNotNull()
-        for k in key_cols:
-            pred = pred & F.col(k).isNotNull()
+        pred = " AND ".join(
+            ["`op` IN ('I', 'U', 'D')", "`lsn` IS NOT NULL"]
+            + [f"{sql_ident(k)} IS NOT NULL" for k in key_cols]
+        )
         cons = (
             self.table.constraints()
             if self.bad_records == "quarantine"
@@ -530,14 +556,15 @@ class CDCEngine:
             for f in self.table.schema().fields:
                 if f.name not in have:
                     batch_df = batch_df.withColumn(
-                        f.name, F.lit(None).cast(f.dataType)
+                        f.name, F.expr(f"CAST(NULL AS {sql_type(f.dataType)})")
                     )
-            ok = F.lit(True)
-            for cexpr in sorted(cons.values()):
-                ok = ok & F.coalesce(F.expr(cexpr), F.lit(False))
-            pred = pred & ((F.col("op") == F.lit("D")) | ok)
+            ok = " AND ".join(
+                ["true"]
+                + [f"coalesce(({c}), false)" for c in sorted(cons.values())]
+            )
+            pred = f"{pred} AND (`op` = 'D' OR {ok})"
         cached = batch_df.persist()
-        bad = cached.filter(~pred)
+        bad = cached.filter(f"NOT ({pred})")
         n_bad = bad.count()
         if n_bad == 0:
             cached.unpersist()
@@ -548,7 +575,7 @@ class CDCEngine:
             cached.unpersist()
             raise ValueError(
                 f"epoch {epoch_id}: {n_bad} malformed change events "
-                "(op outside {U,D}, null lsn, or null key column); "
+                "(op outside {I,U,D}, null lsn, or null key column); "
                 "bad_records='fail'"
             )
         dest = self.table.storage.spark_path(
@@ -739,8 +766,6 @@ class CDCEngine:
         """
         import os
 
-        from pyspark.sql import functions as F
-
         if not stream_df.isStreaming:
             raise ValueError(
                 "replay_stream requires a STREAMING DataFrame "
@@ -756,9 +781,10 @@ class CDCEngine:
                 f"change stream is missing required columns {missing}; "
                 f"expected {[f.name for f in self.change_schema.fields]}"
             )
-        stream = stream_df.select(
+        stream = stream_df.selectExpr(
             *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
+                f"CAST({sql_ident(f.name)} AS {sql_type(f.dataType)})"
+                f" AS {sql_ident(f.name)}"
                 for f in self.change_schema.fields
             ]
         )
@@ -782,7 +808,7 @@ class CDCEngine:
             except Exception:
                 pass
             self._listener = None
-        listener = _progress_listener(self.lineage, qname)
+        listener = _ProgressListener(self.lineage, qname)
         self.spark.streams.addListener(listener)
         writer = (
             stream.writeStream.foreachBatch(self.apply_batch)

@@ -2,10 +2,35 @@
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier: a column called
+    ``a.b`` or ``tool meta`` names exactly that column, never a struct
+    field or a syntax error."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_type(dt: T.DataType) -> str:
+    """``dt`` as SQL type text for ``CAST(... AS <text>)``; struct field
+    names are quoted.  Plans on the hot paths are built from SQL text
+    (one ``selectExpr``/``F.expr`` per step) because every ``F.col``/
+    ``F.lit``/``.alias``/``.cast`` is a separate round of py4j gateway
+    calls, while a parsed expression string costs a handful."""
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            f"{sql_ident(f.name)}:{sql_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in dt.fields
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{sql_type(dt.keyType)},{sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 def nullsafe_semi_anti(
@@ -26,14 +51,11 @@ def nullsafe_semi_anti(
     hash semi/anti plans are preserved (``broadcast=True`` hints the right
     side).  Only ``cols`` of ``right`` participate; its other columns are
     dropped before the join."""
-    r = right.select(*[F.col(c).alias(f"_ns_{c}") for c in cols])
+    r = right.selectExpr(*[f"{sql_ident(c)} AS {sql_ident('_ns_' + c)}" for c in cols])
     if broadcast:
         r = F.broadcast(r)
-    cond = functools.reduce(
-        lambda a, b: a & b,
-        [F.col(c).eqNullSafe(F.col(f"_ns_{c}")) for c in cols],
-    )
-    return left.join(r, cond, how)
+    cond = " AND ".join(f"{sql_ident(c)} <=> {sql_ident('_ns_' + c)}" for c in cols)
+    return left.join(r, F.expr(cond), how)
 
 
 def spread_small_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

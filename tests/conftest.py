@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import collections
+import contextlib
 import os
 import sys
+import threading
 
 import pytest
 
@@ -27,6 +30,28 @@ def spark():
 @pytest.fixture()
 def tmp_root(tmp_path):
     return str(tmp_path)
+
+
+@contextlib.contextmanager
+def gateway_round_trips():
+    """Count py4j gateway round trips (Python → JVM commands) while the
+    block runs.  Yields a ``Counter`` keyed by ``threading.get_ident()``
+    of the thread that sent each command: the caller's own thread for a
+    verb it runs, the callback thread for a listener event."""
+    from py4j.clientserver import ClientServerConnection
+
+    counts: collections.Counter = collections.Counter()
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        counts[threading.get_ident()] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield counts
+    finally:
+        ClientServerConnection.send_command = send
 
 
 def assert_pdf_equal(got, exp, cols=None):

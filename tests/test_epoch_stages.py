@@ -157,6 +157,14 @@ def test_object_store_tail_lineage_goes_through_storage(spark, tmp_root):
     generate_change_stream(
         wal, ChangeStreamSpec(n_events=2100, n_convs=30, segment_size=100, seed=5)
     )
+    # the generated events are all valid: one more segment carries the two
+    # malformed events the quarantine stage routes aside
+    with open(f"{wal}/seg-bad.jsonl", "w") as fh:
+        for op, conv in (("X", "conv000001"), ("U", None)):
+            fh.write(json.dumps({
+                "op": op, "lsn": 10**6, "ts": "2023-11-15T00:00:00.000Z",
+                "conv_id": conv, "turn_idx": 0, "role": "user", "text": "bad",
+            }) + "\n")
     storage = FakeObjectStorage(root)
     eng = CDCEngine(
         spark, root, change_schema=CHANGE_EVENT_SCHEMA_EVOLVED, n_buckets=4,
@@ -193,7 +201,7 @@ def test_object_store_tail_lineage_goes_through_storage(spark, tmp_root):
     got = {r["stage"] for r in lin}
     assert {"quarantine", "merge", "compact", "vacuum", "lineage_compact",
             "progress"} <= got
-    assert eng.read_quarantine().count() > 0
+    assert eng.read_quarantine().count() == 2
     # the shards were folded at least once, through the store
     assert any(
         json.loads(r["detail"])["removed"] > 0

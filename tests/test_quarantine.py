@@ -249,3 +249,58 @@ def test_quarantine_constraint_on_column_absent_from_batch(spark, tmp_root):
     assert st["status"] == "Success"
     assert eng.read_table().count() == 3  # nothing merged
     assert eng.read_quarantine().count() == 1
+
+
+def test_quarantine_keeps_generated_inserts(spark, tmp_root):
+    """The generator writes each key's first event as ``op='I'``, an
+    upsert like ``U``: a quarantine-mode replay of a generated WAL routes
+    nothing aside and lands the oracle's final state, while a genuinely
+    malformed row (unknown op, null key) is still dead-lettered."""
+    import os
+
+    from conftest import assert_pdf_equal
+
+    from event_driven_etl_msc_research_spark.datagen import (
+        ChangeStreamSpec,
+        generate_change_stream,
+    )
+    from event_driven_etl_msc_research_spark.oracle import oracle_final_state
+    from event_driven_etl_msc_research_spark.schemas import (
+        CHANGE_EVENT_SCHEMA_EVOLVED,
+    )
+
+    spec = ChangeStreamSpec(
+        n_events=2_000, n_convs=40, segment_size=500, seed=5, dup_segments=()
+    )
+    generate_change_stream(os.path.join(tmp_root, "wal"), spec)
+    eng = CDCEngine(
+        spark,
+        os.path.join(tmp_root, "t"),
+        change_schema=CHANGE_EVENT_SCHEMA_EVOLVED,
+        n_buckets=4,
+        merge_mode="delta",
+        bad_records="quarantine",
+    )
+    eng.replay(
+        os.path.join(tmp_root, "wal"),
+        os.path.join(tmp_root, "cp"),
+        max_files_per_trigger=2,
+    )
+    assert eng.read_quarantine().count() == 0
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "tool_meta", "ts"]
+    got = eng.read_table().orderBy("conv_id", "turn_idx").toPandas()
+    assert_pdf_equal(got, oracle_final_state(spec), cols)
+
+    bad = [
+        ("I", 10**9, "2024-01-01 00:00:00", "new", 0, "user", "insert-ok"),
+        ("X", 10**9 + 1, "2024-01-01 00:00:01", "new", 1, "user", "bad-op"),
+        ("I", 10**9 + 2, "2024-01-01 00:00:02", None, 0, "user", "bad-key"),
+    ]
+    st = eng.apply_batch(_batch(spark, bad), epoch_id=10_000)
+    assert st["status"] == "Success"
+    assert sorted(r["text"] for r in eng.read_quarantine().collect()) == [
+        "bad-key", "bad-op",
+    ]
+    assert [
+        r["text"] for r in eng.read_table().filter("conv_id = 'new'").collect()
+    ] == ["insert-ok"]
