@@ -5,6 +5,31 @@ The reference tunes parallelism with a single knob (Step Functions
 equivalents are ``local[N]`` thread count, ``spark.sql.shuffle.partitions``,
 and AQE — all set so the same code scales from local tests to a real
 multi-executor cluster.
+
+Two more confs are set for ``local[...]`` masters only, where every task is
+a thread of the driver JVM and the per-task fixed cost is the whole cost of
+a tiny task (measured with JFR and the Spark event log on the
+``tail_small_epochs`` and ``bulk_replay`` perfbench workloads, 4 vCPUs):
+
+* ``spark.sql.sources.parallelPartitionDiscovery.threshold`` at
+  ``Int.MaxValue``: a file-stream batch of more than 32 WAL files was
+  listed by a "Listing leaf files" Spark job, one task per file, each
+  deserializing the job's ~1,100-entry Hadoop ``Configuration``
+  (~13-15 ms of CPU) to stat one local file in microseconds — ~0.6 s of
+  task-deserialize CPU for a 33-file ``bulk_replay`` drain.  The driver
+  lists them itself.
+* ``spark.sql.streaming.checkpointFileManagerClass`` at Spark's
+  ``FileSystemBasedCheckpointFileManager``: the default FileContext-based
+  manager renames each offset/commit/metadata file through
+  ``RawLocalFileSystem.getFileLinkStatus``, which forks ``readlink``
+  without the Hadoop native library (1,016 forks over the 42 tail
+  epochs, ~24 per epoch).  The FileSystem-based manager renames with
+  ``FileSystem.rename``, atomic on POSIX and HDFS.  Its refusal to
+  overwrite an existing batch file is a check before the rename, which
+  only two processes running one checkpoint at once could slip past
+  (Spark refuses a second active query on a checkpoint within one JVM).
+  The checkpoint layout is the same, so a checkpoint written under either
+  manager resumes under the other.
 """
 
 from __future__ import annotations
@@ -12,6 +37,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -31,9 +61,10 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
         master = f"local[{cpus}]"
+    local = master.startswith("local[")
     if shuffle_partitions is None:
         # local[N] → N; a real cluster master string leaves the Spark default.
-        if master.startswith("local["):
+        if local:
             n = master[len("local[") : -1]
             shuffle_partitions = cpus if n == "*" else int(n)
         else:
@@ -67,6 +98,15 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(8, (3 * cpus) // 2)}g"),
         )
     )
+    if local:
+        # tasks are driver threads: see the module docstring
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        ).config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            _FS_CHECKPOINT_MANAGER,
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

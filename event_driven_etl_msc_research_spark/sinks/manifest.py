@@ -2016,10 +2016,12 @@ class ManifestTable:
         # a retention delete: the upstream never commits a pre-watermark
         # upsert, and the replica's synthesized tombstones block the same
         # versions a second time.  ``_bypass_watermark`` is for INTERNAL
-        # verbs only (update_where): a rewrite of current LIVE state stamps
-        # the row's own ts, which may legitimately precede the watermark —
-        # it is not late external data, and it can never resurrect a purged
-        # key because it was derived from the live snapshot.
+        # verbs only: update_where, whose rewrite of current LIVE state
+        # stamps the row's own ts, which may legitimately precede the
+        # watermark — it is not late external data, and it can never
+        # resurrect a purged key because it was derived from the live
+        # snapshot; and a replica's sync, whose rows the upstream's
+        # watermark already admitted (``sinks/replica.py``).
         wm = None if _bypass_watermark else _watermark(m)
         batch = changes
         if wm is not None and "ts" in changes.columns:
@@ -2088,7 +2090,6 @@ class ManifestTable:
                 change_rows,
                 m,
                 stage_rel if mode == "delta" else os.path.join(stage_rel, "changes"),
-                n_buckets,
                 obs_aggs=self._constraint_obs_aggs(m),
                 audit_empty=False,
             )
@@ -2139,15 +2140,7 @@ class ManifestTable:
                     merged,
                     m,
                     os.path.join(stage_rel, "merged"),
-                    len(touched) * files_per_bucket,
-                    spread=(
-                        [
-                            f"pmod(xxhash64({', '.join(map(sql_ident, key_cols))}),"
-                            f" {int(files_per_bucket)})"
-                        ]
-                        if files_per_bucket > 1
-                        else ()
-                    ),
+                    files_per_bucket=files_per_bucket,
                     buckets=touched,
                     audit_empty=False,
                 )
@@ -2422,9 +2415,8 @@ class ManifestTable:
         df: DataFrame,
         m: dict[str, Any],
         rel: str,
-        n_parts: int,
         *,
-        spread: list = (),
+        files_per_bucket: int = 1,
         buckets: list[int] | None = None,
         obs_aggs: list = (),
         audit_empty: bool = True,
@@ -2441,11 +2433,22 @@ class ManifestTable:
         ``DataSplit.py:133``).
 
         Writes ``df`` (internal row shape, ``_bucket`` set) under the
-        unreferenced staging prefix ``rel``, hash-partitioned into
-        ``n_parts`` tasks on ``_bucket`` plus the ``spread`` SQL expressions
-        (which split a bucket over several files), laid out as
-        ``_pb=<bucket>/`` dirs, with the table's writer options
-        (``_write_options``).  Clustering:
+        unreferenced staging prefix ``rel``, hash-partitioned on
+        ``_bucket``, laid out as ``_pb=<bucket>/`` dirs, with the table's
+        writer options (``_write_options``).  Tasks are sized by data, not
+        by bucket count: the exchange has no partition count, so a bucket
+        hashes to one shuffle partition (one task, one file) and AQE
+        coalesces whole partitions into tasks by their measured shuffle
+        bytes.  A small epoch's write is one task instead of one per
+        touched bucket, each of which paid the job's Hadoop
+        ``Configuration`` deserialization (~13-15 ms) for a few rows.
+        This leans on AQE (on in ``get_spark`` and by Spark default):
+        with ``spark.sql.adaptive.enabled=false`` the write runs
+        ``spark.sql.shuffle.partitions`` tasks, still one file per bucket.
+        ``files_per_bucket > 1`` is a FIXED split of each of ``buckets``
+        over that many files by key hash, so it keeps an explicit
+        ``len(buckets) * files_per_bucket`` partition count, which AQE
+        does not coalesce.  Clustering:
         ``sort_by`` sorts each task's rows, ``zorder_by`` sorts them on a
         z-value sketched from ``zorder_sample`` (the rewrite's own input
         files); both sorts lead with ``_pb``, the writer's dynamic-partition
@@ -2473,11 +2476,18 @@ class ManifestTable:
         (for ``_file_set``); ``observed`` is the observation row (None
         when skipped)."""
         obs = Observation()
-        out = (
-            df.observe(obs, *map(F.expr, ["count(1) AS `rows`", *obs_aggs]))
-            .withColumn("_pb", F.expr("`_bucket`"))
-            .repartition(max(n_parts, 1), *map(F.expr, ["`_bucket`", *spread]))
-        )
+        out = df.observe(
+            obs, *map(F.expr, ["count(1) AS `rows`", *obs_aggs])
+        ).withColumn("_pb", F.expr("`_bucket`"))
+        if files_per_bucket > 1:
+            keys = ", ".join(map(sql_ident, m["key_cols"]))
+            out = out.repartition(
+                len(buckets) * files_per_bucket,
+                F.expr("`_bucket`"),
+                F.expr(f"pmod(xxhash64({keys}), {int(files_per_bucket)})"),
+            )
+        else:
+            out = out.repartition(F.expr("`_bucket`"))
         if sort_by:
             out = out.sortWithinPartitions("_pb", *sort_by)
         elif zorder_by:
@@ -2817,7 +2827,6 @@ class ManifestTable:
             merged,
             m,
             self._staging_relpath(version, f"compact{version}"),
-            len(cand),
             buckets=cand,
             sort_by=sort_by,
             zorder_by=zorder_by,
@@ -3037,7 +3046,6 @@ class ManifestTable:
             df.withColumn("_bucket", _bucket_expr(n_buckets, key_cols[0])),
             m,
             self._staging_relpath(version, f"rebucket{n_buckets}"),
-            n_buckets,
             sort_by=sort_by,
             zorder_by=zorder_by,
             zorder_sample=inputs,

@@ -41,6 +41,18 @@ head):
    version to roll the replica back to (or recreate) — the honest
    contract every log-shipping replica has with a master reset.
 
+4. **Watermarks are the upstream's.**  Every row a sync ships was
+   admitted by the upstream's own watermark (``_merge``), or is an
+   ``update_where`` rewrite of a live row stamped with that row's own
+   ``ts``, which may precede the watermark on purpose.  So the replica's
+   merge does not filter shipped rows again by the replica's OWN
+   watermark (a purge or retention run on the replica table itself):
+   doing so dropped such a rewrite and the mirror diverged.  The
+   constraint this leaves: purge or retention-delete a replica only
+   right after a sync to the upstream head, with a bound the upstream's
+   watermark already covers — a later shipped row older than that bound
+   could otherwise land over a tombstone the replica has purged.
+
 Exactly-once: each sync merges with ``epoch_scope="replica",
 epoch_id=t`` — the upstream version IS the idempotence token, and the
 replica's own applied-epoch ledger is the resume point (no sidecar hint
@@ -319,6 +331,9 @@ class ReplicaTable:
             epoch_id=t,
             epoch_scope="replica",
             mode=mode,
+            # shipped rows already passed the upstream's watermark (see 4.
+            # in the module docstring)
+            _bypass_watermark=True,
             **merge_kwargs,
         )
         res["path"] = path

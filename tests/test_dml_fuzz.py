@@ -1019,6 +1019,63 @@ def test_random_replication_sequence_mirrors_upstream(
     assert state(rep.table) == pre
 
 
+@pytest.mark.parametrize("mode", ["delta", "cow"])
+def test_update_below_replica_watermark_mirrors_upstream(spark, tmp_root, mode):
+    """Deterministic purge × ``update_where`` × replica interleaving, the
+    upstream as oracle.  Both tables purge tombstones at W right after a
+    sync, so the replica has its own watermark; ``update_where`` then
+    rewrites live rows whose ts precede W (stamped with their own ts,
+    past the upstream's watermark on purpose), and a late pre-W upsert is
+    refused upstream.  The next sync must land the rewrite: the replica
+    does not re-filter shipped rows by its own watermark."""
+    import datetime as _dt
+
+    from event_driven_etl_msc_research_spark.sinks.replica import ReplicaTable
+
+    up = ManifestTable.create(
+        spark, os.path.join(tmp_root, f"wmrep_up_{mode}"), TRANSCRIPT_SCHEMA,
+        n_buckets=4,
+    )
+    lsn = iter(range(1, 10_000))
+    epoch = iter(range(1, 10_000))
+
+    def upsert(key, ts):
+        n = next(lsn)
+        return ("U", n, ts, key[0], key[1], "user", f"t{n}", None)
+
+    def state(tbl):
+        rows = [r.asDict() for r in tbl.read().collect()]
+        return sorted(rows, key=lambda d: (d["conv_id"], d["turn_idx"]))
+
+    # 18 live keys over ts 1000..2700, then four tombstones
+    up.merge(
+        _df(spark, [upsert(k, 1000 + 100 * i) for i, k in enumerate(KEYS)]),
+        next(epoch), mode=mode,
+    )
+    up.merge(
+        _df(spark, [("D", next(lsn), 1500 + 1000 * i, *KEYS[i], None, None,
+                     None) for i in range(4)]),
+        next(epoch), mode=mode,
+    )
+    rep = ReplicaTable.create(
+        spark, os.path.join(tmp_root, f"wmrep_mirror_{mode}"), up, n_buckets=8
+    )
+    assert rep.sync()["status"] == "Success"
+    w = _dt.datetime.fromtimestamp(5000, tz=_dt.timezone.utc)
+    for tbl in (up, rep.table):
+        tbl.compact(min_delta_files=0, purge_tombstones_before=w)
+        assert tbl.manifest()["lateness_ts"]
+    assert state(up) == state(rep.table)
+
+    up.update_where("conv_id = 'c5'", {"text": "'redacted'"}, epoch_id=next(epoch))
+    up.merge(_df(spark, [upsert(KEYS[0], 1100)]), next(epoch), mode=mode)
+    assert rep.sync()["status"] == "Success"
+    assert [r["text"] for r in state(rep.table) if r["conv_id"] == "c5"] == [
+        "redacted"
+    ] * 3
+    assert state(up) == state(rep.table)
+
+
 @pytest.mark.parametrize("seed,mode", [(13, "delta"), (59, "cow")])
 def test_random_branch_wap_sequence_matches_oracle(spark, tmp_root, seed, mode):
     """Branch/WAP × main-writer interplay: a branch forks main's state,

@@ -10,9 +10,19 @@ import os
 
 import pandas as pd
 import pytest
+from conftest import assert_pdf_equal
 from pyspark.sql import types as T
 
-from event_driven_etl_msc_research_spark.schemas import TRANSCRIPT_SCHEMA
+from event_driven_etl_msc_research_spark import CDCEngine
+from event_driven_etl_msc_research_spark.datagen import (
+    ChangeStreamSpec,
+    generate_change_stream,
+)
+from event_driven_etl_msc_research_spark.oracle import oracle_final_state
+from event_driven_etl_msc_research_spark.schemas import (
+    CHANGE_EVENT_SCHEMA_EVOLVED,
+    TRANSCRIPT_SCHEMA,
+)
 from event_driven_etl_msc_research_spark.sinks.manifest import (
     ManifestTable,
     SchemaEvolutionError,
@@ -278,6 +288,130 @@ def test_merge_job_counts(spark, tmp_root):
     )
     assert p == "shuffle"
     assert n_shuf <= 2 * n_delta
+
+
+def _write_tasks(spark, tag, fn):
+    """Run ``fn`` under job group ``tag``; return its result and the task
+    count of the group's last stage — the staging write's result stage
+    (the footer audit after it reads parquet driver-side, no job)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        r = fn()
+    finally:
+        sc.setJobGroup("_idle", "_idle")
+    st = sc.statusTracker()
+    stages = [
+        s for j in st.getJobIdsForGroup(tag) for s in st.getJobInfo(j).stageIds
+    ]
+    return r, st.getStageInfo(max(stages)).numTasks
+
+
+def _files_per_bucket(m, key="files"):
+    return {int(b): len(ps) for b, ps in (m.get(key) or {}).items() if ps}
+
+
+def test_staging_write_tasks_are_sized_by_data(spark, tmp_root):
+    """The staging exchange has no partition count, so AQE packs whole
+    buckets into tasks by shuffle bytes: a ~1k-event epoch over 8 buckets
+    writes in ONE task (one per touched bucket before, each paying the
+    job's Hadoop conf deserialization), still one file per bucket.  Only
+    ``files_per_bucket > 1`` keeps a fixed split."""
+    rows = [
+        ("U", i, 1000 + i, f"c{i % 97}", i // 97, "user", f"t{i}", None)
+        for i in range(1000)
+    ]
+    td = ManifestTable.create(
+        spark, os.path.join(tmp_root, "tasks_delta"), TRANSCRIPT_SCHEMA,
+        n_buckets=8,
+    )
+    for epoch in (1, 2):
+        r, tasks = _write_tasks(
+            spark,
+            f"tasks-merge-{epoch}",
+            lambda: td.merge(_changes_df(spark, rows), epoch, mode="delta"),
+        )
+        assert r["status"] == "Success" and tasks == 1
+        assert _files_per_bucket(td.manifest(), "delta_files") == {
+            b: epoch for b in range(8)
+        }
+    r, tasks = _write_tasks(spark, "tasks-compact", td.compact)
+    assert r["status"] == "Success" and tasks == 1
+    m = td.manifest()
+    assert _files_per_bucket(m) == {b: 1 for b in range(8)}
+    assert not _files_per_bucket(m, "delta_files")
+    assert td.read().count() == 1000
+
+    # a CoW rewrite with a fixed split keeps its split: 2 files per bucket
+    tc = ManifestTable.create(
+        spark, os.path.join(tmp_root, "tasks_cow"), TRANSCRIPT_SCHEMA,
+        n_buckets=8,
+    )
+    assert tc.merge(_changes_df(spark, rows), 1)["merge_path"] == "initial"
+    r = tc.merge(_changes_df(spark, rows[::3]), 2, files_per_bucket=2)
+    assert r["merge_path"] == "broadcast"
+    assert _files_per_bucket(tc.manifest()) == {b: 2 for b in range(8)}
+    assert tc.read().count() == 1000
+
+
+def test_replay_of_many_wal_files_runs_no_listing_job(spark, tmp_root):
+    """One trigger taking 33 WAL files (over Spark's 32-path threshold for
+    a parallel listing job) lists them on the driver: no "Listing leaf
+    files" job, whose 33 tasks each deserialized the job's Hadoop conf to
+    stat one local file."""
+    spec = ChangeStreamSpec(n_events=3200, n_convs=50, segment_size=100, seed=4)
+    wal = os.path.join(tmp_root, "wal")
+    assert len(generate_change_stream(wal, spec).segment_paths) == 33
+    eng = CDCEngine(
+        spark, os.path.join(tmp_root, "t"),
+        change_schema=CHANGE_EVENT_SCHEMA_EVOLVED, n_buckets=8,
+        merge_mode="delta",
+    )
+    q = eng.replay(wal, os.path.join(tmp_root, "cp"))
+    assert eng.table.current_version() == 1  # the one trigger took them all
+    # a streaming query runs its jobs under its run id as job group
+    store = spark.sparkContext._jsc.sc().statusStore()
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert jobs
+    descriptions = [store.job(j).description() for j in jobs]
+    assert not [
+        d.get() for d in descriptions
+        if d.isDefined() and d.get().startswith("Listing leaf files")
+    ]
+    got = eng.read_table().orderBy("conv_id", "turn_idx").toPandas()
+    exp = oracle_final_state(spec)
+    assert_pdf_equal(got, exp, list(exp.columns))
+
+
+def test_write_path_without_aqe(spark, tmp_root):
+    """The same merge, compact and read on a session with AQE off: the
+    table equals the oracle with one file per bucket; only the write's
+    task count rises (to ``spark.sql.shuffle.partitions``)."""
+    plain = spark.newSession()
+    plain.conf.set("spark.sql.adaptive.enabled", "false")
+    n_parts = int(plain.conf.get("spark.sql.shuffle.partitions"))
+    spec = ChangeStreamSpec(n_events=1000, n_convs=60, segment_size=250, seed=6)
+    wal = os.path.join(tmp_root, "wal")
+    generate_change_stream(wal, spec)
+    eng = CDCEngine(
+        plain, os.path.join(tmp_root, "t"),
+        change_schema=CHANGE_EVENT_SCHEMA_EVOLVED, n_buckets=8,
+        merge_mode="delta",
+    )
+    r, tasks = _write_tasks(
+        plain, "noaqe-merge", lambda: eng.apply_batch_once(wal, epoch_id=0)
+    )
+    assert r["status"] == "Success" and tasks == n_parts
+    m = eng.table.manifest()
+    assert set(_files_per_bucket(m, "delta_files").values()) == {1}
+    r, tasks = _write_tasks(plain, "noaqe-compact", eng.table.compact)
+    assert r["status"] == "Success" and tasks == n_parts
+    m = eng.table.manifest()
+    assert set(_files_per_bucket(m).values()) == {1}
+    assert not _files_per_bucket(m, "delta_files")
+    got = eng.read_table().orderBy("conv_id", "turn_idx").toPandas()
+    exp = oracle_final_state(spec)
+    assert_pdf_equal(got, exp, list(exp.columns))
 
 
 def test_applied_epochs_fold_bounds_metadata(spark, tmp_root):

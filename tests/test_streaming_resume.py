@@ -76,6 +76,69 @@ def test_stop_and_resume_from_checkpoint(spark, tmp_root):
     assert_pdf_equal(got, oracle_final_state(SPEC), COLS)
 
 
+_CP_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(session) -> str:
+    """Class name of the checkpoint file manager ``session``'s streaming
+    queries build."""
+    jvm = session._jvm
+    return (
+        jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        .CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path("file:/"),
+            session._jsparkSession.sessionState().newHadoopConf(),
+        )
+        .getClass()
+        .getSimpleName()
+    )
+
+
+@pytest.mark.parametrize("first", ["spark_default", "get_spark"])
+def test_checkpoint_resumes_across_checkpoint_managers(spark, tmp_root, first):
+    """``get_spark`` points local sessions' checkpoints at Spark's
+    FileSystem-based manager (no forked ``readlink`` per rename); Spark's
+    default is the FileContext-based one.  A checkpoint written under
+    either resumes under the other: the rest of the log drains exactly
+    once, a re-replay under either session applies nothing, and the
+    table equals the oracle."""
+    default = spark.newSession()
+    default.conf.unset(_CP_MANAGER)
+    sessions = {"spark_default": default, "get_spark": spark}
+    assert _checkpoint_manager(default) == "FileContextBasedCheckpointFileManager"
+    assert _checkpoint_manager(spark) == "FileSystemBasedCheckpointFileManager"
+    then = sessions["get_spark" if first == "spark_default" else "spark_default"]
+
+    log, tbl, cp = _dirs(tmp_root)
+    spec = ChangeStreamSpec(
+        n_events=2_000, n_convs=60, segment_size=250, seed=12, dup_segments=(1,)
+    )
+    segs = generate_change_stream(os.path.join(tmp_root, "src"), spec).segment_paths
+    os.makedirs(log)
+
+    def deliver(paths):
+        for p in paths:  # a rename keeps the log-order mtimes
+            os.replace(p, os.path.join(log, os.path.basename(p)))
+
+    def replay(session):
+        eng = CDCEngine(
+            session, tbl, change_schema=CHANGE_EVENT_SCHEMA_EVOLVED, n_buckets=8
+        )
+        eng.replay(log, cp, max_files_per_trigger=2)
+        return eng
+
+    deliver(segs[:4])
+    assert replay(sessions[first]).table.current_version() == 2
+    deliver(segs[4:])
+    # the other 5 segments, 2 per trigger
+    assert replay(then).table.current_version() == 5
+    assert replay(sessions[first]).table.current_version() == 5
+    eng = replay(then)
+    assert eng.table.current_version() == 5
+    got = eng.read_table().orderBy("conv_id", "turn_idx").toPandas()
+    assert_pdf_equal(got, oracle_final_state(spec), COLS)
+
+
 def test_crash_between_stage_and_publish_then_resume(spark, tmp_root):
     """The hard crash point: staging files written, manifest NOT published.
     Restart must re-run the epoch and converge — no duplicates, no loss."""
