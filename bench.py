@@ -1,13 +1,17 @@
 """Headline benchmark for the PySpark CDC/analytics engine.
 
-Runs the engine's flagship queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints ONE JSON line::
+Runs the engine's flagship queries at ``$SPARK_GRAFT_SF_DIR`` (default: the
+sf0.1 test data) on ``local[$SPARK_GRAFT_CPUS]`` (default 32).  The
+full record, with the per-query ``queries``/``queries_cold`` maps, goes to
+``--json-out`` (default ``bench_samples/bench_last.json``); the last stdout
+line is a short JSON summary that stays well under 2,000 characters::
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "value_cold": N, "unit": "sec", ...,
+     "slowest": {"<query>": sec, ...}, "json_out": "..."}
 
 Extra keys: ``cdc_events_per_sec`` (the north-star metric — change-events/sec
-replayed through the full dedup→MERGE→manifest-commit path) and ``cpus``.
+replayed through the full dedup→MERGE→manifest-commit path), ``cpus`` and
+``slowest`` (the 5 slowest best-of-reps queries).
 
 Each query is forced end-to-end with a ``noop``-format write so projection
 columns are actually computed (a bare ``count()`` would let Catalyst prune
@@ -38,7 +42,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from event_driven_etl_msc_research_spark.datagen import (  # noqa: E402
     ChangeStreamSpec,
@@ -233,7 +238,11 @@ def main() -> int:
     ap.add_argument("--events", type=int, default=int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "400000")))
     ap.add_argument("--stream-dir", default=None,
                     help="pre-generated change stream to replay (skips generation)")
-    ap.add_argument("--json-out", default=None)
+    ap.add_argument(
+        "--json-out",
+        default=os.path.join(REPO, "bench_samples", "bench_last.json"),
+        help="file for the full record, per-query timings included",
+    )
     ap.add_argument(
         "--reps",
         type=int,
@@ -351,11 +360,11 @@ def main() -> int:
         "cdc_cow_events_per_sec": cow_events_per_sec,
         "cdc_replay_events": args.events if CDC_REPLAY in names else None,
     }
-    line = json.dumps(out)
-    if args.json_out:
-        with open(args.json_out, "w") as f:
-            f.write(line + "\n")
-    print(line)
+    with open(args.json_out, "w") as f:
+        f.write(json.dumps(out) + "\n")
+    summary = {k: v for k, v in out.items() if k not in ("queries", "queries_cold")}
+    slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:5]
+    print(json.dumps({**summary, "slowest": dict(slowest), "json_out": args.json_out}))
     spark.stop()
     if fast:
         shutil.rmtree(conf["spark.local.dir"], ignore_errors=True)

@@ -220,18 +220,10 @@ def knn_lsh_bucketed(
 # Index metadata commits through the SAME five-verb object-store contract as
 # table manifests (sinks/storage.py): an append-only chain of conditional
 # PUTs under _ann_meta/v*.json, never a rename or in-place overwrite.  That
-# makes indexes object-store-portable like the table, turns concurrent
-# appends' read-modify-write into an optimistic rebase (no lost update),
-# and lets rebuilds write a FRESH versioned data dir and swap it in via the
-# meta commit — no unlink crash window, no read-from-while-overwriting.
-#
-# Data layout: the committed meta names a LIST of data dirs (``data_dirs``).
-# A build writes one; every append writes its OWN new dir and the meta
-# commit links it — appenders never share an output directory, because two
-# Spark jobs appending into one path race on the committer's shared
-# _temporary tree (and an object store has no append anyway).  Searches
-# read all listed dirs (same partition layout in each); a rebuild folds
-# them back to one — the delta-files/compaction shape of the table engine.
+# makes indexes object-store-portable like the table, and lets rebuilds
+# write a FRESH versioned data dir and swap it in via the meta commit — no
+# unlink crash window, no read-from-while-overwriting.  The committed meta
+# names the data dirs (``data_dirs``) a search reads.
 
 _ANN_META_DIR = "_ann_meta"
 
@@ -271,8 +263,7 @@ def index_meta(index_dir: str, storage=None) -> tuple[dict | None, int]:
 def _commit_meta(st, meta: dict, expected_version: int) -> bool:
     """Optimistic publish as version ``expected_version + 1`` (conditional
     PUT — the same commit point as ``ManifestTable._publish``).  False =
-    lost the race; the caller re-reads and rebases (appends) or re-checks
-    (builds)."""
+    lost the race; the caller re-reads and re-checks."""
     import json
 
     st.ensure_root()
@@ -391,18 +382,6 @@ def lsh_build(
     return meta
 
 
-def _chain_signature(old: str | None, new: str | None) -> str | None:
-    """Fold an append batch's signature into the index's cumulative corpus
-    signature (bounded-size hash chain).  None on either side poisons the
-    chain to None — an unsigned batch means the caller tracks staleness
-    themselves, and a half-signed chain would false-match."""
-    import hashlib
-
-    if old is None or new is None:
-        return None
-    return hashlib.md5(f"{old}+{new}".encode()).hexdigest()
-
-
 def _read_index_dirs(spark, st, meta) -> DataFrame:
     """Scan of the index's committed data dirs: each dir is read with its
     own partition discovery (Spark refuses ONE read over several roots —
@@ -415,215 +394,6 @@ def _read_index_dirs(spark, st, meta) -> DataFrame:
     return dfs[0] if len(dfs) == 1 else reduce(
         lambda a, b: a.unionByName(b), dfs
     )
-
-
-def _rebase_append_meta(
-    st, index_dir: str, kind: str, meta: dict, version: int, fold
-):
-    """Commit an append's meta update with optimistic rebase: on a lost
-    race the winner's meta is re-read and OUR deltas are re-folded onto it
-    (the batch's own data dir is already on disk; only the bookkeeping —
-    counts, signature chain, dir link — needs rebasing).  This closes the
-    round-4 lost-update: two concurrent appends both survive, with both
-    counts/signatures chained in commit order.  A concurrent REBUILD that
-    replaced the data-dir set mid-append raises — this writer's new dir
-    may or may not have been folded into the rebuild's input, so the only
-    safe move is to retry the whole append against the new index."""
-    start_dirs = set(meta.get("data_dirs") or [])
-    while True:
-        new_meta = fold(meta)
-        if _commit_meta(st, new_meta, version):
-            return new_meta
-        meta, version = _read_meta(index_dir, kind, st)
-        if not start_dirs <= set(meta.get("data_dirs") or []):
-            raise RuntimeError(
-                f"a concurrent rebuild replaced the {kind} index data dirs "
-                f"during this append — retry the append against the new "
-                f"index"
-            )
-
-
-def lsh_append(
-    emb_new: DataFrame,
-    index_dir: str,
-    corpus_signature: str | None = None,
-    storage=None,
-) -> dict:
-    """Incrementally index NEW vectors into an existing LSH bucket table
-    (``lsh_build``) — the live-corpus path: table growth appends O(batch)
-    instead of forcing a full O(corpus) rebuild.
-
-    The hyperplanes are pure functions of (plane, dim) indices, so an
-    appended vector lands in EXACTLY the (table, bucket) partitions a full
-    rebuild over the union corpus would put it in — append ≡ rebuild,
-    bit-for-bit (pinned by tests).  The batch writes its OWN versioned
-    data dir (appenders never share an output path — see the module
-    storage notes) and the meta commit links it; searches keep reading
-    only probed partition directories across the dir list.  The metadata
-    advances ``n_vectors`` and the cumulative signature chain via an
-    optimistic conditional-PUT commit — concurrent appends rebase instead
-    of losing updates (``_rebase_append_meta``)."""
-    st = _ann_storage(index_dir, storage)
-    meta, version = _read_meta(index_dir, "lsh", st)
-    n_new = emb_new.count()
-    if n_new == 0:
-        return meta
-    bits, keys = _lsh_projections(
-        meta["dim"], meta["n_planes"], meta["n_tables"], multi_probe=0
-    )
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    v = (
-        emb_new.select(
-            F.col(id_col).alias("nid"),
-            F.col(vec_col).cast("array<double>").alias("nv"),
-        )
-        .withColumn("_bits", bits(F.col("nv")))
-        .select("nid", "nv", F.explode(keys(F.col("_bits"), probe=False)).alias("tb"))
-        .select("nid", "nv", "tb.tbl", "tb.bucket")
-    )
-    batch_dir = f"buckets-{_data_nonce()}"
-    (
-        v.repartition(max(meta["n_tables"] * 4, 1), "tbl", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("tbl", "bucket")
-        .parquet(st.spark_path(batch_dir))
-    )
-
-    def fold(base: dict) -> dict:
-        return {
-            **base,
-            "n_vectors": base["n_vectors"] + n_new,
-            "corpus_signature": _chain_signature(
-                base.get("corpus_signature"), corpus_signature
-            ),
-            "data_dirs": list(base.get("data_dirs") or []) + [batch_dir],
-            "appended_batches": base.get("appended_batches", 0) + 1,
-            "built_at": time.time(),
-        }
-
-    return _rebase_append_meta(st, index_dir, "lsh", meta, version, fold)
-
-
-def ivf_append(
-    emb_new: DataFrame,
-    index_dir: str,
-    corpus_signature: str | None = None,
-    skew_retrain_ratio: float = 8.0,
-    auto_retrain: bool = False,
-    storage=None,
-) -> dict:
-    """Incrementally index NEW vectors into an existing IVF index
-    (``ivf_build``): assign them to the EXISTING centroids (the trained
-    quantizer is the asset append amortizes) and parquet-append into the
-    cell partition layout — O(batch), no retrain, searches still prune to
-    probed cells.
-
-    Drift guard: per-cell row counts ride in the committed meta
-    (``cell_rows``); when the fullest cell exceeds ``skew_retrain_ratio``
-    × the mean the quantizer no longer fits the data distribution
-    (appended vectors are piling into few cells — probe cost grows toward
-    a scan).  The append still completes, and ``retrain_recommended`` is
-    set in the returned meta; with ``auto_retrain=True`` the index is
-    instead rebuilt from its own cell table (the union corpus): the
-    rebuild trains on the full distribution, writes a FRESH versioned
-    cells dir, swaps it in via the meta commit, and deletes the old dir —
-    the old layout is never read and overwritten in the same plan, and a
-    crash anywhere leaves a fully searchable index (old meta + old dir
-    until the commit, new meta + new dir after).  Meta updates commit via
-    optimistic rebase (``_rebase_append_meta``) — concurrent appends both
-    survive."""
-    st = _ann_storage(index_dir, storage)
-    meta, version = _read_meta(index_dir, "ivf", st)
-    n_new = emb_new.count()
-    if n_new == 0:
-        return meta
-    cents = meta["centroids"]
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    assigned = _with_cell_dists(
-        emb_new.select(
-            F.col(id_col).alias("nid"),
-            F.col(vec_col).cast("array<double>").alias("nv"),
-        ),
-        "nv",
-        cents,
-    ).select(
-        "nid",
-        "nv",
-        (F.array_position(F.col("_cd"), F.array_min(F.col("_cd"))) - 1)
-        .cast("int")
-        .alias("cell"),
-    )
-    # per-cell counts of the NEW batch only (n_cells rows to the driver;
-    # the batch plan is evaluated twice — O(batch), never O(index))
-    new_counts = {
-        int(r["cell"]): int(r["n"])
-        for r in assigned.groupBy("cell").agg(F.count("*").alias("n")).collect()
-    }
-
-    def _folded_rows(base: dict) -> dict[int, int]:
-        rows = {int(k): int(v) for k, v in (base.get("cell_rows") or {}).items()}
-        for c, n in new_counts.items():
-            rows[c] = rows.get(c, 0) + n
-        return rows
-
-    cell_rows = _folded_rows(meta)
-    total = meta["n_vectors"] + n_new
-    mean = total / max(len(cents), 1)
-    skewed = cell_rows and max(cell_rows.values()) > skew_retrain_ratio * mean
-    chain = _chain_signature(meta.get("corpus_signature"), corpus_signature)
-
-    # land the batch into its OWN versioned dir first — after this the
-    # dir list (old dirs + this one) IS the union corpus, whichever path
-    # commits the meta
-    batch_dir = f"cells-{_data_nonce()}"
-    (
-        assigned.repartition(max(len(cents) // 4, 1), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(st.spark_path(batch_dir))
-    )
-
-    if skewed and auto_retrain:
-        spark = emb_new.sparkSession
-        old_dirs = list(meta.get("data_dirs") or []) + [batch_dir]
-        union = _read_index_dirs(
-            spark, st, {"data_dirs": old_dirs}
-        ).select(F.col("nid").alias(id_col), F.col("nv").alias(vec_col))
-        params = {
-            "kind": "ivf",
-            "n_cells": meta["n_cells"],
-            "iters": meta["iters"],
-            "id_col": id_col,
-            "vec_col": vec_col,
-        }
-        new_meta = _ivf_write_index(
-            union, st, index_dir, params, total, chain, version
-        )
-        for d in old_dirs:  # superseded by the swap-in
-            st.delete_prefix(d)
-        return new_meta
-
-    def fold(base: dict) -> dict:
-        rows = _folded_rows(base)
-        return {
-            **base,
-            "n_vectors": base["n_vectors"] + n_new,
-            "corpus_signature": _chain_signature(
-                base.get("corpus_signature"), corpus_signature
-            ),
-            "data_dirs": list(base.get("data_dirs") or []) + [batch_dir],
-            "cell_rows": {str(c): n for c, n in sorted(rows.items())},
-            "appended_batches": base.get("appended_batches", 0) + 1,
-            "retrain_recommended": bool(
-                rows
-                and max(rows.values())
-                > skew_retrain_ratio
-                * ((base["n_vectors"] + n_new) / max(len(cents), 1))
-            ),
-            "built_at": time.time(),
-        }
-
-    return _rebase_append_meta(st, index_dir, "ivf", meta, version, fold)
 
 
 _MAX_QUERY_BATCH = 100_000
@@ -846,7 +616,10 @@ def ivf_build(
     wrapper hashes the corpus file's (size, mtime)); without one, fall back
     to an ``emb.count()`` row-count comparison — correct, but a footer-scan
     job on every warm call.  A rebuild writes a fresh versioned cells dir,
-    swaps it in via the meta commit, and deletes the superseded dir.
+    swaps it in via the meta commit, and deletes the superseded dir; the
+    fresh dir means a rebuild never reads from what it overwrites.  Losing
+    the commit race to an EQUIVALENT concurrent build adopts the winner's
+    index.
     """
     st = _ann_storage(index_dir, storage)
     params = {
@@ -872,46 +645,11 @@ def ivf_build(
     if _matches(meta0):
         return meta0
     n_vectors = emb.count()
-    meta = _ivf_write_index(
-        emb, st, index_dir, params, n_vectors, corpus_signature, v,
-        matches=_matches,
-    )
-    if meta0 is not None:
-        for d in meta0.get("data_dirs") or []:
-            if d not in (meta.get("data_dirs") or []):
-                st.delete_prefix(d)  # superseded rebuild data
-    return meta
-
-
-def _ivf_write_index(
-    emb: DataFrame,
-    st,
-    index_dir: str,
-    params: dict,
-    n_vectors: int,
-    corpus_signature: str | None,
-    expected_version: int,
-    matches=None,
-) -> dict:
-    """Train + write an IVF index into a FRESH versioned cells dir and
-    commit it as meta version ``expected_version + 1``.  The fresh dir is
-    what removes the old read-from-while-overwriting hazard: a rebuild
-    (including ``ivf_append(auto_retrain=True)``) reads the OLD dir and
-    writes the NEW one, and the conditional-PUT meta commit is the swap.
-    Losing the commit race: an EQUIVALENT build (``matches``) is adopted;
-    anything else (a concurrent append that advanced the same index)
-    raises — this writer's input snapshot is stale."""
-    cents = ivf_train(
-        emb,
-        n_cells=params["n_cells"],
-        iters=params["iters"],
-        id_col=params["id_col"],
-        vec_col=params["vec_col"],
-    )
+    cents = ivf_train(emb, n_cells=n_cells, iters=iters, id_col=id_col, vec_col=vec_col)
     vdf = _with_cell_dists(
         emb.select(
-            F.col(params["id_col"]).alias("nid"),
-            F.col(params["vec_col"]).cast("array<double>").alias("nv"),
+            F.col(id_col).alias("nid"),
+            F.col(vec_col).cast("array<double>").alias("nv"),
         ),
         "nv",
         cents,
@@ -930,36 +668,23 @@ def _ivf_write_index(
         .partitionBy("cell")
         .parquet(st.spark_path(data_dir))
     )
-    # per-cell row counts for ivf_append's skew guard: a count over the
-    # partition column alone — parquet serves it from footers + dir names,
-    # no vector data is read
-    cell_rows = {
-        str(int(r["cell"])): int(r["n"])
-        for r in emb.sparkSession.read.parquet(st.spark_path(data_dir))
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
     meta = {
         **params,
         "n_vectors": n_vectors,
         "corpus_signature": corpus_signature,
         "centroids": cents,
-        "cell_rows": cell_rows,
         "data_dirs": [data_dir],
         "built_at": time.time(),
     }
-    while not _commit_meta(st, meta, expected_version):
-        cur, expected_version = index_meta(index_dir, st)
-        if matches is not None and matches(cur):
-            st.delete_prefix(data_dir)
+    while not _commit_meta(st, meta, v):
+        cur, v = index_meta(index_dir, st)
+        if _matches(cur):
+            st.delete_prefix(data_dir)  # an equivalent concurrent build won
             return cur
-        if matches is None:
-            st.delete_prefix(data_dir)
-            raise RuntimeError(
-                "lost the index meta commit race to a concurrent writer "
-                "during a rebuild — retry against the new index state"
-            )
+    if meta0 is not None:
+        for d in meta0.get("data_dirs") or []:
+            if d != data_dir:
+                st.delete_prefix(d)  # superseded rebuild data
     return meta
 
 

@@ -34,10 +34,6 @@ Scale design (10^10 events / 100 TB):
   per commit;
 * readers resolve state ONLY through manifests (never directory listing),
   so commits are atomic and concurrent readers see consistent snapshots.
-
-When an Iceberg runtime jar is on the classpath, ``sinks/iceberg.py``
-provides the same interface over real ``MERGE INTO`` (not available in this
-sandbox — no network; SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -573,6 +569,7 @@ class ManifestTable:
         of this table's life use that codec)."""
         for f in schema.fields:
             cls._admit(None, f.name)
+            cls._admit_ts(f)
         t = cls(spark, root, storage=storage)
         if t.exists():
             return t
@@ -1258,6 +1255,20 @@ class ManifestTable:
         if ddl and not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             raise SchemaEvolutionError(f"invalid column name {name!r}")
 
+    @staticmethod
+    def _admit_ts(f: T.StructField) -> None:
+        """Type admission for ``ts`` entering a schema: ``TIMESTAMP_NTZ``
+        is refused.  ``ts`` orders a key's versions, and every ordering of
+        an NTZ value casts it through the session time zone — a wall-clock
+        time in a DST gap moves by an hour, so the winning version would
+        depend on the session."""
+        if f.name == "ts" and isinstance(f.dataType, T.TimestampNTZType):
+            raise SchemaEvolutionError(
+                "'ts' is TIMESTAMP_NTZ: ts orders row versions, and ordering "
+                "NTZ values reads the session time zone — cast ts to "
+                "TIMESTAMP (an instant) before it reaches the table"
+            )
+
     def _schema_change(
         self,
         m: dict[str, Any],
@@ -1278,8 +1289,9 @@ class ManifestTable:
         list in ``_COL_LISTS`` following the new name or losing the
         dropped one.  A refused change raises ``SchemaEvolutionError``.
 
-        * Names: every column entering the schema passes ``_admit``; an
-          incoming column new to the table is appended nullable.
+        * Names: every column entering the schema passes ``_admit`` (and
+          ``_admit_ts``); an incoming column new to the table is appended
+          nullable.
         * Types: a column only widens within its numeric family
           (``_widens``; files written narrow read back up-cast), and a
           narrower change batch keeps the table type (the merge up-casts
@@ -1309,6 +1321,7 @@ class ManifestTable:
             have = cur.get(f.name)
             if have is None or f is add:
                 self._admit(m, f.name, ddl=f is add)
+                self._admit_ts(f)
                 out[f.name] = T.StructField(f.name, f.dataType, True)
                 added.append(f.name)
                 continue
@@ -1337,6 +1350,7 @@ class ManifestTable:
                 if old == "ts":
                     raise identity(old, "be renamed")
                 self._admit(m, new, ddl=True)
+                self._admit_ts(T.StructField(new, cur[old].dataType))
                 out = {(new if n == old else n): f for n, f in out.items()}
                 out[new] = T.StructField(new, cur[old].dataType, cur[old].nullable)
                 ren[new] = [old] + ren.pop(old, [])
@@ -4974,34 +4988,6 @@ class ManifestTable:
         return existed
 
     # ---------- change feed (downstream incremental consumers) ----------
-
-    def incremental_rows(
-        self, from_version: int, to_version: int | None = None
-    ) -> DataFrame:
-        """Raw incremental append scan (Iceberg's incremental-read
-        analogue): the rows of files ADDED between two snapshots, with
-        internal columns (``_lsn``, ``_deleted``, ``_bucket``) so a
-        downstream consumer can run its own fold/apply.  Cost is O(added
-        files) — the table itself is never scanned — which is the shape an
-        incremental consumer needs at 10^10 rows.
-
-        Only defined over APPEND steps (delta-mode merge epochs).  If any
-        file of ``from_version`` is gone by ``to_version``, a
-        compact / rebucket / CoW rewrite happened in the range and the
-        added files contain REWRITTEN copies of old rows — not changes —
-        so this raises ``ValueError`` directing the caller to
-        ``changes()``, which diffs snapshots and is rewrite-proof."""
-        ma = self.manifest(from_version)
-        tv = self.current_version() if to_version is None else to_version
-        mb = self.manifest(tv)
-        fa, fb = ({p for _, p, _ in _data_files(x)} for x in (ma, mb))
-        if fa - fb:
-            raise ValueError(
-                f"files were rewritten between v{from_version} and v{tv} "
-                "(compact/rebucket/CoW in the range) — added files are not "
-                "a change feed there; use changes()"
-            )
-        return self._scan(mb, sorted(fb - fa), live=False)
 
     # candidate-key sets larger than this skip the broadcast semi-join and
     # fall back to a shuffled semi-join (same result, no 8 GB broadcast cap

@@ -164,201 +164,29 @@ def test_warm_build_without_signature_still_short_circuits(spark, tmp_root):
     assert similarity.index_meta(idx)[1] == v0
 
 
-# ---------------------------------------------------------------------------
-# Incremental append (round-4 directive #3)
-# ---------------------------------------------------------------------------
-
 def _sorted_rows(df):
     return sorted(map(tuple, df.collect()))
-
-
-def test_lsh_append_equals_full_rebuild(spark, tmp_root):
-    """Hyperplanes are pure functions of indices, so append ≡ rebuild
-    bit-for-bit: searching an (old ∪ appended) index returns EXACTLY what a
-    from-scratch build over the union corpus returns."""
-    emb = _emb(spark)
-    old, new = emb.filter("vec_id < 300"), emb.filter("vec_id >= 300")
-
-    inc = os.path.join(tmp_root, "lsh_inc")
-    similarity.lsh_build(old, inc, n_planes=4, n_tables=2, dim=64,
-                         corpus_signature="base")
-    m = similarity.lsh_append(new, inc, corpus_signature="b1")
-    assert m["n_vectors"] == 500 and m["appended_batches"] == 1
-
-    full = os.path.join(tmp_root, "lsh_full")
-    similarity.lsh_build(emb, full, n_planes=4, n_tables=2, dim=64)
-
-    q = _queries(spark)
-    got = _sorted_rows(similarity.lsh_search(spark, inc, q, k=5, multi_probe=1))
-    exp = _sorted_rows(similarity.lsh_search(spark, full, q, k=5, multi_probe=1))
-    assert got == exp and len(got) == len(QIDS) * 5
-
-    # the appended index still serves partition-pruned searches
-    res = similarity.lsh_search(spark, inc, q.limit(1), k=5, multi_probe=0)
-    plan = _formatted_plan(spark, res)
-    assert any("PartitionFilters" in l and "tbl" in l for l in plan.splitlines())
-
-
-def test_ivf_append_assigns_to_existing_cells_and_matches_rebuild(spark, tmp_root):
-    """Appended vectors are assigned to the EXISTING quantizer (no retrain).
-    With iters=0 the trainer's centroids are the n_cells lowest-id vectors —
-    present in the base corpus — so a from-scratch union rebuild trains the
-    IDENTICAL quantizer and the appended index must match it exactly."""
-    emb = _emb(spark)
-    old, new = emb.filter("vec_id < 300"), emb.filter("vec_id >= 300")
-
-    inc = os.path.join(tmp_root, "ivf_inc")
-    m0 = similarity.ivf_build(old, inc, n_cells=8, iters=0,
-                              corpus_signature="base")
-    cents_before = m0["centroids"]
-    m = similarity.ivf_append(new, inc, corpus_signature="b1")
-    assert m["n_vectors"] == 500 and m["centroids"] == cents_before
-    assert m["retrain_recommended"] is False
-    assert sum(int(v) for v in m["cell_rows"].values()) == 500
-
-    full = os.path.join(tmp_root, "ivf_full")
-    similarity.ivf_build(emb, full, n_cells=8, iters=0)
-
-    q = _queries(spark)
-    got = _sorted_rows(similarity.ivf_search(spark, inc, q, k=5, n_probe=3))
-    exp = _sorted_rows(similarity.ivf_search(spark, full, q, k=5, n_probe=3))
-    assert got == exp and len(got) == len(QIDS) * 5
-
-    # probe scan over the appended index is still partition-pruned
-    import re
-    res = similarity.ivf_search(spark, inc, q.limit(1), k=5, n_probe=2)
-    mm = re.search(r"PartitionFilters: \[cell#\d+ IN \(([^)]*)\)",
-                   _formatted_plan(spark, res))
-    assert mm and len(mm.group(1).split(",")) <= 2
 
 
 def test_index_roundtrip_on_both_storage_backends(
     spark, tmp_root, storage_factory
 ):
-    """Round-4 judge #2: index metadata goes through the TableStorage
-    verbs, so build → append → search behaves identically on the POSIX
-    backend and the in-process fake object store (conditional PUT, no
-    rename) — the property that makes indexes object-store-portable like
-    the table."""
+    """Index metadata goes through the TableStorage verbs, so build →
+    search behaves identically on the POSIX backend and the in-process
+    fake object store (conditional PUT, no rename) — the property that
+    makes indexes object-store-portable like the table."""
     emb = _emb(spark)
-    old, new = emb.filter("vec_id < 300"), emb.filter("vec_id >= 300")
     idx = os.path.join(tmp_root, "ivf_backend")
     st = storage_factory(idx)
-    m0 = similarity.ivf_build(old, idx, n_cells=8, iters=0,
-                              corpus_signature="base", storage=st)
-    m = similarity.ivf_append(new, idx, corpus_signature="b1", storage=st)
-    assert m["n_vectors"] == 500 and m["centroids"] == m0["centroids"]
+    m = similarity.ivf_build(emb, idx, n_cells=8, iters=0,
+                             corpus_signature="base", storage=st)
+    assert m["n_vectors"] == 500
+    assert similarity.index_meta(idx, st) == (m, 1)
     got = _sorted_rows(
         similarity.ivf_search(spark, idx, _queries(spark), k=5, n_probe=3,
                               storage=st)
     )
-    full = os.path.join(tmp_root, "ivf_backend_full")
-    similarity.ivf_build(emb, full, n_cells=8, iters=0,
-                         storage=storage_factory(full))
     exp = _sorted_rows(
-        similarity.ivf_search(spark, full, _queries(spark), k=5, n_probe=3,
-                              storage=storage_factory(full))
+        similarity.knn_ivf(emb, QIDS, k=5, n_cells=8, n_probe=3, iters=0)
     )
     assert got == exp and len(got) == len(QIDS) * 5
-
-
-def test_concurrent_appends_both_survive(spark, tmp_root):
-    """Round-4 judge #2 race closure: the old read-modify-write meta.json
-    rename lost one of two concurrent appends' counts/signature links.
-    With the conditional-PUT chain the loser rebases — after two
-    interleaved appends BOTH batches' vectors are searchable and the meta
-    counts include both."""
-    import threading
-
-    emb = _emb(spark)
-    base = emb.filter("vec_id < 200")
-    b1 = emb.filter("vec_id >= 200 and vec_id < 350")
-    b2 = emb.filter("vec_id >= 350")
-    idx = os.path.join(tmp_root, "lsh_race")
-    similarity.lsh_build(base, idx, n_planes=4, n_tables=2, dim=64,
-                         corpus_signature="base")
-
-    # force the interleaving deterministically: gate the FIRST writer's
-    # commit until the second writer has fully committed, so writer 1's
-    # CAS must lose once and rebase
-    real_commit = similarity._commit_meta
-    w2_done = threading.Event()
-    errs = []
-
-    def gated_commit(st, meta, expected_version):
-        if threading.current_thread().name == "w1":
-            w2_done.wait(60)
-        return real_commit(st, meta, expected_version)
-
-    def run(name, batch, sig):
-        try:
-            similarity.lsh_append(batch, idx, corpus_signature=sig)
-        except Exception as e:  # surfaced below
-            errs.append((name, e))
-        finally:
-            if name == "w2":
-                w2_done.set()
-
-    similarity._commit_meta = gated_commit
-    try:
-        t1 = threading.Thread(target=run, args=("w1", b1, "b1"), name="w1")
-        t2 = threading.Thread(target=run, args=("w2", b2, "b2"), name="w2")
-        t1.start(); t2.start(); t1.join(60); t2.join(60)
-    finally:
-        similarity._commit_meta = real_commit
-    assert not errs, errs
-    meta, version = similarity.index_meta(idx)
-    assert meta["n_vectors"] == 500  # both batches' counts survived
-    assert meta["appended_batches"] == 2
-    assert version == 3  # build + two append commits, no overwrite
-
-    # vectors from BOTH batches are searchable
-    q = _queries(spark)
-    rows = similarity.lsh_search(spark, idx, q, k=5, multi_probe=1)
-    assert rows.count() == len(QIDS) * 5
-    nids = {r["nid"] for r in rows.collect()}
-    full = os.path.join(tmp_root, "lsh_race_full")
-    similarity.lsh_build(emb, full, n_planes=4, n_tables=2, dim=64)
-    exp = _sorted_rows(similarity.lsh_search(spark, full, q, k=5, multi_probe=1))
-    assert _sorted_rows(rows) == exp, nids
-
-
-def test_ivf_append_skew_triggers_retrain(spark, tmp_root):
-    """A batch that piles into one cell flips retrain_recommended; with
-    auto_retrain=True the index rebuilds from its own cell table (union
-    corpus) and re-trains the quantizer on the full distribution."""
-    from pyspark.sql import functions as F
-
-    emb = _emb(spark)
-    old = emb.filter("vec_id < 200")
-    # 600 near-copies of vector 0 (+tiny id-dependent nudge): all land in
-    # vector 0's cell → massive skew
-    clones = (
-        emb.filter("vec_id = 0")
-        .crossJoin(spark.range(1000, 1600).withColumnRenamed("id", "cid"))
-        .select(
-            F.col("cid").alias("vec_id"),
-            F.transform(
-                F.col("embedding"),
-                lambda x: x + F.col("cid").cast("double") * 1e-9,
-            ).alias("embedding"),
-        )
-    )
-
-    flagged = os.path.join(tmp_root, "ivf_skew")
-    similarity.ivf_build(old, flagged, n_cells=8, iters=1)
-    m = similarity.ivf_append(clones, flagged, skew_retrain_ratio=4.0)
-    assert m["retrain_recommended"] is True
-    assert m["n_vectors"] == 800
-
-    retrained = os.path.join(tmp_root, "ivf_skew_rt")
-    similarity.ivf_build(old, retrained, n_cells=8, iters=1)
-    m0 = similarity.ivf_build(old, retrained, n_cells=8, iters=1)
-    m2 = similarity.ivf_append(
-        clones, retrained, skew_retrain_ratio=4.0, auto_retrain=True
-    )
-    assert m2["n_vectors"] == 800
-    assert m2["centroids"] != m0["centroids"]  # quantizer actually retrained
-    # rebuilt index still searches fine over the union
-    got = similarity.ivf_search(spark, retrained, _queries(spark), k=5, n_probe=3)
-    assert got.count() == len(QIDS) * 5

@@ -1,4 +1,4 @@
-"""Change feed (`ManifestTable.changes` / `incremental_rows`): the CDF
+"""Change feed (`ManifestTable.changes`): the CDF
 surface downstream incremental consumers read — the Iceberg/Delta
 `table_changes` analogue over the manifest chain.
 
@@ -7,7 +7,7 @@ the pure-delta-append fast path restricts both snapshot scans to the
 candidate keys of the ADDED delta files via a broadcast semi-join (the
 O(changes) shape — nothing shuffles at table size), (3) the general diff
 stays exact across compact/rebucket (where added-files feeds are
-meaningless and `incremental_rows` refuses), and (4) additive schema
+meaningless), and (4) additive schema
 evolution inside the range surfaces as updates, never errors."""
 
 from __future__ import annotations
@@ -161,13 +161,10 @@ EXPECTED = {
 }
 
 
-def test_changes_exact_across_compact_and_incremental_refuses(
-    spark, tmp_root
-):
+def test_changes_exact_across_compact(spark, tmp_root):
     """Compaction is a STATE-PRESERVING rewrite: the chain walk skips it
     and the candidate fast path survives — the range's changes are its
-    delta-append steps' alone.  `incremental_rows` (raw added-files feed)
-    still refuses, because rewritten files are not a change feed."""
+    delta-append steps' alone."""
     tbl, v1 = _mk_table(spark, tmp_root, mode="delta")
     tbl.compact()
     cur = tbl.current_version()
@@ -180,8 +177,6 @@ def test_changes_exact_across_compact_and_incremental_refuses(
     assert added and all("-e1-" in p for p in added), added
     assert added_rows == 3
     assert _changes_map(tbl.changes(v1)) == EXPECTED
-    with pytest.raises(ValueError, match="rewritten"):
-        tbl.incremental_rows(v1)
 
 
 def test_changes_fast_path_across_compaction_midrange(spark, tmp_root):
@@ -283,17 +278,6 @@ def test_changes_vacuumed_candidate_falls_back(spark, tmp_root):
         tbl.storage.delete_prefix(f"data/{d}")
     assert tbl._append_candidates(v1, cur, ma, mb) is None
     assert _changes_map(tbl.changes(v1)) == EXPECTED
-
-
-def test_incremental_rows_is_the_raw_added_feed(spark, tmp_root):
-    tbl, v1 = _mk_table(spark, tmp_root, mode="delta")
-    raw = tbl.incremental_rows(v1).orderBy("_lsn").collect()
-    # exactly the second batch's rows, op preserved as the tombstone flag
-    assert [(r["user_key"], r["_lsn"], bool(r["_deleted"])) for r in raw] == [
-        ("B", 4, False),
-        ("C", 5, True),
-        ("D", 6, False),
-    ]
 
 
 def test_changes_schema_evolution_in_range(spark, tmp_root):

@@ -736,6 +736,53 @@ def test_physical_config_invariance(spark, tmp_root, seed):
         assert_pdf_equal(got, ref, cols), (seed, i, cfg)
 
 
+def test_ntz_ts_refused_in_every_session_zone(spark, tmp_root):
+    """A ``TIMESTAMP_NTZ`` ``ts`` would order versions through the session
+    time zone (2024-03-10 02:45 falls in New York's DST gap and becomes
+    03:45), so every way ``ts`` can enter a table refuses it: create, the
+    first merge that adds ts, add_column.  An NTZ batch into a TIMESTAMP
+    table is a type conflict.  The outcome is the same under the engine's
+    UTC session and a New York one."""
+    from datetime import datetime
+
+    from event_driven_etl_msc_research_spark.sinks.manifest import (
+        SchemaEvolutionError,
+    )
+
+    ntz = T.StructField("ts", T.TimestampNTZType())
+    no_ts = T.StructType([f for f in TRANSCRIPT_SCHEMA.fields if f.name != "ts"])
+    wall = [datetime(2024, 3, 10, 3, 15), datetime(2024, 3, 10, 2, 45)]
+
+    def batch(sess, ts_type):
+        rows = [("U", i + 1, w, "c0", 0, "user", f"v{i}", None) for i, w in enumerate(wall)]
+        schema = T.StructType(
+            [T.StructField("ts", ts_type) if f.name == "ts" else f for f in BATCH_SCHEMA]
+        )
+        return sess.createDataFrame(rows, schema)
+
+    def outcome(sess, root):
+        def refused(fn):
+            with pytest.raises(SchemaEvolutionError) as e:
+                fn()
+            return "NTZ" in str(e.value), "type conflict" in str(e.value)
+
+        got = [refused(lambda: ManifestTable.create(
+            sess, f"{root}/ntz", T.StructType([*no_ts.fields, ntz])))]
+        bare = ManifestTable.create(sess, f"{root}/bare", no_ts)
+        got.append(refused(lambda: bare.merge(batch(sess, T.TimestampNTZType()), 0)))
+        got.append(refused(lambda: bare.add_column("ts", "timestamp_ntz")))
+        tz = ManifestTable.create(sess, f"{root}/tz", TRANSCRIPT_SCHEMA)
+        got.append(refused(lambda: tz.merge(batch(sess, T.TimestampNTZType()), 0)))
+        got.append((bare.current_version(), tz.current_version()))
+        return got
+
+    ny = spark.newSession()
+    ny.conf.set("spark.sql.session.timeZone", "America/New_York")
+    utc = outcome(spark, f"{tmp_root}/utc")
+    assert utc == outcome(ny, f"{tmp_root}/ny")
+    assert utc == [(True, False)] * 3 + [(False, True), (0, 0)]
+
+
 @pytest.mark.parametrize("seed,up_mode", [(37, "delta"), (71, "cow")])
 def test_random_mv_sequence_matches_full_group_by(
     spark, tmp_root, seed, up_mode

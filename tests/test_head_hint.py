@@ -159,7 +159,6 @@ _SCAN_ONCE = {
     "count": (1, 2),
     "min_max": (1, 2),
     "changes": (1, 4),
-    "incremental_rows": (1, 3),
     "delete_where": (2, 2),
     "update_where": (2, 2),
     "replica_sync_log": (1, 3),
@@ -180,8 +179,6 @@ def _verb_call(case, spark, t, tmp_root):
         return lambda: t.min_max("ts")
     if case == "changes":
         return lambda: t.changes(head - 2)
-    if case == "incremental_rows":
-        return lambda: t.incremental_rows(head - 2)
     if case == "delete_where":
         return lambda: t.delete_where("turn_idx = 0", epoch_id=50)
     if case == "update_where":

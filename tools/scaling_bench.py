@@ -37,14 +37,18 @@ sys.path.insert(0, REPO)
 
 
 def run_at(cpus: int, events: int, stream_dir: str) -> dict:
+    """One fresh-JVM ``bench.py`` replay; its full record (per-query
+    timings included) is read back from its ``--json-out`` file."""
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
-    out = subprocess.run(
+    out = os.path.join(os.path.dirname(stream_dir), f"bench_local{cpus}.json")
+    subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py"),
          "--only", "cdc_replay", "--events", str(events),
-         "--stream-dir", stream_dir],
+         "--stream-dir", stream_dir, "--json-out", out],
         env=env, capture_output=True, text=True, check=True, cwd=REPO,
     )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    with open(out) as f:
+        return json.load(f)
 
 
 def probe(levels=(2, 4, 8, 16, 32)) -> None:
