@@ -10,8 +10,10 @@ line is a short JSON summary that stays well under 2,000 characters::
      "slowest": {"<query>": sec, ...}, "json_out": "..."}
 
 Extra keys: ``cdc_events_per_sec`` (the north-star metric — change-events/sec
-replayed through the full dedup→MERGE→manifest-commit path), ``cpus`` and
-``slowest`` (the 5 slowest best-of-reps queries).
+replayed through the full dedup→MERGE→manifest-commit path),
+``retention_drop_spark_jobs`` (Spark jobs of the ``retention_metadata_drop``
+line item's metadata-only drop phase; 0 when it stays metadata-only),
+``cpus`` and ``slowest`` (the 5 slowest best-of-reps queries).
 
 Each query is forced end-to-end with a ``noop``-format write so projection
 columns are actually computed (a bare ``count()`` would let Catalyst prune
@@ -113,6 +115,8 @@ HEADLINE = [
     "multimodal_features",
 ]
 
+RETENTION_DROP = "retention_metadata_drop"  # line item; its drop
+# phase's Spark job count goes to "retention_drop_spark_jobs"
 CDC_REPLAY = "cdc_replay"
 CDC_REPLAY_COW = "cdc_replay_cow"  # opt-in (--only): the copy-on-write
 # tail for comparison — not headline because delta IS the designed
@@ -180,13 +184,17 @@ def bench_cdc_replay(
                 with open(os.path.join(stream_dir, f), "rb") as fh:
                     n_delivered += sum(1 for _ in fh)
 
-        # warmup: identical path, throwaway table.  1M events — enough rows
-        # per task to carry the whole pipeline (JSON scan → hash agg → join →
-        # parquet write) past the JIT's OSR/invocation thresholds; a tiny
-        # warmup leaves the timed run paying interpreter-speed execution and
-        # a compile storm, which on an overcommitted VM can cost 5-10×
+        # warmup: identical path, throwaway table.  Up to 1M events —
+        # enough rows per task to carry the whole pipeline (JSON scan →
+        # hash agg → join → parquet write) past the JIT's OSR/invocation
+        # thresholds; a tiny warmup leaves the timed run paying
+        # interpreter-speed execution and a compile storm, which on an
+        # overcommitted VM can cost 5-10×.  Never more than the timed
+        # replay itself: a small --events run stays a small run
         warm_dir = os.path.join(work, "warm_stream")
-        generate_change_stream(warm_dir, bench_stream_spec(1_000_000))
+        generate_change_stream(
+            warm_dir, bench_stream_spec(min(n_events, 1_000_000))
+        )
         warm = CDCEngine(
             spark,
             os.path.join(work, "warm_table"),
@@ -232,6 +240,53 @@ def bench_cdc_replay(
         shutil.rmtree(work, ignore_errors=True)
 
 
+def bench_retention_metadata_drop(spark, sf_dir: str) -> dict:
+    """Retention's metadata-only drop through the autopilot, on the sf
+    events table: the table's layout policy is ``sort_by=ts`` with a
+    400-row file cap, so ``auto_maintain()``'s compaction rolls each
+    bucket into ts-ranged files, and its ``maintenance.retention.keep_s``
+    horizon sits at 40% of the event-time range, so retention then drops
+    the files whose stats prove them all older; raises if it drops none.
+    Returns the wall time of ``auto_maintain()`` and the Spark jobs of
+    the drop phase — retention up to its residual ``delete_where`` —
+    which should be 0."""
+    from event_driven_etl_msc_research_spark.plans.driver_queries import (
+        retention_events_table,
+    )
+
+    table, mn, mx = retention_events_table(spark, sf_dir)
+    cutoff = mn + (mx - mn) * 2 // 5
+    table.set_properties({
+        "maintenance.compact.min_delta_files": "1",
+        "maintenance.compact.sort_by": "ts",
+        "maintenance.compact.max_rows_per_file": "400",
+        "maintenance.retention.keep_s": str(time.time() - cutoff),
+    })
+    sc = spark.sparkContext
+    marks: dict[str, int] = {}
+
+    def mark(name, verb):
+        def run(*a, **kw):
+            marks[name] = len(sc.statusTracker().getJobIdsForGroup(RETENTION_DROP))
+            return verb(*a, **kw)
+        return run
+
+    # the drop phase runs between these two calls
+    table.retention_delete = mark("drop", table.retention_delete)
+    table.delete_where = mark("residual", table.delete_where)
+    sc.setJobGroup(RETENTION_DROP, RETENTION_DROP)
+    try:
+        t0 = time.monotonic()
+        out = table.auto_maintain()
+        wall = time.monotonic() - t0
+    finally:
+        sc.setJobGroup("_idle", "_idle")
+        shutil.rmtree(table.root, ignore_errors=True)
+    if not out["retention"]["dropped_files"]:
+        raise RuntimeError(f"retention dropped no file: {out['retention']}")
+    return {"wall": wall, "drop_jobs": marks["residual"] - marks["drop"]}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--only", default=None, help="comma-separated query subset")
@@ -255,7 +310,10 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    names = args.only.split(",") if args.only else HEADLINE + [CDC_REPLAY]
+    names = (
+        args.only.split(",") if args.only
+        else HEADLINE + [RETENTION_DROP, CDC_REPLAY]
+    )
 
     # finer input splits than the 128 MB default: better task balance at
     # low core counts on the bench's ~85 MB JSONL segments
@@ -284,6 +342,7 @@ def main() -> int:
     cold: dict[str, float] = {}          # first run (plan compile included)
     events_per_sec = None
     cow_events_per_sec = None
+    retention_drop_jobs = None
     ann_built = False
     for name in names:
         if name in ("knn_lsh", "knn_ivf") and not ann_built:
@@ -301,6 +360,12 @@ def main() -> int:
             timings["ann_index_build"] = round(time.monotonic() - t0, 3)
             cold["ann_index_build"] = timings["ann_index_build"]
             ann_built = True
+        if name == RETENTION_DROP:
+            runs = [bench_retention_metadata_drop(spark, sf_dir) for _ in range(reps)]
+            cold[name] = round(runs[0]["wall"], 3)
+            timings[name] = round(min(r["wall"] for r in runs), 3)
+            retention_drop_jobs = max(r["drop_jobs"] for r in runs)
+            continue
         if name == CDC_REPLAY:
             r = bench_cdc_replay(
                 spark, args.events, cpus, stream_dir=args.stream_dir,
@@ -358,6 +423,7 @@ def main() -> int:
         "cpus": cpus,
         "cdc_events_per_sec": events_per_sec,
         "cdc_cow_events_per_sec": cow_events_per_sec,
+        "retention_drop_spark_jobs": retention_drop_jobs,
         "cdc_replay_events": args.events if CDC_REPLAY in names else None,
     }
     with open(args.json_out, "w") as f:

@@ -721,7 +721,7 @@ def cdc_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-only ``count()`` across the table lifecycle: merge the
     events change stream (errors = deletes), then count live rows at THREE
     states — (1) delta-carrying (MOR fold fallback), (2) compacted with
-    tombstones retained (footer-probe/pruned-scan tiers), (3) compacted
+    tombstones retained (pruned-scan tier), (3) compacted
     with watermark-purged tombstones (pure manifest sum, zero Spark jobs —
     job-freeness itself is asserted in ``tests/test_count.py``).  All three
     must equal the oracle's ``COUNT(*)`` of the deduped live set: the
@@ -952,18 +952,11 @@ FROM (
 """
 
 
-def cdc_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retention DELETE on driver data: one row per event (keyed by
-    ``event_id``), ts-clustered via ``compact(sort_by=["ts"])``, then
-    ``retention_delete(cutoff)`` at 40% of the event-time range — files
-    whose stats prove all-old leave with a METADATA-ONLY commit, boundary
-    files pay ordinary tombstones, and the retention watermark advances
-    (the age-out verb the reference's ever-growing warehouse prefix lacks,
-    ``Phase3-DataLoad.py:101-118``).  The cutoff is whole-second integer
-    arithmetic — ``mn + (mx - mn) * 2 // 5`` on floored epoch seconds —
-    so the DuckDB oracle computes the identical instant."""
-    import datetime as dt
-
+def retention_events_table(
+    spark: SparkSession, sf_dir: str
+) -> tuple[ManifestTable, int, int]:
+    """The events table, one row per ``event_id``, merged as delta files
+    into a fresh table; with its ``ts`` range in floored epoch seconds."""
     ev = _t(spark, sf_dir, "events")
     changes = ev.select(
         F.lit("U").alias("op"),
@@ -974,26 +967,35 @@ def cdc_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type"),
         F.col("value"),
     )
-    payload = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_key", T.StringType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    root = tempfile.mkdtemp(prefix="cdc_retention_delete_")
+    payload = [f for f in changes.schema.fields if f.name not in ("op", "lsn")]
     table = ManifestTable.create(
-        spark, root, payload, key_cols=["event_id"], n_buckets=8
+        spark, tempfile.mkdtemp(prefix="cdc_retention_delete_"),
+        T.StructType(payload), key_cols=["event_id"], n_buckets=8,
     )
     table.merge(changes, epoch_id=0, epoch_scope="driver", mode="delta")
-    # the designed layout a retention pass runs against: delta-free,
-    # ts-clustered buckets (the tail's compact --sort-by ts cadence)
-    table.compact(sort_by=["ts"], max_rows_per_file=400)
     mn, mx = changes.agg(
         F.min(F.col("ts").cast("long")), F.max(F.col("ts").cast("long"))
     ).first()
+    return table, mn, mx
+
+
+def cdc_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Retention DELETE on driver data: the events table
+    (:func:`retention_events_table`), ts-clustered via
+    ``compact(sort_by=["ts"])``, then ``retention_delete(cutoff)`` at 40%
+    of the event-time range — files whose stats prove all-old leave with a
+    METADATA-ONLY commit, boundary files pay ordinary tombstones, and the
+    retention watermark advances (the age-out verb the reference's
+    ever-growing warehouse prefix lacks, ``Phase3-DataLoad.py:101-118``).
+    The cutoff is whole-second integer arithmetic — ``mn + (mx - mn) * 2
+    // 5`` on floored epoch seconds — so the DuckDB oracle computes the
+    identical instant."""
+    import datetime as dt
+
+    table, mn, mx = retention_events_table(spark, sf_dir)
+    # the designed layout a retention pass runs against: delta-free,
+    # ts-clustered buckets (the tail's compact --sort-by ts cadence)
+    table.compact(sort_by=["ts"], max_rows_per_file=400)
     cutoff = dt.datetime.fromtimestamp(
         mn + (mx - mn) * 2 // 5, tz=dt.timezone.utc
     )

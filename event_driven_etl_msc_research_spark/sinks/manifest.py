@@ -308,8 +308,8 @@ def _footer_minmax(md, stats_cols: list[str]) -> dict[str, list]:
     Σ(rows − dead) — with zero Spark jobs and zero file I/O on a
     delta-free table.  ``::dead`` is omitted when any row group mixes
     live and tombstone rows without separating them in stats (min=False,
-    max=True); ``count()`` then falls back to a footer probe / pruned
-    scan of just those files."""
+    max=True); ``count()`` then falls back to a pruned scan of just those
+    files."""
     idx = _footer_cols(md)
     out: dict[str, list] = {}
     for col in stats_cols or ():
@@ -366,7 +366,7 @@ def _footer_dead_count(md) -> int | None:
     ``max == False`` holds no tombstones; one with ``min == True`` is all
     tombstones among its non-null values (nulls read as live — the read
     path coalesces ``_deleted`` to false).  A group mixing both gives up
-    (``None``): the caller probes or scans that file instead.  Compaction
+    (``None``): ``count()`` scans that file instead.  Compaction
     writes keep tombstones, so post-compact files are commonly mixed —
     but a table that never deletes proves ``dead = 0`` everywhere, and a
     tombstone-purged compaction (``purge_tombstones_before``) restores
@@ -589,6 +589,9 @@ class ManifestTable:
             t._validate_constraint(schema, cname, cexpr)
         if properties:
             cls._validate_props(properties)
+            cls._check_clustering(
+                {"schema": schema.jsonValue(), "properties": properties}
+            )
         manifest = {
             "version": 0,
             "parent": None,
@@ -1285,9 +1288,10 @@ class ManifestTable:
         columns) and the column DDL (``add``/``widen`` a field, ``rename``
         ``(old, new)``, ``drop`` a name).  Returns the manifest fields the
         change sets — ``schema`` and ``added_cols``, plus, for a rename or
-        drop, the history (``renamed_cols``, ``dropped_cols``) and every
-        list in ``_COL_LISTS`` following the new name or losing the
-        dropped one.  A refused change raises ``SchemaEvolutionError``.
+        drop, the history (``renamed_cols``, ``dropped_cols``), every list
+        in ``_COL_LISTS`` and the layout policy's ``sort_by``/``zorder_by``
+        properties following the new name or losing the dropped one.  A
+        refused change raises ``SchemaEvolutionError``.
 
         * Names: every column entering the schema passes ``_admit`` (and
           ``_admit_ts``); an incoming column new to the table is appended
@@ -1364,6 +1368,14 @@ class ManifestTable:
             history["renamed_cols"] = ren
             for k in self._COL_LISTS:
                 history[k] = [sub.get(c, c) for c in m.get(k) or [] if c != drop]
+            # so do the layout policy's; one left empty unsets its key
+            props = dict(m.get("properties") or {})
+            for k in ("maintenance.compact.sort_by", "maintenance.compact.zorder_by"):
+                names = map(str.strip, props.pop(k, "").split(","))
+                if cols := [sub.get(c, c) for c in names if c and c != drop]:
+                    props[k] = ",".join(cols)
+            if props != (m.get("properties") or {}):
+                history["properties"] = props
         return {
             "schema": T.StructType(list(out.values())).jsonValue(),
             "added_cols": added,
@@ -1585,14 +1597,12 @@ class ManifestTable:
         1. **Delta-free table, stats complete** — Σ(``::rows`` − ``::dead``)
            over the manifest's per-file stats.  ZERO Spark jobs, zero file
            I/O (job-count asserted in ``test_count.py``).
-        2. Files missing the harvested counts (pre-upgrade manifests,
-           shallow-clone externals) — driver-side parallel footer probe
-           (the same :func:`_footers` read as the staging audit; still no
-           Spark job).
-        3. Files whose footers can't prove their tombstone count (a mixed
-           row group) — ONE column-pruned Spark job over just those files
-           (reads only ``_deleted``; every provable file stays pruned).
-        4. Any delta files present — the MOR fold decides winners, so the
+        2. Files whose stats can't prove their tombstone count (a mixed
+           row group: the harvest recorded no ``::dead``, and the footer
+           would prove no more) and shallow-clone externals — ONE
+           column-pruned Spark job over just those files (reads only
+           ``_deleted``; every provable file stays pruned).
+        3. Any delta files present — the MOR fold decides winners, so the
            folded snapshot scan counts (correctness beats the shortcut;
            ``compact()`` restores tier 1).
 
@@ -1604,26 +1614,14 @@ class ManifestTable:
             return self._scan(m).count()
         stats = m.get("file_stats") or {}
         total = 0
-        probe: list[str] = []  # tier 2: driver footer probe
-        scan: list[str] = []  # tier 3: pruned Spark scan
+        scan: list[str] = []  # tier 2: pruned Spark scan
         for _, p, _ in _data_files(m):  # all base: no deltas here
             fs = stats.get(p) or {}
             rows, dead = fs.get("::rows"), fs.get("::dead")
             if rows and dead:
                 total += int(rows[0]) - int(dead[0])
-            elif p.startswith(_EXT_PREFIX):
-                # clone-external file with incomplete stats: its bytes
-                # live outside this table's storage root, so the safe
-                # route is the scan tier (_scan resolves ext:// refs)
+            else:
                 scan.append(p)
-            else:
-                probe.append(p)
-        for relpath, md in zip(probe, _footers(self.storage, probe)):
-            dead = _footer_dead_count(md)
-            if dead is None:
-                scan.append(relpath)
-            else:
-                total += md.num_rows - dead
         if scan:
             total += int(self._scan(m, scan).count())
         return total
@@ -1649,12 +1647,12 @@ class ManifestTable:
            ``[None, None, n]`` form contributes nothing regardless of
            tombstones).  Files written before an ``add_column`` read as
            null → contribute nothing.
-        2. **Driver footer probe** — files the manifest can't prove
-           (pre-upgrade stats, column not in ``stats_cols``) re-harvest
-           through the same ``_footer_minmax`` the writer uses.
+        2. **Driver footer probe** — files whose stats have no entry for
+           the column (not in ``stats_cols``) re-harvest through the same
+           ``_footer_minmax`` the writer uses.
         3. **One column-pruned Spark scan** of only the still-unprovable
-           files (mixed row groups, clone externals), reading just the
-           column + ``_deleted``.
+           files (mixed row groups, whose footers prove no more than their
+           stats; clone externals), reading just the column + ``_deleted``.
         4. Delta files present → the MOR fold decides winners: an
            aggregate over the folded snapshot scan.
 
@@ -1717,10 +1715,12 @@ class ManifestTable:
                 continue  # provably all-null file: contributes nothing
             if scan_only or p.startswith(_EXT_PREFIX):
                 scan.append(p)
-            elif entry is not None and fs.get("::dead") == [0]:
+            elif entry is None:
+                probe.append(p)
+            elif fs.get("::dead") == [0]:
                 _fold(_stat_from_json(entry[0]), _stat_from_json(entry[1]))
             else:
-                probe.append(p)
+                scan.append(p)  # tombstones: the footer proves no more
         for relpath, md in zip(probe, _footers(self.storage, probe)):
             cols = _footer_cols(md)
             phys = next((nm for nm in names if nm in cols), None)
@@ -1987,7 +1987,6 @@ class ManifestTable:
         changes: DataFrame,
         epoch_id: int,
         *,
-        files_per_bucket: int = 1,
         audit: str = "counts",
         epoch_scope: str = "batch",
         before_publish=None,
@@ -2154,7 +2153,6 @@ class ManifestTable:
                     merged,
                     m,
                     os.path.join(stage_rel, "merged"),
-                    files_per_bucket=files_per_bucket,
                     buckets=touched,
                     audit_empty=False,
                 )
@@ -2430,7 +2428,6 @@ class ManifestTable:
         m: dict[str, Any],
         rel: str,
         *,
-        files_per_bucket: int = 1,
         buckets: list[int] | None = None,
         obs_aggs: list = (),
         audit_empty: bool = True,
@@ -2459,17 +2456,13 @@ class ManifestTable:
         This leans on AQE (on in ``get_spark`` and by Spark default):
         with ``spark.sql.adaptive.enabled=false`` the write runs
         ``spark.sql.shuffle.partitions`` tasks, still one file per bucket.
-        ``files_per_bucket > 1`` is a FIXED split of each of ``buckets``
-        over that many files by key hash, so it keeps an explicit
-        ``len(buckets) * files_per_bucket`` partition count, which AQE
-        does not coalesce.  Clustering:
-        ``sort_by`` sorts each task's rows, ``zorder_by`` sorts them on a
-        z-value sketched from ``zorder_sample`` (the rewrite's own input
-        files); both sorts lead with ``_pb``, the writer's dynamic-partition
-        column — FileFormatWriter requires task rows ordered by it and
-        inserts its own sort (scrambling the clustering) when the incoming
-        ordering is on a different attribute.  ``max_rows_per_file`` rolls
-        files.
+        Clustering: ``sort_by`` sorts each task's rows, ``zorder_by``
+        sorts them on a z-value sketched from ``zorder_sample`` (the
+        rewrite's own input files); both sorts lead with ``_pb``, the
+        writer's dynamic-partition column — FileFormatWriter requires
+        task rows ordered by it and inserts its own sort (scrambling the
+        clustering) when the incoming ordering is on a different
+        attribute.  ``max_rows_per_file`` rolls files.
 
         Audit: the rows the write job observed (an ``Observation`` riding
         the same job, with the caller's ``obs_aggs`` SQL aggregates —
@@ -2493,15 +2486,7 @@ class ManifestTable:
         out = df.observe(
             obs, *map(F.expr, ["count(1) AS `rows`", *obs_aggs])
         ).withColumn("_pb", F.expr("`_bucket`"))
-        if files_per_bucket > 1:
-            keys = ", ".join(map(sql_ident, m["key_cols"]))
-            out = out.repartition(
-                len(buckets) * files_per_bucket,
-                F.expr("`_bucket`"),
-                F.expr(f"pmod(xxhash64({keys}), {int(files_per_bucket)})"),
-            )
-        else:
-            out = out.repartition(F.expr("`_bucket`"))
+        out = out.repartition(F.expr("`_bucket`"))
         if sort_by:
             out = out.sortWithinPartitions("_pb", *sort_by)
         elif zorder_by:
@@ -2625,7 +2610,7 @@ class ManifestTable:
         self,
         m: dict[str, Any],
         max_file_bytes: int,
-        buckets: set[int] | None = None,
+        buckets: list[int] | None = None,
     ) -> int | None:
         """Rows-per-file target for a BYTES target: average on-disk row
         width of the files of ``buckets`` (None = all) of snapshot ``m``
@@ -2664,13 +2649,32 @@ class ManifestTable:
     @staticmethod
     def _check_clustering(
         m: dict[str, Any],
-        sort_by: list[str] | None,
-        zorder_by: list[str] | None,
-        max_rows_per_file: int | None,
-        max_file_bytes: int | None,
-    ) -> None:
-        """Reject misused clustering/sizing arguments of a rewrite
-        (compact, rebucket) before any job."""
+        sort_by: list[str] | None = None,
+        zorder_by: list[str] | None = None,
+        max_rows_per_file: int | None = None,
+        max_file_bytes: int | None = None,
+    ) -> tuple:
+        """The one layout resolver of a rewrite (compact, rebucket) and of
+        a policy being set: the table's ``maintenance.compact.*``
+        properties, read from ``m`` (no extra GET), with each argument
+        pair that the caller set (not None) replacing the policy's —
+        clustering is ``sort_by``/``zorder_by`` (``sort_by=[]`` opts out),
+        sizing is ``max_rows_per_file``/``max_file_bytes``.  Misuse
+        raises before any job.  Returns the four resolved values."""
+        pol = m.get("properties") or {}
+
+        def prop(key: str, cast):
+            v = pol.get(f"maintenance.compact.{key}")
+            return None if v is None else cast(v)
+
+        def cols(v) -> list[str]:
+            return [c.strip() for c in str(v).split(",") if c.strip()]
+
+        if sort_by is None and zorder_by is None:
+            sort_by, zorder_by = prop("sort_by", cols), prop("zorder_by", cols)
+        if max_rows_per_file is None and max_file_bytes is None:
+            max_rows_per_file = prop("max_rows_per_file", int)
+            max_file_bytes = prop("max_file_bytes", int)
         if sort_by and zorder_by:
             raise ValueError("sort_by and zorder_by are mutually exclusive")
         if max_file_bytes and max_rows_per_file:
@@ -2685,6 +2689,85 @@ class ManifestTable:
             from ..functions.zorder import zorder_validate
 
             zorder_validate(schema, zorder_by)
+        return sort_by, zorder_by, max_rows_per_file, max_file_bytes
+
+    def _rewrite(
+        self,
+        m: dict[str, Any],
+        buckets: list[int] | None,
+        layout: tuple,
+        tag: str,
+        *,
+        n_buckets: int | None = None,
+        purge_w=None,
+    ) -> tuple[dict[str, Any], int]:
+        """The one rewrite: compact's candidate ``buckets``, each whole, or
+        (``None``) every file rehashed into ``n_buckets`` (rebucket),
+        restaged under ``layout`` (``_check_clustering``).  The unfolded
+        inputs (the z-order sketch samples them) fold only when one is a
+        delta, since base rows are one per key.  Returns the file set with
+        its clustering markers, and the staged row count; a full rewrite
+        also clears the rename/drop shadows, as every file now carries
+        the current names."""
+        sort_by, zorder_by, max_rows_per_file, max_file_bytes = layout
+        files = sorted(
+            (e for e in _data_files(m) if buckets is None or e[0] in buckets),
+            key=lambda e: e[0],
+        )
+        if max_file_bytes:
+            max_rows_per_file = self._rows_for_bytes(m, max_file_bytes, buckets)
+        key_cols = m["key_cols"]
+        inputs = self._scan(m, [p for _, p, _ in files], live=False)
+        df = (
+            _fold_rows(inputs, key_cols)
+            if any(kind == "delta" for *_, kind in files)
+            else inputs
+        )
+        if purge_w is not None:
+            # watermark-bounded tombstone GC (see compact): drop winners
+            # that are tombstones older than the lateness bound W.  Applied
+            # AFTER the fold so a tombstone first beats every older update
+            # in the same fold, exactly as it would have at read time.  A
+            # NULL-ts tombstone has no provable age and is always kept
+            # (merge passes NULL-ts upserts through the watermark, so only
+            # the tombstone can keep blocking them) — the same rule as
+            # retention_delete, which never drops NULL-ts rows.
+            df = df.filter(
+                ~(
+                    F.coalesce(F.col("_deleted"), F.lit(False))
+                    & F.col("ts").isNotNull()
+                    & (F.col("ts") < F.lit(purge_w))
+                )
+            )
+        if n_buckets is not None:
+            df = df.withColumn("_bucket", _bucket_expr(n_buckets, key_cols[0]))
+        staged_files, rows_by_bucket, staged_rows, staged_stats, _ = self._stage(
+            df,
+            m,
+            self._staging_relpath(m["version"] + 1, tag),
+            buckets=buckets,
+            sort_by=sort_by,
+            zorder_by=zorder_by,
+            zorder_sample=inputs,
+            max_rows_per_file=max_rows_per_file,
+        )
+        change = {
+            # a rebucket replaces every file under a new layout: a file
+            # set built from nothing
+            **self._file_set(
+                {} if buckets is None else m,
+                base=staged_files, stats=staged_stats, rows=rows_by_bucket,
+            ),
+            # informational: the clustering applied by THIS rewrite (pruning
+            # reads file_stats directly and needs no ordering guarantee)
+            "sorted_by": list(sort_by or []),
+            "zordered_by": list(zorder_by or []),
+        }
+        if buckets is None or not change["delta_files"] and all(
+            int(b) in buckets for b, ps in m["files"].items() if ps
+        ):
+            change.update(renamed_cols={}, dropped_cols=[])
+        return change, staged_rows
 
     # ---------- compaction (MOR maintenance) ----------
 
@@ -2745,6 +2828,14 @@ class ManifestTable:
         actual files land near the target, modulated by how much better the
         re-sorted data compresses.
 
+        LAYOUT POLICY: the four clustering/sizing arguments default to the
+        table's ``maintenance.compact.{sort_by,zorder_by,max_rows_per_file,
+        max_file_bytes}`` properties, so the policy travels with the table
+        and every rewrite — the engine tail's cadence, ``auto_maintain``,
+        ``rebucket`` — applies it.  An argument pair set by the caller
+        replaces the policy's pair for this call (``sort_by=[]`` writes
+        unclustered); see :meth:`_check_clustering`.
+
         ``purge_tombstones_before`` — WATERMARK-BOUNDED TOMBSTONE GC.
         Tombstones must normally be retained forever (see above), because
         per-key max-version semantics need them to beat a late-arriving
@@ -2773,7 +2864,7 @@ class ManifestTable:
         Tombstones with a NULL ``ts`` are never purged."""
         t0 = time.monotonic()
         m = self.manifest()
-        self._check_clustering(
+        layout = self._check_clustering(
             m, sort_by, zorder_by, max_rows_per_file, max_file_bytes
         )
         old_delta = {
@@ -2788,9 +2879,7 @@ class ManifestTable:
             # files is a candidate, deltas or not — the in-place path to
             # (re)cluster a copy-on-write table (which never accumulates
             # deltas, so the default fold would be a permanent no-op) or to
-            # roll small files.  The fold is state-preserving either way:
-            # base rows are already one-per-key, so the max-version dedup
-            # is idempotent over them.
+            # roll small files.
             cand = sorted(
                 {int(b) for b, ps in m["files"].items() if ps} | set(old_delta)
             )
@@ -2803,70 +2892,18 @@ class ManifestTable:
                 "version": m["version"],
                 "duration_s": time.monotonic() - t0,
             }
-        key_cols = m["key_cols"]
-        old_files = {int(b): ps for b, ps in m["files"].items()}
-        cand_rel = [
-            p for b in cand for p in old_files.get(b, []) + old_delta.get(b, [])
-        ]
-        if max_file_bytes:
-            max_rows_per_file = self._rows_for_bytes(
-                m, max_file_bytes, set(cand)
-            )
-        # scanned unfolded: the z-order sketch samples the raw inputs
-        inputs = self._scan(m, cand_rel, live=False)
-        merged = _fold_rows(inputs, key_cols)
+        purge_w = None
         if purge_tombstones_before is not None:
-            # watermark-bounded tombstone GC (see docstring): drop winners
-            # that are tombstones older than the caller's lateness bound W —
-            # nothing they still need to block can ever arrive.  Applied
-            # AFTER the fold so a tombstone first beats every older update
-            # in the same fold, exactly as it would have at read time.  A
-            # NULL-ts tombstone has no provable age and is always kept
-            # (merge passes NULL-ts upserts through the watermark, so only
-            # the tombstone can keep blocking them) — the same rule as
-            # retention_delete, which never drops NULL-ts rows.
             purge_w = _norm_bound(
                 self._as_of_datetime(purge_tombstones_before),
                 T.TimestampType(),
             )
-            merged = merged.filter(
-                ~(
-                    F.coalesce(F.col("_deleted"), F.lit(False))
-                    & F.col("ts").isNotNull()
-                    & (F.col("ts") < F.lit(purge_w))
-                )
-            )
         version = m["version"] + 1
-        staged_files, rows_by_bucket, staged_rows, staged_stats, _ = self._stage(
-            merged,
-            m,
-            self._staging_relpath(version, f"compact{version}"),
-            buckets=cand,
-            sort_by=sort_by,
-            zorder_by=zorder_by,
-            zorder_sample=inputs,
-            max_rows_per_file=max_rows_per_file,
+        change, staged_rows = self._rewrite(
+            m, cand, layout, f"compact{version}", purge_w=purge_w
         )
-        change = {
-            **self._file_set(
-                m, base=staged_files, stats=staged_stats, rows=rows_by_bucket
-            ),
-            "epoch_id": f"compact:{version}",
-            # informational: the clustering applied by THIS rewrite (pruning
-            # reads file_stats directly and needs no ordering guarantee)
-            "sorted_by": list(sort_by or []),
-            "zordered_by": list(zorder_by or []),
-        }
-        # a FULL rewrite (OPTIMIZE covering every bucket, no surviving
-        # deltas) physicalizes metadata-only renames/drops: every live file
-        # now carries the current names, so the shadow maps and the re-add
-        # tombstones can clear — retired names become reusable
-        full_rewrite = not change["delta_files"] and all(
-            int(b) in cand for b, ps in m["files"].items() if ps
-        )
-        if full_rewrite:
-            change.update(renamed_cols={}, dropped_cols=[])
-        if purge_tombstones_before is not None:
+        change["epoch_id"] = f"compact:{version}"
+        if purge_w is not None:
             # the purge ENFORCES its own contract: it advances the table's
             # lateness watermark (monotone — _commit keeps the max), so
             # merge's pre-watermark-upsert filter drops the late older
@@ -3029,13 +3066,14 @@ class ManifestTable:
 
         ``sort_by`` / ``zorder_by`` / ``max_rows_per_file`` /
         ``max_file_bytes`` cluster and size the rewrite exactly as in
-        :meth:`compact` — a rebucket rewrites every
+        :meth:`compact`, and default to the same table layout policy (the
+        ``maintenance.compact.*`` properties) — a rebucket rewrites every
         file anyway, so re-establishing clustering here is free (without it
         a rebucket would destroy the file-range locality a prior clustered
         compaction built)."""
         t0 = time.monotonic()
         m = self.manifest()
-        self._check_clustering(
+        layout = self._check_clustering(
             m, sort_by, zorder_by, max_rows_per_file, max_file_bytes
         )
         if n_buckets == m["n_buckets"]:
@@ -3045,45 +3083,13 @@ class ManifestTable:
                 "version": m["version"],
                 "duration_s": time.monotonic() - t0,
             }
-        if max_file_bytes:
-            max_rows_per_file = self._rows_for_bytes(m, max_file_bytes)
-        key_cols = m["key_cols"]
-        # scanned unfolded: the z-order sketch samples the raw inputs
-        inputs = self._scan(m, [p for _, p, _ in _data_files(m)], live=False)
-        df = (
-            _fold_rows(inputs, key_cols)
-            if any((m.get("delta_files") or {}).values())
-            else inputs
-        )
         version = m["version"] + 1
-        staged_files, rows_by_bucket, staged_rows, staged_stats, _ = self._stage(
-            df.withColumn("_bucket", _bucket_expr(n_buckets, key_cols[0])),
-            m,
-            self._staging_relpath(version, f"rebucket{n_buckets}"),
-            sort_by=sort_by,
-            zorder_by=zorder_by,
-            zorder_sample=inputs,
-            max_rows_per_file=max_rows_per_file,
+        change, staged_rows = self._rewrite(
+            m, None, layout, f"rebucket{n_buckets}", n_buckets=n_buckets
         )
         res = self._commit(
             m,
-            {
-                # every file is replaced under the new layout: a file set
-                # built from nothing
-                **self._file_set(
-                    {}, base=staged_files, stats=staged_stats,
-                    rows=rows_by_bucket,
-                ),
-                "epoch_id": f"rebucket:{version}",
-                "n_buckets": n_buckets,
-                "sorted_by": list(sort_by or []),
-                "zordered_by": list(zorder_by or []),
-                # a rebucket rewrites EVERY live file under the current
-                # names, so rename shadows / drop tombstones physicalize
-                # and clear
-                "renamed_cols": {},
-                "dropped_cols": [],
-            },
+            {**change, "epoch_id": f"rebucket:{version}", "n_buckets": n_buckets},
             {"n_buckets": n_buckets, "staged_rows": staged_rows},
             before_publish=before_publish,
         )
@@ -4233,7 +4239,10 @@ class ManifestTable:
 
         ``maintenance.*`` keys are validated against the known autopilot
         schema (wrong type / unknown maintenance key fails now, not at 3am
-        when the cron job runs); ``write.*`` keys against the writer
+        when the cron job runs), and the resulting layout policy against
+        the table's schema (``_check_clustering``: a missing column, or
+        both ``sort_by`` and ``zorder_by``, fails now rather than in the
+        tail's next compaction); ``write.*`` keys against the writer
         schema (``write.parquet.compression`` — codec whitelist, applied
         by every data write site from the next commit on; existing files
         are rewritten on compaction/rebucket, Iceberg
@@ -4248,6 +4257,9 @@ class ManifestTable:
                 cur.pop(k, None)
             else:
                 cur[k] = str(v)
+        # the layout policy runs on the tail's critical path: a policy
+        # the schema cannot serve fails here, not in an epoch
+        self._check_clustering({**m, "properties": cur})
         if cur == dict(m.get("properties") or {}):
             return {
                 "status": "Skipped",
@@ -4267,7 +4279,8 @@ class ManifestTable:
         """One-call maintenance autopilot driven by the table's OWN
         ``maintenance.*`` properties (the policy travels with the table,
         not with whoever runs the cron job): compact if configured
-        (with the configured clustering/sizing), then expire old
+        (clustered and sized by the table's layout policy, as every
+        compact is), then retention, then expire old
         snapshots, then vacuum.  Steps whose keys are absent are skipped;
         ``dry_run`` reports what would run (vacuum uses its own dry run,
         compact/expire are described only).  Ordering matters and is
@@ -4286,20 +4299,12 @@ class ManifestTable:
         out: dict[str, Any] = {"dry_run": dry_run}
         mdf = _get("maintenance.compact.min_delta_files", int)
         if mdf is not None:
-            kw: dict[str, Any] = {"min_delta_files": mdf}
-            sb = _get("maintenance.compact.sort_by", str)
-            zb = _get("maintenance.compact.zorder_by", str)
-            if sb:
-                kw["sort_by"] = sb.split(",")
-            if zb:
-                kw["zorder_by"] = zb.split(",")
-            mr = _get("maintenance.compact.max_rows_per_file", int)
-            mb = _get("maintenance.compact.max_file_bytes", int)
-            if mr is not None:
-                kw["max_rows_per_file"] = mr
-            if mb is not None:
-                kw["max_file_bytes"] = mb
-            out["compact"] = kw if dry_run else self.compact(**kw)
+            # clustering and sizing are compact's own default: the policy
+            out["compact"] = (
+                {"min_delta_files": mdf}
+                if dry_run
+                else self.compact(min_delta_files=mdf)
+            )
         keep_s = _get("maintenance.retention.keep_s", float)
         if keep_s is not None:
             # retention runs AFTER compact: freshly delta-free, ts-clustered

@@ -156,6 +156,10 @@ def _payload_schema(change_schema: T.StructType) -> T.StructType:
 
 
 class CDCEngine:
+    """The CDC tail over one ``ManifestTable``.  File layout is the
+    table's own policy (its ``maintenance.compact.*`` properties): it
+    travels with the table, and the tail's compactions apply it."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -164,18 +168,11 @@ class CDCEngine:
         key_cols: list[str] | None = None,
         n_buckets: int = 16,
         tenant_id: str | None = None,
-        files_per_bucket: int = 1,
         audit: str = "counts",
         merge_mode: str = "cow",  # "cow" | "delta" (merge-on-read tail path)
-        compact_every: int = 0,   # delta mode: fold deltas→base every N epochs
-        compact_sort_by: list[str] | None = None,  # cluster buckets by these
-        # payload columns during auto-compaction (stats-tight files → non-key
-        # window reads skip most of a bucket; see ManifestTable.compact)
-        compact_zorder_by: list[str] | None = None,  # OR z-order-cluster on
-        # several columns at once (Morton interleave; mutually exclusive
-        # with compact_sort_by — see ManifestTable.compact / functions.zorder)
-        compact_max_rows_per_file: int | None = None,
-        compact_max_file_bytes: int | None = None,  # bytes-targeted sizing
+        compact_every: int = 0,   # delta mode: fold deltas→base every N
+        # epochs, clustered and sized by the table's layout policy (its
+        # maintenance.compact.* properties — see ManifestTable.compact)
         compact_purge_tombstone_lag: float | None = None,  # EVENT-TIME
         # seconds: at each auto-compaction, GC delete tombstones older than
         # (max observed event ts − lag) — the same lateness contract a
@@ -191,8 +188,6 @@ class CDCEngine:
         # dropped as late data.  Size it to the transport's worst-case
         # delivery skew (for Kafka: max lateness across partitions), not
         # just per-key reordering.
-        # (row width estimated from the fold's input — see
-        # ManifestTable.compact; mutually exclusive with the rows cap)
         vacuum_keep_versions: int = 8,  # 0 disables auto-vacuum
         vacuum_grace_s: float = 600.0,  # never GC dirs younger than this —
         # a CONCURRENT writer's staging dir (second engine on another
@@ -229,9 +224,11 @@ class CDCEngine:
         table_properties: dict[str, str] | None = None,  # initial table
         # properties when this engine CREATES the table (e.g.
         # {"write.parquet.compression": "zstd"} — every data write of the
-        # table's life uses that codec; maintenance.* keys arm the
-        # autopilot); an existing table keeps its own — evolve with
-        # table.set_properties
+        # table's life uses that codec; maintenance.compact.{sort_by,
+        # zorder_by,max_rows_per_file,max_file_bytes} are the table's
+        # layout policy, which every compaction of the tail applies; the
+        # other maintenance.* keys arm the autopilot); an existing table
+        # keeps its own — evolve with table.set_properties
         constraints: dict[str, str] | None = None,  # table CHECK
         # constraints {name: sql_bool_expr} enforced on every staged change
         # batch before publish (Delta ADD CONSTRAINT parity; applied only
@@ -249,13 +246,8 @@ class CDCEngine:
     ):
         self.spark = spark
         self.change_schema = change_schema
-        self.files_per_bucket = files_per_bucket
         self.merge_mode = merge_mode
         self.compact_every = compact_every
-        self.compact_sort_by = compact_sort_by
-        self.compact_zorder_by = compact_zorder_by
-        self.compact_max_rows_per_file = compact_max_rows_per_file
-        self.compact_max_file_bytes = compact_max_file_bytes
         self.compact_purge_tombstone_lag = compact_purge_tombstone_lag
         self.vacuum_keep_versions = vacuum_keep_versions
         self.vacuum_grace_s = vacuum_grace_s
@@ -341,7 +333,6 @@ class CDCEngine:
                 lambda: self.table.merge(
                     batch_df,
                     epoch_id,
-                    files_per_bucket=self.files_per_bucket,
                     audit=self.audit,
                     epoch_scope=self._epoch_scope,
                     before_publish=before_publish,
@@ -459,13 +450,8 @@ class CDCEngine:
                 purge_before = hi - dt.timedelta(
                     seconds=self.compact_purge_tombstone_lag
                 )
-        return self.table.compact(
-            sort_by=self.compact_sort_by,
-            zorder_by=self.compact_zorder_by,
-            max_rows_per_file=self.compact_max_rows_per_file,
-            max_file_bytes=self.compact_max_file_bytes,
-            purge_tombstones_before=purge_before,
-        )
+        # clustering and sizing: the table's own layout policy
+        return self.table.compact(purge_tombstones_before=purge_before)
 
     def _maybe_vacuum(self, epoch_id: int, force: bool = False) -> None:
         """Auto-GC: vacuum after every compaction (force=True) and, in

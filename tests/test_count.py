@@ -206,6 +206,31 @@ def test_count_mixed_files_fall_back_exactly(spark, table):
     assert table.count() == table.read().count() == 9
 
 
+def test_count_of_mixed_files_opens_no_footer(spark, tmp_root):
+    """A file whose harvested stats hold no ``::dead`` (a row group mixing
+    live and tombstone rows) has a footer that proves no more, so count()
+    sends it straight to the scan tier without opening it; min_max()
+    likewise opens only files whose stats lack the column.  Both still
+    equal a Spark aggregate."""
+    from test_head_hint import CountingStorage
+
+    root = os.path.join(tmp_root, "mixed")
+    st = CountingStorage(root)
+    t = ManifestTable.create(spark, root, TRANSCRIPT_SCHEMA, n_buckets=2, storage=st)
+    t.merge(_batch(spark, _rows(12)), 0, mode="delta")
+    t.delete_where("conv_id = 'c0'", epoch_id=1)
+    t.compact()  # tombstones retained → mixed files
+    m = t.manifest()
+    mixed = [p for ps in m["files"].values() for p in ps
+             if "::dead" not in m["file_stats"][p]]
+    assert mixed
+    st.calls.clear()
+    assert t.count() == t.read().count() == 9
+    assert t.min_max("turn_idx") == _agg_mm(t.read(), "turn_idx")
+    assert t.min_max("text") == _agg_mm(t.read(), "text")
+    assert not [c for c in st.calls if c[0] == "open_input"]
+
+
 def _mm(table, col):
     """min_max normalized to naive-UTC for comparison with Spark collects."""
     lo, hi = table.min_max(col)

@@ -100,32 +100,52 @@ def test_auto_compaction_during_replay(spark, tmp_root):
 
 
 def test_auto_compaction_clusters_when_configured(spark, tmp_root):
-    """Engine-level passthrough of clustered compaction: the auto-compact
-    cadence folds with sort_by/max_rows_per_file, state matches the
-    oracle, and the manifest records the clustering."""
+    """The table's layout policy (its ``maintenance.compact.*``
+    properties) is the one clustering and sizing of every rewrite: the
+    tail's compaction cadence applies it (each ``compact:`` manifest
+    records ``sorted_by == ["ts"]``, no file over 500 rows) and state
+    matches the oracle; a bare ``rebucket(n)`` applies it too, and a
+    caller's ``compact(sort_by=[])`` replaces the clustering pair for that
+    call while the sizing pair still comes from the policy."""
     eng = _replay(
         spark,
         tmp_root,
         "autoclu",
         merge_mode="delta",
         compact_every=2,
-        compact_sort_by=["ts"],
-        compact_max_rows_per_file=500,
+        table_properties={
+            "maintenance.compact.sort_by": "ts",
+            "maintenance.compact.max_rows_per_file": "500",
+        },
     )
     exp = oracle_final_state(SPEC)
     got = eng.read_table().orderBy("conv_id", "turn_idx").toPandas()
     assert_pdf_equal(got, exp, COLS)
-    # at least one auto-compaction committed, and the latest rewrite
-    # manifest carries the clustering marker
+    t = eng.table
     lin = eng.lineage.lineage().toPandas()
     assert (lin.loc[lin["stage"] == "compact", "status"] == "Success").any()
-    versions = [r["version"] for r in eng.table.history().collect()]
-    sorted_markers = [
-        eng.table.manifest(v).get("sorted_by")
-        for v in versions
-        if str(eng.table.manifest(v).get("epoch_id", "")).startswith("compact:")
+    versions = [r["version"] for r in t.history().collect()]
+    compacts = [
+        t.manifest(v) for v in versions
+        if str(t.manifest(v).get("epoch_id", "")).startswith("compact:")
     ]
-    assert sorted_markers and all(sb == ["ts"] for sb in sorted_markers)
+    assert compacts and all(m["sorted_by"] == ["ts"] for m in compacts)
+
+    def max_file_rows(m):
+        return max(st["::rows"][0] for st in m["file_stats"].values())
+
+    assert all(max_file_rows(m) <= 500 for m in compacts)
+    # rebucket without arguments: the same policy
+    assert t.rebucket(4)["status"] == "Success"
+    m = t.manifest()
+    assert m["sorted_by"] == ["ts"] and max_file_rows(m) <= 500
+    # a caller's clustering pair replaces the policy's for one call
+    assert t.compact(min_delta_files=0, sort_by=[])["status"] == "Success"
+    m = t.manifest()
+    assert m["sorted_by"] == [] and m["zordered_by"] == []
+    assert max_file_rows(m) <= 500
+    got = eng.read_table().orderBy("conv_id", "turn_idx").toPandas()
+    assert_pdf_equal(got, exp, COLS)
 
 
 def test_tombstone_survives_compaction(spark, tmp_root):

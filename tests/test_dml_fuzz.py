@@ -667,10 +667,10 @@ def test_physical_config_invariance(spark, tmp_root, seed):
     """Physical knobs must NEVER change logical state: the same WAL
     (out-of-order delivery, duplicate segments, mid-stream schema
     evolution) replayed under randomly drawn engine configs — bucket
-    count, merge mode, compaction cadence + clustering style, file
-    sizing, salting, parquet blooms, stateful event dedup, micro-batch
-    size — must converge to the byte-identical final table the
-    reference config produces.  The metamorphic relation every lakehouse
+    count, merge mode, compaction cadence + clustering style and file
+    sizing (the table's layout policy), parquet blooms, stateful event
+    dedup, micro-batch size — must converge to the byte-identical final
+    table the reference config produces.  The metamorphic relation every lakehouse
     tuning guide assumes but few engines pin."""
     from conftest import assert_pdf_equal
 
@@ -718,7 +718,6 @@ def test_physical_config_invariance(spark, tmp_root, seed):
         cfg = {
             "n_buckets": rng.choice([2, 8, 16]),
             "merge_mode": mode,
-            "files_per_bucket": rng.choice([1, 2]),
             "bloom_filter_cols": rng.choice([None, ["conv_id"]]),
             "event_dedup": rng.choice([None, "1 hour"]),
             "_mfpt": rng.choice([2, 5]),
@@ -726,12 +725,17 @@ def test_physical_config_invariance(spark, tmp_root, seed):
         if mode == "delta":
             cfg["compact_every"] = rng.choice([0, 2, 3])
             style = rng.random()
+            # clustering is the table's layout policy
             if style < 0.33:
-                cfg["compact_sort_by"] = ["ts"]
-                cfg["compact_max_rows_per_file"] = 500
+                cfg["table_properties"] = {
+                    "maintenance.compact.sort_by": "ts",
+                    "maintenance.compact.max_rows_per_file": "500",
+                }
             elif style < 0.66:
-                cfg["compact_zorder_by"] = ["ts", "turn_idx"]
-                cfg["compact_max_rows_per_file"] = 500
+                cfg["table_properties"] = {
+                    "maintenance.compact.zorder_by": "ts,turn_idx",
+                    "maintenance.compact.max_rows_per_file": "500",
+                }
         got = run(f"v{i}", **cfg)
         assert_pdf_equal(got, ref, cols), (seed, i, cfg)
 

@@ -62,6 +62,10 @@ class CountingStorage(LocalFSStorage):
         self.calls.append(("get", key))
         return super().get(key)
 
+    def open_input(self, key):
+        self.calls.append(("open_input", key))
+        return super().open_input(key)
+
 
 def _mk(spark, tmp_root, storage_factory, n_commits=6):
     root = os.path.join(tmp_root, "hint_tbl")

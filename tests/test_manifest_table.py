@@ -315,8 +315,8 @@ def test_staging_write_tasks_are_sized_by_data(spark, tmp_root):
     """The staging exchange has no partition count, so AQE packs whole
     buckets into tasks by shuffle bytes: a ~1k-event epoch over 8 buckets
     writes in ONE task (one per touched bucket before, each paying the
-    job's Hadoop conf deserialization), still one file per bucket.  Only
-    ``files_per_bucket > 1`` keeps a fixed split."""
+    job's Hadoop conf deserialization), still one file per bucket.  A CoW
+    rewrite has the same exchange shape."""
     rows = [
         ("U", i, 1000 + i, f"c{i % 97}", i // 97, "user", f"t{i}", None)
         for i in range(1000)
@@ -342,15 +342,15 @@ def test_staging_write_tasks_are_sized_by_data(spark, tmp_root):
     assert not _files_per_bucket(m, "delta_files")
     assert td.read().count() == 1000
 
-    # a CoW rewrite with a fixed split keeps its split: 2 files per bucket
+    # a CoW rewrite: one file per touched bucket
     tc = ManifestTable.create(
         spark, os.path.join(tmp_root, "tasks_cow"), TRANSCRIPT_SCHEMA,
         n_buckets=8,
     )
     assert tc.merge(_changes_df(spark, rows), 1)["merge_path"] == "initial"
-    r = tc.merge(_changes_df(spark, rows[::3]), 2, files_per_bucket=2)
+    r = tc.merge(_changes_df(spark, rows[::3]), 2)
     assert r["merge_path"] == "broadcast"
-    assert _files_per_bucket(tc.manifest()) == {b: 2 for b in range(8)}
+    assert _files_per_bucket(tc.manifest()) == {b: 1 for b in range(8)}
     assert tc.read().count() == 1000
 
 

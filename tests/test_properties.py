@@ -158,6 +158,52 @@ def test_auto_maintain_runs_the_tables_own_policy(spark, table):
     assert t2.auto_maintain() == {"dry_run": False}
 
 
+def test_layout_policy_checked_at_set_time_and_follows_ddl(spark, tmp_root):
+    """The layout policy runs on the tail's critical path, so a policy the
+    schema cannot serve fails when it is SET; a rename rewrites the
+    policy's column and a drop removes it, and the tail's next compaction
+    succeeds under the rewritten policy."""
+    from event_driven_etl_msc_research_spark import CDCEngine
+    from event_driven_etl_msc_research_spark.schemas import CHANGE_EVENT_SCHEMA
+
+    with pytest.raises(ValueError, match="zorder_by columns must be numeric"):
+        ManifestTable.create(
+            spark, os.path.join(tmp_root, "bad"), TRANSCRIPT_SCHEMA,
+            properties={"maintenance.compact.zorder_by": "role"},
+        )
+    eng = CDCEngine(
+        spark, os.path.join(tmp_root, "t"), change_schema=CHANGE_EVENT_SCHEMA,
+        n_buckets=2, merge_mode="delta", compact_every=1,
+    )
+    t = eng.table
+    t.set_properties({"maintenance.compact.sort_by": "role"})
+    v = t.current_version()
+    with pytest.raises(ValueError, match="not in schema"):
+        t.set_properties({"maintenance.compact.sort_by": "nope"})
+    with pytest.raises(ValueError, match="mutually exclusive"):
+        t.set_properties({"maintenance.compact.zorder_by": "turn_idx"})
+    assert t.current_version() == v
+
+    def epoch(i, batch):
+        assert eng.apply_batch(batch, i)["status"] == "Success"
+        m = t.manifest()
+        assert m["epoch_id"] == f"compact:{m['version']}"
+        return m["sorted_by"]
+
+    assert epoch(0, _changes(spark, _rows(6))) == ["role"]
+    t.rename_column("role", "speaker")
+    assert t.properties() == {"maintenance.compact.sort_by": "speaker"}
+    rows = _rows(6, start_key=6, lsn0=10, ts0=2000)
+    assert epoch(
+        1, _changes(spark, rows).withColumnRenamed("role", "speaker")
+    ) == ["speaker"]
+    t.drop_column("speaker")
+    assert t.properties() == {}
+    rows = _rows(6, start_key=12, lsn0=20, ts0=3000)
+    assert epoch(2, _changes(spark, rows).drop("role")) == []
+    assert t.read().count() == 18
+
+
 def test_cli_properties_and_auto(spark, table):
     import json as jsonmod
     import subprocess

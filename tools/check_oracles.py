@@ -4,6 +4,9 @@ row-count, schema (column names), and order-insensitive values.
 
 Usage: python tools/check_oracles.py [--plain-session] [sf_dir] [query ...]
 
+``sf_dir`` defaults to the sf0.01 test data, the corpus the ``knn_lsh``/
+``knn_ivf`` golden neighbour sets were pinned on.
+
 ``--plain-session`` builds the session as a plain
 ``SparkSession.builder.master("local[8]").getOrCreate()`` — no engine
 confs — instead of ``get_spark``, to check that results do not depend on
@@ -42,8 +45,10 @@ def main() -> int:
     plain = "--plain-session" in sys.argv
     if plain:
         sys.argv.remove("--plain-session")
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    # the knn_lsh/knn_ivf goldens are neighbour sets of the sf0.01 corpus
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    print(f"sf dir: {sf_dir}")
 
     import __spark_entry__ as e
 

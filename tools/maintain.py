@@ -44,7 +44,12 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--table", required=True, help="table root dir")
     sub = ap.add_subparsers(dest="op", required=True)
-    sc = sub.add_parser("compact", help="fold delta files into base")
+    sc = sub.add_parser(
+        "compact",
+        help="fold delta files into base, clustered and sized by the "
+        "table's maintenance.compact.* policy; the flags below override "
+        "its clustering or sizing pair for this run",
+    )
     sc.add_argument(
         "--min-delta-files",
         type=int,
