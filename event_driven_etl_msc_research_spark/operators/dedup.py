@@ -15,6 +15,15 @@ formulation (``row_number() over (partition by key order by version
 desc)``) has no partial step — every raw row crosses the shuffle and is
 sorted on the reducer, the plan that dies on a hot conversation.
 
+That map-side combine is what the table's READ folds keep (a folded
+read, ``sinks.manifest._fold_rows``).  The table's WRITE folds (merge's
+batch dedup, the copy-on-write shuffle merge, compaction) give it up:
+they group by ``(_bucket, *key)`` after an exchange on ``_bucket``
+(``sinks.manifest._fold_on_buckets``), so the fold's exchange and sort
+are also the ones the bucket-partitioned writer needs.  A conversation's
+rows all reach one bucket's writer task either way; the combine still
+runs, on the reducer, before the payload is written.
+
 Skew is measured, not pre-empted ("Rock you like a hurricane", EuroSys
 2018, argues for measuring skew before defending against it): the
 ``bulk_replay`` benchmark puts half its events on one conversation and

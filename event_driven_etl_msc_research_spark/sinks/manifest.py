@@ -93,17 +93,42 @@ class ManifestConflict(RuntimeError):
     ``ManifestTable.merge`` retries."""
 
 
-def _bucket_expr(n_buckets: int, bucket_col: str = "conv_id"):
+def _bucket_expr(
+    n_buckets: int,
+    bucket_col: str = "conv_id",
+    as_type: T.DataType | None = None,
+):
     # deterministic hash bucket of the first key column — the physical
     # partition and the MERGE rewrite unit (co-locates a conversation).
-    return F.expr(
-        f"CAST(pmod(xxhash64({sql_ident(bucket_col)}), {int(n_buckets)}) AS INT)"
-    )
+    # ``as_type``: hash the value cast to the table's type (a change batch
+    # may carry the key narrower; xxhash64 hashes int and bigint apart)
+    c = sql_ident(bucket_col)
+    if as_type is not None:
+        c = f"CAST({c} AS {sql_type(as_type)})"
+    return F.expr(f"CAST(pmod(xxhash64({c}), {int(n_buckets)}) AS INT)")
 
 
 def _fold_rows(df: DataFrame, key_cols: list[str]) -> DataFrame:
     # the merge-on-read rule: per key, the row with the max (ts, _lsn) wins
     return dedup_latest(df, key_cols, ["ts", "_lsn"])
+
+
+def _fold_on_buckets(
+    df: DataFrame, key_cols: list[str], version_cols=("ts", "_lsn")
+) -> DataFrame:
+    """The fold of a write: ``df`` carries ``_bucket``, a function of the
+    key, so exchanging on it and grouping by ``(_bucket, *key_cols)``
+    picks the same winners as grouping by key.  That exchange is the one
+    ``_stage`` needs (Spark drops ``_stage``'s own ``_bucket``
+    repartition as redundant), and one sort on ``(_bucket, *key_cols)``
+    serves both the aggregate and the writer: one exchange and one sort
+    per staged write.  The price is the
+    map-side partial combine — every input row crosses the exchange —
+    which a conversation's rows pay anyway on the way to its bucket's
+    writer task."""
+    return dedup_latest(
+        df.repartition(F.expr("`_bucket`")), ["_bucket", *key_cols], version_cols
+    )
 
 
 def _split_epoch_key(key: str) -> tuple[str, int] | None:
@@ -246,6 +271,19 @@ _WATERMARK_KEYS = ("retention_ts", "lateness_ts")
 _PER_COMMIT_KEYS = ("added_cols", "retdel_dropped", "retdel_rows")
 # largest change batch (keys) a CoW merge broadcasts into the target scan
 _BROADCAST_MAX_KEYS = 1_000_000
+
+
+def _policy_on_columns(props: dict[str, str], col) -> dict[str, str]:
+    """``props`` with the layout policy's column lists
+    (``maintenance.compact.sort_by``/``zorder_by``) mapped through
+    ``col``: a name to its current name, or to None when the column is
+    gone.  A list left empty unsets its key."""
+    out = dict(props)
+    for k in ("maintenance.compact.sort_by", "maintenance.compact.zorder_by"):
+        names = map(str.strip, out.pop(k, "").split(","))
+        if cols := [n for c in names if c and (n := col(c))]:
+            out[k] = ",".join(cols)
+    return out
 
 
 def _watermark(m: dict[str, Any]):
@@ -1090,9 +1128,11 @@ class ManifestTable:
 
         * table config carries from ``base`` unless ``change`` sets it:
           ``properties`` and ``cloned_from`` are the head's (config, not
-          snapshot state — Iceberg semantics); the watermarks never move
-          backward (max of base and new); ``external_sizes`` keeps the
-          clone-time sizes of the external files still referenced;
+          snapshot state — Iceberg semantics), with a ``source``'s
+          missing columns pruned from the layout policy; the watermarks
+          never move backward (max of base and new); ``external_sizes``
+          keeps the clone-time sizes of the external files still
+          referenced;
         * per-commit fields (``added_cols``, ``retdel_*``) reset unless set;
         * with ``epoch_key``: the exactly-once check against every base
           and the applied-ledger fold (``_fold_applied``);
@@ -1133,6 +1173,16 @@ class ManifestTable:
                     new.pop(k, None)
                     if base.get(k):
                         new[k] = base[k]
+            if source is not None and new.get("properties"):
+                # the head's layout policy over another snapshot's columns:
+                # one the source lacks leaves the policy, as on drop_column,
+                # or every later rewrite would refuse the policy
+                have = {f["name"] for f in new["schema"]["fields"]}
+                new["properties"] = _policy_on_columns(
+                    new["properties"], lambda c: c if c in have else None
+                )
+                if not new["properties"]:
+                    del new["properties"]
             for k in _WATERMARK_KEYS:
                 marks = [x[k] for x in (base, new) if x.get(k) is not None]
                 if marks:
@@ -1368,12 +1418,11 @@ class ManifestTable:
             history["renamed_cols"] = ren
             for k in self._COL_LISTS:
                 history[k] = [sub.get(c, c) for c in m.get(k) or [] if c != drop]
-            # so do the layout policy's; one left empty unsets its key
-            props = dict(m.get("properties") or {})
-            for k in ("maintenance.compact.sort_by", "maintenance.compact.zorder_by"):
-                names = map(str.strip, props.pop(k, "").split(","))
-                if cols := [sub.get(c, c) for c in names if c and c != drop]:
-                    props[k] = ",".join(cols)
+            # so do the layout policy's
+            props = _policy_on_columns(
+                m.get("properties") or {},
+                lambda c: None if c == drop else sub.get(c, c),
+            )
             if props != (m.get("properties") or {}):
                 history["properties"] = props
         return {
@@ -2053,15 +2102,23 @@ class ManifestTable:
             self._schema_change(m, payload)["schema"]
         )
 
-        # 2. within-batch dedup: per-key max-version aggregate (max_by with
-        # map-side partial combine — hot keys collapse before the shuffle)
-        deduped = dedup_latest(batch, key_cols, ["ts", "lsn"])
+        # 2. within-batch dedup: per-key max-version aggregate, folded on
+        # the staging write's bucket exchange (_fold_on_buckets).  The
+        # bucket hashes the key cast to the table's type, as every file
+        # of the table was bucketed
+        kf = new_schema[key_cols[0]]
+        deduped = _fold_on_buckets(
+            batch.withColumn(
+                "_bucket", _bucket_expr(n_buckets, kf.name, kf.dataType)
+            ),
+            key_cols,
+            ("ts", "lsn"),
+        )
 
         # 3. normalize to internal row shape (evaluated once: both the delta
         # path and the stage-first CoW path write this plan straight to
         # parquet and work from the staged files after).  One projection
-        # of SQL text; the bucket hashes the projected key, which carries
-        # the table's type
+        # of SQL text
         have = {f.name: f.dataType for f in payload.fields}
 
         def _internal(f: T.StructField) -> str:
@@ -2080,7 +2137,8 @@ class ManifestTable:
             *map(_internal, new_schema.fields),
             "`lsn` AS `_lsn`",
             "`op` = 'D' AS `_deleted`",
-        ).withColumn("_bucket", _bucket_expr(n_buckets, key_cols[0]))
+            "`_bucket`",
+        )
 
         ischema = T.StructType(new_schema.fields + _INTERNAL_FIELDS)
         old_files = {int(b): paths for b, paths in m["files"].items()}
@@ -2132,9 +2190,9 @@ class ManifestTable:
             # Fast path (the common micro-batch case): the deduped batch is
             # small → broadcast it; target data flows scan→write with ZERO
             # shuffle.  General path: union + per-key max-version aggregate
-            # (single shuffle with map-side partial combine).  A CoW merge
-            # over a delta-carrying bucket must also fold the deltas, so it
-            # takes the aggregate path.
+            # folded on the write's bucket exchange.  A CoW merge over a
+            # delta-carrying bucket must also fold the deltas, so it takes
+            # the aggregate path.
             if n_change_keys <= _BROADCAST_MAX_KEYS and not any(
                 old_delta.get(b) for b in touched
             ):
@@ -2143,7 +2201,7 @@ class ManifestTable:
                 )
                 merge_path = "broadcast"
             else:
-                merged = _fold_rows(
+                merged = _fold_on_buckets(
                     target.unionByName(staged_changes, allowMissingColumns=True),
                     key_cols,
                 )
@@ -2456,6 +2514,11 @@ class ManifestTable:
         This leans on AQE (on in ``get_spark`` and by Spark default):
         with ``spark.sql.adaptive.enabled=false`` the write runs
         ``spark.sql.shuffle.partitions`` tasks, still one file per bucket.
+        The exchange may come from the caller's fold
+        (:func:`_fold_on_buckets`): ``df`` then arrives hash-partitioned
+        on ``_bucket`` already, Spark drops this repartition as
+        redundant, and the fold's sort on ``(_bucket, keys)`` also orders
+        the rows by ``_pb`` for the writer — one exchange and one sort.
         Clustering: ``sort_by`` sorts each task's rows, ``zorder_by``
         sorts them on a z-value sketched from ``zorder_sample`` (the
         rewrite's own input files); both sorts lead with ``_pb``, the
@@ -2705,10 +2768,12 @@ class ManifestTable:
         (``None``) every file rehashed into ``n_buckets`` (rebucket),
         restaged under ``layout`` (``_check_clustering``).  The unfolded
         inputs (the z-order sketch samples them) fold only when one is a
-        delta, since base rows are one per key.  Returns the file set with
-        its clustering markers, and the staged row count; a full rewrite
-        also clears the rename/drop shadows, as every file now carries
-        the current names."""
+        delta, since base rows are one per key, and fold on the write's
+        bucket exchange (``_fold_on_buckets``; a rebucket hashes the new
+        ``_bucket`` first).  Returns the file set with its clustering
+        markers, and the staged row count; a full rewrite also clears the
+        rename/drop shadows, as every file now carries the current
+        names."""
         sort_by, zorder_by, max_rows_per_file, max_file_bytes = layout
         files = sorted(
             (e for e in _data_files(m) if buckets is None or e[0] in buckets),
@@ -2718,11 +2783,11 @@ class ManifestTable:
             max_rows_per_file = self._rows_for_bytes(m, max_file_bytes, buckets)
         key_cols = m["key_cols"]
         inputs = self._scan(m, [p for _, p, _ in files], live=False)
-        df = (
-            _fold_rows(inputs, key_cols)
-            if any(kind == "delta" for *_, kind in files)
-            else inputs
-        )
+        df = inputs
+        if n_buckets is not None:
+            df = df.withColumn("_bucket", _bucket_expr(n_buckets, key_cols[0]))
+        if any(kind == "delta" for *_, kind in files):
+            df = _fold_on_buckets(df, key_cols)
         if purge_w is not None:
             # watermark-bounded tombstone GC (see compact): drop winners
             # that are tombstones older than the lateness bound W.  Applied
@@ -2739,8 +2804,6 @@ class ManifestTable:
                     & (F.col("ts") < F.lit(purge_w))
                 )
             )
-        if n_buckets is not None:
-            df = df.withColumn("_bucket", _bucket_expr(n_buckets, key_cols[0]))
         staged_files, rows_by_bucket, staged_rows, staged_stats, _ = self._stage(
             df,
             m,

@@ -7,6 +7,7 @@ compensation lambdas (SURVEY.md §2.8 E1-E6).
 from __future__ import annotations
 
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -233,14 +234,18 @@ def test_merge_touches_only_affected_buckets(spark, table):
 def test_merge_job_counts(spark, tmp_root):
     """CoW is stage-first: no separate counting job, no persist.
 
-    Jobs are counted via job groups (AQE splits one write ACTION into ~3
-    stage-materialization jobs, so we pin RELATIONSHIPS, not absolutes):
+    Jobs are counted via job groups.  AQE splits one write ACTION into a
+    job per query stage; a staged write folds on its one bucket exchange,
+    so it is two jobs (the exchange's map stage, then the write):
 
+    * a delta merge is one write action, at most two jobs;
     * an initial CoW load is ONE write action — exactly the same job count
       as the delta path's single job on the same input;
     * a non-initial CoW epoch is two write actions (stage the batch + merge
       rewrite — the CoW floor: the rewrite's input file set is
-      data-dependent), bounded by 2× delta plus the broadcast build.
+      data-dependent).  The broadcast rewrite adds its three broadcast
+      builds, its exchange and the write; the shuffle rewrite is a second
+      delta-shaped write.
     """
     sc = spark.sparkContext
 
@@ -260,6 +265,7 @@ def test_merge_job_counts(spark, tmp_root):
     )
     n_delta, p = jobs("jc-delta", lambda: td.merge(_changes_df(spark, rows1), 1, mode="delta"))
     assert p == "delta"
+    assert n_delta <= 2
 
     tc = ManifestTable.create(
         spark, os.path.join(tmp_root, "jc_cow"), TRANSCRIPT_SCHEMA, n_buckets=4
@@ -270,7 +276,7 @@ def test_merge_job_counts(spark, tmp_root):
 
     n_bcast, p = jobs("jc-bcast", lambda: tc.merge(_changes_df(spark, rows2), 2))
     assert p == "broadcast"
-    assert n_bcast <= 2 * n_delta + 2  # 2 write actions + broadcast build
+    assert n_bcast <= n_delta + 5  # + 3 broadcast builds, exchange, write
 
     # a CoW merge over a delta-carrying bucket must fold the deltas too, so
     # it takes the shuffle (aggregate) path
@@ -288,6 +294,86 @@ def test_merge_job_counts(spark, tmp_root):
     )
     assert p == "shuffle"
     assert n_shuf <= 2 * n_delta
+
+
+def _write_plans(spark, fn) -> list[tuple[int, int]]:
+    """Run ``fn``; return ``(exchanges, sorts)`` in the executed physical
+    plan of each file write it ran (the final plan under AQE), read from
+    the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> dict[int, str]:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    before = set(executions())
+    fn()
+    shapes = []
+    for eid, desc in sorted(executions().items()):
+        if eid in before or "InsertIntoHadoopFsRelationCommand" not in desc:
+            continue
+        # the node tree: up to the first blank line, and under AQE only
+        # the final plan, not the initial one
+        tree = desc.split("== Physical Plan ==", 1)[1].strip("\n")
+        tree = tree.split("\n\n", 1)[0]
+        tree = re.split(r"== (?:Final|Current) Plan ==", tree)[-1]
+        tree = tree.split("== Initial Plan ==", 1)[0]
+        shapes.append(tuple(
+            len(re.findall(rf"(?m)^[ :+\-*]*{node} \(\d+\)", tree))
+            for node in ("Exchange", "Sort")
+        ))
+    return shapes
+
+
+@pytest.mark.parametrize("aqe", [True, False])
+def test_staged_writes_run_one_exchange_and_one_sort(spark, tmp_root, aqe):
+    """Every staged write that folds does it on the write's bucket
+    exchange: the executed plan has one Exchange (the fold's, which
+    ``_stage``'s own ``_bucket`` repartition collapses into) and one Sort
+    on ``(_bucket, keys)``, serving both the aggregate and the writer's
+    ``_pb`` ordering.  Under ``get_spark`` and under a session with AQE
+    off."""
+    s = spark
+    if not aqe:
+        s = spark.newSession()
+        s.conf.set("spark.sql.adaptive.enabled", "false")
+
+    def batch(epoch, op="U"):
+        return _changes_df(s, [
+            (op, 100 * epoch + i, 1000 * epoch + i, f"c{i % 7}", i // 7,
+             "user", f"e{epoch}-{i}", None)
+            for i in range(40)
+        ])
+
+    one = [(1, 1)]
+    td = ManifestTable.create(
+        s, os.path.join(tmp_root, "delta"), TRANSCRIPT_SCHEMA, n_buckets=4
+    )
+    assert _write_plans(s, lambda: td.merge(batch(1, "I"), 1, mode="delta")) == one
+    td.merge(batch(2), 2, mode="delta")
+    assert _write_plans(s, td.compact) == one
+    td.merge(batch(3), 3, mode="delta")
+    assert _write_plans(s, lambda: td.rebucket(8)) == one
+
+    tc = ManifestTable.create(
+        s, os.path.join(tmp_root, "cow"), TRANSCRIPT_SCHEMA, n_buckets=4
+    )
+    assert _write_plans(s, lambda: tc.merge(batch(1, "I"), 1)) == one
+    tc.merge(batch(2), 2, mode="delta")
+    # the change stage, then the rewrite folding it with the deltas
+    shuffle = {}
+    assert _write_plans(
+        s, lambda: shuffle.update(tc.merge(batch(3), 3))
+    ) == one + one
+    assert shuffle["merge_path"] == "shuffle"
+    assert td.read().count() == tc.read().count() == 40
+    exp = {(f"c{i % 7}", i // 7): f"e3-{i}" for i in range(40)}
+    assert _state(td) == _state(tc) == exp
 
 
 def _write_tasks(spark, tag, fn):

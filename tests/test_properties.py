@@ -103,6 +103,38 @@ def test_rollback_keeps_current_properties(spark, table):
     assert table.properties() == {"maintenance.vacuum.keep_versions": "5"}
 
 
+@pytest.mark.parametrize("verb", ["rollback_to", "fast_forward"])
+def test_source_commit_prunes_layout_policy_to_its_columns(spark, table, verb):
+    """A rollback or a branch publish carries the head's properties over
+    another snapshot's columns.  A policy column that snapshot lacks
+    leaves the policy, as on drop_column (a list left empty unsets its
+    key), so the next merge and compaction still run."""
+    batch = _changes(spark, _rows(3, start_key=30, lsn0=200, ts0=3000))
+    if verb == "rollback_to":
+        v = table.current_version()
+        table.add_column("score", "double")
+        table.set_properties(
+            {"maintenance.compact.sort_by": "score", "owner": "x"}
+        )
+        table.rollback_to(version=v)
+        assert table.properties() == {"owner": "x"}
+        sorted_by = []
+    else:
+        table.set_properties(
+            {"maintenance.compact.sort_by": "role,ts", "owner": "x"}
+        )
+        table.create_branch("audit").drop_column("role")
+        table.fast_forward("audit")
+        assert table.properties() == {
+            "maintenance.compact.sort_by": "ts", "owner": "x"
+        }
+        batch, sorted_by = batch.drop("role"), ["ts"]
+    assert table.merge(batch, 1, mode="delta")["status"] == "Success"
+    assert table.compact()["status"] == "Success"
+    assert table.manifest()["sorted_by"] == sorted_by
+    assert table.read().count() == 9
+
+
 def test_properties_travel_with_clones(spark, table, tmp_root):
     table.set_properties({"owner": "pipelines"})
     c = table.clone(os.path.join(tmp_root, "fork"))

@@ -139,6 +139,88 @@ def test_checkpoint_resumes_across_checkpoint_managers(spark, tmp_root, first):
     assert_pdf_equal(got, oracle_final_state(spec), COLS)
 
 
+def _sidecars(*roots) -> list[str]:
+    """Hadoop ``.crc`` checksum files and ``_SUCCESS`` markers under
+    ``roots``."""
+    return sorted(
+        os.path.join(d, f)
+        for root in roots
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.endswith(".crc") or f == "_SUCCESS"
+    )
+
+
+def test_get_spark_writes_no_crc_or_success_files(spark, tmp_root):
+    """``get_spark`` stops Hadoop writing ``.crc`` sidecars and
+    ``_SUCCESS`` markers on local masters: none under the table (staged
+    deltas and compactions) or the checkpoint after a replay."""
+    log, tbl, cp = _dirs(tmp_root)
+    spec = ChangeStreamSpec(
+        n_events=1_000, n_convs=40, segment_size=250, seed=13
+    )
+    generate_change_stream(log, spec)
+    eng = CDCEngine(
+        spark, tbl, change_schema=CHANGE_EVENT_SCHEMA_EVOLVED, n_buckets=4,
+        merge_mode="delta", compact_every=2,
+    )
+    eng.replay(log, cp, max_files_per_trigger=1)
+    t = eng.table
+    assert any(
+        t.manifest(v)["epoch_id"].startswith("compact:")
+        for v in range(1, t.current_version() + 1)
+    )
+    assert _sidecars(tbl, cp) == []
+    got = eng.read_table().orderBy("conv_id", "turn_idx").toPandas()
+    assert_pdf_equal(got, oracle_final_state(spec), COLS)
+
+
+def test_checkpoint_with_crc_files_resumes_under_get_spark(spark, tmp_root):
+    """A checkpoint and table begun under Hadoop's default checksummed
+    ``LocalFileSystem`` (``.crc`` sidecars, ``_SUCCESS`` markers) resume
+    under ``get_spark``'s ``RawLocalFileSystem``, which lists the
+    sidecars as plain files: the rest of the log drains exactly once, a
+    re-replay applies nothing, and the table equals the oracle."""
+    default = spark.newSession()
+    for k, v in {
+        "fs.file.impl": "org.apache.hadoop.fs.LocalFileSystem",
+        # Hadoop caches one FileSystem per scheme: build this session's own
+        "fs.file.impl.disable.cache": "true",
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs": "true",
+    }.items():
+        default.conf.set(k, v)
+    log, tbl, cp = _dirs(tmp_root)
+    spec = ChangeStreamSpec(
+        n_events=2_000, n_convs=60, segment_size=250, seed=12, dup_segments=(1,)
+    )
+    segs = generate_change_stream(os.path.join(tmp_root, "src"), spec).segment_paths
+    os.makedirs(log)
+
+    def deliver(paths):
+        for p in paths:  # a rename keeps the log-order mtimes
+            os.replace(p, os.path.join(log, os.path.basename(p)))
+
+    def replay(session):
+        eng = CDCEngine(
+            session, tbl, change_schema=CHANGE_EVENT_SCHEMA_EVOLVED, n_buckets=8
+        )
+        eng.replay(log, cp, max_files_per_trigger=2)
+        return eng
+
+    deliver(segs[:4])
+    assert replay(default).table.current_version() == 2
+    before = _sidecars(tbl, cp)
+    assert any(p.startswith(cp) for p in before)
+    assert any(p.endswith("_SUCCESS") for p in before)
+    deliver(segs[4:])
+    assert replay(spark).table.current_version() == 5
+    eng = replay(spark)
+    assert eng.table.current_version() == 5
+    assert _sidecars(tbl, cp) == before  # none added
+    got = eng.read_table().orderBy("conv_id", "turn_idx").toPandas()
+    assert_pdf_equal(got, oracle_final_state(spec), COLS)
+
+
 def test_crash_between_stage_and_publish_then_resume(spark, tmp_root):
     """The hard crash point: staging files written, manifest NOT published.
     Restart must re-run the epoch and converge — no duplicates, no loss."""
